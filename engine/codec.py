@@ -34,6 +34,15 @@ from . import B, K1  # ONE source of BM25 constants (engine/__init__);
 
 BLOCK_SIZE = 128
 
+#: ranks of the per-chunk impacts stored with the merged serving table:
+#: impacts[i] is the chunk's IMPACT_RANKS[i]-th largest tf_part at the
+#: encode avgdl, present only when the chunk holds that many postings.
+#: A term with w > 0 then has at least r docs scoring >= w * impact_r,
+#: so serving lower-bounds the k-th score (the pruning threshold θ)
+#: from metadata alone for every k <= the largest rank. 100 is the
+#: reference's ranking depth.
+IMPACT_RANKS = (10, 100)
+
 #: per-list byte ceiling: every Spark/Arrow schema carries the block
 #: byte offsets as int32, and Arrow/Parquet binary cells cap near 2 GiB
 #: anyway — a single encoded chunk must stay far below that. The BUILD
@@ -106,16 +115,17 @@ def encode_blocked(
     dls: np.ndarray,
     avgdl: float,
     block_size: int = BLOCK_SIZE,
+    impact_ranks: tuple = (),
 ) -> dict:
     """Sort by doc_id and encode into independent blocks.
 
     Returns dict with doc_bytes/tf_bytes/dl_bytes (bytes), block_last
     (list[int]: each block's last doc_id — skip data in the Lucene
-    sense, reserved for a docID-ordered intersection/seek path; the
-    current term-at-a-time serving plan prunes on block_max and never
-    reads it, at a cost of one int64 per 128 postings), block_max
-    (list[float]), doc_off/tf_off/dl_off (list[int] byte start offsets
-    per block).
+    sense, kept in the partials only; serving prunes on block_max and
+    never reads it), block_max (list[float]), doc_off/tf_off/dl_off
+    (list[int] byte start offsets per block). With impact_ranks (the
+    merge passes IMPACT_RANKS) it also returns impacts (list[float]:
+    the r-th largest tf_part for each rank r <= the list's length).
     """
     d = np.asarray(doc_ids, dtype=np.uint64)
     # the dominant build kernels feed np.unique output (already
@@ -156,7 +166,7 @@ def encode_blocked(
             f"({max(dpos, tpos, lpos)} bytes > {MAX_LIST_BYTES}): the "
             f"build must split this term across more shards/salts "
             f"(hot_df_threshold / n_salts) before encoding")
-    return {
+    out = {
         "doc_bytes": b"".join(doc_chunks),
         "tf_bytes": b"".join(tf_chunks),
         "dl_bytes": b"".join(dl_chunks),
@@ -166,6 +176,11 @@ def encode_blocked(
         "tf_off": tf_off,
         "dl_off": dl_off,
     }
+    if impact_ranks:
+        desc = np.sort(part)[::-1]
+        out["impacts"] = [float(desc[r - 1]) for r in impact_ranks
+                          if d.size >= r]
+    return out
 
 
 def decode_blocked(
@@ -276,6 +291,7 @@ def encode_blocked_batch(
     group_starts: np.ndarray,
     avgdl: float,
     block_size: int = BLOCK_SIZE,
+    impact_ranks: tuple = (),
 ) -> dict:
     """Encode MANY posting lists in one vectorized pass.
 
@@ -300,6 +316,11 @@ def encode_blocked_batch(
       block_last    int64[B]   flattened per-block values (B = total blocks)
       block_max     float64[B]
       doc_off/tf_off/dl_off    int32[B] per-block byte starts (group-relative)
+    and, when ``impact_ranks`` is given (the merge kernels pass
+    IMPACT_RANKS; partials skip the sort):
+      impacts       float64[*] per group, the r-th largest tf_part for
+                    each rank r <= the group's size, flattened
+      impacts_per_group int64[G]
     """
     d = np.asarray(doc_ids, dtype=np.uint64)
     t = np.asarray(tfs, dtype=np.uint64)
@@ -309,16 +330,20 @@ def encode_blocked_batch(
     if G == 0 or n == 0:
         z8 = np.empty(0, dtype=np.uint8)
         zi = np.empty(0, dtype=np.int64)
-        return {"n_docs": np.zeros(G, dtype=np.int64),
-                "doc_buf": z8, "tf_buf": z8.copy(), "dl_buf": z8.copy(),
-                "doc_lens": np.zeros(G, dtype=np.int64),
-                "tf_lens": np.zeros(G, dtype=np.int64),
-                "dl_lens": np.zeros(G, dtype=np.int64),
-                "blocks_per_group": np.zeros(G, dtype=np.int64),
-                "block_last": zi, "block_max": np.empty(0, dtype=np.float64),
-                "doc_off": np.empty(0, dtype=np.int32),
-                "tf_off": np.empty(0, dtype=np.int32),
-                "dl_off": np.empty(0, dtype=np.int32)}
+        out = {"n_docs": np.zeros(G, dtype=np.int64),
+               "doc_buf": z8, "tf_buf": z8.copy(), "dl_buf": z8.copy(),
+               "doc_lens": np.zeros(G, dtype=np.int64),
+               "tf_lens": np.zeros(G, dtype=np.int64),
+               "dl_lens": np.zeros(G, dtype=np.int64),
+               "blocks_per_group": np.zeros(G, dtype=np.int64),
+               "block_last": zi, "block_max": np.empty(0, dtype=np.float64),
+               "doc_off": np.empty(0, dtype=np.int32),
+               "tf_off": np.empty(0, dtype=np.int32),
+               "dl_off": np.empty(0, dtype=np.int32)}
+        if impact_ranks:
+            out["impacts"] = np.empty(0, dtype=np.float64)
+            out["impacts_per_group"] = np.zeros(G, dtype=np.int64)
+        return out
     sizes = np.diff(np.append(gs, n))
     if np.any(sizes <= 0):
         raise ValueError("encode_blocked_batch requires non-empty groups "
@@ -361,11 +386,37 @@ def encode_blocked_batch(
     doc_off, doc_lens = _offsets(nb_d)
     tf_off, tf_lens = _offsets(nb_t)
     dl_off, dl_lens = _offsets(nb_l)
-    return {"n_docs": sizes, "doc_buf": doc_buf, "tf_buf": tf_buf,
-            "dl_buf": dl_buf, "doc_lens": doc_lens, "tf_lens": tf_lens,
-            "dl_lens": dl_lens, "blocks_per_group": blocks_per_group,
-            "block_last": block_last, "block_max": block_max,
-            "doc_off": doc_off, "tf_off": tf_off, "dl_off": dl_off}
+    out = {"n_docs": sizes, "doc_buf": doc_buf, "tf_buf": tf_buf,
+           "dl_buf": dl_buf, "doc_lens": doc_lens, "tf_lens": tf_lens,
+           "dl_lens": dl_lens, "blocks_per_group": blocks_per_group,
+           "block_last": block_last, "block_max": block_max,
+           "doc_off": doc_off, "tf_off": tf_off, "dl_off": dl_off}
+    if impact_ranks:
+        out["impacts"], out["impacts_per_group"] = _group_impacts(
+            part, sizes, impact_ranks)
+    return out
+
+
+def _group_impacts(part: np.ndarray, sizes: np.ndarray,
+                   ranks: tuple) -> tuple[np.ndarray, np.ndarray]:
+    """Per group, the r-th largest of ``part`` for every rank r the
+    group is big enough for, flattened in (group, rank) order, and the
+    count per group. One lexsort over the postings of the groups that
+    hold at least the smallest rank; smaller groups cost nothing."""
+    r = np.asarray(ranks, dtype=np.int64)
+    has = sizes[:, None] >= r[None, :]
+    per_group = has.sum(axis=1).astype(np.int64)
+    if not has.any():
+        return np.empty(0, dtype=np.float64), per_group
+    big = has[:, 0]
+    sel = np.flatnonzero(np.repeat(big, sizes))
+    gidx = np.repeat(np.arange(sizes.size, dtype=np.int64), sizes)[sel]
+    # within each big group, descending tf_part
+    desc = part[sel][np.lexsort((-part[sel], gidx))]
+    bsizes = np.where(big, sizes, 0)
+    bstart = np.cumsum(bsizes) - bsizes
+    pos = bstart[:, None] + r[None, :] - 1
+    return desc[pos[has]], per_group
 
 
 def decode_blocked_batch(

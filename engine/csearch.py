@@ -14,9 +14,20 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
            tiny broadcast (query_id, term, w) table joins onto those
            numeric rows JVM-side — batch cost is proportional to the
            UNIQUE terms of the batch, not Σ per-query terms.
-  phase 1  threshold: fully score ONLY the rarest (highest-idf) term of
-           each query; the k-th best single-term score is a valid lower
-           bound θ on the final k-th score.
+  phase 1  threshold θ(q), a lower bound on the final k-th score, from
+           metadata alone: every merged chunk stores its r-th largest
+           tf_part for r in codec.IMPACT_RANKS, so a term t with w_t > 0
+           has at least r docs scoring >= w_t * impact_r, and
+           θ(q) = max_t w_t * impact_r(t) * min(1, avgdl/encode_avgdl)
+           for the smallest rank r >= k (the avgdl factor keeps it a
+           lower bound under drift, the mirror of the block-max bfac).
+           The per-term impacts ride the metadata aggregation that
+           phase 2 needs anyway, so θ costs no Spark job. Exact
+           fallback (_decode_theta) when standing tombstones may
+           support an impact, when k exceeds the largest rank, or on an
+           index without impacts: fully score ONLY the rarest
+           (highest-idf) term of each query; its k-th best single-term
+           score is the bound.
   phase 2  block filter: a block b of term t is provably irrelevant
            for query q if
                UBsum(q) - w_t*tmax_t + w_t*block_max_b < θ(q)
@@ -43,6 +54,7 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
 
 from __future__ import annotations
 
+import math
 import os
 from collections.abc import Iterator
 
@@ -57,112 +69,8 @@ from pyspark.sql.window import Window
 
 from . import TOP_K
 from .codec import decode_blocked, tf_part
-from .localrel import local_df
+from .localrel import in_list, local_df
 from .search import idf_expr
-
-SCORE_ROWS = StructType(
-    [
-        StructField("query_id", StringType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("term_score", DoubleType(), False),
-    ]
-)
-
-
-def _decode_score_iter(avgdl: float, keep_col: str | None):
-    """mapInPandas kernel: posting rows -> (query_id, doc_id, term_score).
-
-    The Python loop is per posting-LIST row (query x term x salt), never
-    per posting; inside, everything is vectorized numpy.
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            qids, docs, scores = [], [], []
-            for r in pdf.itertuples(index=False):
-                keep = getattr(r, keep_col) if keep_col else None
-                if keep_col and keep is not None and len(keep) == 0:
-                    continue
-                d, t, dl = decode_blocked(
-                    r.doc_bytes, r.tf_bytes, r.dl_bytes,
-                    r.doc_off, r.tf_off, r.dl_off,
-                    keep=None if keep is None else keep,
-                )
-                if d.size == 0:
-                    continue
-                s = float(r.w) * tf_part(t, dl, avgdl)
-                qids.append(np.full(d.size, r.query_id, dtype=object))
-                docs.append(d)
-                scores.append(s)
-            if qids:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(qids),
-                        "doc_id": np.concatenate(docs),
-                        "term_score": np.concatenate(scores),
-                    }
-                )
-
-    return fn
-
-
-def _decode_score_arrow_iter(avgdl: float, keep_col: str | None):
-    """mapInArrow twin of _decode_score_iter (round-3 judge item 1,
-    serving side): same per-posting-list loop and numpy math, but the
-    byte payloads are taken straight from the Arrow batch instead of
-    being materialized into a pandas object column first, and the
-    output RecordBatch is assembled from the numpy arrays zero-copy
-    (doc_id/term_score). Result-identity pinned by
-    test_decode_kernels_identical."""
-    import pyarrow as pa
-
-    out_schema = pa.schema([
-        ("query_id", pa.string()),
-        ("doc_id", pa.int64()),
-        ("term_score", pa.float64()),
-    ])
-
-    def fn(batches):
-        for b in batches:
-            names = b.schema.names
-            cols = {n: b.column(i) for i, n in enumerate(names)}
-            qid = cols["query_id"]
-            w = cols["w"]
-            db, tb, lb = cols["doc_bytes"], cols["tf_bytes"], cols["dl_bytes"]
-            do, to, lo = cols["doc_off"], cols["tf_off"], cols["dl_off"]
-            kc = cols[keep_col] if keep_col else None
-            qids, docs, scores = [], [], []
-            for i in range(b.num_rows):
-                keep = kc[i].as_py() if kc is not None else None
-                if kc is not None and keep is not None and len(keep) == 0:
-                    continue
-                # payload cells as zero-copy pa.Buffer views; offset
-                # lists as zero-copy numpy views of the list values
-                # (round-4 verdict #7 — .as_py() made a bytes copy per
-                # multi-MB hot-term payload; the codec reads buffers)
-                d, t, dl = decode_blocked(
-                    db[i].as_buffer(), tb[i].as_buffer(), lb[i].as_buffer(),
-                    np.asarray(do[i].values), np.asarray(to[i].values),
-                    np.asarray(lo[i].values),
-                    keep=keep,
-                )
-                if d.size == 0:
-                    continue
-                s = float(w[i].as_py()) * tf_part(t, dl, avgdl)
-                qids.append(np.full(d.size, qid[i].as_py(), dtype=object))
-                docs.append(d.astype(np.int64, copy=False))
-                scores.append(s)
-            if qids:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(qids), type=pa.string()),
-                        pa.array(np.concatenate(docs), type=pa.int64()),
-                        pa.array(np.concatenate(scores), type=pa.float64()),
-                    ],
-                    schema=out_schema,
-                )
-
-    return fn
 
 
 #: which decode kernel serves: 'arrow' (default) or 'pandas' — the
@@ -188,14 +96,9 @@ def _matmul_parts_factor() -> int:
     return int(os.environ.get("SPARK_GRAFT_MATMUL_PARTS_FACTOR", "2"))
 
 
-def _decode_scores(rows: DataFrame, avgdl: float,
-                   keep_col: str | None) -> DataFrame:
-    """Apply the configured decode kernel to a posting-row projection."""
-    if _decode_impl() == "arrow":
-        return rows.mapInArrow(
-            _decode_score_arrow_iter(avgdl, keep_col), SCORE_ROWS)
-    return rows.mapInPandas(_decode_score_iter(avgdl, keep_col), SCORE_ROWS)
-
+#: the posting-row columns every decode kernel reads
+PAYLOAD_COLS = ("term", "doc_bytes", "tf_bytes", "dl_bytes",
+                "doc_off", "tf_off", "dl_off")
 
 TFPART_ROWS = StructType(
     [
@@ -266,9 +169,10 @@ def _decode_tf_iter(avgdl: float, keep_col: str | None,
 
 def _decode_tf_arrow_iter(avgdl: float, keep_col: str | None,
                           with_df: bool = False):
-    """mapInArrow twin of _decode_tf_iter (same zero-copy assembly as
-    _decode_score_arrow_iter). with_df passes the payload row's df
-    column through (see TFPART_DF_ROWS)."""
+    """mapInArrow twin of _decode_tf_iter: byte payloads are read
+    straight from the Arrow batch as buffers and the output batch is
+    assembled from the numpy arrays. with_df passes the payload row's
+    df column through (see TFPART_DF_ROWS)."""
     import pyarrow as pa
 
     fields = [
@@ -986,11 +890,12 @@ def warm_serving(spark: SparkSession, index: dict,
     batches re-paid a ~30 s per-batch constant that neither executor
     count nor batch size shrank). Two artifacts become resident:
 
-    * ``warm_tmeta`` — per-term (df, raw block-max) for the WHOLE
-      index, collected once from the metadata columns (column pruning
-      keeps the payload bytes unread). Every subsequent batch builds
-      its per-(query, term) weight table as a pure local relation —
-      zero index-metadata scan jobs per batch, and idf/w still
+    * ``warm_tmeta`` — per-term (df, raw block-max, impacts) for the
+      WHOLE index (_term_meta), collected once from the metadata
+      columns (column pruning keeps the payload bytes unread). Every
+      subsequent batch builds its per-(query, term) weight table as a
+      pure local relation — zero index-metadata scan jobs per batch,
+      and idf/w still
       evaluate in the JVM so scores stay bit-identical to cold calls.
       Driver memory is one dict entry per distinct term (~100 B); the
       max_terms guard refuses vocabularies where that stops being
@@ -1018,14 +923,7 @@ def warm_serving(spark: SparkSession, index: dict,
             f"{max_terms}; a driver-side tmeta map is not sane at this "
             "vocabulary — serve cold (broadcast tmeta join) or raise "
             "max_terms explicitly")
-    rows = (
-        posts.groupBy("term")
-        .agg(F.max("df").alias("df"),
-             F.max(F.array_max("block_max")).alias("bmax_raw"))
-        .collect()
-    )
-    index["warm_tmeta"] = {r["term"]: (r["df"], r["bmax_raw"])
-                           for r in rows}
+    index["warm_tmeta"] = _term_meta(posts, _impact_ranks(index, posts))
     index["warm_stats"] = (index["n_docs"], index["avgdl"],
                            index.get("encode_avgdl"))
     if payload_cache is not None:
@@ -1074,7 +972,244 @@ def _pb_pruned_postings(index: dict, terms: list[str]) -> DataFrame:
     from .xxh import spark_xxhash64_str
 
     pbs = sorted({spark_xxhash64_str(t) % pb_mod for t in terms})
-    return posts.where(F.col("pb").isin(pbs))
+    return posts.where(in_list("pb", pbs))
+
+
+def _impact_ranks(index: dict, posts: DataFrame) -> tuple:
+    """The ranks the index's serving rows store impacts for, or () on
+    an index without the impacts column (built before it existed)."""
+    if "impacts" not in posts.columns:
+        return ()
+    return tuple(index.get("impact_ranks") or ())
+
+
+def _term_meta(posts: DataFrame, ranks: tuple) -> dict:
+    """term -> (df, raw block-max, per-rank impacts) over the given
+    posting rows, in ONE metadata-column aggregation (column pruning
+    keeps the byte payloads unread): the per-term max of each stored
+    impact rank (NULL when no chunk of the term holds that many
+    postings). F.get returns NULL past an array's end whatever the
+    ANSI setting."""
+    aggs = [F.max("df").alias("df"),
+            F.max(F.array_max("block_max")).alias("bmax_raw")]
+    aggs += [F.max(F.get("impacts", i)).alias(f"imp{i}")
+             for i in range(len(ranks))]
+    return {
+        r["term"]: (r["df"], r["bmax_raw"],
+                    tuple(r[f"imp{i}"] for i in range(len(ranks))))
+        for r in posts.groupBy("term").agg(*aggs).collect()
+    }
+
+
+def _read_tombstones(spark: SparkSession, index: dict):
+    """(broadcast local (doc_id) relation, sorted int64 ids), or
+    (None, None) without standing tombstones. The tombstone parquet is
+    read ONCE per call: the ids feed both the packed matmul kernel's
+    dead-id array and every anti-join (a local relation, so no re-scan
+    per consumer)."""
+    tombs = index.get("tombstones")
+    if tombs is None:
+        return None, None
+    dead_ids = np.sort(np.array(
+        [r.doc_id for r in tombs.select("doc_id").collect()],
+        dtype=np.int64))
+    if not dead_ids.size:
+        return None, None
+    return F.broadcast(local_df(
+        spark, [(int(i),) for i in dead_ids.tolist()], "doc_id long")
+    ), dead_ids
+
+
+def _live(scored: DataFrame, tombs: DataFrame | None) -> DataFrame:
+    return (scored.join(tombs, "doc_id", "left_anti")
+            if tombs is not None else scored)
+
+
+def _py_w(qtf: float, dfv: float, n_docs: int) -> float:
+    """Bounds-only driver twin of qtf * idf_expr (ulp differences from
+    the JVM are absorbed by the relaxations of θ and the thresholds)."""
+    return qtf * math.log1p((float(n_docs) - dfv + 0.5) / (dfv + 0.5))
+
+
+def _relax(v: float) -> float:
+    """Move a finite pruning bound toward KEEP by a relative 1e-9
+    (+1e-12): driver floats can differ from the JVM's by an ulp per op,
+    and a superset decode is always rank-exact."""
+    return v if math.isinf(v) else v - abs(v) * 1e-9 - 1e-12
+
+
+def _impact_theta(qt_rows, meta: dict, rank_i: int, n_docs: int,
+                  scale: float) -> dict[str, float]:
+    """θ(q) = max over q's positive-weight terms of
+    w * impact[rank_i] * scale — driver arithmetic over the metadata.
+    Sound because a term with w > 0 has at least r live docs (no
+    tombstones on this route) whose single-term score alone reaches
+    w * impact_r, other positive terms only add, and phase 2 lowers θ
+    by the negative terms' worst case (negsum). scale =
+    min(1, avgdl/encode_avgdl): tf_part(avgdl_s) > tf_part(avgdl_e) *
+    avgdl_s/avgdl_e for avgdl_s < avgdl_e (search_index docstring has
+    the ratio argument), so a scaled stored impact stays a lower
+    bound."""
+    theta: dict[str, float] = {}
+    for (q, t_, f) in qt_rows:
+        row = meta.get(t_)
+        if row is None or row[0] is None or not row[2]:
+            continue
+        imp = row[2][rank_i]
+        if imp is None:  # no chunk of the term holds r postings
+            continue
+        w_ = _py_w(f, float(row[0]), n_docs)
+        if w_ <= 0:
+            continue
+        v = _relax(w_ * float(imp) * scale)
+        if v > theta.get(q, float("-inf")):
+            theta[q] = v
+    return theta
+
+
+def _decode_theta(spark: SparkSession, payload: DataFrame, meta: dict,
+                  qt_rows, k: int, n_docs: int, avgdl: float,
+                  spread: bool, tombs: DataFrame | None
+                  ) -> dict[str, float]:
+    """The exact θ fallback (one Spark job chain): decode ONLY each
+    query's rarest term and take its k-th best live single-term score.
+    Rarest = highest idf = LOWEST df (idf is strictly decreasing in df,
+    ties to min term). w for these term_scores is JVM-evaluated on a
+    local relation; the rare-term payload filter is a driver literal
+    (IN-pushdown, no semi-join). Queries with fewer than k live docs
+    for the term get no θ (-inf)."""
+    qtf_map = {(q, t_): f for (q, t_, f) in qt_rows}
+    rare_pick: dict[str, tuple] = {}  # query -> ((df, term), term)
+    for (q, t_, f) in qt_rows:
+        row = meta.get(t_)
+        if row is None or row[0] is None:
+            continue
+        key = (float(row[0]), t_)
+        cur = rare_pick.get(q)
+        if cur is None or key < cur[0]:
+            rare_pick[q] = (key, t_)
+    rare_terms = sorted({v[1] for v in rare_pick.values()})
+    if not rare_terms:
+        return {}
+    rareq_local = F.broadcast(
+        local_df(
+            spark,
+            [(q, v[1], qtf_map[(q, v[1])], float(meta[v[1]][0]))
+             for q, v in rare_pick.items()],
+            "query_id string, term string, qtf double, df double")
+        .withColumn("w", F.col("qtf") * idf_expr(n_docs))
+        .select("query_id", "term", "w"))
+    # Usually tiny posting lists. The blanket spread (defaultParallelism
+    # x 4) made this a 128-task stage of pure scheduling overhead
+    # (measured ~3.5 s of a 12 s design-regime batch); the rare dfs are
+    # already driver-side, so derive the fan-out from the actual decode
+    # row count instead (scale-adaptive): below 200k rows the natural
+    # scan partitioning is plenty, above it spread ~100k rows per task,
+    # capped at the old width. A single all-hot-term query (its "rare"
+    # term is still hot) therefore still spreads across that term's
+    # salted chunks.
+    ph_rows = (payload.where(in_list("term", rare_terms))
+               .select(*PAYLOAD_COLS))
+    est_rows = sum(float(meta[v[1]][0]) for v in rare_pick.values())
+    if spread and est_rows >= 200_000:
+        width = int(min(
+            spark.sparkContext.defaultParallelism * 4,
+            max(2, est_rows // 100_000),
+        ))
+        ph_rows = ph_rows.repartition(width)
+    phase1 = _live(
+        _decode_tf_parts(ph_rows, avgdl, None, spread=False)
+        .join(rareq_local, "term")
+        .withColumn("term_score", F.col("w") * F.col("tf_part")),
+        tombs)
+    wrank = Window.partitionBy("query_id").orderBy(
+        F.col("term_score").desc(), F.col("doc_id").asc()
+    )
+    return {
+        r["query_id"]: float(r["theta"])
+        for r in (
+            phase1.withColumn("rn", F.row_number().over(wrank))
+            .where(F.col("rn") <= k)
+            .groupBy("query_id")
+            .agg(F.min("term_score").alias("theta"),
+                 F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        )
+        if r["cnt"] >= k  # fewer than k docs: θ stays -inf
+    }
+
+
+def _theta(spark: SparkSession, index: dict, payload: DataFrame,
+           meta: dict, qt_rows, k: int, tombs: DataFrame | None
+           ) -> dict[str, float]:
+    """Phase-1 θ per query (module doc): from the stored impacts when
+    they are sound and deep enough, else the exact decode fallback.
+    The one θ source of search_index and pruning_stats."""
+    n_docs, avgdl = index["n_docs"], index["avgdl"]
+    enc_avgdl = float(index.get("encode_avgdl") or avgdl) or avgdl
+    ranks = _impact_ranks(index, payload)
+    rank_i = next((i for i, r in enumerate(ranks) if r >= k), None)
+    if tombs is None and rank_i is not None:
+        scale = min(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
+        return _impact_theta(qt_rows, meta, rank_i, n_docs, scale)
+    return _decode_theta(spark, payload, meta, qt_rows, k, n_docs, avgdl,
+                         n_docs >= AUTO_PRUNE_MIN_DOCS, tombs)
+
+
+def _block_thresholds(qt_rows, meta: dict, theta: dict, n_docs: int,
+                      bfac: float, quant: float) -> dict[tuple, float]:
+    """Phase 2 per (query, term): the raw block_max a block of the term
+    must reach to possibly hold a top-k doc of the query, relaxed
+    toward KEEP (_relax). From
+        w*bmax*bfac >= θ(q) - (UBsum(q) - w*tmax)
+    ⟺  bmax >= (θ(q) - UBsum(q)) / (w*bfac) + tmax/bfac.
+    Negative-weight safety (all three guards are exact no-ops when
+    every w > 0, i.e. on any self-consistent index — idf = ln(1+x),
+    x > 0. They matter only in the hybrid stats window
+    compact_tombstones documents: stats refreshed, merge pending — or a
+    crash between them — where a term's stale df can exceed the
+    refreshed N, making idf and hence w NEGATIVE):
+      (a) a term's max contribution to a doc's score is w*tmax when
+          w > 0 but 0 when w <= 0 (the doc simply not containing it
+          beats any positive tf), so UBsum sums max(w,0)*tmax;
+      (b) θ lower-bounds a doc's FINAL score only if other terms can't
+          subtract — negsum (the sum of the negative terms' worst
+          cases, <= 0) restores the bound;
+      (c) dividing the keep condition by w*bfac flips the inequality
+          for w < 0; a w <= 0 term can never RAISE a score toward θ,
+          so keep all its blocks (-inf threshold).
+    A term with degenerate metadata (NULL df or block-max: a foreign or
+    hand-edited index) leaves its query's score unbounded, so every
+    term of that query keeps all blocks."""
+    ninf = float("-inf")
+    ub: dict[str, tuple[float, float]] = {}
+    open_q: set = set()
+    for (q, t_, f) in qt_rows:
+        row = meta.get(t_)
+        if row is None:
+            continue  # absent from the index: no postings
+        if row[0] is None or row[1] is None:
+            open_q.add(q)
+            continue
+        w_ = _py_w(f, float(row[0]), n_docs)
+        tmax = float(row[1]) * bfac
+        us, ns = ub.get(q, (0.0, 0.0))
+        ub[q] = (us + max(w_, 0.0) * tmax, ns + min(w_ * tmax, 0.0))
+    out: dict[tuple, float] = {}
+    for (q, t_, f) in qt_rows:
+        row = meta.get(t_)
+        if row is None:
+            continue
+        w_ = ninf if q in open_q else _py_w(f, float(row[0]), n_docs)
+        if w_ <= 0:
+            out[(q, t_)] = ninf
+            continue
+        ubsum, negsum = ub[q]
+        tmax = float(row[1]) * bfac
+        th = theta.get(q, ninf) - quant
+        out[(q, t_)] = _relax(
+            (th + negsum - ubsum) / (w_ * bfac) + tmax / bfac)
+    return out
 
 
 def search_index(
@@ -1118,8 +1253,11 @@ def search_index(
     tf->0, dl->inf, where it tends to that quotient), so multiplying
     every stored bound by max(1, serving/encode) re-validates it as an
     upper bound; pruning merely loses (bounded) sharpness, never
-    correctness. merge_partials re-baselines with a full re-encode once
-    the drift exceeds its max_bound_drift."""
+    correctness. The stored impacts (phase-1 θ) are LOWER bounds and
+    take the mirror factor min(1, serving/encode): for serving < encode
+    the same ratio argument gives tf_part(serving) > tf_part(encode) *
+    serving/encode. merge_partials re-baselines with a full re-encode
+    once the drift exceeds its max_bound_drift."""
     if cache_level not in ("memory", "disk", "none"):
         raise ValueError(
             f"cache_level must be 'memory', 'disk', or 'none', got "
@@ -1137,36 +1275,17 @@ def search_index(
     # Standing tombstones (postings.delete_docs): Lucene-liveDocs
     # semantics — deleted docs vanish from results immediately, while
     # n_docs/avgdl/df keep counting them until compact_tombstones
-    # re-baselines. The set is anti-joined in TWO places: (a) the final
-    # scores before the top-k window, and (b) the phase-1 scores before
-    # the theta threshold — a theta supported by deleted docs would be
-    # too high for the surviving corpus and could prune a surviving doc
-    # out of the true top-k. Block-max bounds may still include deleted
-    # docs' tf: upper bounds stay valid, just less sharp. Broadcast:
-    # the tombstone set is meant to stay small relative to the index
-    # (compact when it grows — same guidance as Lucene's
+    # re-baselines. The set is anti-joined from the final scores before
+    # the top-k window, and θ must not be supported by deleted docs (it
+    # would be too high for the surviving corpus and could prune a
+    # surviving doc out of the true top-k): stored impacts may count
+    # deleted docs, so a tombstoned index takes the decode θ, which
+    # anti-joins its phase-1 scores. Block-max bounds may still include
+    # deleted docs' tf: upper bounds stay valid, just less sharp.
+    # Broadcast: the tombstone set is meant to stay small relative to
+    # the index (compact when it grows — same guidance as Lucene's
     # forceMergeDeletes).
-    # Read the tombstone parquet ONCE per call: the collected ids feed
-    # both consumers — the packed kernel's sorted dead-id array AND the
-    # anti-join side (rebuilt as a local relation, so the two _live
-    # actions on the pruned path don't re-scan the parquet either).
-    tombs = index.get("tombstones")
-    dead_ids = None
-    if tombs is not None:
-        dead_ids = np.sort(np.array(
-            [r.doc_id for r in tombs.select("doc_id").collect()],
-            dtype=np.int64))
-        if dead_ids.size:
-            tombs = F.broadcast(local_df(
-                spark, [(int(i),) for i in dead_ids.tolist()],
-                "doc_id long"))
-        else:
-            tombs, dead_ids = None, None
-
-    def _live(scored: DataFrame) -> DataFrame:
-        return (scored.join(tombs, "doc_id", "left_anti")
-                if tombs is not None else scored)
-
+    tombs, dead_ids = _read_tombstones(spark, index)
     n_docs, avgdl = index["n_docs"], index["avgdl"]
     enc_avgdl = float(index.get("encode_avgdl") or avgdl) or avgdl
     bfac = max(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
@@ -1221,10 +1340,7 @@ def search_index(
     # containing it: 400 queries OOM'd a 10 GiB executor; per-term
     # decode makes batch cost proportional to UNIQUE terms, which is
     # what a 1000-executor batch-serving job needs.
-    payload = (
-        _pb_pruned_postings(index, terms)
-        .where(F.col("term").isin(terms))
-    )
+    payload = _pb_pruned_postings(index, terms).where(in_list("term", terms))
     if prune and cache_level == "memory":
         payload = _track_persist(payload.cache())
     elif prune and cache_level == "disk":
@@ -1243,12 +1359,12 @@ def search_index(
     #     (TFPART_DF_ROWS) and idf/w evaluate JVM-side on the decoded
     #     rows; the (query_id, term, qtf) table is already driver-side
     #     (local_query_terms), so its broadcast builds without a job.
-    #   * pruned route: per-term (df, raw block-max) is brought
+    #   * pruned route: per-term (df, raw block-max, impacts) is brought
     #     driver-side ONCE — from the warm map when warm, else via one
     #     metadata-column aggregation (column pruning keeps the byte
-    #     payloads unread) — and every downstream consumer (rare-term
-    #     pick, UB sums, per-term block thresholds) is plain driver
-    #     arithmetic instead of its own chain of Spark stages. The r05
+    #     payloads unread) — and every downstream consumer (θ, UB sums,
+    #     per-term block thresholds) is plain driver arithmetic instead
+    #     of its own chain of Spark stages. The r05
     #     in-plan variant re-evaluated that scan in four separate
     #     broadcast sub-jobs (~30 chained stages at sf0.1).
     #   * scoring weights stay JVM-evaluated everywhere: qterm becomes
@@ -1265,24 +1381,16 @@ def search_index(
         agg_impl = "matmul" if spread else "join"
     meta: dict = {}
     if prune:
-        if warm_ok:
-            # ADVICE-r5 #2: tolerate degenerate warm rows whose
-            # collected df/block_max came back NULL (foreign or
-            # hand-edited index) — such terms keep all blocks via the
-            # -inf threshold default below, mirroring the cold join's
-            # null tolerance
-            meta = {t: wt[t] for t in terms if t in wt
-                    and wt[t][0] is not None and wt[t][1] is not None}
+        # a warm row with a NULL df, block-max or impacts (foreign or
+        # hand-edited index) is not trusted: the whole call reads its
+        # metadata cold (Job A), and _block_thresholds keeps every
+        # block of a query whose term stays degenerate there too
+        if warm_ok and not any(
+                None in wt[t] for t in terms if t in wt):
+            meta = {t: wt[t] for t in terms if t in wt}
         else:
             # Job A: the ONE per-call index-metadata aggregation
-            meta = {
-                r["term"]: (r["df"], r["bmax_raw"])
-                for r in payload.groupBy("term").agg(
-                    F.max("df").alias("df"),
-                    F.max(F.array_max("block_max")).alias("bmax_raw"),
-                ).collect()
-                if r["df"] is not None and r["bmax_raw"] is not None
-            }
+            meta = _term_meta(payload, _impact_ranks(index, payload))
         _mark("meta(JobA)")
 
     def _qterm_local() -> DataFrame:
@@ -1291,7 +1399,8 @@ def search_index(
         old tmeta-join route) and the broadcast builds without a
         Spark job. Pruned-path only (meta is populated there)."""
         rows = [(q, t_, f, float(meta[t_][0]))
-                for (q, t_, f) in qt_rows if t_ in meta]
+                for (q, t_, f) in qt_rows
+                if t_ in meta and meta[t_][0] is not None]
         return (
             local_df(spark, rows,
                      "query_id string, term string, qtf double, df double")
@@ -1300,7 +1409,7 @@ def search_index(
         )
 
     def _finish(scored: DataFrame) -> DataFrame:
-        scored = _live(scored)
+        scored = _live(scored, tombs)
         if round_dp is not None:
             scored = scored.withColumn("score", F.round("score", round_dp))
         return _topk(scored, k)
@@ -1378,7 +1487,7 @@ def search_index(
             decoded = _decode_tf_parts(rows, avgdl, keep_col,
                                        spread=spread)
             return _finish(_matmul_score_topk(
-                _live(decoded), qterm_pd, k, round_dp))
+                _live(decoded, tombs), qterm_pd, k, round_dp))
         # join aggregation
         if warm_single is not None:
             decoded = _decode_tf_parts(rows, avgdl, keep_col,
@@ -1413,167 +1522,40 @@ def search_index(
             .agg(F.sum(F.col("w") * F.col("tf_part")).alias("score"))
         )
 
-    payload_cols = ("term", "doc_bytes", "tf_bytes", "dl_bytes",
-                    "doc_off", "tf_off", "dl_off")
     if not prune:
-        cols = payload_cols if agg_impl == "matmul" else (
-            *payload_cols, "df")
+        cols = PAYLOAD_COLS if agg_impl == "matmul" else (
+            *PAYLOAD_COLS, "df")
         return _score_topk(payload.select(*cols), None)
 
-    # ---- pruned path (round 6 restructure): two compact jobs + the
-    # returned plan. The r05 version kept θ/UB/thresholds in-plan:
+    # ---- pruned path: the metadata above, then driver arithmetic, then
+    # the returned plan. The r05 version kept θ/UB/thresholds in-plan:
     # qterm was re-evaluated by four consumers and every broadcast ran
     # as its own AQE sub-job — ~30 chained stage launches at sf0.1
     # (BASELINE.md anatomy), i.e. the whole forced-prune wall was
     # scheduler floor. Now:
-    #   Job A (cold only, `meta` above): ONE metadata-column
-    #     aggregation -> driver dict (term -> (df, raw block-max)).
-    #   Job B: phase-1 θ — decode ONLY each query's rarest term.
-    #     Rarest = highest idf = LOWEST df (idf is strictly decreasing
-    #     in df, ties to min term — the pick is identical to the old
-    #     max-idf window, now a driver-side min over `meta`); the
-    #     k-th best single-term score per query is collected
-    #     (<= n_queries rows). w for these term_scores is JVM-evaluated
-    #     on a local relation (bit-identical to the old plan).
+    #   θ (_theta): from the stored impacts in `meta` — no job — or, on
+    #     the exact fallback, one decode of each query's rarest term.
     #   Driver: phase 2 — per-query UB sums and the per-term block
-    #     threshold (MIN of the keep condition over sharing queries,
-    #     exactly the old groupBy) in plain Python. These feed PRUNING
-    #     BOUNDS only: driver floats can differ from the JVM's by an
-    #     ulp per op, so every finite threshold is relaxed by a
-    #     relative 1e-9 (+1e-12) — pruning errs on the KEEP side, and
-    #     a superset decode is always rank-exact (the WAND argument
-    #     below).
+    #     threshold (_block_thresholds; the MIN of the keep condition
+    #     over sharing queries, exactly the old groupBy). These feed
+    #     PRUNING BOUNDS only and are relaxed toward KEEP.
     #   Plan: payload ⋈ broadcast(local thresholds) -> keep_blocks ->
     #     decode survivors -> aggregate -> top-k window; every
     #     broadcast builds from a local relation (no sub-jobs).
-    #
-    # phase-2 math (unchanged): per (q,t) a block is needed iff
-    #     w*bmax*bfac >= θ(q) - (UBsum(q) - w*tmax)
-    # ⟺  bmax >= (θ(q) - UBsum(q)) / (w*bfac) + tmax/bfac
-    # so the per-term threshold is the MIN of the right-hand side over
-    # queries containing t. Decoding a superset of a query's own keep
-    # list is always safe: the WAND argument only ever uses "a block
-    # was skipped ⇒ its docs provably score below θ(q)", and the union
-    # skips a block only when EVERY sharing query's condition skips it
-    # — extra decoded blocks just move partial scores toward their
-    # exact values (rank identity to the unpruned plan is pytest- and
-    # oracle-gated).
-    # Negative-weight safety (all three guards are exact no-ops when
-    # every w > 0, i.e. on any self-consistent index — idf = ln(1+x),
-    # x > 0. They matter only in the hybrid stats window
-    # compact_tombstones documents: stats refreshed, merge pending —
-    # or a crash between them — where a term's stale df can exceed
-    # the refreshed N, making idf and hence w NEGATIVE):
-    #   (a) a term's max contribution to a doc's score is w*tmax when
-    #       w > 0 but 0 when w <= 0 (the doc simply not containing it
-    #       beats any positive tf), so UBsum sums max(w,0)*tmax;
-    #   (b) θ from phase 1 lower-bounds a doc's FINAL score only if
-    #       other terms can't subtract — negsum (the sum of the
-    #       negative terms' worst cases, <= 0) restores the bound;
-    #   (c) dividing the keep condition by w*bfac flips the
-    #       inequality for w < 0; a w <= 0 term can never RAISE a
-    #       score toward θ, so keep all its blocks (-inf threshold).
-    import math
-
-    def _py_w(qtf: float, dfv: float) -> float:
-        # bounds-only driver twin of idf_expr (ulp differences from
-        # the JVM are absorbed by the epsilon relaxation)
-        return qtf * math.log1p((float(n_docs) - dfv + 0.5) / (dfv + 0.5))
-
-    qtf_map = {(q, t_): f for (q, t_, f) in qt_rows}
-    rare_pick: dict[str, tuple] = {}  # query -> ((df, term), term)
-    for (q, t_, f) in qt_rows:
-        if t_ not in meta:
-            continue
-        key = (float(meta[t_][0]), t_)
-        cur = rare_pick.get(q)
-        if cur is None or key < cur[0]:
-            rare_pick[q] = (key, t_)
-    rare_terms = sorted({v[1] for v in rare_pick.values()})
-
-    theta: dict[str, float] = {}
-    if rare_terms:
-        # Job B: θ. The rare-term payload filter is a driver literal
-        # (IN-pushdown, no semi-join); w is JVM-evaluated on the local
-        # rareq relation, so θ is bit-identical to the old plan's.
-        rareq_local = F.broadcast(
-            local_df(
-                spark,
-                [(q, v[1], qtf_map[(q, v[1])], float(meta[v[1]][0]))
-                 for q, v in rare_pick.items()],
-                "query_id string, term string, qtf double, df double")
-            .withColumn("w", F.col("qtf") * idf_expr(n_docs))
-            .select("query_id", "term", "w"))
-        # Phase-1 decodes the RAREST term of each query — usually tiny
-        # posting lists. The blanket spread (defaultParallelism x 4)
-        # made this a 128-task stage of pure scheduling overhead
-        # (measured ~3.5 s of a 12 s design-regime batch); the rare
-        # dfs are already driver-side, so derive the fan-out from the
-        # actual decode row count instead (scale-adaptive): below
-        # 200k rows the natural scan partitioning is plenty, above it
-        # spread ~100k rows per task, capped at the old width. A
-        # single all-hot-term query (its "rare" term is still hot)
-        # therefore still spreads across that term's salted chunks.
-        ph_rows = (payload.where(F.col("term").isin(rare_terms))
-                   .select(*payload_cols))
-        est_rows = sum(float(meta[v[1]][0]) for v in rare_pick.values())
-        if spread and est_rows >= 200_000:
-            width = int(min(
-                spark.sparkContext.defaultParallelism * 4,
-                max(2, est_rows // 100_000),
-            ))
-            ph_rows = ph_rows.repartition(width)
-        phase1 = _live(
-            _decode_tf_parts(ph_rows, avgdl, None, spread=False)
-            .join(rareq_local, "term")
-            .withColumn("term_score", F.col("w") * F.col("tf_part"))
-        )
-        wrank = Window.partitionBy("query_id").orderBy(
-            F.col("term_score").desc(), F.col("doc_id").asc()
-        )
-        theta = {
-            r["query_id"]: float(r["theta"])
-            for r in (
-                phase1.withColumn("rn", F.row_number().over(wrank))
-                .where(F.col("rn") <= k)
-                .groupBy("query_id")
-                .agg(F.min("term_score").alias("theta"),
-                     F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            )
-            if r["cnt"] >= k  # fewer than k docs: θ stays -inf
-        }
-        _mark("theta(JobB)")
-
-    ninf = float("-inf")
+    # Decoding a superset of a query's own keep list is always safe:
+    # the WAND argument only ever uses "a block was skipped ⇒ its docs
+    # provably score below θ(q)", and the union skips a block only when
+    # EVERY sharing query's condition skips it — extra decoded blocks
+    # just move partial scores toward their exact values (rank identity
+    # to the unpruned plan is pytest- and oracle-gated).
+    theta = _theta(spark, index, payload, meta, qt_rows, k, tombs)
+    _mark("theta")
     quant = 10.0 ** -round_dp if round_dp is not None else 0.0
-    ub: dict[str, tuple[float, float]] = {}
-    for (q, t_, f) in qt_rows:
-        if t_ not in meta:
-            continue
-        w_ = _py_w(f, float(meta[t_][0]))
-        tmax = float(meta[t_][1]) * bfac
-        us, ns = ub.get(q, (0.0, 0.0))
-        ub[q] = (us + max(w_, 0.0) * tmax, ns + min(w_ * tmax, 0.0))
+    ninf = float("-inf")
     bthresh: dict[str, float] = {}
-    for (q, t_, f) in qt_rows:
-        if t_ not in meta:
-            continue
-        w_ = _py_w(f, float(meta[t_][0]))
-        if w_ <= 0:
-            rhs = ninf
-        else:
-            th = theta.get(q, ninf) - quant
-            ubsum, negsum = ub[q]
-            tmax = float(meta[t_][1]) * bfac
-            rhs = (th + negsum - ubsum) / (w_ * bfac) + tmax / bfac
-        prev = bthresh.get(t_)
-        if prev is None or rhs < prev:
-            bthresh[t_] = rhs
-    # epsilon-relax every finite threshold toward KEEP (see comment)
-    for t_, v in list(bthresh.items()):
-        if not math.isinf(v):
-            bthresh[t_] = v - abs(v) * 1e-9 - 1e-12
+    for (_q, t_), v in _block_thresholds(qt_rows, meta, theta, n_docs,
+                                         bfac, quant).items():
+        bthresh[t_] = min(v, bthresh.get(t_, v))
 
     thresh_local = F.broadcast(local_df(
         spark, [(t_, float(bthresh.get(t_, ninf))) for t_ in terms],
@@ -1594,8 +1576,8 @@ def search_index(
         )
     )
     _mark("thresholds(driver)")
-    keep_cols = (payload_cols if agg_impl == "matmul"
-                 else (*payload_cols, "df"))
+    keep_cols = (PAYLOAD_COLS if agg_impl == "matmul"
+                 else (*PAYLOAD_COLS, "df"))
     return _score_topk(blocks.select(*keep_cols, "keep_blocks"),
                        "keep_blocks")
 
@@ -1612,87 +1594,29 @@ def pruning_stats(
     serving decodes the per-TERM union of the sharing queries' keep
     lists (search_index phase 2), so its actual kept count is >= this
     figure when queries share terms (equal for single queries).
-    Otherwise the same phase-1/phase-2 math as search_index(prune=True)
-    (stale-bound inflation included), collected instead of executed."""
+    Otherwise the same metadata, θ (_theta) and thresholds
+    (_block_thresholds) as search_index(prune=True), counted instead
+    of executed."""
     n_docs, avgdl = index["n_docs"], index["avgdl"]
     enc_avgdl = float(index.get("encode_avgdl") or avgdl) or avgdl
     bfac = max(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
-    qt, terms, _nq = local_query_terms(spark, queries)
+    _qt, terms, qt_rows = local_query_terms(spark, queries)
     if not terms:
         return {"total_blocks": 0, "kept_blocks": 0, "pruned_fraction": 0.0}
-    # same tombstone handling as search_index: θ must not be supported
-    # by deleted docs, or this reports more pruning than serving does
-    tombs = index.get("tombstones")
-    if tombs is not None:
-        tombs = F.broadcast(tombs.select("doc_id"))
-    q = F.broadcast(qt)
-    rows = (
-        _pb_pruned_postings(index, terms)
-        .where(F.col("term").isin(terms)).join(q, "term")
-        .withColumn("idf", idf_expr(n_docs))
-        .withColumn("w", F.col("qtf") * F.col("idf"))
-    ).cache()
-    try:
-        return _pruning_stats_body(rows, avgdl, bfac, k, tombs)
-    finally:
-        # the collect happens inside the body, so the cache can be
-        # released eagerly (round-3 advisor: it used to leak)
-        rows.unpersist()
-
-
-def _pruning_stats_body(rows: DataFrame, avgdl: float, bfac: float,
-                        k: int, tombs: DataFrame | None = None) -> dict:
-    wmax = Window.partitionBy("query_id")
-    rare = rows.withColumn("idf_max", F.max("idf").over(wmax)).where(
-        F.col("idf") == F.col("idf_max")
-    )
-    rare = rare.withColumn("rare_term", F.min("term").over(wmax)).where(
-        F.col("term") == F.col("rare_term")
-    )
-    phase1 = _decode_scores(
-        rare.select("query_id", "w", "doc_bytes", "tf_bytes", "dl_bytes",
-                    "doc_off", "tf_off", "dl_off"),
-        avgdl, None)
-    if tombs is not None:
-        phase1 = phase1.join(tombs, "doc_id", "left_anti")
-    wrank = Window.partitionBy("query_id").orderBy(
-        F.col("term_score").desc(), F.col("doc_id").asc()
-    )
-    theta = (
-        phase1.withColumn("rn", F.row_number().over(wrank))
-        .where(F.col("rn") <= k)
-        .groupBy("query_id")
-        .agg(F.min("term_score").alias("theta"), F.count(F.lit(1)).alias("cnt"))
-        .withColumn("theta", F.when(F.col("cnt") >= k, F.col("theta"))
-                    .otherwise(F.lit(float("-inf"))))
-        .select("query_id", "theta")
-    )
-    qterm = rows.groupBy("query_id", "term", "w").agg(
-        (F.max(F.array_max("block_max")) * F.lit(bfac)).alias("tmax")
-    )
-    # same negative-weight guards as search_index phase 2 (exact
-    # no-ops when every w > 0): true-UB ubsum, θ lowered by negsum,
-    # and w <= 0 terms keep all blocks
-    ub = qterm.groupBy("query_id").agg(
-        F.sum(F.greatest(F.col("w"), F.lit(0.0)) * F.col("tmax"))
-        .alias("ubsum"),
-        F.sum(F.least(F.col("w") * F.col("tmax"), F.lit(0.0)))
-        .alias("negsum"),
-    )
-    meta = (
-        qterm.join(ub, "query_id").join(theta, "query_id", "left")
-        .withColumn("theta", F.coalesce(F.col("theta"), F.lit(float("-inf"))))
-        .select("query_id", "term", "tmax", "ubsum", "negsum", "theta")
-    )
-    slack = (F.col("theta") + F.col("negsum")
-             - (F.col("ubsum") - F.col("w") * F.col("tmax")))
+    tombs, _dead = _read_tombstones(spark, index)
+    payload = _pb_pruned_postings(index, terms).where(in_list("term", terms))
+    meta = _term_meta(payload, _impact_ranks(index, payload))
+    theta = _theta(spark, index, payload, meta, qt_rows, k, tombs)
+    rhs = F.broadcast(local_df(
+        spark,
+        [(q, t_, v) for (q, t_), v in _block_thresholds(
+            qt_rows, meta, theta, n_docs, bfac, 0.0).items()],
+        "query_id string, term string, rhs double"))
     agg = (
-        rows.join(F.broadcast(meta), ["query_id", "term"])
+        payload.join(rhs, "term")
         .select(
             F.size("block_max").alias("total"),
-            F.size(F.filter("block_max",
-                            lambda x: (F.col("w") <= 0)
-                            | (F.col("w") * x * F.lit(bfac) >= slack))
+            F.size(F.filter("block_max", lambda x: x >= F.col("rhs"))
                    ).alias("kept"),
         )
         .agg(F.sum("total"), F.sum("kept"))

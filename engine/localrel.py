@@ -15,13 +15,24 @@ the requested DDL schema (so types match ``createDataFrame`` exactly)
 for the supported scalar types, and falls back to plain
 ``createDataFrame`` for anything else or for row sets large enough
 that parse time / plan size would bite (serving batches of tens of
-thousands of qterm rows)."""
+thousands of qterm rows).
+
+``in_list`` renders a ``col IN (...)`` filter the same way: one parsed
+expression instead of one py4j literal per value, which is what
+``Column.isin`` costs (measured 0.3-0.57 s for a 334-term serving
+batch, against ~1 ms parsed). Both push the same ``InSet`` filter into
+the parquet scan.
+
+Rendered literals never depend on session conf: strings holding a quote
+or a backslash would read differently under
+``spark.sql.parser.escapedStringLiterals``, so they are not rendered and
+the caller falls back."""
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import _parse_datatype_string
 
 #: above this many rows the VALUES parse/plan cost outgrows the saved
@@ -30,8 +41,8 @@ MAX_LOCAL_ROWS = 2048
 
 
 def _render(v) -> str | None:
-    """One SQL literal, or None when the value type is unsupported
-    (caller falls back to createDataFrame)."""
+    """One SQL literal, or None when the value cannot be rendered
+    portably (caller falls back to createDataFrame / isin)."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -48,9 +59,11 @@ def _render(v) -> str | None:
         # parses with strtod, so the bits survive
         return f"CAST('{v!r}' AS DOUBLE)"
     if isinstance(v, str):
-        if "\x00" in v:
+        # no escape syntax reads the same under both settings of
+        # spark.sql.parser.escapedStringLiterals
+        if "'" in v or "\\" in v or "\x00" in v:
             return None
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return f"'{v}'"
     return None
 
 
@@ -79,3 +92,13 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
         f"SELECT {casts} FROM (VALUES {', '.join(rendered)}) "
         f"AS t({cols})"
     )
+
+
+def in_list(col: str, values) -> Column:
+    """``col IN (values)`` as one parsed expression (see module doc);
+    ``Column.isin`` when any value cannot be rendered portably."""
+    values = list(values)
+    rendered = [_render(v) for v in values]
+    if not values or None in rendered:
+        return F.col(col).isin(values)
+    return F.expr(f"`{col}` IN ({', '.join(rendered)})")

@@ -38,8 +38,9 @@ and term-sorted within files, so serving prunes whole partition dirs
 for the query's terms and row-group min/max stats serve the term
 IN (...) pushdown inside the survivors):
   postings/pb=N/  term, tid, salt, df, n_docs, doc_bytes, tf_bytes,
-                  dl_bytes, block_last, block_max, doc_off, tf_off,
-                  dl_off
+                  dl_bytes, block_max, impacts, doc_off, tf_off,
+                  dl_off (impacts: codec.IMPACT_RANKS; the partials
+                  carry block_last instead)
   doc_stats/      doc_id, dl, content_sha
   stats/          n_docs, avgdl
   term_dict/      tid, term
@@ -72,8 +73,8 @@ from pyspark.sql.types import (
 )
 
 from .analysis import with_tokens
-from .codec import (decode_blocked, decode_blocked_batch, encode_blocked,
-                    encode_blocked_batch)
+from .codec import (IMPACT_RANKS, decode_blocked, decode_blocked_batch,
+                    encode_blocked, encode_blocked_batch)
 
 STREAM_ENC_SCHEMA = StructType(
     [
@@ -97,14 +98,17 @@ STREAM_DOC_STATS_SCHEMA = DOC_STATS_SCHEMA + ", batch_id long"
 
 
 def _enc_dict(tid: int, n: int, enc: dict) -> dict:
+    """One encoded row: a serving row (impacts) when the encoder was
+    asked for impacts, else a partial row (block_last)."""
+    meta = ("block_max", "impacts") if "impacts" in enc else (
+        "block_last", "block_max")
     return {
         "tid": [int(tid)],
         "n_docs": [n],
         "doc_bytes": [enc["doc_bytes"]],
         "tf_bytes": [enc["tf_bytes"]],
         "dl_bytes": [enc["dl_bytes"]],
-        "block_last": [enc["block_last"]],
-        "block_max": [enc["block_max"]],
+        **{c: [enc[c]] for c in meta},
         "doc_off": [enc["doc_off"]],
         "tf_off": [enc["tf_off"]],
         "dl_off": [enc["dl_off"]],
@@ -245,7 +249,9 @@ def _emit_enc_batches(key_arrays, enc, yield_rows, tail_arrays=(),
     (offsets from the per-group byte-length cumsums); list columns
     likewise via ListArray.from_arrays. Slices stay under
     max_batch_bytes per stream so the int32 binary offsets can never
-    overflow."""
+    overflow. An encode run with impacts emits the serving layout
+    (block_max, impacts); without, the partial layout (block_last,
+    block_max)."""
     import pyarrow as pa
 
     G = enc["n_docs"].size
@@ -255,6 +261,13 @@ def _emit_enc_batches(key_arrays, enc, yield_rows, tail_arrays=(),
     tf_b0 = np.concatenate(([0], np.cumsum(enc["tf_lens"])))
     dl_b0 = np.concatenate(([0], np.cumsum(enc["dl_lens"])))
     blk0 = np.concatenate(([0], np.cumsum(enc["blocks_per_group"])))
+    if "impacts" in enc:
+        imp0 = np.concatenate(([0], np.cumsum(enc["impacts_per_group"])))
+        meta = [("block_max", pa.float64(), enc["block_max"], blk0),
+                ("impacts", pa.float64(), enc["impacts"], imp0)]
+    else:
+        meta = [("block_last", pa.int64(), enc["block_last"], blk0),
+                ("block_max", pa.float64(), enc["block_max"], blk0)]
 
     def bin_arr(buf, b0, lo, hi):
         offs = (b0[lo:hi + 1] - b0[lo]).astype(np.int32)
@@ -263,18 +276,17 @@ def _emit_enc_batches(key_arrays, enc, yield_rows, tail_arrays=(),
             pa.binary(), hi - lo,
             [None, pa.py_buffer(offs), pa.py_buffer(data)])
 
-    def list_arr(vals, lo, hi, typ):
-        offs = (blk0[lo:hi + 1] - blk0[lo]).astype(np.int32)
+    def list_arr(vals, lo, hi, typ, b0=blk0):
+        offs = (b0[lo:hi + 1] - b0[lo]).astype(np.int32)
         return pa.ListArray.from_arrays(
             pa.array(offs, type=pa.int32()),
-            pa.array(vals[blk0[lo]:blk0[hi]], type=typ))
+            pa.array(vals[b0[lo]:b0[hi]], type=typ))
 
     fields = ([(n, t) for n, t, _ in key_arrays]
               + [("n_docs", pa.int64()), ("doc_bytes", pa.binary()),
-                 ("tf_bytes", pa.binary()), ("dl_bytes", pa.binary()),
-                 ("block_last", pa.list_(pa.int64())),
-                 ("block_max", pa.list_(pa.float64())),
-                 ("doc_off", pa.list_(pa.int32())),
+                 ("tf_bytes", pa.binary()), ("dl_bytes", pa.binary())]
+              + [(n, pa.list_(t)) for n, t, _, _ in meta]
+              + [("doc_off", pa.list_(pa.int32())),
                  ("tf_off", pa.list_(pa.int32())),
                  ("dl_off", pa.list_(pa.int32()))]
               + [(n, t) for n, t, _ in tail_arrays])
@@ -292,8 +304,7 @@ def _emit_enc_batches(key_arrays, enc, yield_rows, tail_arrays=(),
             bin_arr(enc["doc_buf"], doc_b0, lo, hi),
             bin_arr(enc["tf_buf"], tf_b0, lo, hi),
             bin_arr(enc["dl_buf"], dl_b0, lo, hi),
-            list_arr(enc["block_last"], lo, hi, pa.int64()),
-            list_arr(enc["block_max"], lo, hi, pa.float64()),
+            *(list_arr(v, lo, hi, t, b0) for _, t, v, b0 in meta),
             list_arr(enc["doc_off"], lo, hi, pa.int32()),
             list_arr(enc["tf_off"], lo, hi, pa.int32()),
             list_arr(enc["dl_off"], lo, hi, pa.int32()),
@@ -428,7 +439,8 @@ def _merge_group_fn(avgdl: float):
                                       r.doc_off, r.tf_off, r.dl_off)
             ds.append(d); ts.append(t); ls.append(dl)
         d = np.concatenate(ds)
-        enc = encode_blocked(d, np.concatenate(ts), np.concatenate(ls), avgdl)
+        enc = encode_blocked(d, np.concatenate(ts), np.concatenate(ls), avgdl,
+                             impact_ranks=IMPACT_RANKS)
         # grouped-map output columns are matched by NAME, so reusing
         # _enc_dict and appending the salt is schema-safe
         return pd.DataFrame(
@@ -445,12 +457,18 @@ TID_MERGED_SCHEMA = StructType(
         StructField("doc_bytes", BinaryType(), False),
         StructField("tf_bytes", BinaryType(), False),
         StructField("dl_bytes", BinaryType(), False),
-        StructField("block_last", ArrayType(LongType()), False),
         StructField("block_max", ArrayType(DoubleType()), False),
+        StructField("impacts", ArrayType(DoubleType()), False),
         StructField("doc_off", ArrayType(IntegerType()), False),
         StructField("tf_off", ArrayType(IntegerType()), False),
         StructField("dl_off", ArrayType(IntegerType()), False),
     ]
+)
+
+#: column order of the merged serving table (pb is the partition dir)
+SERVING_COLUMNS = (
+    "term", "tid", "salt", "df", "n_docs", "doc_bytes", "tf_bytes",
+    "dl_bytes", "block_max", "impacts", "doc_off", "tf_off", "dl_off",
 )
 
 
@@ -527,7 +545,8 @@ def _merge_partition_arrow_fn(avgdl: float, yield_rows: int = 65536):
         present = g2[gs]
         g_tid = tid_s[grow][present]
         g_salt = ms_s[grow][present].astype(np.int32)
-        enc = encode_blocked_batch(d2, t2, dl2, gs, avgdl)
+        enc = encode_blocked_batch(d2, t2, dl2, gs, avgdl,
+                                   impact_ranks=IMPACT_RANKS)
         yield from _emit_enc_batches(
             [("tid", pa.int64(), g_tid), ("salt", pa.int32(), g_salt)],
             enc, yield_rows)
@@ -680,7 +699,8 @@ def _merge_onepass_arrow_fn(avgdl: float, pb_mod: int, chunk_postings: int,
         c_terms = np.repeat(np.array(terms, dtype=object), n_chunks)
         c_salt = cidx.astype(np.int32)
         c_pb = np.mod(c_tid, pb_mod).astype(np.int32)
-        enc = encode_blocked_batch(d2, t2, dl2, c_gs, avgdl)
+        enc = encode_blocked_batch(d2, t2, dl2, c_gs, avgdl,
+                                   impact_ranks=IMPACT_RANKS)
         yield from _emit_enc_batches(
             [("term", pa.string(), c_terms), ("tid", pa.int64(), c_tid),
              ("salt", pa.int32(), c_salt), ("df", pa.int64(), c_df)],
@@ -1665,15 +1685,8 @@ def merge_plan(
         os.path.join(out_dir, "term_dict"))
     if dict_distinct:
         tdict = tdict.distinct()
-    return (
-        merged.join(dfs, "tid")
-        .join(tdict, "tid")
-        .select(
-            "term", "tid", "salt", "df", "n_docs", "doc_bytes", "tf_bytes",
-            "dl_bytes", "block_last", "block_max", "doc_off", "tf_off",
-            "dl_off",
-        )
-    )
+    return merged.join(dfs, "tid").join(tdict, "tid").select(
+        *SERVING_COLUMNS)
 
 
 #: tid-bucket fan-out of the final postings table: pb = pmod(tid, PB_MOD)
@@ -1834,14 +1847,13 @@ def merge_partials(
         ver = int(manifest.get("postings_version", 0)) + 1
         new_name = f"postings_v{ver}"
         spark.createDataFrame([], StructType(fields)).select(
-            "term", "tid", "salt", "df", "n_docs", "doc_bytes", "tf_bytes",
-            "dl_bytes", "block_last", "block_max", "doc_off", "tf_off",
-            "dl_off", "pb",
+            *SERVING_COLUMNS, "pb",
         ).write.mode("overwrite").parquet(os.path.join(out_dir, new_name))
         manifest["merged"] = True
         manifest["postings_dir"] = new_name
         manifest["postings_version"] = ver
         manifest["encode_avgdl"] = avgdl
+        manifest["impact_ranks"] = list(IMPACT_RANKS)
         manifest["pb_mod"] = pb_mod
         manifest["merged_batch_shards"] = _batch_shard_keys(manifest)
         manifest["merged_stream_shards"] = []
@@ -1883,6 +1895,9 @@ def merge_partials(
         # bucket-level partial rewrite needs the bucketed layout (and
         # the same fan-out); a pre-bucketing index re-baselines fully
         and manifest.get("pb_mod") == pb_mod
+        # the standing rows must carry the same impacts (an older
+        # serving table has none and would not union with new rows)
+        and manifest.get("impact_ranks") == list(IMPACT_RANKS)
         and os.path.isdir(_postings_dir(out_dir, manifest))
     )
     touched_df = None
@@ -1973,6 +1988,7 @@ def merge_partials(
     manifest["postings_dir"] = new_name
     manifest["postings_version"] = ver
     manifest["encode_avgdl"] = avgdl
+    manifest["impact_ranks"] = list(IMPACT_RANKS)
     manifest["pb_mod"] = pb_mod
     manifest["merged_batch_shards"] = _batch_shard_keys(manifest)
     manifest["merged_stream_shards"] = sorted(stream_shards)
@@ -2075,6 +2091,10 @@ def read_index(spark: SparkSession, out_dir: str) -> dict:
         # indexes): csearch uses it to prune whole partitions for the
         # query's terms
         "pb_mod": m.get("pb_mod"),
+        # ranks of the serving rows' impacts (codec.IMPACT_RANKS; empty
+        # on an index merged before impacts existed): csearch derives
+        # the pruning threshold θ from them
+        "impact_ranks": tuple(m.get("impact_ranks") or ()),
         # docs marked deleted but not yet compacted away (None when the
         # index has no standing tombstones): serving anti-joins results
         # against this set — delete_docs docstring has the semantics

@@ -75,6 +75,42 @@ def test_encode_blocked_batch_byte_identical_per_group():
             assert int(out["n_docs"][g]) == ds[g].size
 
 
+def test_encode_blocked_batch_impacts_per_group():
+    """The stored impacts: per group, the r-th largest tf_part for each
+    IMPACT_RANKS rank the group is big enough for — the same values
+    from the batch encoder, the single-list encoder and a plain sort,
+    and nothing for groups below the smallest rank."""
+    from engine.codec import IMPACT_RANKS, tf_part
+
+    rng = np.random.default_rng(5)
+    sizes = [1, 9, 10, 11, 99, 100, 101, 3 * BLOCK_SIZE, 4]
+    ds = [np.sort(rng.choice(10 ** 6, s, replace=False)).astype(np.int64)
+          for s in sizes]
+    ts = [rng.integers(1, 30, size=s).astype(np.int64) for s in sizes]
+    ls = [rng.integers(1, 400, size=s).astype(np.int64) for s in sizes]
+    starts = np.cumsum([0] + sizes[:-1]).astype(np.int64)
+    avgdl = 120.0
+    out = encode_blocked_batch(np.concatenate(ds), np.concatenate(ts),
+                               np.concatenate(ls), starts, avgdl,
+                               impact_ranks=IMPACT_RANKS)
+    assert out["impacts_per_group"].tolist() == [
+        sum(s >= r for r in IMPACT_RANKS) for s in sizes]
+    i0 = np.concatenate(([0], np.cumsum(out["impacts_per_group"])))
+    for g, s in enumerate(sizes):
+        got = out["impacts"][i0[g]:i0[g + 1]].tolist()
+        desc = np.sort(tf_part(ts[g], ls[g], avgdl))[::-1]
+        assert got == [float(desc[r - 1]) for r in IMPACT_RANKS if s >= r]
+        ref = encode_blocked(ds[g], ts[g], ls[g], avgdl,
+                             impact_ranks=IMPACT_RANKS)
+        assert got == ref["impacts"]
+    # partial encodes (no ranks) skip the sort and emit no impacts
+    assert "impacts" not in encode_blocked_batch(
+        ds[0], ts[0], ls[0], np.zeros(1, dtype=np.int64), avgdl)
+    z = np.empty(0, dtype=np.int64)
+    empty = encode_blocked_batch(z, z, z, z, avgdl, impact_ranks=IMPACT_RANKS)
+    assert empty["impacts"].size == 0
+
+
 def test_decode_blocked_batch_matches_per_row():
     rng = np.random.default_rng(11)
     for n_rows, max_size in [(1, 4), (40, 7), (5, 4 * BLOCK_SIZE), (300, 2)]:
@@ -160,7 +196,7 @@ def test_merge_arrow_kernel_identical(spark, tmp_path):
                         n_salts=2, merge_impl=impl)
         rows[impl] = sorted(
             (r.term, r.salt, r.df, r.n_docs, bytes(r.doc_bytes),
-             bytes(r.tf_bytes), bytes(r.dl_bytes), tuple(r.block_last),
+             bytes(r.tf_bytes), bytes(r.dl_bytes), tuple(r.impacts),
              tuple(r.block_max), tuple(r.doc_off), tuple(r.tf_off),
              tuple(r.dl_off))
             for r in df.collect())
@@ -189,7 +225,7 @@ def test_mapside_combine_build_identical_to_shuffle(spark, tmp_path):
         idx = read_index(spark, out)
         rows[combine] = sorted(
             (r.term, r.salt, r.df, r.n_docs, bytes(r.doc_bytes),
-             bytes(r.tf_bytes), bytes(r.dl_bytes), tuple(r.block_last),
+             bytes(r.tf_bytes), bytes(r.dl_bytes), tuple(r.impacts),
              tuple(r.block_max), tuple(r.doc_off), tuple(r.tf_off),
              tuple(r.dl_off))
             for r in idx["postings"].collect())

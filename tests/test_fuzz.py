@@ -101,3 +101,71 @@ def test_fuzz_stream_cycles_converge_to_batch_build(spark,
     want = _topk_sig(search_index(spark, idx_b, qs, k=10,
                                   prune=True).collect())
     assert got == want
+
+
+def _zipf_docs(rng: random.Random, n: int):
+    """Skewed corpus: a handful of terms reach 100+ postings, so both
+    stored impact ranks (10 and 100) are present on the hot terms."""
+    weights = [1.0 / (i + 1) for i in range(len(VOCAB))]
+    rows = []
+    for i in range(n):
+        k = rng.randint(0, 14)
+        text = " ".join(rng.choices(VOCAB, weights=weights, k=k))
+        rows.append((i, text, "en", "s", len(text)))
+    return rows
+
+
+def test_fuzz_impact_theta_rank_identical_to_decode_theta(spark,
+                                                          tmp_path_factory):
+    """Random skewed corpora x random queries: the pruned route with θ
+    from the stored impacts, the pruned route with the decode θ (the
+    same index minus its impacts column) and the unpruned route give
+    identical top-k — on the index as built and with the serving avgdl
+    drifted below the encode avgdl (the stored impacts are then scaled
+    down). Every impact θ must also lower-bound the query's true k-th
+    score."""
+    from engine.csearch import (_impact_ranks, _term_meta, _theta,
+                                local_query_terms, search_index)
+    from engine.postings import build_index, read_index
+
+    theta_ks = set()
+    for seed in range(3):
+        rng = random.Random(100 + seed)
+        docs = spark.createDataFrame(_zipf_docs(rng, rng.randint(250, 400)),
+                                     DOC_SCHEMA)
+        qs = spark.createDataFrame(
+            [(f"q{j}", " ".join(rng.choice(VOCAB[:20] + ["absentterm"])
+                                for _ in range(rng.randint(1, 4))))
+             for j in range(5)],
+            "query_id string, query string")
+        out = str(tmp_path_factory.mktemp(f"fzt{seed}"))
+        build_index(spark, docs, out, n_shards=2,
+                    hot_df_threshold=(40, 10**9, 10**9)[seed], n_salts=2,
+                    id_col="doc_id", text_col="text")
+        built = read_index(spark, out)
+        assert built["impact_ranks"] and "impacts" in built["postings"].columns
+        agg = ("join", "matmul")[seed % 2]
+        _qt, terms, qt_rows = local_query_terms(spark, qs)
+        pay = built["postings"].where(F.col("term").isin(terms))
+        meta = _term_meta(pay, _impact_ranks(built, pay))
+        for drift in (1.0, 0.8):
+            idx = dict(built, avgdl=built["avgdl"] * drift)
+            no_imp = dict(idx, postings=idx["postings"].drop("impacts"))
+            for k in (7, 100):
+                want = search_index(spark, idx, qs, k=k, prune=False,
+                                    agg_impl=agg).collect()
+                got = _topk_sig(search_index(spark, idx, qs, k=k, prune=True,
+                                             agg_impl=agg).collect())
+                dec = _topk_sig(search_index(spark, no_imp, qs, k=k,
+                                             prune=True,
+                                             agg_impl=agg).collect())
+                assert got == _topk_sig(want) == dec, (seed, drift, k)
+                # θ soundness, checked directly against the true scores
+                theta = _theta(spark, idx, pay, meta, qt_rows, k, None)
+                kth = {r.query_id: r.score for r in want if r.rank == k}
+                for q, th in theta.items():
+                    assert q in kth and th <= kth[q], (seed, drift, k, q)
+                if theta:
+                    theta_ks.add(k)
+    # both stored ranks served a θ somewhere in the sweep
+    assert theta_ks == {7, 100}

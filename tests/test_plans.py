@@ -116,7 +116,7 @@ def test_scan_prunes_unused_columns(spark, built):
                                    k=10, prune=False))
     scan_lines = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert scan_lines
-    assert "block_last" not in scan_lines[0]
+    assert "impacts" not in scan_lines[0]
     assert "block_max" not in scan_lines[0]
 
 

@@ -266,7 +266,7 @@ def test_arrow_encode_kernel_identical(spark, tmp_path):
         idx = read_index(spark, out)
         outs[impl] = sorted(
             (r.term, r.salt, bytes(r.doc_bytes), bytes(r.tf_bytes),
-             bytes(r.dl_bytes), tuple(r.block_last), tuple(r.block_max),
+             bytes(r.dl_bytes), tuple(r.impacts), tuple(r.block_max),
              tuple(r.doc_off), tuple(r.tf_off), tuple(r.dl_off))
             for r in idx["postings"].collect())
     assert outs["pandas"] == outs["arrow"]
@@ -404,10 +404,10 @@ def test_decode_impl_typo_raises(spark, monkeypatch):
     query with the pandas kernel and mislabel an A/B measurement."""
     import engine.csearch as cs
 
-    rows = spark.createDataFrame([], "query_id string, w double")
+    rows = spark.createDataFrame([], "term string")
     monkeypatch.setattr(cs, "DECODE_IMPL", "arow")
     with pytest.raises(ValueError, match="DECODE_IMPL"):
-        cs._decode_scores(rows, 10.0, None)
+        cs._decode_tf_parts(rows, 10.0, None)
 
 
 def test_design_regime_run_summaries_cover_all_snapshots():
