@@ -50,6 +50,20 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
            plan's per-(query,term) fan-out dominates the batch wall.
            Both end in the same top-k window and are rank-identical
            (pytest-gated).
+
+Single query (_single_query_topk): one query, served unpruned with the
+join aggregation on an index below the spread bar (n_docs <
+AUTO_PRUNE_MIN_DOCS — prune="auto" sends every single query there),
+runs as ONE Spark job of one task. At that size latency is the number
+of jobs, not per-row work, and the batch plan pays four (the query
+table's broadcast, two exchanges, the final stage). The payload rows
+coalesce to one partition and decode; a groupBy(doc_id) sums
+(qtf * idf(df)) * tf_part with qtf read from a literal term -> qtf map,
+the join route's own per-term chain over the payload's own df. The
+child is one partition, so the aggregate and the top-k window need no
+Exchange, and the literal map replaces the broadcast join. Warm and
+cold singles take this same plan; batches and indexes at or above the
+bar keep theirs.
 """
 
 from __future__ import annotations
@@ -69,8 +83,8 @@ from pyspark.sql.window import Window
 
 from . import TOP_K
 from .codec import decode_blocked, tf_part
-from .localrel import in_list, local_df
-from .search import idf_expr
+from .localrel import in_list, local_df, sql_literal
+from .search import idf_expr, idf_sql
 
 
 #: which decode kernel serves: 'arrow' (default) or 'pandas' — the
@@ -268,14 +282,13 @@ def _decode_tf_parts(rows: DataFrame, avgdl: float,
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    """Per-query top-k by (score desc, doc_id asc), built as parsed
+    expressions: two py4j calls instead of one per column operator."""
+    return scored.selectExpr(
+        "query_id", "doc_id", "score",
+        "row_number() OVER (PARTITION BY query_id "
+        "ORDER BY score DESC, doc_id ASC) AS rank",
+    ).where(f"rank <= {int(k)}")
 
 
 #: which batch score-aggregation serves: 'join' (broadcast weight join
@@ -805,15 +818,16 @@ def local_query_terms(spark: SparkSession, queries: DataFrame):
     reference also analyzes queries on the driver
     (LuceneQueryBuilder.java:98-117). Avoids two Spark jobs per search.
     Returns (qt DataFrame (query_id, term, qtf), distinct term list,
-    qt_rows list) — the driver-side rows let search_index pick its
-    qterm strategy (collect-once vs in-plan, by batch size) and build
-    the warm-serving qterm local relation without any extra Spark
-    job."""
+    qt_rows list) — the driver-side rows feed search_index's pruning
+    bounds, its warm-serving qterm local relation and the single-query
+    weight map without any extra Spark job. Plain column lists go
+    through selectExpr here and in search_index: one py4j call per
+    name instead of several."""
     from collections import Counter
 
     from .analysis import tokenize_series
 
-    rows = queries.select("query_id", "query").collect()
+    rows = queries.selectExpr("query_id", "query").collect()
     qt_rows, terms = [], set()
     toks = tokenize_series(pd.Series([r["query"] for r in rows]))
     for r, ts in zip(rows, toks):
@@ -822,7 +836,8 @@ def local_query_terms(spark: SparkSession, queries: DataFrame):
             terms.add(term)
     if not qt_rows:
         return None, [], []
-    # LocalRelation (round 6): joins/broadcasts over qt launch no jobs
+    # LocalRelation (round 6): collecting qt is driver-only; a broadcast
+    # of it still runs one job (localrel module doc)
     qt = local_df(spark, qt_rows, "query_id string, term string, qtf double")
     return qt, sorted(terms), qt_rows
 
@@ -830,18 +845,6 @@ def local_query_terms(spark: SparkSession, queries: DataFrame):
 # prune only when posting lists are long enough that skipping decode
 # work pays for the extra threshold pass (~8 blocks of 128 per term)
 AUTO_PRUNE_MIN_DOCS = 100_000
-
-#: RETIRED round 6 (kept for config/test compatibility): the round-4/5
-#: qterm gate chose between lazy in-plan qterm and collect-once by
-#: batch size. The round-6 strategy subsumes both: the unpruned join
-#: route derives idf/w from the payload's own df column (zero metadata
-#: jobs at ANY batch size) and the pruned route always brings per-term
-#: metadata driver-side exactly once (one job cold, zero warm), so
-#: there is no route left to gate. Routes remain score-identical by
-#: construction; the old A/B tests still pass (both settings now pick
-#: the same plan).
-QTERM_COLLECT_MIN_QUERIES = int(os.environ.get(
-    "SPARK_GRAFT_QTERM_COLLECT_MIN", "256"))
 
 #: persisted posting-row plans from prior search_index calls, capped at
 #: the single most recent (round-3 advisor: repeated serving calls
@@ -1212,6 +1215,28 @@ def _block_thresholds(qt_rows, meta: dict, theta: dict, n_docs: int,
     return out
 
 
+def _single_query_topk(rows: DataFrame, qt_rows, n_docs: int,
+                       avgdl: float) -> DataFrame:
+    """One query's unrounded (doc_id, score, query_id) as ONE Spark task
+    (module doc, "single query"): the payload rows (PAYLOAD_COLS + df)
+    coalesce to one partition, so the decode, the per-doc aggregate and
+    the caller's top-k window all satisfy their distribution without an
+    Exchange, and the query's qtf weights ride a literal term -> qtf map
+    instead of a broadcast join. Per-term contributions are the join
+    route's own chain, (qtf * idf(df)) * tf_part over the payload's df.
+    Terms are analyzer tokens ([a-z0-9]+), so they always render as
+    literals; the query id is caller input and rides F.lit."""
+    wmap = ", ".join(f"{sql_literal(t_)}, {sql_literal(f)}"
+                     for _q, t_, f in qt_rows)
+    score = (f"sum((element_at(map({wmap}), term) * "
+             f"{idf_sql(n_docs)}) * tf_part) AS score")
+    return (
+        _decode_tf_parts(rows.coalesce(1), avgdl, None, with_df=True)
+        .groupBy("doc_id").agg(F.expr(score))
+        .withColumn("query_id", F.lit(qt_rows[0][0]))
+    )
+
+
 def search_index(
     spark: SparkSession,
     index: dict,
@@ -1284,8 +1309,7 @@ def search_index(
     # deleted docs' tf: upper bounds stay valid, just less sharp.
     # Broadcast: the tombstone set is meant to stay small relative to
     # the index (compact when it grows — same guidance as Lucene's
-    # forceMergeDeletes).
-    tombs, dead_ids = _read_tombstones(spark, index)
+    # forceMergeDeletes). Read below, once the call has a term to serve.
     n_docs, avgdl = index["n_docs"], index["avgdl"]
     enc_avgdl = float(index.get("encode_avgdl") or avgdl) or avgdl
     bfac = max(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
@@ -1323,12 +1347,11 @@ def search_index(
         prune = n_docs >= AUTO_PRUNE_MIN_DOCS
     qt, terms, qt_rows = local_query_terms(spark, queries)
     _mark("local_query_terms")
-    n_queries = len({r[0] for r in qt_rows})
-    empty = spark.createDataFrame(
-        [], "query_id string, doc_id long, score double, rank int"
-    )
     if not terms or n_docs == 0 or avgdl <= 0:
-        return empty
+        # an empty LocalRelation: collecting it runs no Spark job
+        return local_df(
+            spark, [], "query_id string, doc_id long, score double, rank int")
+    tombs, dead_ids = _read_tombstones(spark, index)
 
     # Batch-sharing design (scale invariant): the byte payloads are
     # NEVER joined with the query table. Each payload row is decoded
@@ -1358,7 +1381,9 @@ def search_index(
     #     payload's own df column rides through the decode kernel
     #     (TFPART_DF_ROWS) and idf/w evaluate JVM-side on the decoded
     #     rows; the (query_id, term, qtf) table is already driver-side
-    #     (local_query_terms), so its broadcast builds without a job.
+    #     (local_query_terms) and joins as a broadcast local relation
+    #     (one job to build). A single query on a small index needs no
+    #     table at all (_single_query_topk).
     #   * pruned route: per-term (df, raw block-max, impacts) is brought
     #     driver-side ONCE — from the warm map when warm, else via one
     #     metadata-column aggregation (column pruning keeps the byte
@@ -1372,7 +1397,7 @@ def search_index(
     #     expressions over it — the same expression on the same inputs
     #     as the old tmeta-join route, so scores are bit-identical
     #     (fuzz rank identity at 9 dp; tests pin route equality) — and
-    #     its broadcast builds driver-side for free.
+    #     it collects driver-side without a job.
     # spread decode work off the tid-bucketed co-location once the
     # index is big enough that one hot term saturates a task (same bar
     # as auto-prune; see _decode_tf_parts)
@@ -1396,8 +1421,8 @@ def search_index(
     def _qterm_local() -> DataFrame:
         """(query_id, term, qtf, df, idf, w) as a LOCAL relation —
         idf/w are JVM expressions (scores stay bit-identical to the
-        old tmeta-join route) and the broadcast builds without a
-        Spark job. Pruned-path only (meta is populated there)."""
+        old tmeta-join route) and it collects without a Spark job.
+        Pruned-path only (meta is populated there)."""
         rows = [(q, t_, f, float(meta[t_][0]))
                 for (q, t_, f) in qt_rows
                 if t_ in meta and meta[t_][0] is not None]
@@ -1423,39 +1448,6 @@ def search_index(
     # keeps selecting ONE coherent python path end-to-end
     use_pack = (agg_impl == "matmul" and MATMUL_PACK == "1"
                 and DECODE_IMPL == "arrow")
-
-    # Single-query warm fast path (round 5): with the warm per-term
-    # map resident, the one query's weights fold into a LITERAL map
-    # expression whose ln() Catalyst constant-folds IN THE JVM — the
-    # same double math as idf_expr on the same inputs — so the
-    # tmeta-scan and qw-broadcast actions disappear entirely. Each
-    # Spark action costs ~0.2-0.35 s of fixed scheduler/py4j overhead
-    # on this host (measured, BASELINE.md round 5), and a single
-    # query's latency is almost entirely action count: this cuts the
-    # unpruned join plan to the decode action alone.
-    warm_single = None
-    if warm_ok and n_queries == 1 and agg_impl == "join" and not prune:
-        entries = []
-        for (_q, t_, qtf) in qt_rows:
-            if t_ not in wt:
-                continue  # absent from the index: no payload rows
-            if wt[t_][0] is None:
-                # ADVICE-r5 #2: a degenerate warm row (NULL df). The
-                # generic df-passthrough route scores from the payload
-                # rows' own df and needs no warm metadata at all, so
-                # fall back to it — the term still contributes its
-                # true weight, exactly like a cold call
-                entries = []
-                break
-            dfv = float(wt[t_][0])
-            idf_lit = F.log(
-                F.lit(1.0)
-                + (F.lit(float(n_docs)) - F.lit(dfv) + F.lit(0.5))
-                / (F.lit(dfv) + F.lit(0.5))
-            )
-            entries += [F.lit(t_), F.lit(float(qtf)) * idf_lit]
-        if entries:
-            warm_single = (qt_rows[0][0], F.create_map(*entries))
 
     def _score_topk(rows: DataFrame, keep_col: str | None) -> DataFrame:
         """posting payload rows -> exact top-k, via the configured
@@ -1488,21 +1480,10 @@ def search_index(
                                        spread=spread)
             return _finish(_matmul_score_topk(
                 _live(decoded, tombs), qterm_pd, k, round_dp))
-        # join aggregation
-        if warm_single is not None:
-            decoded = _decode_tf_parts(rows, avgdl, keep_col,
-                                       spread=spread)
-            qid0, wmap = warm_single
-            return _finish(
-                decoded.groupBy("doc_id")
-                .agg(F.sum(F.element_at(wmap, F.col("term"))
-                           * F.col("tf_part")).alias("score"))
-                .select(F.lit(qid0).alias("query_id"), "doc_id",
-                        "score")
-            )
         # df-passthrough (round 6), pruned AND unpruned: idf/w from
-        # the decoded rows' own df column, query weights a free local
-        # broadcast — zero metadata jobs, and ONE shared plan shape
+        # the decoded rows' own df column, query weights a broadcast
+        # local relation (one build job, no scan) — zero metadata jobs,
+        # and ONE shared plan shape
         # for both routes (the bench warmup exercises the pruned
         # shape, so the timed unpruned batch reuses its compiled
         # codegen instead of paying first-compile). Same
@@ -1525,7 +1506,11 @@ def search_index(
     if not prune:
         cols = PAYLOAD_COLS if agg_impl == "matmul" else (
             *PAYLOAD_COLS, "df")
-        return _score_topk(payload.select(*cols), None)
+        rows = payload.selectExpr(*cols)
+        if agg_impl == "join" and not spread and len(
+                {q for q, _t, _f in qt_rows}) == 1:
+            return _finish(_single_query_topk(rows, qt_rows, n_docs, avgdl))
+        return _score_topk(rows, None)
 
     # ---- pruned path: the metadata above, then driver arithmetic, then
     # the returned plan. The r05 version kept θ/UB/thresholds in-plan:
@@ -1541,7 +1526,8 @@ def search_index(
     #     PRUNING BOUNDS only and are relaxed toward KEEP.
     #   Plan: payload ⋈ broadcast(local thresholds) -> keep_blocks ->
     #     decode survivors -> aggregate -> top-k window; every
-    #     broadcast builds from a local relation (no sub-jobs).
+    #     broadcast is of a local relation (one build job each, no
+    #     scan sub-jobs).
     # Decoding a superset of a query's own keep list is always safe:
     # the WAND argument only ever uses "a block was skipped ⇒ its docs
     # provably score below θ(q)", and the union skips a block only when
@@ -1578,7 +1564,7 @@ def search_index(
     _mark("thresholds(driver)")
     keep_cols = (PAYLOAD_COLS if agg_impl == "matmul"
                  else (*PAYLOAD_COLS, "df"))
-    return _score_topk(blocks.select(*keep_cols, "keep_blocks"),
+    return _score_topk(blocks.selectExpr(*keep_cols, "keep_blocks"),
                        "keep_blocks")
 
 

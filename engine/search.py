@@ -33,6 +33,7 @@ from pyspark.sql.window import Window
 from . import B, K1, TOP_K
 from .analysis import with_tokens
 from .indexer import term_df
+from .localrel import sql_literal
 
 
 def query_term_freqs(queries: DataFrame) -> DataFrame:
@@ -45,13 +46,19 @@ def query_term_freqs(queries: DataFrame) -> DataFrame:
     )
 
 
+def idf_sql(n_docs, df_col="df") -> str:
+    """Lucene BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5)), as SQL text.
+    ``ln``, not ``log``: the one-argument SQL ``log`` parses to a
+    different expression than the one F.log builds."""
+    n = sql_literal(float(n_docs))
+    return (f"ln(1.0D + ({n} - `{df_col}` + 0.5D) "
+            f"/ (`{df_col}` + 0.5D))")
+
+
 def idf_expr(n_docs, df_col="df"):
-    """Lucene BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5))."""
-    return F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col(df_col) + F.lit(0.5))
-        / (F.col(df_col) + F.lit(0.5))
-    )
+    """idf_sql as one parsed Column: the same expression tree as the
+    equivalent chain of F.lit/F.col operators, at one py4j call."""
+    return F.expr(idf_sql(n_docs, df_col))
 
 
 def tf_part_expr(avgdl, tf_col="tf", dl_col="dl", k1: float = K1, b: float = B):

@@ -11,8 +11,8 @@ DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long
 
 
 @pytest.fixture(scope="module")
-def r9_index(spark, tmp_path_factory):
-    from engine.postings import build_index, read_index
+def r9_dir(spark, tmp_path_factory):
+    from engine.postings import build_index
 
     out = str(tmp_path_factory.mktemp("r9_idx"))
     # tie-heavy corpus: repeated docs produce equal scores so the
@@ -24,7 +24,21 @@ def r9_index(spark, tmp_path_factory):
     )
     build_index(spark, docs, out, n_shards=2, hot_df_threshold=20,
                 n_salts=2)
-    return read_index(spark, out)
+    return out
+
+
+@pytest.fixture(scope="module")
+def r9_index(spark, r9_dir):
+    from engine.postings import read_index
+
+    return read_index(spark, r9_dir)
+
+
+#: q'2's id holds a quote, which no SQL literal renders portably: the
+#: local relations fall back to createDataFrame and the single-query
+#: plan must still carry the id exactly
+R9_QUERIES = [("q0", "apple fig"), ("q1", "banana t3 zzz_absent"),
+              ("q'2", "cherry cherry apple")]
 
 
 def _res(spark, idx, qs, **kw):
@@ -36,13 +50,46 @@ def _res(spark, idx, qs, **kw):
     )
 
 
+ROUTES = [(p, a) for p in (False, True) for a in ("join", "matmul")]
+
+
+def _routes_identical(spark, idx, **kw):
+    """Serve R9_QUERIES as one batch on every (prune x agg_impl) route,
+    then each query alone on every route, cold and then warm: all must
+    equal the unpruned join batch (rows, scores to 9 dp, ranks)."""
+    from engine.csearch import release_warm, warm_serving
+
+    qs = spark.createDataFrame(R9_QUERIES, "query_id string, query string")
+    base = _res(spark, idx, qs, prune=False, agg_impl="join", **kw)
+    assert {r[0] for r in base} == {q for q, _ in R9_QUERIES}
+    for p, a in ROUTES:
+        assert _res(spark, idx, qs, prune=p, agg_impl=a, **kw) == base, (
+            f"batch route {(p, a)} diverged")
+    singles = [(q, spark.createDataFrame([(q, text)],
+                                         "query_id string, query string"))
+               for q, text in R9_QUERIES]
+    for posture in ("cold", "warm"):
+        if posture == "warm":
+            warm_serving(spark, idx)
+        try:
+            for q, one in singles:
+                want = [r for r in base if r[0] == q]
+                for p, a in ROUTES:
+                    assert _res(spark, idx, one, prune=p, agg_impl=a,
+                                **kw) == want, (
+                        f"{posture} single {q} on route {(p, a)} diverged")
+        finally:
+            release_warm(idx)
+
+
 @pytest.mark.parametrize("decode_impl", ["arrow", "pandas"])
 @pytest.mark.parametrize("round_dp", [None, 4])
 def test_all_routes_rank_identical(spark, r9_index, round_dp, decode_impl,
                                    monkeypatch):
-    """The round-6 restructure must keep every (prune x agg_impl)
-    route rank-identical: unpruned join now scores from the decoded
-    rows' own df column (no qterm at all), pruned computes its block
+    """Every (prune x agg_impl) route must rank identically, for the
+    batch and for each query served alone, cold and warm: unpruned join
+    scores from the decoded rows' own df column (a single query as one
+    task with a literal weight map), pruned computes its block
     thresholds driver-side from collected metadata, matmul feeds from
     the local qterm relation. Any driver-float slack in the pruning
     bounds may only widen the kept-block superset, never change
@@ -51,20 +98,27 @@ def test_all_routes_rank_identical(spark, r9_index, round_dp, decode_impl,
     import engine.csearch as cs
 
     monkeypatch.setattr(cs, "DECODE_IMPL", decode_impl)
-    qs = spark.createDataFrame(
-        [("q0", "apple fig"), ("q1", "banana t3 zzz_absent"),
-         ("q2", "cherry cherry apple")],
-        "query_id string, query string",
-    )
-    results = {
-        (p, a): _res(spark, r9_index, qs, k=10, prune=p, agg_impl=a,
-                     round_dp=round_dp)
-        for p in (False, True) for a in ("join", "matmul")
-    }
-    base = results[(False, "join")]
-    assert len(base) > 0
-    for key, val in results.items():
-        assert val == base, f"route {key} diverged"
+    _routes_identical(spark, r9_index, k=10, round_dp=round_dp)
+
+
+def test_all_routes_rank_identical_tombstoned(spark, r9_dir, tmp_path):
+    """The same identity on an index with standing tombstones: every
+    route, the one-task single-query plan included, drops deleted docs
+    through _finish's anti-join and still ranks exactly like the
+    batch."""
+    import shutil
+
+    from engine.postings import delete_docs, read_index
+
+    out = str(tmp_path / "r9_tomb")
+    shutil.copytree(r9_dir, out)
+    dead = {0, 1, 5, 12, 33}
+    delete_docs(spark, out, sorted(dead))
+    idx = read_index(spark, out)
+    assert idx["tombstones"] is not None
+    _routes_identical(spark, idx, k=10, round_dp=4)
+    qs = spark.createDataFrame(R9_QUERIES, "query_id string, query string")
+    assert not dead & {r[1] for r in _res(spark, idx, qs, k=10)}
 
 
 def test_warm_drift_releases_persisted(spark, r9_index):

@@ -1,7 +1,13 @@
-"""Spark job budgets of the pruned serving route: θ from the stored
-impacts launches no job of its own, so a cold pruned batch runs exactly
-the decode θ's jobs fewer than the decode route; an index with standing
-tombstones keeps the decode θ."""
+"""Spark job budgets of the serving routes.
+
+Pruned: θ from the stored impacts launches no job of its own, so a cold
+pruned batch runs exactly the decode θ's jobs fewer than the decode
+route; an index with standing tombstones keeps the decode θ.
+
+Unpruned join below the spread bar: a single query, cold or warm, is
+one job (one task, no broadcast, no exchange); a query with no indexed
+term is none; a batch keeps its broadcast-join plan. Query tables are
+local relations here, so collecting them adds no job to the count."""
 
 from __future__ import annotations
 
@@ -63,6 +69,15 @@ def _without_impacts(idx):
     return dict(idx, postings=idx["postings"].drop("impacts"))
 
 
+def _tombstoned(spark, budget_dir, tmp_path):
+    from engine.postings import delete_docs, read_index
+
+    out = str(tmp_path / "tomb_idx")
+    shutil.copytree(budget_dir, out)
+    delete_docs(spark, out, [0, 1, 2, 3, 5, 8])
+    return read_index(spark, out)
+
+
 def test_impact_theta_drops_exactly_the_decode_theta_jobs(spark, budget_dir,
                                                           queries):
     from engine.csearch import (_decode_theta, _pb_pruned_postings,
@@ -94,12 +109,7 @@ def test_impact_theta_drops_exactly_the_decode_theta_jobs(spark, budget_dir,
 
 def test_tombstoned_index_keeps_decode_theta(spark, budget_dir, queries,
                                              tmp_path):
-    from engine.postings import delete_docs, read_index
-
-    out = str(tmp_path / "tomb_idx")
-    shutil.copytree(budget_dir, out)
-    delete_docs(spark, out, [0, 1, 2, 3, 5, 8])
-    idx = read_index(spark, out)
+    idx = _tombstoned(spark, budget_dir, tmp_path)
     assert idx["tombstones"] is not None
     n_tomb, res = _jobs(spark, lambda: _serve(spark, idx, queries))
     n_dec, res_dec = _jobs(
@@ -108,3 +118,49 @@ def test_tombstoned_index_keeps_decode_theta(spark, budget_dir, queries,
     assert not {0, 1, 2, 3, 5, 8} & {r[1] for r in res}
     # same route, same jobs: the impacts were not used
     assert n_tomb == n_dec, (n_tomb, n_dec)
+
+
+def _serve_join(spark, idx, rows):
+    """Unpruned join route; scores to 9 dp, as a single query may sum a
+    doc's terms in another order than the batch's partial aggregates."""
+    from engine.csearch import search_index
+    from engine.localrel import local_df
+
+    qs = local_df(spark, rows, "query_id string, query string")
+    return sorted((r.query_id, r.doc_id, round(r.score, 9), r.rank)
+                  for r in search_index(spark, idx, qs, k=10, prune=False,
+                                        agg_impl="join").collect())
+
+
+def test_unpruned_join_job_budget(spark, budget_dir, tmp_path):
+    """The single-query plan's budget next to the plans it does not
+    touch: cold single 1, warm single 1, stop-word-only query 0, a
+    single on a tombstoned index 4 (two for the tombstone set's
+    distinct read, one for its broadcast anti-join, the plan), a
+    2-query batch 4 (the qtf broadcast, two exchanges, the final
+    stage)."""
+    from engine.csearch import release_warm, warm_serving
+    from engine.postings import read_index
+
+    idx = read_index(spark, budget_dir)
+    one = [("q0", "w3 w12 w1 w3")]
+    n_cold, cold = _jobs(spark, lambda: _serve_join(spark, idx, one))
+    assert cold and n_cold == 1, n_cold
+    assert _jobs(spark, lambda: _serve_join(
+        spark, idx, [("q0", "a the")])) == (0, [])
+    n_batch, batch = _jobs(spark, lambda: _serve_join(
+        spark, idx, one + [("q1", "w5 w0")]))
+    assert [r for r in batch if r[0] == "q0"] == cold
+    assert n_batch == 4, n_batch
+
+    warm_serving(spark, idx)
+    try:
+        n_warm, warm = _jobs(spark, lambda: _serve_join(spark, idx, one))
+    finally:
+        release_warm(idx)
+    assert warm == cold and n_warm == 1, n_warm
+
+    tomb = _tombstoned(spark, budget_dir, tmp_path)
+    n_tomb, res = _jobs(spark, lambda: _serve_join(spark, tomb, one))
+    assert res and not {0, 1, 2, 3, 5, 8} & {r[1] for r in res}
+    assert n_tomb == 4, n_tomb
