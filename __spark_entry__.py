@@ -150,7 +150,7 @@ def _batch_compressed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the search's own top-k window and relaxes the prune threshold by one
     rounding quantum (no raw-precision buffer re-ranked afterwards).
     Served with agg_impl='matmul' (the at-scale default aggregation,
-    csearch._matmul_topk_iter) so the matmul route gets an oracle-gated
+    csearch._matmul_emit) so the matmul route gets an oracle-gated
     hash row; the stream/deleted halves of the union keep gating the
     'join' route, so one bm25_topk_compressed hash evidences both."""
     from engine.csearch import search_index

@@ -398,9 +398,7 @@ def run_scaling_build(corpus_path: str, cpus: int) -> dict:
         t0 = time.time()
         m = build_index(spark, docs, out, n_shards=8,
                         hot_df_threshold=max(1000, n_docs // 20), n_salts=8,
-                        id_col="doc_id", text_col="content",
-                        encode_impl=os.environ.get("SPARK_GRAFT_ENCODE_IMPL",
-                                                   "arrow"))
+                        id_col="doc_id", text_col="content")
         wall = time.time() - t0
         # within-run decomposition (manifest lineage): the scan+encode
         # stage vs the final merge — same process, same host window, so
@@ -502,26 +500,16 @@ def run_shuffle_phase(corpus_path: str, cpus: int) -> float:
 
 def run_encode_phase(corpus_path: str, cpus: int) -> float:
     """The full build hot path minus parquet output: shuffle + Arrow
-    JVM->Python transfer + numpy lexsort/encode kernel, noop sink.
-    SPARK_GRAFT_ENCODE_IMPL ('arrow' default / 'pandas') picks the
-    kernel twin, mirroring build_index's encode_impl — so the phase
-    measurement always matches the kernel the real build runs, and the
-    A/B for the round-4 mapInArrow port uses the identical harness."""
+    JVM->Python transfer + numpy lexsort/encode kernel, noop sink —
+    the same kernel the real build runs."""
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from engine.postings import (TID_ENC_SCHEMA, _encode_partition_arrow_fn,
-                                 _encode_partition_fn)
+    from engine.postings import TID_ENC_SCHEMA, _encode_partition_arrow_fn
 
-    impl = os.environ.get("SPARK_GRAFT_ENCODE_IMPL", "arrow")
     spark = _mk_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     raw = _raw_tokens_df(spark, corpus_path)
-    shuffled = raw.repartition("shard", "tid")
-    if impl == "arrow":
-        enc = shuffled.mapInArrow(
-            _encode_partition_arrow_fn(200.0), TID_ENC_SCHEMA)
-    else:
-        enc = shuffled.mapInPandas(
-            _encode_partition_fn(200.0), TID_ENC_SCHEMA)
+    enc = raw.repartition("shard", "tid").mapInArrow(
+        _encode_partition_arrow_fn(200.0), TID_ENC_SCHEMA)
     t0 = time.time()
     enc.write.format("noop").mode("overwrite").save()
     wall = time.time() - t0
@@ -846,7 +834,6 @@ def run_scaling(n_docs: int, mode: str = "local",
         "masters": {str(c): (legs[c] or f"local[{c}]") for c in legs},
         # disclose the build-plan knobs this run measured under
         "combine": os.environ.get("SPARK_GRAFT_BUILD_COMBINE", "shuffle"),
-        "merge_full": os.environ.get("SPARK_GRAFT_MERGE_FULL", "onepass"),
         "n_docs": n_docs,
         "build_wall_8": w8, "build_wall_32": w32,
         "build_docs_per_sec_32": round(n_docs / w32, 1),

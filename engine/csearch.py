@@ -46,7 +46,7 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
            (AGG_IMPL): 'join' — JVM-side broadcast weight join +
            groupBy(query,doc).sum — for small indexes, or 'matmul' —
            doc-partitioned dense matmul emitting per-partition top-k
-           candidates (_matmul_topk_iter) — at scale, where the join
+           candidates (_matmul_emit) — at scale, where the join
            plan's per-(query,term) fan-out dominates the batch wall.
            Both end in the same top-k window and are rank-identical
            (pytest-gated).
@@ -70,7 +70,6 @@ from __future__ import annotations
 
 import math
 import os
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -85,29 +84,6 @@ from . import TOP_K
 from .codec import decode_blocked, tf_part
 from .localrel import in_list, local_df, sql_literal
 from .search import idf_expr, idf_sql
-
-
-#: which decode kernel serves: 'arrow' (default) or 'pandas' — the
-#: measured A/B lives in BASELINE.md round 4; both are result-identical
-DECODE_IMPL = os.environ.get("SPARK_GRAFT_DECODE_IMPL", "arrow")
-
-
-def _decode_impl() -> str:
-    """Validated DECODE_IMPL: mirror build_index(encode_impl=...) — a
-    typo'd env value must fail loudly, not silently mislabel an A/B
-    measurement. One validator for every kernel-selection site."""
-    if DECODE_IMPL not in ("arrow", "pandas"):
-        raise ValueError(
-            f"SPARK_GRAFT_DECODE_IMPL must be 'arrow' or 'pandas', got "
-            f"{DECODE_IMPL!r}")
-    return DECODE_IMPL
-
-
-def _matmul_parts_factor() -> int:
-    """Reduce-partition wave factor of the matmul exchange (width =
-    defaultParallelism x factor). Swept in tools/wave_exp.py — a WEAK
-    knob; 2 won on wall/variance/efficiency (BASELINE.md round 4)."""
-    return int(os.environ.get("SPARK_GRAFT_MATMUL_PARTS_FACTOR", "2"))
 
 
 #: the posting-row columns every decode kernel reads
@@ -137,9 +113,9 @@ TFPART_DF_ROWS = StructType(
 )
 
 
-def _decode_tf_iter(avgdl: float, keep_col: str | None,
-                    with_df: bool = False):
-    """mapInPandas kernel: posting rows -> (term, doc_id, tf_part).
+def _decode_tf_arrow_iter(avgdl: float, keep_col: str | None,
+                          with_df: bool = False):
+    """mapInArrow kernel: posting rows -> (term, doc_id, tf_part).
 
     The query-independent half of the score (BM25 tf saturation): each
     payload row is decoded ONCE regardless of how many queries share
@@ -147,46 +123,10 @@ def _decode_tf_iter(avgdl: float, keep_col: str | None,
     JVM-side afterwards. This is what makes batch serving scale-safe:
     the multi-MB byte payload of a hot term is never replicated per
     query (a 400-query zipf batch OOM'd a 10g executor under the old
-    per-(query,term) decode)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms, docs, parts, dfs = [], [], [], []
-            for r in pdf.itertuples(index=False):
-                keep = getattr(r, keep_col) if keep_col else None
-                if keep_col and keep is not None and len(keep) == 0:
-                    continue
-                d, t, dl = decode_blocked(
-                    r.doc_bytes, r.tf_bytes, r.dl_bytes,
-                    r.doc_off, r.tf_off, r.dl_off,
-                    keep=None if keep is None else keep,
-                )
-                if d.size == 0:
-                    continue
-                terms.append(np.full(d.size, r.term, dtype=object))
-                docs.append(d)
-                parts.append(tf_part(t, dl, avgdl))
-                if with_df:
-                    dfs.append(np.full(d.size, r.df, dtype=np.int64))
-            if terms:
-                out = {
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(docs),
-                    "tf_part": np.concatenate(parts),
-                }
-                if with_df:
-                    out["df"] = np.concatenate(dfs)
-                yield pd.DataFrame(out)
-
-    return fn
-
-
-def _decode_tf_arrow_iter(avgdl: float, keep_col: str | None,
-                          with_df: bool = False):
-    """mapInArrow twin of _decode_tf_iter: byte payloads are read
-    straight from the Arrow batch as buffers and the output batch is
-    assembled from the numpy arrays. with_df passes the payload row's
-    df column through (see TFPART_DF_ROWS)."""
+    per-(query,term) decode). Byte payloads are read straight from the
+    Arrow batch as buffers and the output batch is assembled from the
+    numpy arrays. with_df passes the payload row's df column through
+    (see TFPART_DF_ROWS)."""
     import pyarrow as pa
 
     fields = [
@@ -248,7 +188,7 @@ def _decode_tf_parts(rows: DataFrame, avgdl: float,
                      keep_col: str | None,
                      spread: bool = False,
                      with_df: bool = False) -> DataFrame:
-    """Apply the configured decode kernel, emitting query-independent
+    """Apply the decode kernel, emitting query-independent
     (term, doc_id, tf_part) rows (decode once per payload row).
 
     spread=True round-robin repartitions the input first: the
@@ -274,11 +214,8 @@ def _decode_tf_parts(rows: DataFrame, avgdl: float,
         sc = rows.sparkSession.sparkContext
         rows = rows.repartition(sc.defaultParallelism * 4)
     schema = TFPART_DF_ROWS if with_df else TFPART_ROWS
-    if _decode_impl() == "arrow":
-        return rows.mapInArrow(
-            _decode_tf_arrow_iter(avgdl, keep_col, with_df), schema)
-    return rows.mapInPandas(_decode_tf_iter(avgdl, keep_col, with_df),
-                            schema)
+    return rows.mapInArrow(
+        _decode_tf_arrow_iter(avgdl, keep_col, with_df), schema)
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -293,24 +230,32 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
 
 #: which batch score-aggregation serves: 'join' (broadcast weight join
 #: + groupBy(query,doc).sum — the small-index default), 'matmul'
-#: (doc-partitioned dense matmul, see _matmul_topk_iter — the
+#: (doc-partitioned dense matmul, see _matmul_emit — the
 #: at-scale default), or 'auto' (matmul iff n_docs >=
 #: AUTO_PRUNE_MIN_DOCS, the same bar as auto-prune/spread)
 AGG_IMPL = os.environ.get("SPARK_GRAFT_AGG_IMPL", "auto")
 
-#: matmul feed layout: '1' packs the doc-partitioning exchange into
-#: binary doc-bucket blobs (_decode_pack_arrow_iter — one python pass
-#: for decode+map+pack, thousands of shuffle rows instead of one per
-#: posting), '0' ships row-per-posting through _decode_tf_parts + a
-#: tidx join. Requires the arrow decode kernel ('0' is also forced
-#: under SPARK_GRAFT_DECODE_IMPL=pandas). A/B: tools/agg_exp.py.
-MATMUL_PACK = os.environ.get("SPARK_GRAFT_MATMUL_PACK", "1")
+
+def _chunk_width(n_t: int, n_q: int) -> int:
+    """Doc-chunk width for the matmul kernel: keeps the dense
+    transient X (n_t x CHUNK doubles) near 128 MB. The floor is 16,
+    NOT hundreds — a high floor would let X grow linearly with the
+    batch's unique-term count and reintroduce the per-task OOM the
+    kernel exists to fix (at the floor X is 8*16*n_t bytes, i.e.
+    128 MB per 10^6 batch terms)."""
+    return int(min(8192, max(16, 16e6 / max(1, n_t + n_q))))
 
 
-def _matmul_topk_iter(bcast, k: int, round_dp: int | None):
-    """mapInArrow kernel: per doc-partition, score the WHOLE query
-    batch as one dense matmul and emit only that partition's per-query
-    top-k candidates.
+def _matmul_emit(bval, tidx, doc, x, k, round_dp, out_schema):
+    """Scoring core of the matmul kernel (_matmul_topk_packed_iter):
+    given this doc-partition's concatenated (tidx, doc, x) posting
+    triples, score the WHOLE query batch as one dense matmul per
+    doc-chunk and return (RecordBatch of that partition's per-query
+    top-k candidates | None, (sort_sec, score_sec)). bval is the
+    broadcast (qids, n_terms, qptr, qtidx, qw[, dead]): the CSR weights
+    and optionally a sorted int64 array of tombstoned doc_ids (or None)
+    dropped BEFORE candidate selection (the packed rows can't be
+    anti-joined JVM-side — see _matmul_score_topk_packed).
 
     Why: the join plan shuffles Σ_q Σ_{t∈q} |postings(t)| fanned-out
     partial rows into a groupBy(query,doc) whose map-side combine
@@ -319,14 +264,13 @@ def _matmul_topk_iter(bcast, k: int, round_dp: int | None):
     357 s task-time for a 400-query zipf batch over the 500k-doc
     design-regime fixture. Batch BM25 is a sparse-matrix product
     S = W·X (W: query×term weights, tiny; X: term×doc tf_parts), so
-    instead this kernel receives the UNIQUE decoded (term,doc,tf_part)
-    rows hash-partitioned by doc_id — every row of a doc in one
-    partition, so scores are FINAL within the kernel — densifies X one
-    doc-column chunk at a time, multiplies CSR-W against it (see scale
-    notes), and emits ≤k rows per (query, partition). The shuffle moves
-    the
-    unique decoded rows once (int term-index, not the string), never
-    the query fan-out, and the downstream window sees
+    instead the kernel receives the UNIQUE decoded (term, doc, tf_part)
+    triples partitioned by doc — every row of a doc in one partition,
+    so scores are FINAL within the kernel — densifies X one doc-column
+    chunk at a time, multiplies CSR-W against it (see scale notes), and
+    emits ≤k rows per (query, partition). The shuffle moves the unique
+    decoded rows once (int term-index, not the string), never the
+    query fan-out, and the downstream window sees
     n_partitions×n_queries×k rows instead of 91M.
 
     Exactness: hits are detected as unrounded score > 0 when every
@@ -354,94 +298,21 @@ def _matmul_topk_iter(bcast, k: int, round_dp: int | None):
     Scale notes: W is ~99.9% sparse (a query holds a handful of the
     batch's unique terms), so it ships and multiplies as CSR —
     (qptr, qtidx, qw) row-pointer arrays via a Spark broadcast
-    (`bcast`, once per executor, not per task; a 10k-query batch's
-    weights are MBs). Per chunk the kernel runs one tiny matvec per
-    query over that query's few rows of the dense X — nnz*c fused
-    multiply-adds instead of dgemm's n_q*n_t*c (~1000x fewer for
-    zipf batches), with no nnz*c intermediate at all: hot zipf
-    term-rows are shared across queries and stay cache-resident.
-    Measured on a one-task workload (170k rows, 1600 queries):
-    dense dgemm 0.84 s -> gather+reduceat 0.73 s -> per-query dot
-    0.05 s; the dgemm variant profiled as one 25 s
-    memory-bus-bound stage at 32 threads. Two candidate per-row
-    designs measured SLOWER and were rejected: expanding the
-    decoded rows to their query fan-out inside the task
-    (np.repeat + bincount keys — 1.1-2.6 s, and skew-unsafe for a
-    hot term shared by hundreds of queries). The chunk width adapts
-    so the per-task transients (X: n_t x c doubles) stay bounded
-    regardless of batch size.
-    """
-    import pyarrow as pa
-
-    out_schema = pa.schema([
-        ("query_id", pa.string()),
-        ("doc_id", pa.int64()),
-        ("score", pa.float64()),
-    ])
-
-    def fn(batches):
-        import sys as _sys
-        import time as _time
-
-        prof = os.environ.get("SPARK_GRAFT_KERNEL_PROF") == "1"
-        t_start = _time.time()
-        bval = bcast.value
-        t_bcast = _time.time()
-        tidx_l, doc_l, x_l = [], [], []
-        t_first = None
-        for b in batches:
-            if t_first is None:
-                t_first = _time.time()
-            cols = {n: b.column(i) for i, n in enumerate(b.schema.names)}
-            tidx_l.append(cols["tidx"].to_numpy(zero_copy_only=False))
-            doc_l.append(cols["doc_id"].to_numpy(zero_copy_only=False))
-            x_l.append(cols["tf_part"].to_numpy(zero_copy_only=False))
-        t_read = _time.time()
-        n_batches = len(tidx_l)
-        t_first = t_first or t_read
-        if not tidx_l:
-            return
-        tidx = np.concatenate(tidx_l)
-        doc = np.concatenate(doc_l)
-        x = np.concatenate(x_l)
-        rb, timings = _matmul_emit(bval, tidx, doc, x, k, round_dp,
-                                   out_schema)
-        if prof:
-            print(
-                f"KPROF rows={doc.size} "
-                f"nb={n_batches} "
-                f"bcast={t_bcast - t_start:.3f} "
-                f"first={t_first - t_bcast:.3f} "
-                f"rest={t_read - t_first:.3f} "
-                f"sort={timings[0]:.3f} score={timings[1]:.3f}",
-                file=_sys.stderr, flush=True)
-        if rb is not None:
-            yield rb
-
-    return fn
-
-
-def _chunk_width(n_t: int, n_q: int) -> int:
-    """Doc-chunk width for the matmul kernel: keeps the dense
-    transient X (n_t x CHUNK doubles) near 128 MB. The floor is 16,
-    NOT hundreds — a high floor would let X grow linearly with the
-    batch's unique-term count and reintroduce the per-task OOM the
-    kernel exists to fix (at the floor X is 8*16*n_t bytes, i.e.
-    128 MB per 10^6 batch terms)."""
-    return int(min(8192, max(16, 16e6 / max(1, n_t + n_q))))
-
-
-def _matmul_emit(bval, tidx, doc, x, k, round_dp, out_schema):
-    """Shared scoring core of the matmul kernels: given this
-    partition's concatenated (tidx, doc, x) posting triples, score the
-    whole query batch per dense doc-chunk and return (RecordBatch |
-    None, (sort_sec, score_sec)). The CSR weight layout, the per-query
-    dot, chunking, the one-quantum candidate relaxation under round_dp,
-    the superset kth-tie keep, and the (score desc, doc_id asc)
-    candidate order are all documented on _matmul_topk_iter. bval may
-    carry a 6th element: a sorted int64 array of tombstoned doc_ids to
-    drop BEFORE candidate selection (the packed route can't anti-join
-    rows JVM-side — see _matmul_score_topk_packed)."""
+    (once per executor, not per task; a 10k-query batch's weights are
+    MBs). Per chunk the kernel runs one tiny matvec per query over
+    that query's few rows of the dense X — nnz*c fused multiply-adds
+    instead of dgemm's n_q*n_t*c (~1000x fewer for zipf batches), with
+    no nnz*c intermediate at all: hot zipf term-rows are shared across
+    queries and stay cache-resident. Measured on a one-task workload
+    (170k rows, 1600 queries): dense dgemm 0.84 s -> gather+reduceat
+    0.73 s -> per-query dot 0.05 s; the dgemm variant profiled as one
+    25 s memory-bus-bound stage at 32 threads. Two candidate per-row
+    designs measured SLOWER and were rejected: expanding the decoded
+    rows to their query fan-out inside the task (np.repeat + bincount
+    keys — 1.1-2.6 s, and skew-unsafe for a hot term shared by
+    hundreds of queries). The chunk width adapts (_chunk_width) so the
+    per-task transients (X: n_t x c doubles) stay bounded regardless
+    of batch size."""
     import time as _time
 
     import pyarrow as pa
@@ -554,7 +425,7 @@ def _decode_pack_arrow_iter(avgdl: float, keep_col: str | None,
     the bucket's (doc_id, tidx, tf_part) triples as three raw numpy
     buffers (int64 / int32 / float64 — bit-exact round-trip).
 
-    Why: the unpacked matmul feed shuffles ONE ROW PER POSTING
+    Why: a row-per-posting matmul feed shuffles ONE ROW PER POSTING
     (~32 B of UnsafeRow for a 20 B triple) and the receiving kernel's
     measured wait is dominated by the JVM assembling millions of Arrow
     cells (KPROF 'first'; BASELINE.md round-4 serving). Packing turns
@@ -650,8 +521,8 @@ PACKED_ROWS = StructType(
 def _matmul_topk_packed_iter(bcast, k: int, round_dp: int | None):
     """mapInArrow kernel: packed doc-bucket rows -> per-partition
     top-k candidates. np.frombuffer unpacks each bucket's triples
-    zero-copy; scoring is the shared _matmul_emit core (identical to
-    the row-wise kernel, pytest-pinned)."""
+    zero-copy; scoring is the _matmul_emit core (its docstring has
+    the exactness, rounding and scale argument)."""
     import pyarrow as pa
 
     out_schema = pa.schema([
@@ -712,7 +583,7 @@ def _matmul_topk_packed_iter(bcast, k: int, round_dp: int | None):
 
 def _csr_weights(qterm_pd: pd.DataFrame):
     """Query-major CSR layout of the batch weight matrix (see
-    _matmul_topk_iter scale notes). Returns
+    _matmul_emit scale notes). Returns
     (qids, terms_u, tmap, qptr, qtidx, qw); duplicate (q, t) entries
     sum in the kernel's segment-sum, same as the join plan's groupBy."""
     terms_u = sorted(qterm_pd["term"].unique())
@@ -736,17 +607,28 @@ def _matmul_score_topk_packed(rows: DataFrame, keep_col: str | None,
     through _decode_pack_arrow_iter (decode + tidx map + doc-bucket
     pack in ONE python pass) -> a binary-blob exchange of <=
     n_tasks x part_space rows -> _matmul_topk_packed_iter. Returns
-    per-partition top-k candidates exactly like _matmul_score_topk.
+    per-partition top-k candidate rows (query_id, doc_id, score) — the
+    caller's final window cuts them to the exact global top-k.
 
     dead_ids: sorted int64 numpy array of tombstoned doc_ids (or
-    None) — packed rows can't be anti-joined JVM-side, so the kernel
-    drops them before candidate selection (same result as the
-    unpacked route's pre-matmul _live anti-join; the final window's
-    anti-join then re-applies as a no-op)."""
+    None) — packed rows can't be anti-joined JVM-side, and a dead doc
+    inside a partition could otherwise displace a live doc from that
+    partition's k candidates, so the kernel drops them before
+    candidate selection (the final window's anti-join then re-applies
+    as a no-op)."""
     spark = rows.sparkSession
     sc = spark.sparkContext
     qids, terms_u, tmap, qptr, qtidx, qw = _csr_weights(qterm_pd)
-    width = sc.defaultParallelism * _matmul_parts_factor()
+    # reduce-partition wave factor 2: each kernel task spends ~1 s
+    # waiting on the JVM side (shuffle fetch + building its Arrow
+    # input), so the factor was swept rather than kept at
+    # 4-by-analogy-with-spread (BASELINE.md round-4 serving table).
+    # Measured: a WEAK knob — best-of walls within ~12% across 1/2/4 —
+    # because the wait is partly data-proportional (fewer waves = 4x
+    # bigger per-task Arrow inputs) and a one-wave plan loses tail
+    # tolerance. 2 won on wall (tied with 4), variance, and 8->32
+    # efficiency.
+    width = sc.defaultParallelism * 2
     # several doc-buckets per reduce partition: the exchange hashes the
     # bucket VALUE, so bucket->partition is balls-in-bins; 8 per bin
     # keeps the expected max/mean task skew ~1.5x instead of ~4x
@@ -757,51 +639,13 @@ def _matmul_score_topk_packed(rows: DataFrame, keep_col: str | None,
         _decode_pack_arrow_iter(avgdl, keep_col, tmap, part_space),
         PACKED_ROWS,
     ).repartition(width, "part")
+    # tracked in the serving registry so the NEXT search_index call's
+    # entry release drops it (same capped-at-one lifecycle as the
+    # persisted posting rows)
     bcast = _track_persist(sc.broadcast(
         (qids, len(terms_u), qptr, qtidx, qw, dead_ids)))
     return packed.mapInArrow(
         _matmul_topk_packed_iter(bcast, k, round_dp), SCORE_ROWS_TOPK)
-
-
-def _matmul_score_topk(decoded: DataFrame, qterm_pd: pd.DataFrame,
-                       k: int, round_dp: int | None) -> DataFrame:
-    """Score a decoded (term, doc_id, tf_part) table against the batch
-    weight matrix via _matmul_topk_iter. Returns per-partition top-k
-    candidate rows (query_id, doc_id, score) — the caller's final
-    window cuts them to the exact global top-k. Tombstoned docs must
-    already be removed from `decoded` (a dead doc inside a partition
-    could otherwise displace a live doc from that partition's k
-    candidates before the anti-join runs)."""
-    spark = decoded.sparkSession
-    # CSR weight matrix, query-major: qptr[q] is query q's first entry
-    # (every query has >= 1 — qids comes from qterm itself)
-    qids, terms_u, tmap, qptr, qtidx, qw = _csr_weights(qterm_pd)
-    tix = F.broadcast(spark.createDataFrame(
-        [(t, i) for t, i in tmap.items()], "term string, tidx int"))
-    # KPROF attribution after the dot rewrite: each kernel task spends
-    # ~1 s waiting on the JVM side (shuffle fetch + building its Arrow
-    # input), so the wave factor was swept rather than kept at
-    # 4-by-analogy-with-spread (tools/wave_exp.py, BASELINE.md round-4
-    # serving table). Measured: a WEAK knob — best-of walls within
-    # ~12% across 1/2/4 — because the wait is partly data-proportional
-    # (fewer waves = 4x bigger per-task Arrow inputs) and a one-wave
-    # plan loses tail tolerance. factor=2 won on wall (tied with 4),
-    # variance, and 8->32 efficiency, hence the default.
-    rows = (
-        decoded.join(tix, "term")
-        .select("tidx", "doc_id", "tf_part")
-        .repartition(
-            spark.sparkContext.defaultParallelism * _matmul_parts_factor(),
-            "doc_id")
-    )
-    # the CSR weights ride a Spark broadcast: once per executor, not
-    # once per task. Tracked in the serving registry so the NEXT
-    # search_index call's entry release drops it (same capped-at-one
-    # lifecycle as the persisted posting rows).
-    bcast = _track_persist(spark.sparkContext.broadcast(
-        (qids, len(terms_u), qptr, qtidx, qw)))
-    return rows.mapInArrow(
-        _matmul_topk_iter(bcast, k, round_dp), SCORE_ROWS_TOPK)
 
 
 SCORE_ROWS_TOPK = StructType(
@@ -1439,23 +1283,13 @@ def search_index(
             scored = scored.withColumn("score", F.round("score", round_dp))
         return _topk(scored, k)
 
-    if MATMUL_PACK not in ("0", "1"):
-        raise ValueError(
-            f"SPARK_GRAFT_MATMUL_PACK must be '0' or '1', got "
-            f"{MATMUL_PACK!r}")
-    # packed feed needs the fused arrow kernel; under the pandas decode
-    # A/B twin fall back to the row-per-posting feed so DECODE_IMPL
-    # keeps selecting ONE coherent python path end-to-end
-    use_pack = (agg_impl == "matmul" and MATMUL_PACK == "1"
-                and DECODE_IMPL == "arrow")
-
     def _score_topk(rows: DataFrame, keep_col: str | None) -> DataFrame:
         """posting payload rows -> exact top-k, via the configured
         aggregation (module doc for AGG_IMPL; the matmul kernel's own
         docstring for why the join plan loses at scale). All routes
         end in _finish, so rounding/tombstone/tie-break semantics are
         shared: _finish's F.round is the single rounding authority
-        (the matmul kernels emit unrounded candidate scores cut with
+        (the matmul kernel emits unrounded candidate scores cut with
         a one-quantum relaxation), and matmul pre-drops tombstones,
         making _finish's anti-join a no-op."""
         if agg_impl == "matmul":
@@ -1472,14 +1306,9 @@ def search_index(
                             F.max("df").alias("df"))), "term")
                     .withColumn("w", F.col("qtf") * idf_expr(n_docs))
                     .select("query_id", "term", "w").toPandas())
-            if use_pack:
-                return _finish(_matmul_score_topk_packed(
-                    rows, keep_col, avgdl, qterm_pd, k, round_dp,
-                    dead_ids, spread))
-            decoded = _decode_tf_parts(rows, avgdl, keep_col,
-                                       spread=spread)
-            return _finish(_matmul_score_topk(
-                _live(decoded, tombs), qterm_pd, k, round_dp))
+            return _finish(_matmul_score_topk_packed(
+                rows, keep_col, avgdl, qterm_pd, k, round_dp,
+                dead_ids, spread))
         # df-passthrough (round 6), pruned AND unpruned: idf/w from
         # the decoded rows' own df column, query weights a broadcast
         # local relation (one build job, no scan) — zero metadata jobs,

@@ -13,10 +13,9 @@ are later merged. Here (north_rule):
       one scan+tokenize per BATCH of shards (per-shard jobs would each
       re-scan the whole input); raw (shard, tid, doc_id, dl) token
       occurrences — integers only — are hash-repartitioned by
-      (shard, tid) and encoded by a mapInArrow kernel (mapInPandas twin
-      kept for comparison runs) that lexsorts the partition in numpy,
-      splits (shard, tid) runs, counts tf with
-      np.unique, and emits blocked delta+varbyte lists (dl inline like
+      (shard, tid) and encoded by a mapInArrow kernel that lexsorts the
+      partition in numpy, splits (shard, tid, doc) runs (tf = run
+      length), and emits blocked delta+varbyte lists (dl inline like
       Lucene norms, per-128-posting block-max metadata). Output lands
       under partials/shard=s via dynamic partition overwrite; the
       manifest records per-shard lineage (term/posting counts, wall,
@@ -25,13 +24,20 @@ are later merged. Here (north_rule):
       10,000-doc IndexWriter commit, LuceneIndexBuilder.java:42-45).
 
   merge phase (explicit skew handling, north_rule):
-      df(tid) = sum of partial counts (broadcast); terms with
-      df > hot_threshold keep up to n_salts rows in the final table
-      (salt = hash(shard) % n_salts — shard doc spaces are disjoint, so
-      per-salt lists are independent and the giant hot-term group is
-      never materialized in a single task); cold terms merge to one
-      row. Each (tid, salt) group decodes its few partials, re-sorts,
-      re-encodes in numpy; the term dictionary restores strings.
+      full merge (merge_onepass_plan): partials and the term dictionary
+      ride ONE exchange by tid bucket; the kernel computes df in-kernel,
+      restores term strings from the dictionary rows, and splits a term
+      with df > hot_df_threshold into contiguous doc-range chunks of at
+      most that many postings (salt = chunk index), so no serving row
+      grows without bound.
+      incremental merge (merge_plan, only the terms new stream shards
+      touched): df(tid) = sum of partial counts; terms with
+      df > hot_threshold keep up to n_salts rows (salt = hash(shard,
+      payload) % n_salts — shard doc spaces are disjoint, so per-salt
+      lists are independent and the giant hot-term group is never
+      materialized in a single task); cold terms merge to one row. Each
+      (tid, salt) group decodes its few partials, re-sorts, re-encodes
+      in numpy; the term dictionary restores strings.
 
 Final layout (parquet, PARTITIONED by tid bucket pb = pmod(tid, pb_mod)
 and term-sorted within files, so serving prunes whole partition dirs
@@ -73,8 +79,7 @@ from pyspark.sql.types import (
 )
 
 from .analysis import with_tokens
-from .codec import (IMPACT_RANKS, decode_blocked, decode_blocked_batch,
-                    encode_blocked, encode_blocked_batch)
+from .codec import IMPACT_RANKS, decode_blocked_batch, encode_blocked_batch
 
 STREAM_ENC_SCHEMA = StructType(
     [
@@ -97,40 +102,6 @@ TERM_DICT_SCHEMA = "tid long, term string"
 STREAM_DOC_STATS_SCHEMA = DOC_STATS_SCHEMA + ", batch_id long"
 
 
-def _enc_dict(tid: int, n: int, enc: dict) -> dict:
-    """One encoded row: a serving row (impacts) when the encoder was
-    asked for impacts, else a partial row (block_last)."""
-    meta = ("block_max", "impacts") if "impacts" in enc else (
-        "block_last", "block_max")
-    return {
-        "tid": [int(tid)],
-        "n_docs": [n],
-        "doc_bytes": [enc["doc_bytes"]],
-        "tf_bytes": [enc["tf_bytes"]],
-        "dl_bytes": [enc["dl_bytes"]],
-        **{c: [enc[c]] for c in meta},
-        "doc_off": [enc["doc_off"]],
-        "tf_off": [enc["tf_off"]],
-        "dl_off": [enc["dl_off"]],
-    }
-
-
-def _encode_tid_group_fn(avgdl: float):
-    """Grouped-map kernel for SMALL inputs (streaming micro-batches):
-    one (tid,) group of raw (doc_id, dl) occurrence rows -> one encoded
-    partial row. The big batch build uses _encode_sorted_stream_fn
-    instead (grouped-map per-group overhead is prohibitive there)."""
-
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        d = pdf["doc_id"].to_numpy(np.int64)
-        dl = pdf["dl"].to_numpy(np.int64)
-        uniq, first, counts = np.unique(d, return_index=True, return_counts=True)
-        enc = encode_blocked(uniq, counts, dl[first], avgdl)
-        return pd.DataFrame(_enc_dict(key[0], uniq.size, enc))
-
-    return encode
-
-
 TID_ENC_SCHEMA = StructType(
     [
         StructField("shard", IntegerType(), False),
@@ -146,95 +117,6 @@ TID_ENC_SCHEMA = StructType(
         StructField("dl_off", ArrayType(IntegerType()), False),
     ]
 )
-
-
-def _encode_partition_fn(avgdl: float, yield_rows: int = 256):
-    """mapInPandas kernel over a partition hash-distributed by
-    (shard, tid) — NOT sorted. The kernel buffers the partition's
-    integer columns, lexsorts them in numpy, splits (shard, tid) runs
-    by boundary detection, and encodes each run.
-
-    Three measured design choices (1M docs / 199M token rows):
-    * NOT grouped-map applyInPandas: its fixed per-group Arrow+pandas
-      overhead across n_shards*n_terms groups dominated the build
-      (315s vs 25s for the identical shuffle, local[8]);
-    * NOT sortWithinPartitions: the Tungsten sort of the full token
-      stream triggered GCLocker allocation stalls alongside Arrow's
-      native critical sections; a numpy int64 lexsort of the ~size/p
-      partition slice is cheap and off-heap;
-    * terms travel as tid = xxhash64(term): shuffle, sort, and Arrow
-      batches are fixed-width integers — no strings anywhere.
-
-    tf is counted per run with np.unique (no prior (term, doc)
-    aggregation shuffle). Memory per task ~= 28 bytes x rows/partition —
-    size spark.sql.shuffle.partitions so this fits comfortably."""
-
-    def fn(batches):
-        shards, tids, ds, dls = [], [], [], []
-        for pdf in batches:
-            if len(pdf):
-                shards.append(pdf["shard"].to_numpy(np.int32))
-                tids.append(pdf["tid"].to_numpy(np.int64))
-                ds.append(pdf["doc_id"].to_numpy(np.int64))
-                dls.append(pdf["dl"].to_numpy(np.int64))
-        if not shards:
-            return
-        shard = np.concatenate(shards)
-        tid = np.concatenate(tids)
-        d = np.concatenate(ds)
-        dl = np.concatenate(dls)
-        del shards, tids, ds, dls
-        order = np.lexsort((d, tid, shard))
-        shard, tid, d, dl = shard[order], tid[order], d[order], dl[order]
-        change = np.flatnonzero(
-            (shard[1:] != shard[:-1]) | (tid[1:] != tid[:-1])
-        ) + 1
-        bounds = np.concatenate(([0], change, [shard.size]))
-        out: dict[str, list] = {k: [] for k in (
-            "shard", "tid", "n_docs", "doc_bytes", "tf_bytes", "dl_bytes",
-            "block_last", "block_max", "doc_off", "tf_off", "dl_off")}
-
-        def flush():
-            df = pd.DataFrame(out)
-            for k in out:
-                out[k] = []
-            return df
-
-        for i in range(len(bounds) - 1):
-            lo, hi = bounds[i], bounds[i + 1]
-            uniq, first, counts = np.unique(d[lo:hi], return_index=True,
-                                            return_counts=True)
-            enc = encode_blocked(uniq, counts, dl[lo:hi][first], avgdl)
-            out["shard"].append(int(shard[lo]))
-            out["tid"].append(int(tid[lo]))
-            out["n_docs"].append(uniq.size)
-            out["doc_bytes"].append(enc["doc_bytes"])
-            out["tf_bytes"].append(enc["tf_bytes"])
-            out["dl_bytes"].append(enc["dl_bytes"])
-            out["block_last"].append(enc["block_last"])
-            out["block_max"].append(enc["block_max"])
-            out["doc_off"].append(enc["doc_off"])
-            out["tf_off"].append(enc["tf_off"])
-            out["dl_off"].append(enc["dl_off"])
-            if len(out["tid"]) >= yield_rows:
-                yield flush()
-        if out["tid"]:
-            yield flush()
-
-    return fn
-
-
-def _enc_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema([
-        ("shard", pa.int32()), ("tid", pa.int64()), ("n_docs", pa.int64()),
-        ("doc_bytes", pa.binary()), ("tf_bytes", pa.binary()),
-        ("dl_bytes", pa.binary()), ("block_last", pa.list_(pa.int64())),
-        ("block_max", pa.list_(pa.float64())),
-        ("doc_off", pa.list_(pa.int32())), ("tf_off", pa.list_(pa.int32())),
-        ("dl_off", pa.list_(pa.int32())),
-    ])
 
 
 def _emit_enc_batches(key_arrays, enc, yield_rows, tail_arrays=(),
@@ -314,139 +196,81 @@ def _emit_enc_batches(key_arrays, enc, yield_rows, tail_arrays=(),
         lo = hi
 
 
-def _encode_partition_arrow_fn(avgdl: float, yield_rows: int = 65536):
-    """mapInArrow encode kernel (round-3 judge item 1 — the Arrow+Python
-    encode stage was the measured non-scaling component of the 1M-doc
-    build). Same lexsort + run-split + encode math as the mapInPandas
-    twin, now fully BATCHED (round-4):
+def _encode_partition_arrow_fn(avgdl: float,
+                               key_cols: tuple = ("shard", "tid"),
+                               yield_rows: int = 65536):
+    """mapInArrow encode kernel over raw (*key_cols, doc_id, dl) token
+    occurrence rows, hash-distributed by key_cols — NOT sorted — so
+    every group's rows are partition-local: one encoded partial row per
+    key group. The build passes ("shard", "tid"), stream ingest
+    ("tid",) (STREAM_ENC_SCHEMA).
 
-    * input: pyarrow RecordBatches — the four non-null int columns go
+    * input: pyarrow RecordBatches — the non-null int columns go
       straight to numpy (zero-copy), no per-batch pandas DataFrame;
-    * the per-(shard, tid)-group np.unique + encode_blocked loop is
-      replaced by ONE boundary-detection pass over the lexsorted
-      partition plus encode_blocked_batch — three varbyte calls per
-      PARTITION instead of three per 128-value block (4.3x single-core
-      at design-regime group counts, measured in BASELINE.md);
+    * the partition is lexsorted in numpy, not by sortWithinPartitions:
+      the Tungsten sort of the full token stream triggered GCLocker
+      allocation stalls alongside Arrow's native critical sections,
+      while an int64 lexsort of the ~size/p slice is cheap and off-heap;
+    * ONE boundary-detection pass splits the (key, doc) runs — tf is
+      the run length, no prior (term, doc) aggregation shuffle — and
+      encode_blocked_batch encodes every group of the PARTITION in three
+      varbyte calls (4.3x single-core over a per-group encode_blocked
+      loop at design-regime group counts, BASELINE.md). A grouped-map
+      applyInPandas kernel paid a fixed Arrow+pandas cost per group
+      that dominated the build (315 s vs 25 s for the identical
+      shuffle at 1M docs, local[8]);
+    * terms travel as tid = xxhash64(term): shuffle, sort and Arrow
+      batches are fixed-width integers — no strings anywhere;
     * output: RecordBatches assembled zero-copy from the batch
       encoder's concatenated payload buffers (_emit_enc_batches).
 
-    Byte-identical output to the pandas kernel
+    Memory per task ~= 28 bytes x rows/partition — size
+    spark.sql.shuffle.partitions so this fits comfortably. Output
+    bytes equal codec.encode_blocked per group
     (tests/test_round5.py::test_arrow_encode_kernel_identical)."""
     import pyarrow as pa
 
+    key_types = {"shard": pa.int32(), "tid": pa.int64()}
+
     def fn(batches):
-        shards, tids, ds, dls = [], [], [], []
+        acc: dict[str, list] = {c: [] for c in (*key_cols, "doc_id", "dl")}
         for b in batches:
             if b.num_rows:
                 cols = {name: b.column(i) for i, name in
                         enumerate(b.schema.names)}
-                shards.append(np.asarray(cols["shard"]))
-                tids.append(np.asarray(cols["tid"]))
-                ds.append(np.asarray(cols["doc_id"]))
-                dls.append(np.asarray(cols["dl"]))
-        if not shards:
+                for c in acc:
+                    acc[c].append(np.asarray(cols[c]))
+        if not acc["doc_id"]:
             return
-        shard = np.concatenate(shards)
-        tid = np.concatenate(tids)
-        d = np.concatenate(ds)
-        dl = np.concatenate(dls)
-        del shards, tids, ds, dls
-        order = np.lexsort((d, tid, shard))
-        shard, tid, d, dl = shard[order], tid[order], d[order], dl[order]
-        n = shard.size
-        # unique (shard, tid, doc) runs -> per-doc tf by run length
-        # (identical to np.unique per group on the sorted slice)
+        keys = [np.concatenate(acc[c]) for c in key_cols]
+        d = np.concatenate(acc["doc_id"])
+        dl = np.concatenate(acc["dl"])
+        del acc
+        order = np.lexsort((d, *reversed(keys)))
+        keys = [k[order] for k in keys]
+        d, dl = d[order], dl[order]
+        n = d.size
+        # unique (key, doc) runs -> per-doc tf by run length
         first = np.empty(n, dtype=bool)
         first[0] = True
-        first[1:] = ((shard[1:] != shard[:-1]) | (tid[1:] != tid[:-1])
-                     | (d[1:] != d[:-1]))
+        first[1:] = d[1:] != d[:-1]
+        for k in keys:
+            first[1:] |= k[1:] != k[:-1]
         uidx = np.flatnonzero(first)
         counts = np.diff(np.append(uidx, n))
-        d_u, dl_u = d[uidx], dl[uidx]
-        sh_u, tid_u = shard[uidx], tid[uidx]
+        keys = [k[uidx] for k in keys]
         gfirst = np.empty(uidx.size, dtype=bool)
         gfirst[0] = True
-        gfirst[1:] = (sh_u[1:] != sh_u[:-1]) | (tid_u[1:] != tid_u[:-1])
+        gfirst[1:] = False
+        for k in keys:
+            gfirst[1:] |= k[1:] != k[:-1]
         gs = np.flatnonzero(gfirst)
-        enc = encode_blocked_batch(d_u, counts, dl_u, gs, avgdl)
+        enc = encode_blocked_batch(d[uidx], counts, dl[uidx], gs, avgdl)
         yield from _emit_enc_batches(
-            [("shard", pa.int32(), sh_u[gs]), ("tid", pa.int64(), tid_u[gs])],
+            [(c, key_types[c], k[gs]) for c, k in zip(key_cols, keys)],
             enc, yield_rows)
 
     return fn
-
-
-def _encode_stream_arrow_fn(avgdl: float, yield_rows: int = 65536):
-    """mapInArrow twin of _encode_tid_group_fn for stream ingest
-    (round-4 verdict #5): one batched varbyte pass per PARTITION
-    instead of one applyInPandas group per tid — the grouped-map
-    route pays ~10 ms of Arrow+pandas fixed overhead per tid, which
-    is irrelevant for a small micro-batch but real for a
-    wide-vocabulary stream batch (the same measured argument that
-    moved the batch build to _encode_partition_arrow_fn). Same
-    lexsort + run-split + encode_blocked_batch math, minus the shard
-    column. Requires every tid's rows to be partition-local — the
-    caller repartitions by tid first. Byte-identical output to the
-    grouped-map twin (tests/test_round8.py pins it end-to-end
-    through start_incremental_index)."""
-    import pyarrow as pa
-
-    def fn(batches):
-        tids, ds, dls = [], [], []
-        for b in batches:
-            if b.num_rows:
-                cols = {name: b.column(i) for i, name in
-                        enumerate(b.schema.names)}
-                tids.append(np.asarray(cols["tid"]))
-                ds.append(np.asarray(cols["doc_id"]))
-                dls.append(np.asarray(cols["dl"]))
-        if not tids:
-            return
-        tid = np.concatenate(tids)
-        d = np.concatenate(ds)
-        dl = np.concatenate(dls)
-        del tids, ds, dls
-        order = np.lexsort((d, tid))
-        tid, d, dl = tid[order], d[order], dl[order]
-        n = tid.size
-        # unique (tid, doc) runs -> per-doc tf by run length
-        first = np.empty(n, dtype=bool)
-        first[0] = True
-        first[1:] = (tid[1:] != tid[:-1]) | (d[1:] != d[:-1])
-        uidx = np.flatnonzero(first)
-        counts = np.diff(np.append(uidx, n))
-        d_u, dl_u, tid_u = d[uidx], dl[uidx], tid[uidx]
-        gfirst = np.empty(uidx.size, dtype=bool)
-        gfirst[0] = True
-        gfirst[1:] = tid_u[1:] != tid_u[:-1]
-        gs = np.flatnonzero(gfirst)
-        enc = encode_blocked_batch(d_u, counts, dl_u, gs, avgdl)
-        yield from _emit_enc_batches(
-            [("tid", pa.int64(), tid_u[gs])], enc, yield_rows)
-
-    return fn
-
-
-def _merge_group_fn(avgdl: float):
-    """Merge kernel for one (tid, salt) group of partial lists. Group
-    counts here are tiny (n_terms x n_salts rows of pre-encoded bytes),
-    so grouped-map applyInPandas overhead is irrelevant."""
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ds, ts, ls = [], [], []
-        for r in pdf.itertuples(index=False):
-            d, t, dl = decode_blocked(r.doc_bytes, r.tf_bytes, r.dl_bytes,
-                                      r.doc_off, r.tf_off, r.dl_off)
-            ds.append(d); ts.append(t); ls.append(dl)
-        d = np.concatenate(ds)
-        enc = encode_blocked(d, np.concatenate(ts), np.concatenate(ls), avgdl,
-                             impact_ranks=IMPACT_RANKS)
-        # grouped-map output columns are matched by NAME, so reusing
-        # _enc_dict and appending the salt is schema-safe
-        return pd.DataFrame(
-            {**_enc_dict(key[0], d.size, enc), "salt": [int(key[1])]})
-
-    return merge
 
 
 TID_MERGED_SCHEMA = StructType(
@@ -473,29 +297,29 @@ SERVING_COLUMNS = (
 
 
 def _merge_partition_arrow_fn(avgdl: float, yield_rows: int = 65536):
-    """Batched mapInArrow merge kernel (round-4). The grouped-map
-    applyInPandas merge pays a fixed per-group cost (Arrow->pandas
-    DataFrame in, pandas->Arrow out, per-row decode_blocked, per-block
-    varbyte encode) that is irrelevant at toy vocabularies but is THE
-    merge at design-regime ones (10^5+ (tid, msalt) groups). This
-    kernel receives a partition hash-distributed by (tid, msalt) —
+    """Batched mapInArrow merge kernel of merge_plan (the incremental
+    merge). A grouped-map applyInPandas merge pays a fixed per-group
+    cost (Arrow->pandas DataFrame in, pandas->Arrow out, per-row
+    decode_blocked, per-block varbyte encode) that is irrelevant at toy
+    vocabularies but is THE merge at design-regime ones (10^5+ (tid,
+    msalt) groups). This kernel receives a partition hash-distributed by (tid, msalt) —
     carrying ALL rows of each group, like the groupBy — and merges
     every group in one vectorized pass:
 
       * rows lexsorted by (msalt, tid) so groups are contiguous;
       * ONE decode_blocked_batch call for the whole partition (one
         varbyte pass per stream, globalized block-offset delta repair);
-      * postings lexsorted by (group, doc_id) — same ordering
-        encode_blocked's stable per-group sort produced;
+      * postings lexsorted by (group, doc_id) — the ordering
+        codec.encode_blocked's stable per-group sort produces;
       * ONE encode_blocked_batch call, emitted zero-copy via
         _emit_enc_batches.
 
     Memory: the partition's postings are materialized (~40 B transient
     per posting) — sized by spark.sql.shuffle.partitions exactly like
-    the encode kernel's token slice, where the old path peaked per
-    group. Logical output is identical to _merge_group_fn (pinned by
+    the encode kernel's token slice. Each group's row equals
+    codec.encode_blocked over its doc-sorted postings (pinned by
     test_merge_arrow_kernel_identical); byte order among duplicate
-    (tid, doc) postings follows shuffle arrival order in both."""
+    (tid, doc) postings follows shuffle arrival order."""
     import pyarrow as pa
 
     def fn(batches):
@@ -555,7 +379,7 @@ def _merge_partition_arrow_fn(avgdl: float, yield_rows: int = 65536):
 
 
 #: one-pass merge output: the FINAL postings serving schema, column
-#: order matching the classic write path (pb is consumed by the
+#: order matching SERVING_COLUMNS (pb is consumed by the
 #: partitioned write)
 ONEPASS_MERGED_SCHEMA = StructType(
     [StructField("term", StringType(), False),
@@ -570,8 +394,8 @@ ONEPASS_MERGED_SCHEMA = StructType(
 
 def _merge_onepass_arrow_fn(avgdl: float, pb_mod: int, chunk_postings: int,
                             yield_rows: int = 65536):
-    """ONE-PASS full-merge kernel (round-4). The classic full merge
-    moves the payload through three passes: a SortMergeJoin with the
+    """ONE-PASS full-merge kernel (round-4). A merge_plan-shaped full
+    merge would move the payload through three passes: a SortMergeJoin with the
     per-tid df table (to decide hot-term salting), the (tid, msalt)
     group exchange, then a second SMJ with dfs+term_dict plus a
     repartition("pb") before the partitioned write. With the batched
@@ -594,8 +418,8 @@ def _merge_onepass_arrow_fn(avgdl: float, pb_mod: int, chunk_postings: int,
       * output rows already live in their pb's partition, so the
         partitioned write needs no further exchange.
 
-    tids with no dict row are dropped, matching the classic plan's
-    inner join with term_dict.
+    tids with no dict row are dropped, matching merge_plan's inner join
+    with term_dict.
 
     Per-task memory model (ADVICE r4): a task holds ONE pb bucket's
     compressed payload (as zero-copy Arrow buffer views, not copies)
@@ -671,7 +495,7 @@ def _merge_onepass_arrow_fn(avgdl: float, pb_mod: int, chunk_postings: int,
         present = g2[gs]
         g_tid = tid_s[grow][present]
         sizes = np.diff(np.append(gs, d2.size))
-        # drop tids without a dict row (classic inner-join semantics)
+        # drop tids without a dict row (merge_plan's inner join)
         terms = [dict_map.get(int(x)) for x in g_tid]
         keep_g = np.array([s is not None for s in terms], dtype=bool)
         if not keep_g.all():
@@ -775,24 +599,6 @@ def _decode_partials_fn(batches):
             "doc_id": d, "tf": t, "dl": dl,
             "bid": np.repeat(pdf["bid"].to_numpy(np.int64), counts),
         })
-
-
-def _reencode_tid_group_fn(avgdl: float):
-    """Grouped-map kernel: one (tid[, salt-group]) group of DECODED
-    (doc_id, tf, dl) posting rows -> one encoded partial row (tf
-    already computed, unlike _encode_tid_group_fn which counts raw
-    occurrences). Works under any composite grouping key whose first
-    element is the tid — dedup consolidation salts its groups by doc
-    hash so a hot term never lands in one task. Kept for A/B; the
-    default path is the batched _reencode_partition_arrow_fn."""
-
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        enc = encode_blocked(pdf["doc_id"].to_numpy(np.int64),
-                             pdf["tf"].to_numpy(np.int64),
-                             pdf["dl"].to_numpy(np.int64), avgdl)
-        return pd.DataFrame(_enc_dict(key[0], len(pdf), enc))
-
-    return encode
 
 
 def _reencode_partition_arrow_fn(avgdl: float, group_cols: tuple,
@@ -1058,7 +864,7 @@ def dedup_stream_partials(spark: SparkSession, out_dir: str,
         .agg(F.sum("n_docs")).collect()[0][0] or 0
     )
     # salt the re-encode groups by doc hash: a hot term's entire stream
-    # backlog must never materialize in ONE applyInPandas task (the
+    # backlog must never materialize in ONE re-encode task (the
     # same single-task hotspot the merge phase's salting exists to
     # prevent). Multiple encoded rows per tid are the partials' normal
     # shape — the merge decodes and regroups them anyway.
@@ -1355,17 +1161,9 @@ def build_index(
     text_col: str = "text",
     shard_batch: int | None = None,
     pb_mod: int | str = "auto",
-    encode_impl: str = "arrow",
     combine: str | None = None,
 ) -> dict:
     """Full checkpointed build; idempotent/resumable. Returns manifest.
-
-    encode_impl ('arrow' | 'pandas'): which twin of the encode kernel
-    runs the shuffle->encode stage. 'arrow' (default) is the mapInArrow
-    kernel — byte-identical output, measured faster at 1M docs because
-    it skips the per-batch Arrow<->pandas conversions (BASELINE.md
-    round 4); 'pandas' keeps the original mapInPandas kernel for
-    comparison runs.
 
     combine ('mapside' | 'shuffle'; default SPARK_GRAFT_BUILD_COMBINE
     or 'shuffle'): where the token->posting-list aggregation happens.
@@ -1396,9 +1194,6 @@ def build_index(
       CORPUS — a doc-level, not token-level, exchange) accordingly.
     * 'shuffle' — repartition("shard", "tid") of the raw token rows
       before encoding (one partial row per (shard, tid))."""
-    if encode_impl not in ("arrow", "pandas"):
-        raise ValueError(
-            f"encode_impl must be 'arrow' or 'pandas', got {encode_impl!r}")
     combine = combine or os.environ.get("SPARK_GRAFT_BUILD_COMBINE",
                                         "shuffle")
     if combine not in ("mapside", "shuffle"):
@@ -1465,12 +1260,8 @@ def build_index(
                 raw = raw_token_projection(sub, n_shards, id_col, text_col)
             shuffled = (raw.repartition("shard", "tid")
                         if combine == "shuffle" else raw)
-            if encode_impl == "arrow":
-                enc = shuffled.mapInArrow(
-                    _encode_partition_arrow_fn(avgdl), TID_ENC_SCHEMA)
-            else:
-                enc = shuffled.mapInPandas(
-                    _encode_partition_fn(avgdl), TID_ENC_SCHEMA)
+            enc = shuffled.mapInArrow(
+                _encode_partition_arrow_fn(avgdl), TID_ENC_SCHEMA)
             # per-shard lineage observed ON the write itself (round 6:
             # the read-back aggregation was one more sequential job per
             # batch); conditional count/sum per shard — bounded to
@@ -1625,19 +1416,13 @@ def merge_plan(
     hot_df_threshold: int = 1 << 17,
     n_salts: int = 8,
     only_tids: DataFrame | None = None,
-    merge_impl: str | None = None,
     dict_distinct: bool = True,
 ) -> DataFrame:
     """The merge dataflow as an unexecuted DataFrame (separated so plan
     tests can assert its physical shape — no broadcast of per-term
     tables). only_tids (a (tid) DataFrame) restricts the merge to those
     terms — the incremental path's re-merge set; df is still computed
-    from ALL partials of each kept tid, so it equals the full merge's.
-
-    merge_impl: 'arrow' (default; batched mapInArrow kernel — one
-    decode/encode pass per partition) or 'group' (grouped-map
-    applyInPandas — the pre-round-4 kernel, kept for A/B measurement).
-    SPARK_GRAFT_MERGE_IMPL overrides the default."""
+    from ALL partials of each kept tid, so it equals the full merge's."""
     partials = spark.read.option(
         "basePath", os.path.join(out_dir, "partials")
     ).parquet(os.path.join(out_dir, "partials"))
@@ -1659,26 +1444,16 @@ def merge_plan(
                    F.lit(n_salts)).cast("int"),
         ).otherwise(F.lit(0)),
     )
-    impl = merge_impl or os.environ.get("SPARK_GRAFT_MERGE_IMPL", "arrow")
-    if impl == "group":
-        merged = with_df.groupBy("tid", "msalt").applyInPandas(
-            _merge_group_fn(avgdl), TID_MERGED_SCHEMA
-        )
-    elif impl == "arrow":
-        # hash-distribute by group key (all rows of a (tid, msalt)
-        # group land in one partition, like the groupBy) and merge
-        # every group in one batched kernel pass; tf_off/dl_off are
-        # not needed for a full decode, so they stay out of the
-        # exchange
-        merged = (
-            with_df.select("tid", "msalt", "n_docs", "doc_bytes",
-                           "tf_bytes", "dl_bytes", "doc_off")
-            .repartition("tid", "msalt")
-            .mapInArrow(_merge_partition_arrow_fn(avgdl), TID_MERGED_SCHEMA)
-        )
-    else:
-        raise ValueError(f"merge_impl must be 'arrow' or 'group', got "
-                         f"{impl!r}")
+    # hash-distribute by group key (all rows of a (tid, msalt) group
+    # land in one partition) and merge every group in one batched
+    # kernel pass; tf_off/dl_off are not needed for a full decode, so
+    # they stay out of the exchange
+    merged = (
+        with_df.select("tid", "msalt", "n_docs", "doc_bytes",
+                       "tf_bytes", "dl_bytes", "doc_off")
+        .repartition("tid", "msalt")
+        .mapInArrow(_merge_partition_arrow_fn(avgdl), TID_MERGED_SCHEMA)
+    )
     # distinct: streaming batches append (possibly repeated) dict rows
     # — skipped for never-streamed indexes (see merge_onepass_plan)
     tdict = spark.read.schema(TERM_DICT_SCHEMA).parquet(
@@ -1949,7 +1724,6 @@ def merge_partials(
     new_name = f"postings_v{ver}"
     new_dir = os.path.join(out_dir, new_name)
     shutil.rmtree(new_dir, ignore_errors=True)
-    full_impl = os.environ.get("SPARK_GRAFT_MERGE_FULL", "onepass")
     # dictionary duplicates can only exist once ANY stream micro-batch
     # appended dict rows (streaming.start_incremental_index appends per
     # batch; init_stats writes distinct); belt-and-braces durable
@@ -1960,30 +1734,16 @@ def merge_partials(
         or any(v.get("streaming") for v in manifest["shards"].values())
         or os.path.exists(os.path.join(out_dir, "doc_stats_stream"))
     )
-    if full_impl == "onepass":
-        # one payload exchange total; rows already live in their pb's
-        # partition, so the partitioned write needs no repartition
-        out = merge_onepass_plan(spark, out_dir, avgdl, pb_mod,
-                                 chunk_postings=hot_df_threshold,
-                                 dict_distinct=ever_streamed)
-        (
-            out.sortWithinPartitions("pb", "term")
-            .write.mode("overwrite").partitionBy("pb")
-            .parquet(new_dir)
-        )
-    elif full_impl == "classic":
-        out = merge_plan(spark, out_dir, avgdl, hot_df_threshold, n_salts,
-                         dict_distinct=ever_streamed)
-        (
-            out.withColumn("pb", _pb_col(pb_mod))
-            .repartition("pb")
-            .sortWithinPartitions("pb", "term")
-            .write.mode("overwrite").partitionBy("pb")
-            .parquet(new_dir)
-        )
-    else:
-        raise ValueError(f"SPARK_GRAFT_MERGE_FULL must be 'onepass' or "
-                         f"'classic', got {full_impl!r}")
+    # one payload exchange total; rows already live in their pb's
+    # partition, so the partitioned write needs no repartition
+    out = merge_onepass_plan(spark, out_dir, avgdl, pb_mod,
+                             chunk_postings=hot_df_threshold,
+                             dict_distinct=ever_streamed)
+    (
+        out.sortWithinPartitions("pb", "term")
+        .write.mode("overwrite").partitionBy("pb")
+        .parquet(new_dir)
+    )
     manifest["merged"] = True
     manifest["postings_dir"] = new_name
     manifest["postings_version"] = ver
@@ -2276,22 +2036,6 @@ def _decode_partials_shard_fn(batches):
             "tid": np.repeat(pdf["tid"].to_numpy(np.int64), counts),
             "doc_id": d, "tf": t, "dl": dl,
         })
-
-
-def _reencode_shard_tid_fn(avgdl: float):
-    """Grouped-map kernel: one (shard, tid) group of decoded posting
-    rows -> one encoded partial row tagged with its shard. Kept for
-    A/B; the default compaction path is the batched
-    _reencode_partition_arrow_fn."""
-
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        enc = encode_blocked(pdf["doc_id"].to_numpy(np.int64),
-                             pdf["tf"].to_numpy(np.int64),
-                             pdf["dl"].to_numpy(np.int64), avgdl)
-        return pd.DataFrame(
-            {"shard": [str(key[0])], **_enc_dict(key[1], len(pdf), enc)})
-
-    return encode
 
 
 def _finish_compact_swap(out_dir: str) -> None:

@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .analysis import with_tokens
 from .postings import (
-    STREAM_ENC_SCHEMA, _encode_stream_arrow_fn, _encode_tid_group_fn,
-    _save_manifest, load_manifest,
+    STREAM_ENC_SCHEMA, _encode_partition_arrow_fn, _save_manifest,
+    load_manifest,
 )
 
 
@@ -45,16 +45,11 @@ def start_incremental_index(
     available_now: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
-    encode_impl: str | None = None,
 ):
     """Stream corpus parquet files from input_dir into partial posting
-    shards under out_dir. Returns the StreamingQuery.
-
-    encode_impl ('arrow' | 'pandas', default from
-    SPARK_GRAFT_ENCODE_IMPL like the batch build): 'arrow' encodes
-    each micro-batch with the batched mapInArrow kernel (one varbyte
-    pass per partition — round-4 verdict #5); 'pandas' keeps the
-    grouped-map per-tid twin. Byte-identical outputs (test_round8).
+    shards under out_dir. Returns the StreamingQuery. Each micro-batch
+    is encoded by the batch build's mapInArrow kernel, keyed by tid
+    alone (one varbyte pass per partition).
 
     avgdl_hint: block-max bounds need an avgdl; streaming uses the
     last-known collection value. tf_part is INCREASING in avgdl, so a
@@ -64,11 +59,6 @@ def start_incremental_index(
     streamed doc stats (written below) and RE-ENCODES every block with
     the refreshed avgdl — streamed partials' hint-based bounds never
     survive to serving."""
-    if encode_impl is None:
-        encode_impl = os.environ.get("SPARK_GRAFT_ENCODE_IMPL", "arrow")
-    if encode_impl not in ("arrow", "pandas"):
-        raise ValueError(
-            f"encode_impl must be 'arrow' or 'pandas', got {encode_impl!r}")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # finish any journaled swap a crashed dedup/compaction left
@@ -119,14 +109,10 @@ def start_incremental_index(
                 .parquet(os.path.join(out_dir, "term_dict"))
             )
             occ = raw.select(F.xxhash64("term").alias("tid"), "doc_id", "dl")
-            if encode_impl == "arrow":
-                # batched kernel needs each tid partition-local; the
-                # repartition is the same shuffle the groupBy twin does
-                enc = occ.repartition("tid").mapInArrow(
-                    _encode_stream_arrow_fn(avgdl_hint), STREAM_ENC_SCHEMA)
-            else:
-                enc = occ.groupBy("tid").applyInPandas(
-                    _encode_tid_group_fn(avgdl_hint), STREAM_ENC_SCHEMA)
+            # the batched kernel needs each tid partition-local
+            enc = occ.repartition("tid").mapInArrow(
+                _encode_partition_arrow_fn(avgdl_hint, ("tid",)),
+                STREAM_ENC_SCHEMA)
             shard_path = os.path.join(out_dir, "partials",
                                       f"shard=stream{batch_id}")
             enc.write.mode("overwrite").parquet(shard_path)

@@ -60,3 +60,58 @@ def bm25_topk(
         ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
         out.extend((qid, d, s, i + 1) for i, (d, s) in enumerate(ranked))
     return out
+
+
+def postings(docs: list[tuple[int, str]]) -> dict[str, list[tuple[int, int, int]]]:
+    """term -> its postings [(doc_id, tf, dl)] sorted by doc_id, tallied
+    with tokenize (dl counts a doc's tokens after stop-word removal)."""
+    out: dict[str, list[tuple[int, int, int]]] = {}
+    for d, text in docs:
+        toks = tokenize(text)
+        for term, f in Counter(toks).items():
+            out.setdefault(term, []).append((d, f, len(toks)))
+    return {t: sorted(v) for t, v in out.items()}
+
+
+def posting_rows(
+    docs: list[tuple[int, str]],
+    avgdl: float,
+    chunk: int | None = None,
+    impact_ranks: tuple = (),
+) -> dict[str, list[dict]]:
+    """Reference encoded rows: term -> one codec.encode_blocked row per
+    contiguous ``chunk``-posting piece of the term's sorted postings
+    (one row when chunk is None), each dict carrying the encoder's
+    fields plus salt (the piece index), df (the term's posting count)
+    and n_docs. With impact_ranks the rows take the serving layout the
+    merge writes; without, the partial layout the build and stream
+    encoders write."""
+    import numpy as np
+
+    from engine.codec import encode_blocked
+
+    out: dict[str, list[dict]] = {}
+    for term, ps in postings(docs).items():
+        step = chunk or len(ps)
+        rows = out.setdefault(term, [])
+        for salt, lo in enumerate(range(0, len(ps), step)):
+            d, tf, dl = (np.array(c, dtype=np.int64)
+                         for c in zip(*ps[lo:lo + step]))
+            enc = encode_blocked(d, tf, dl, avgdl, impact_ranks=impact_ranks)
+            rows.append({**enc, "salt": salt, "df": len(ps),
+                         "n_docs": int(d.size)})
+    return out
+
+
+def row_key(row, cols: tuple[str, ...]) -> tuple:
+    """A Spark Row or a posting_rows dict as a comparable tuple of
+    ``cols``: binaries as bytes, arrays as tuples."""
+    out = []
+    for c in cols:
+        v = row[c]
+        if isinstance(v, (bytes, bytearray)):
+            v = bytes(v)
+        elif isinstance(v, list):
+            v = tuple(v)
+        out.append(v)
+    return tuple(out)

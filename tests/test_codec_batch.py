@@ -178,32 +178,42 @@ def test_encode_blocked_batch_empty_and_guards():
 
 
 def test_merge_arrow_kernel_identical(spark, tmp_path):
-    """The batched mapInArrow merge (default) must produce a logically
-    identical merged index to the grouped-map applyInPandas kernel —
-    same decoded postings, offsets, and block metadata per (term,
-    salt) group."""
-    from pyspark.sql import functions as F
+    """The batched mapInArrow merge (merge_plan, the incremental path)
+    must write each (term, salt) row exactly as codec.encode_blocked
+    encodes that row's doc-sorted postings — same bytes, offsets, block
+    maxima and impacts — and each term's rows together must hold
+    exactly the test oracle's postings, with the term's full df on
+    every row."""
+    from engine.codec import IMPACT_RANKS, decode_blocked, encode_blocked
     from engine.corpusgen import synth_corpus
     from engine.postings import build_index, merge_plan
+
+    from .oracle import postings, row_key
 
     docs = synth_corpus(spark, 300).withColumnRenamed("content", "text")
     out = str(tmp_path / "idx")
     build_index(spark, docs, out, n_shards=4, n_salts=2)
-    rows = {}
-    for impl in ("group", "arrow"):
-        # low hot threshold so several terms take the salted path
-        df = merge_plan(spark, out, avgdl=10.0, hot_df_threshold=8,
-                        n_salts=2, merge_impl=impl)
-        rows[impl] = sorted(
-            (r.term, r.salt, r.df, r.n_docs, bytes(r.doc_bytes),
-             bytes(r.tf_bytes), bytes(r.dl_bytes), tuple(r.impacts),
-             tuple(r.block_max), tuple(r.doc_off), tuple(r.tf_off),
-             tuple(r.dl_off))
-            for r in df.collect())
-    assert rows["group"] == rows["arrow"]
-    import pytest
-    with pytest.raises(ValueError, match="merge_impl"):
-        merge_plan(spark, out, avgdl=10.0, merge_impl="bogus").collect()
+    # low hot threshold so several terms take the salted path
+    rows = merge_plan(spark, out, avgdl=10.0, hot_df_threshold=8,
+                      n_salts=2).collect()
+    cols = ("n_docs", "doc_bytes", "tf_bytes", "dl_bytes", "impacts",
+            "block_max", "doc_off", "tf_off", "dl_off")
+    merged: dict = {}
+    n_rows: dict = {}
+    for r in rows:
+        d, t, dl = decode_blocked(r.doc_bytes, r.tf_bytes, r.dl_bytes,
+                                  r.doc_off, r.tf_off, r.dl_off)
+        enc = encode_blocked(d, t, dl, 10.0, impact_ranks=IMPACT_RANKS)
+        enc["n_docs"] = int(d.size)
+        assert list(d) == sorted(d), r.term
+        assert row_key(r, cols) == row_key(enc, cols), (r.term, r.salt)
+        merged.setdefault((r.term, r.df), []).extend(
+            zip(d.tolist(), t.tolist(), dl.tolist()))
+        n_rows[r.term] = n_rows.get(r.term, 0) + 1
+    want = postings([(r.doc_id, r.text) for r in docs.collect()])
+    assert {k: sorted(v) for k, v in merged.items()} == {
+        (t, len(ps)): ps for t, ps in want.items()}
+    assert max(n_rows.values()) > 1  # some terms took the salted path
 
 
 def test_mapside_combine_build_identical_to_shuffle(spark, tmp_path):
@@ -239,42 +249,41 @@ def test_mapside_combine_build_identical_to_shuffle(spark, tmp_path):
 def test_onepass_merge_equivalent_to_classic(spark, tmp_path):
     """The one-pass full merge (single pb-partitioned exchange,
     in-kernel df, dict rows riding the shuffle, chunk-split hot terms)
-    must serve the same index as the classic three-pass plan: same
-    (term, df) table, same decoded postings per term, and multiple
-    rows for over-threshold terms."""
-    import os
+    must serve the same index as merge_plan, the salted three-pass plan
+    the incremental merge runs: same (term, df) table, same decoded
+    postings per term, and multiple rows for over-threshold terms."""
     from engine.codec import decode_blocked
     from engine.corpusgen import synth_corpus
-    from engine.postings import build_index, read_index
+    from engine.postings import build_index, merge_plan, read_index
 
     docs = (synth_corpus(spark, 300).withColumnRenamed("content", "text")
             .repartition(5))
+    out = str(tmp_path / "idx")
+    # low threshold so several terms take the split path
+    build_index(spark, docs, out, n_shards=2, n_salts=2,
+                hot_df_threshold=64)
+    idx = read_index(spark, out)
     tables = {}
-    for impl in ("classic", "onepass"):
-        os.environ["SPARK_GRAFT_MERGE_FULL"] = impl
-        try:
-            out = str(tmp_path / impl)
-            # low threshold so several terms take the split path
-            build_index(spark, docs, out, n_shards=2, n_salts=2,
-                        hot_df_threshold=64)
-            idx = read_index(spark, out)
-            decoded = {}
-            hot_rows = {}
-            for r in idx["postings"].collect():
-                d, t, dl = decode_blocked(
-                    r.doc_bytes, r.tf_bytes, r.dl_bytes,
-                    r.doc_off, r.tf_off, r.dl_off)
-                key = (r.term, int(r.df))
-                cur = decoded.setdefault(key, [])
-                cur.extend(zip(d.tolist(), t.tolist(), dl.tolist()))
-                hot_rows[r.term] = hot_rows.get(r.term, 0) + 1
-            tables[impl] = {k: sorted(v) for k, v in decoded.items()}
-            if impl == "onepass":
-                # chunk split GUARANTEES >1 rows past the threshold
-                # (hash-salting only spreads probabilistically)
-                for (term, df), postings in tables[impl].items():
-                    if df > 64:
-                        assert hot_rows[term] > 1, (impl, term, df)
-        finally:
-            os.environ.pop("SPARK_GRAFT_MERGE_FULL", None)
-    assert tables["classic"] == tables["onepass"]
+    for impl, rows in (
+            ("onepass", idx["postings"].collect()),
+            ("merge_plan", merge_plan(spark, out, idx["encode_avgdl"],
+                                      hot_df_threshold=64,
+                                      n_salts=2).collect())):
+        decoded = {}
+        hot_rows = {}
+        for r in rows:
+            d, t, dl = decode_blocked(
+                r.doc_bytes, r.tf_bytes, r.dl_bytes,
+                r.doc_off, r.tf_off, r.dl_off)
+            key = (r.term, int(r.df))
+            cur = decoded.setdefault(key, [])
+            cur.extend(zip(d.tolist(), t.tolist(), dl.tolist()))
+            hot_rows[r.term] = hot_rows.get(r.term, 0) + 1
+        tables[impl] = {k: sorted(v) for k, v in decoded.items()}
+        if impl == "onepass":
+            # chunk split GUARANTEES >1 rows past the threshold
+            # (hash-salting only spreads probabilistically)
+            for (term, df), postings in tables[impl].items():
+                if df > 64:
+                    assert hot_rows[term] > 1, (impl, term, df)
+    assert tables["merge_plan"] == tables["onepass"]

@@ -251,60 +251,64 @@ def test_promote_single_text_raises_on_multipart(spark, tmp_path):
 
 
 def test_arrow_encode_kernel_identical(spark, tmp_path):
-    """The mapInArrow encode kernel (default) must produce a
-    byte-identical index to the mapInPandas twin — same compressed
-    payloads, offsets, and block metadata."""
+    """The build (mapInArrow encode kernel, then the one-pass merge)
+    must write exactly the reference serving rows: each term's sorted
+    postings, tallied by the test oracle, split into contiguous
+    hot_df_threshold chunks and encoded by codec.encode_blocked — same
+    compressed payloads, offsets, block maxima and impacts."""
+    from engine.codec import IMPACT_RANKS
     from engine.corpusgen import synth_corpus
     from engine.postings import build_index, read_index
+    from engine.xxh import spark_xxhash64_str
+
+    from .oracle import posting_rows, row_key
 
     docs = synth_corpus(spark, 200).withColumnRenamed("content", "text")
-    outs = {}
-    for impl in ("pandas", "arrow"):
-        out = str(tmp_path / impl)
-        build_index(spark, docs, out, n_shards=2, n_salts=2,
-                    encode_impl=impl)
-        idx = read_index(spark, out)
-        outs[impl] = sorted(
-            (r.term, r.salt, bytes(r.doc_bytes), bytes(r.tf_bytes),
-             bytes(r.dl_bytes), tuple(r.impacts), tuple(r.block_max),
-             tuple(r.doc_off), tuple(r.tf_off), tuple(r.dl_off))
-            for r in idx["postings"].collect())
-    assert outs["pandas"] == outs["arrow"]
-    with pytest.raises(ValueError, match="encode_impl"):
-        build_index(spark, docs, str(tmp_path / "bad"), encode_impl="x")
+    out = str(tmp_path / "idx")
+    build_index(spark, docs, out, n_shards=2, n_salts=2,
+                hot_df_threshold=64)
+    idx = read_index(spark, out)
+    cols = ("salt", "df", "n_docs", "doc_bytes", "tf_bytes", "dl_bytes",
+            "impacts", "block_max", "doc_off", "tf_off", "dl_off")
+    got = sorted((r.term, r.tid) + row_key(r, cols)
+                 for r in idx["postings"].collect())
+    ref = posting_rows([(r.doc_id, r.text) for r in docs.collect()],
+                       idx["encode_avgdl"], chunk=64,
+                       impact_ranks=IMPACT_RANKS)
+    want = sorted((t, spark_xxhash64_str(t)) + row_key(r, cols)
+                  for t, rows in ref.items() for r in rows)
+    assert got == want
+    assert any(r[2] > 0 for r in got)  # some terms took the split path
 
 
 def test_decode_kernels_identical(spark, tmp_path):
-    """The mapInArrow serving decode kernel (default) must return
-    result-identical top-k to the mapInPandas twin, pruned and
-    unpruned."""
+    """The mapInArrow serving decode kernel must return the test
+    oracle's top-k, pruned and unpruned."""
     import engine.csearch as cs
     from engine.corpusgen import synth_corpus
     from engine.postings import build_index, read_index
+
+    from .oracle import bm25_topk
 
     docs = synth_corpus(spark, 200).withColumnRenamed("content", "text")
     out = str(tmp_path / "idx")
     build_index(spark, docs, out, n_shards=2, n_salts=2)
     idx = read_index(spark, out)
-    qs = spark.createDataFrame(
-        [("q1", "def class import"), ("q2", "ident3 rare17 val"),
-         ("q3", "public static void")],
-        "query_id string, query string")
-    res = {}
-    orig = cs.DECODE_IMPL
-    try:
-        for impl in ("pandas", "arrow"):
-            cs.DECODE_IMPL = impl
-            for prune in (False, True):
-                res[(impl, prune)] = sorted(
-                    (r.query_id, r.doc_id, round(r.score, 6), r.rank)
-                    for r in cs.search_index(spark, idx, qs, k=10,
-                                             prune=prune).collect())
-    finally:
-        cs.DECODE_IMPL = orig
-    assert res[("pandas", False)] == res[("arrow", False)]
-    assert res[("pandas", True)] == res[("arrow", True)]
-    assert len(res[("arrow", True)]) > 0
+    queries = [("q1", "def class import"), ("q2", "ident3 rare17 val"),
+               ("q3", "public static void")]
+    qs = spark.createDataFrame(queries, "query_id string, query string")
+    golden = {(q, d): (s, rk) for q, d, s, rk in bm25_topk(
+        [(r.doc_id, r.text) for r in docs.collect()], queries, k=10)}
+    assert golden
+    for prune in (False, True):
+        got = {(r.query_id, r.doc_id): (r.score, r.rank)
+               for r in cs.search_index(spark, idx, qs, k=10,
+                                        prune=prune).collect()}
+        assert set(got) == set(golden), prune
+        for key, (s, rk) in got.items():
+            gs, grk = golden[key]
+            assert rk == grk and s == pytest.approx(gs, rel=1e-9), (
+                key, prune)
 
 
 # ----------------------------------------------- large-vocab fixtures
@@ -396,18 +400,6 @@ def test_scaling_evidence_paths_are_disjoint_per_cell():
     paths = [bench.scaling_evidence_path(m, v) for m, v in cells]
     assert len(set(paths)) == 4
     assert all(p.endswith(".json") for p in paths)
-
-
-def test_decode_impl_typo_raises(spark, monkeypatch):
-    """A typo'd SPARK_GRAFT_DECODE_IMPL must fail loudly (mirroring
-    build_index's encode_impl validation), not silently serve every
-    query with the pandas kernel and mislabel an A/B measurement."""
-    import engine.csearch as cs
-
-    rows = spark.createDataFrame([], "term string")
-    monkeypatch.setattr(cs, "DECODE_IMPL", "arow")
-    with pytest.raises(ValueError, match="DECODE_IMPL"):
-        cs._decode_tf_parts(rows, 10.0, None)
 
 
 def test_design_regime_run_summaries_cover_all_snapshots():
@@ -559,35 +551,24 @@ def _matmul_fixture(spark, tmp_path_factory, tag, n_docs=600):
 def test_matmul_agg_identical_to_join(spark, tmp_path_factory):
     """agg_impl='matmul' (doc-partitioned dense matmul + per-partition
     top-k) must reproduce the join plan's (query_id, doc_id, score,
-    rank) rows exactly — across prune on/off, round_dp on/off, AND
-    both matmul feed layouts (packed doc-bucket blobs vs
-    row-per-posting), with tombstones standing (the packed route drops
-    them in-kernel from the broadcast dead set, not via the JVM
-    anti-join). Raw-precision scores are compared at 9 dp (all plans'
-    sum orders are partition-nondeterministic)."""
-    import pytest as _pytest
-
-    import engine.csearch as cs
+    rank) rows exactly — across prune on/off and round_dp on/off, with
+    tombstones standing (the packed feed drops them in-kernel from the
+    broadcast dead set, not via the JVM anti-join). Raw-precision
+    scores are compared at 9 dp (all plans' sum orders are
+    partition-nondeterministic)."""
     from engine.corpusgen import synth_queries
     from engine.csearch import search_index
 
     idx = _matmul_fixture(spark, tmp_path_factory, "mm_id")
     qs = synth_queries(spark, 40)
-    monkeypatch = _pytest.MonkeyPatch()
-    try:
-        for prune in (False, True):
-            for dp in (None, 4):
-                def rows(impl, pack="1"):
-                    monkeypatch.setattr(cs, "MATMUL_PACK", pack)
-                    r = search_index(spark, idx, qs, k=10, prune=prune,
-                                     round_dp=dp, agg_impl=impl).collect()
-                    return sorted((x.query_id, x.doc_id,
-                                   round(x.score, 9), x.rank) for x in r)
-                want = rows("join")
-                assert want == rows("matmul", pack="0"), (prune, dp)
-                assert want == rows("matmul", pack="1"), (prune, dp)
-    finally:
-        monkeypatch.undo()
+    for prune in (False, True):
+        for dp in (None, 4):
+            def rows(impl):
+                r = search_index(spark, idx, qs, k=10, prune=prune,
+                                 round_dp=dp, agg_impl=impl).collect()
+                return sorted((x.query_id, x.doc_id,
+                               round(x.score, 9), x.rank) for x in r)
+            assert rows("join") == rows("matmul"), (prune, dp)
 
 
 def test_matmul_ties_subk_and_no_phantom_zero_docs(spark, tmp_path):
@@ -634,15 +615,10 @@ def test_matmul_ties_subk_and_no_phantom_zero_docs(spark, tmp_path):
 def test_matmul_plan_repartitions_by_doc_and_auto_gates(
         spark, tmp_path_factory):
     """Plan shape: the matmul route must hash-repartition by the
-    doc-co-locating key — the packed feed (MATMUL_PACK=1, default) by
-    the `part` doc-bucket column, the row-per-posting feed by doc_id
-    itself (either co-location makes per-partition scores final); the
-    auto route at tiny n_docs must pick the join plan (neither
-    exchange). Also: a typo'd agg_impl fails loudly (the
-    A/B-mislabeling guard, same standard as DECODE_IMPL)."""
-    import pytest as _pytest
-
-    import engine.csearch as cs
+    doc-co-locating `part` doc-bucket column (co-location makes
+    per-partition scores final); the auto route at tiny n_docs must
+    pick the join plan (no such exchange). Also: a typo'd agg_impl
+    fails loudly."""
     from engine.corpusgen import synth_queries
     from engine.csearch import search_index
 
@@ -657,15 +633,7 @@ def test_matmul_plan_repartitions_by_doc_and_auto_gates(
     mm = search_index(spark, idx, qs, k=5, agg_impl="matmul")
     assert repart_on(mm, "part")  # packed feed: bucket exchange
     assert not repart_on(mm, "doc_id")
-    monkeypatch = _pytest.MonkeyPatch()
-    try:
-        monkeypatch.setattr(cs, "MATMUL_PACK", "0")
-        mm0 = search_index(spark, idx, qs, k=5, agg_impl="matmul")
-        assert repart_on(mm0, "doc_id")  # row feed: doc exchange
-        assert not repart_on(mm0, "part")
-    finally:
-        monkeypatch.undo()
     auto = search_index(spark, idx, qs, k=5)  # auto, n_docs < 100k
     assert not repart_on(auto, "doc_id") and not repart_on(auto, "part")
-    with _pytest.raises(ValueError, match="agg_impl"):
+    with pytest.raises(ValueError, match="agg_impl"):
         search_index(spark, idx, qs, k=5, agg_impl="matmlu")

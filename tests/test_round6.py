@@ -15,7 +15,6 @@ review findings over the matmul/packed-feed/deletes commits.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -38,8 +37,8 @@ def _mixed_sign_fixture(spark, tmp_path):
 
 
 def test_negative_weight_window_rank_identity(spark, tmp_path):
-    """All four serving plans (prune on/off x join/matmul, both matmul
-    feeds) must agree when some query weights are negative. Before the
+    """All four serving plans (prune on/off x join/matmul) must agree
+    when some query weights are negative. Before the
     fix: phase 2 divided the keep condition by w without flipping the
     inequality (pruning away blocks the query must decode), and the
     matmul kernel's score>0 hit test dropped negatively-scoring hit
@@ -48,7 +47,6 @@ def test_negative_weight_window_rank_identity(spark, tmp_path):
     k=3 the rare positive term 'kiwi' matches exactly 3 docs, so θ is
     FINITE and phase 2's threshold math actually engages (at k>3 it
     degenerates to θ=-inf / keep-everything and proves nothing)."""
-    import engine.csearch as cs
     from engine.csearch import search_index
 
     idx = _mixed_sign_fixture(spark, tmp_path)
@@ -58,24 +56,18 @@ def test_negative_weight_window_rank_identity(spark, tmp_path):
          ("pos", "kiwi")],            # control: all-positive
         "query_id string, query string")
 
-    def rows(prune, impl, pack):
-        mp = pytest.MonkeyPatch()
-        try:
-            mp.setattr(cs, "MATMUL_PACK", pack)
-            r = search_index(spark, idx, qs, k=3, prune=prune,
-                             agg_impl=impl).collect()
-        finally:
-            mp.undo()
+    def rows(prune, impl):
+        r = search_index(spark, idx, qs, k=3, prune=prune,
+                         agg_impl=impl).collect()
         return sorted((x.query_id, x.doc_id, round(x.score, 9), x.rank)
                       for x in r)
 
-    want = rows(False, "join", "1")
+    want = rows(False, "join")
     # negative-w docs must actually rank (score < 0 rows exist)
     assert any(q == "neg" and s < 0 for q, _, s, _ in want)
     for prune in (False, True):
-        for impl, pack in (("join", "1"), ("matmul", "0"),
-                           ("matmul", "1")):
-            assert rows(prune, impl, pack) == want, (prune, impl, pack)
+        for impl in ("join", "matmul"):
+            assert rows(prune, impl) == want, (prune, impl)
 
 
 def test_chunk_width_bounds_dense_transient():

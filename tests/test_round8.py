@@ -34,11 +34,16 @@ def _res(spark, idx, qs, **kw):
 
 
 def test_stream_encode_kernels_byte_identical(spark, tmp_path_factory):
-    """Round-4 verdict #5: stream ingest now encodes micro-batches via
-    the batched mapInArrow kernel by default. Its partial shard must be
-    BYTE-identical to the grouped-map applyInPandas twin's — payload
-    bytes, offsets, block arrays, everything."""
+    """Stream ingest encodes each micro-batch with the batch build's
+    mapInArrow kernel keyed by tid alone. Its partial shard must be
+    BYTE-identical to the reference partial rows: each term's sorted
+    postings, tallied by the test oracle and encoded by
+    codec.encode_blocked at the avgdl hint — payload bytes, offsets,
+    block arrays, everything."""
     from engine.streaming import start_incremental_index
+    from engine.xxh import spark_xxhash64_str
+
+    from .oracle import posting_rows, row_key
 
     inp = str(tmp_path_factory.mktemp("r8_stream_in"))
     docs = spark.createDataFrame(
@@ -47,29 +52,19 @@ def test_stream_encode_kernels_byte_identical(spark, tmp_path_factory):
         DOC_SCHEMA,
     )
     docs.write.parquet(inp + "/drop")
-    shards = {}
-    for impl in ("arrow", "pandas"):
-        out = str(tmp_path_factory.mktemp(f"r8_stream_{impl}"))
-        q = start_incremental_index(spark, inp + "/drop", out,
-                                    avgdl_hint=6.0, encode_impl=impl)
-        q.awaitTermination(120)
-        rows = (spark.read.parquet(out + "/partials/shard=stream0")
-                .collect())
-        shards[impl] = sorted(
-            (r.tid, r.n_docs, bytes(r.doc_bytes), bytes(r.tf_bytes),
-             bytes(r.dl_bytes), tuple(r.block_last), tuple(r.block_max),
-             tuple(r.doc_off), tuple(r.tf_off), tuple(r.dl_off))
-            for r in rows)
-    assert shards["arrow"] == shards["pandas"]
-    assert len(shards["arrow"]) > 5
-
-
-def test_stream_encode_impl_validated(spark, tmp_path_factory):
-    from engine.streaming import start_incremental_index
-
-    with pytest.raises(ValueError, match="encode_impl"):
-        start_incremental_index(spark, "/nonexistent", "/nonexistent",
-                                avgdl_hint=3.0, encode_impl="numpy")
+    out = str(tmp_path_factory.mktemp("r8_stream"))
+    q = start_incremental_index(spark, inp + "/drop", out, avgdl_hint=6.0)
+    assert q.awaitTermination(120)
+    cols = ("n_docs", "doc_bytes", "tf_bytes", "dl_bytes", "block_last",
+            "block_max", "doc_off", "tf_off", "dl_off")
+    got = sorted((r.tid,) + row_key(r, cols) for r in
+                 spark.read.parquet(out + "/partials/shard=stream0")
+                 .collect())
+    ref = posting_rows([(r.doc_id, r.text) for r in docs.collect()], 6.0)
+    want = sorted((spark_xxhash64_str(t),) + row_key(r, cols)
+                  for t, rows in ref.items() for r in rows)
+    assert got == want
+    assert len(got) > 5
 
 
 def test_warm_serving_identical_and_scanless(spark, small_index):

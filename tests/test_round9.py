@@ -82,10 +82,8 @@ def _routes_identical(spark, idx, **kw):
             release_warm(idx)
 
 
-@pytest.mark.parametrize("decode_impl", ["arrow", "pandas"])
 @pytest.mark.parametrize("round_dp", [None, 4])
-def test_all_routes_rank_identical(spark, r9_index, round_dp, decode_impl,
-                                   monkeypatch):
+def test_all_routes_rank_identical(spark, r9_index, round_dp):
     """Every (prune x agg_impl) route must rank identically, for the
     batch and for each query served alone, cold and warm: unpruned join
     scores from the decoded rows' own df column (a single query as one
@@ -93,11 +91,7 @@ def test_all_routes_rank_identical(spark, r9_index, round_dp, decode_impl,
     thresholds driver-side from collected metadata, matmul feeds from
     the local qterm relation. Any driver-float slack in the pruning
     bounds may only widen the kept-block superset, never change
-    results. Parametrized over BOTH decode kernel twins so the pandas
-    df-passthrough variant stays covered."""
-    import engine.csearch as cs
-
-    monkeypatch.setattr(cs, "DECODE_IMPL", decode_impl)
+    results."""
     _routes_identical(spark, r9_index, k=10, round_dp=round_dp)
 
 

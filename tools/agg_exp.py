@@ -5,9 +5,9 @@ the broadcast-weight join + groupBy(query,doc).sum plan shuffles the
 full per-(query,term) fan-out — 91M partial rows for a 400-query zipf
 batch over the 500k-doc/300k-term design-regime fixture — into an
 aggregate whose map-side combine collapses ~nothing. The 'matmul'
-aggregation (csearch._matmul_topk_iter) hash-partitions the UNIQUE
-decoded (term, doc, tf_part) rows by doc_id, scores the whole batch as
-dense BLAS chunks, and ships only per-partition top-k candidates.
+aggregation (csearch._matmul_emit) partitions the UNIQUE decoded
+(term, doc, tf_part) rows by doc, scores the whole batch as dense
+chunks, and ships only per-partition top-k candidates.
 This harness measures the identical 400-query pruned batch
 (bench.py --query-phase) under both impls, interleaved within each
 rep, at 8 and 32 cores — results land in bench/agg_exp_latest.json
