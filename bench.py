@@ -175,8 +175,8 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         timings["query_p50"] = round(statistics.median(lats), 3)
 
         # the same 10 single queries under the warm-serving posture
-        # (round 5): per-term metadata resident, qterm a local relation
-        # — the standing-session serving number. Reported alongside
+        # (round 5): the postings table persisted — the
+        # standing-session serving number. Reported alongside
         # query_p50 (which stays cold for cross-round comparability;
         # the headline total also stays on the cold number).
         from engine.csearch import release_warm, warm_serving

@@ -21,8 +21,10 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
            θ(q) = max_t w_t * impact_r(t) * min(1, avgdl/encode_avgdl)
            for the smallest rank r >= k (the avgdl factor keeps it a
            lower bound under drift, the mirror of the block-max bfac).
-           The per-term impacts ride the metadata aggregation that
-           phase 2 needs anyway, so θ costs no Spark job. Exact
+           The per-term df, block-max and impacts are read on the
+           driver from the serving rows' own metadata columns
+           (_term_meta: pyarrow, pb- and term-filtered), so neither the
+           metadata nor θ costs a Spark job. Exact
            fallback (_decode_theta) when standing tombstones may
            support an impact, when k exceeds the largest rank, or on an
            index without impacts: fully score ONLY the rarest
@@ -51,19 +53,28 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
            Both end in the same top-k window and are rank-identical
            (pytest-gated).
 
-Single query (_single_query_topk): one query, served unpruned with the
-join aggregation on an index below the spread bar (n_docs <
-AUTO_PRUNE_MIN_DOCS — prune="auto" sends every single query there),
-runs as ONE Spark job of one task. At that size latency is the number
-of jobs, not per-row work, and the batch plan pays four (the query
-table's broadcast, two exchanges, the final stage). The payload rows
-coalesce to one partition and decode; a groupBy(doc_id) sums
-(qtf * idf(df)) * tf_part with qtf read from a literal term -> qtf map,
-the join route's own per-term chain over the payload's own df. The
-child is one partition, so the aggregate and the top-k window need no
-Exchange, and the literal map replaces the broadcast join. Warm and
-cold singles take this same plan; batches and indexes at or above the
-bar keep theirs.
+Small posting sets run as ONE Spark job of one task. At that size
+latency is the number of jobs and Python stages (~0.3 s each), not
+per-row work. Two plans do it:
+  * a single query served unpruned with the join aggregation on an
+    index below the spread bar (n_docs < AUTO_PRUNE_MIN_DOCS —
+    prune="auto" sends every single query there;
+    _single_query_topk): the payload rows coalesce to one partition
+    and decode; a groupBy(doc_id) sums (qtf * idf(df)) * tf_part with
+    qtf read from a literal term -> qtf map, the join route's own
+    per-term chain over the payload's own df. The batch join plan pays
+    four jobs instead (the query table's broadcast, two exchanges, the
+    final stage);
+  * a matmul batch, pruned or not, whose terms hold at most
+    ONE_TASK_MAX_POSTINGS postings in all (Σ df from the metadata
+    read): the payload rows coalesce to one partition and one
+    mapInArrow decodes and scores them (_decode_matmul_arrow_iter),
+    instead of a decode+pack stage, a doc-bucket exchange and a matmul
+    stage. The pruned route's block thresholds ride a literal
+    term -> threshold map, so nothing is broadcast.
+The child is one partition, so the aggregate and the top-k window need
+no Exchange. Warm and cold calls take the same plans; larger batches
+and indexes at or above the bar keep theirs.
 """
 
 from __future__ import annotations
@@ -113,6 +124,33 @@ TFPART_DF_ROWS = StructType(
 )
 
 
+def _decode_rows(b, avgdl: float, keep_col: str | None):
+    """The decode loop every serving kernel shares: for each posting row
+    of the Arrow batch b with postings left after its keep list, yield
+    (row index, doc_ids int64, tf_parts). A row whose keep list is empty
+    is skipped undecoded; a NULL keep list decodes every block."""
+    cols = {n: b.column(i) for i, n in enumerate(b.schema.names)}
+    db, tb, lb = cols["doc_bytes"], cols["tf_bytes"], cols["dl_bytes"]
+    do, to, lo = cols["doc_off"], cols["tf_off"], cols["dl_off"]
+    kc = cols[keep_col] if keep_col else None
+    for i in range(b.num_rows):
+        keep = kc[i].as_py() if kc is not None else None
+        if keep is not None and not keep:
+            continue
+        # payload cells as zero-copy pa.Buffer views; offset lists as
+        # zero-copy numpy views of the list values (round-4 verdict #7 —
+        # .as_py() made a bytes copy per multi-MB hot-term payload; the
+        # codec reads buffers)
+        d, t, dl = decode_blocked(
+            db[i].as_buffer(), tb[i].as_buffer(), lb[i].as_buffer(),
+            np.asarray(do[i].values), np.asarray(to[i].values),
+            np.asarray(lo[i].values),
+            keep=keep,
+        )
+        if d.size:
+            yield i, d.astype(np.int64, copy=False), tf_part(t, dl, avgdl)
+
+
 def _decode_tf_arrow_iter(avgdl: float, keep_col: str | None,
                           with_df: bool = False):
     """mapInArrow kernel: posting rows -> (term, doc_id, tf_part).
@@ -140,33 +178,13 @@ def _decode_tf_arrow_iter(avgdl: float, keep_col: str | None,
 
     def fn(batches):
         for b in batches:
-            names = b.schema.names
-            cols = {n: b.column(i) for i, n in enumerate(names)}
-            term = cols["term"]
-            db, tb, lb = cols["doc_bytes"], cols["tf_bytes"], cols["dl_bytes"]
-            do, to, lo = cols["doc_off"], cols["tf_off"], cols["dl_off"]
-            dfc = cols["df"] if with_df else None
-            kc = cols[keep_col] if keep_col else None
+            term = b.column(b.schema.get_field_index("term"))
+            dfc = b.column(b.schema.get_field_index("df")) if with_df else None
             terms, docs, parts, dfs = [], [], [], []
-            for i in range(b.num_rows):
-                keep = kc[i].as_py() if kc is not None else None
-                if kc is not None and keep is not None and len(keep) == 0:
-                    continue
-                # payload cells as zero-copy pa.Buffer views; offset
-                # lists as zero-copy numpy views of the list values
-                # (round-4 verdict #7 — .as_py() made a bytes copy per
-                # multi-MB hot-term payload; the codec reads buffers)
-                d, t, dl = decode_blocked(
-                    db[i].as_buffer(), tb[i].as_buffer(), lb[i].as_buffer(),
-                    np.asarray(do[i].values), np.asarray(to[i].values),
-                    np.asarray(lo[i].values),
-                    keep=keep,
-                )
-                if d.size == 0:
-                    continue
+            for i, d, x in _decode_rows(b, avgdl, keep_col):
                 terms.append(np.full(d.size, term[i].as_py(), dtype=object))
-                docs.append(d.astype(np.int64, copy=False))
-                parts.append(tf_part(t, dl, avgdl))
+                docs.append(d)
+                parts.append(x)
                 if with_df:
                     dfs.append(np.full(d.size, dfc[i].as_py(),
                                        dtype=np.int64))
@@ -246,16 +264,16 @@ def _chunk_width(n_t: int, n_q: int) -> int:
     return int(min(8192, max(16, 16e6 / max(1, n_t + n_q))))
 
 
-def _matmul_emit(bval, tidx, doc, x, k, round_dp, out_schema):
-    """Scoring core of the matmul kernel (_matmul_topk_packed_iter):
-    given this doc-partition's concatenated (tidx, doc, x) posting
-    triples, score the WHOLE query batch as one dense matmul per
-    doc-chunk and return (RecordBatch of that partition's per-query
-    top-k candidates | None, (sort_sec, score_sec)). bval is the
-    broadcast (qids, n_terms, qptr, qtidx, qw[, dead]): the CSR weights
-    and optionally a sorted int64 array of tombstoned doc_ids (or None)
-    dropped BEFORE candidate selection (the packed rows can't be
-    anti-joined JVM-side — see _matmul_score_topk_packed).
+def _matmul_emit(bval, tidx, doc, x, k, round_dp):
+    """Scoring core of both matmul kernels (_matmul_topk_packed_iter,
+    _decode_matmul_arrow_iter): given a doc-partition's concatenated
+    (tidx, doc, x) posting triples, score the WHOLE query batch as one
+    dense matmul per doc-chunk and return (RecordBatch of that
+    partition's per-query top-k candidates | None, (sort_sec,
+    score_sec)). bval is (qids, n_terms, qptr, qtidx, qw[, dead]): the
+    CSR weights and optionally a sorted int64 array of tombstoned
+    doc_ids (or None) dropped BEFORE candidate selection (kernel rows
+    can't be anti-joined JVM-side — see _matmul_score_topk).
 
     Why: the join plan shuffles Σ_q Σ_{t∈q} |postings(t)| fanned-out
     partial rows into a groupBy(query,doc) whose map-side combine
@@ -413,9 +431,52 @@ def _matmul_emit(bval, tidx, doc, x, k, round_dp, out_schema):
             pa.array(np.concatenate(out_d).astype(np.int64)),
             pa.array(np.concatenate(out_s)),
         ],
-        schema=out_schema,
+        names=["query_id", "doc_id", "score"],
     )
     return rb, (t_sort - t0, t_score - t_sort)
+
+
+def _decode_triples(batches, avgdl: float, keep_col: str | None,
+                    tmap: dict):
+    """The decode half of both matmul kernels: every posting row of
+    `batches` whose term has a matrix row in tmap, as concatenated
+    (doc int64, tidx int32, tf_part float64) arrays, or None when no
+    posting survives. A term without a row (no weight: its df is NULL)
+    is dropped after decoding."""
+    doc_l, tidx_l, x_l = [], [], []
+    for b in batches:
+        term = b.column(b.schema.get_field_index("term"))
+        for i, d, x in _decode_rows(b, avgdl, keep_col):
+            ti = tmap.get(term[i].as_py())
+            if ti is None:
+                continue
+            doc_l.append(d)
+            tidx_l.append(np.full(d.size, ti, dtype=np.int32))
+            x_l.append(x)
+    if not doc_l:
+        return None
+    return (np.concatenate(doc_l), np.concatenate(tidx_l),
+            np.concatenate(x_l).astype(np.float64, copy=False))
+
+
+def _decode_matmul_arrow_iter(bval, avgdl: float, keep_col: str | None,
+                              tmap: dict, k: int, round_dp: int | None):
+    """mapInArrow kernel of the one-task matmul plan (module doc, "small
+    posting sets"): posting rows in, the batch's top-k candidates out.
+    The task holds the only partition, so every doc's postings are
+    present and _matmul_emit's scores are final. bval is what the
+    packed plan broadcasts; here it rides the closure of one task."""
+
+    def fn(batches):
+        got = _decode_triples(batches, avgdl, keep_col, tmap)
+        if got is None:
+            return
+        doc, tidx, x = got
+        rb, _timings = _matmul_emit(bval, tidx, doc, x, k, round_dp)
+        if rb is not None:
+            yield rb
+
+    return fn
 
 
 def _decode_pack_arrow_iter(avgdl: float, keep_col: str | None,
@@ -449,40 +510,10 @@ def _decode_pack_arrow_iter(avgdl: float, keep_col: str | None,
     ])
 
     def fn(batches):
-        tidx_l, doc_l, x_l = [], [], []
-        for b in batches:
-            cols = {n: b.column(i) for i, n in enumerate(b.schema.names)}
-            term = cols["term"]
-            db, tb, lb = cols["doc_bytes"], cols["tf_bytes"], cols["dl_bytes"]
-            do, to, lo = cols["doc_off"], cols["tf_off"], cols["dl_off"]
-            kc = cols[keep_col] if keep_col else None
-            for i in range(b.num_rows):
-                keep = kc[i].as_py() if kc is not None else None
-                if kc is not None and keep is not None and len(keep) == 0:
-                    continue
-                ti = tmap.get(term[i].as_py())
-                if ti is None:  # term outside the batch (defensive)
-                    continue
-                # payload cells as zero-copy pa.Buffer views; offset
-                # lists as zero-copy numpy views of the list values
-                # (round-4 verdict #7 — .as_py() made a bytes copy per
-                # multi-MB hot-term payload; the codec reads buffers)
-                d, t, dl = decode_blocked(
-                    db[i].as_buffer(), tb[i].as_buffer(), lb[i].as_buffer(),
-                    np.asarray(do[i].values), np.asarray(to[i].values),
-                    np.asarray(lo[i].values),
-                    keep=keep,
-                )
-                if d.size == 0:
-                    continue
-                doc_l.append(d.astype(np.int64, copy=False))
-                tidx_l.append(np.full(d.size, ti, dtype=np.int32))
-                x_l.append(tf_part(t, dl, avgdl))
-        if not doc_l:
+        got = _decode_triples(batches, avgdl, keep_col, tmap)
+        if got is None:
             return
-        doc = np.concatenate(doc_l)
-        tidx = np.concatenate(tidx_l)
-        x = np.concatenate(x_l).astype(np.float64, copy=False)
+        doc, tidx, x = got
         part = (doc % part_space).astype(np.int32)
         order = np.argsort(part, kind="stable")
         doc, tidx, x, part = doc[order], tidx[order], x[order], part[order]
@@ -523,13 +554,6 @@ def _matmul_topk_packed_iter(bcast, k: int, round_dp: int | None):
     top-k candidates. np.frombuffer unpacks each bucket's triples
     zero-copy; scoring is the _matmul_emit core (its docstring has
     the exactness, rounding and scale argument)."""
-    import pyarrow as pa
-
-    out_schema = pa.schema([
-        ("query_id", pa.string()),
-        ("doc_id", pa.int64()),
-        ("score", pa.float64()),
-    ])
 
     def fn(batches):
         import sys as _sys
@@ -565,8 +589,7 @@ def _matmul_topk_packed_iter(bcast, k: int, round_dp: int | None):
         doc = np.concatenate(doc_l)
         tidx = np.concatenate(tidx_l)
         x = np.concatenate(x_l)
-        rb, timings = _matmul_emit(bval, tidx, doc, x, k, round_dp,
-                                   out_schema)
+        rb, timings = _matmul_emit(bval, tidx, doc, x, k, round_dp)
         if prof:
             print(
                 f"KPROF-PACKED rows={doc.size} nb={n_batches} "
@@ -581,44 +604,71 @@ def _matmul_topk_packed_iter(bcast, k: int, round_dp: int | None):
     return fn
 
 
-def _csr_weights(qterm_pd: pd.DataFrame):
+def _csr_weights(qw_rows):
     """Query-major CSR layout of the batch weight matrix (see
-    _matmul_emit scale notes). Returns
-    (qids, terms_u, tmap, qptr, qtidx, qw); duplicate (q, t) entries
-    sum in the kernel's segment-sum, same as the join plan's groupBy."""
-    terms_u = sorted(qterm_pd["term"].unique())
-    qids = sorted(qterm_pd["query_id"].unique())
-    tmap = {t: i for i, t in enumerate(terms_u)}
+    _matmul_emit scale notes) from (query_id, term, w) rows. Returns
+    (qids, tmap, qptr, qtidx, qw); duplicate (q, t) entries sum in the
+    kernel's segment-sum, same as the join plan's groupBy."""
+    qids = sorted({q for q, _t, _w in qw_rows})
+    tmap = {t: i for i, t in enumerate(sorted({t for _q, t, _w in qw_rows}))}
     qmap = {q: i for i, q in enumerate(qids)}
-    qi = qterm_pd["query_id"].map(qmap).to_numpy()
-    ti = qterm_pd["term"].map(tmap).to_numpy()
-    wv = qterm_pd["w"].to_numpy(dtype=np.float64)
+    qi = np.array([qmap[q] for q, _t, _w in qw_rows], dtype=np.int64)
+    ti = np.array([tmap[t] for _q, t, _w in qw_rows], dtype=np.int64)
+    wv = np.array([w for _q, _t, w in qw_rows], dtype=np.float64)
     order = np.lexsort((ti, qi))
     qi, qtidx, qw = qi[order], ti[order], wv[order]
     qptr = np.searchsorted(qi, np.arange(len(qids)))
-    return qids, terms_u, tmap, qptr, qtidx, qw
+    return qids, tmap, qptr, qtidx, qw
 
 
-def _matmul_score_topk_packed(rows: DataFrame, keep_col: str | None,
-                              avgdl: float, qterm_pd: pd.DataFrame,
-                              k: int, round_dp: int | None,
-                              dead_ids, spread: bool) -> DataFrame:
-    """The packed-shuffle matmul route: posting payload rows straight
-    through _decode_pack_arrow_iter (decode + tidx map + doc-bucket
-    pack in ONE python pass) -> a binary-blob exchange of <=
-    n_tasks x part_space rows -> _matmul_topk_packed_iter. Returns
-    per-partition top-k candidate rows (query_id, doc_id, score) — the
-    caller's final window cuts them to the exact global top-k.
+#: the one-task matmul plan's work bound, in postings (Σ df of the
+#: batch's terms, before any block is pruned). The packed plan pays two
+#: Python stages and an exchange, ~0.6-0.8 s of fixed cost on a 4-vCPU
+#: host at local[2], against one stage for the one-task plan, which
+#: instead does all the per-posting work on one core. The codec alone
+#: decodes ~4M postings/s on one core (perfbench codec.decode_mb_s, ~53
+#: MB/s of 12-byte raw postings), so one task could take up to ~0.6 s x
+#: 4M/s = 2.4M postings before losing; the whole kernel (decode,
+#: tf_part, the Arrow feed, the matmul) is slower than the codec.
+#: Measured on that host (256-query k=100 pruned zipf batches, min of
+#: 3): Σ df 52k, one task 1.24 s vs packed 1.82 s; 345k, 1.35 vs 1.96;
+#: 861k, 2.08 vs 2.36. The one task grows ~1.4 s per 1M postings and
+#: the packed plan ~0.8 s, so they cross near 1.3M; the bound sits
+#: below that.
+ONE_TASK_MAX_POSTINGS = 1_000_000
+
+
+def _matmul_score_topk(rows: DataFrame, keep_col: str | None,
+                       avgdl: float, qw_rows, k: int,
+                       round_dp: int | None, dead_ids, spread: bool,
+                       one_task: bool) -> DataFrame:
+    """The matmul route's per-partition top-k candidate rows (query_id,
+    doc_id, score) — the caller's final window cuts them to the exact
+    global top-k. qw_rows are the batch's (query_id, term, w).
+
+    one_task: the payload rows coalesce to one partition and
+    _decode_matmul_arrow_iter decodes and scores them in one task
+    (module doc, "small posting sets"). Otherwise the packed plan:
+    _decode_pack_arrow_iter (decode + tidx map + doc-bucket pack in ONE
+    python pass) -> a binary-blob exchange of <= n_tasks x part_space
+    rows -> _matmul_topk_packed_iter. Scores are bit-identical between
+    the two: a (term, doc) cell occurs once, and each doc sums
+    qw @ Xq over its query's CSR terms in the same order whatever
+    partition it lands in.
 
     dead_ids: sorted int64 numpy array of tombstoned doc_ids (or
-    None) — packed rows can't be anti-joined JVM-side, and a dead doc
+    None) — kernel rows can't be anti-joined JVM-side, and a dead doc
     inside a partition could otherwise displace a live doc from that
     partition's k candidates, so the kernel drops them before
-    candidate selection (the final window's anti-join then re-applies
-    as a no-op)."""
-    spark = rows.sparkSession
-    sc = spark.sparkContext
-    qids, terms_u, tmap, qptr, qtidx, qw = _csr_weights(qterm_pd)
+    candidate selection; the caller needs no anti-join."""
+    qids, tmap, qptr, qtidx, qw = _csr_weights(qw_rows)
+    bval = (qids, len(tmap), qptr, qtidx, qw, dead_ids)
+    if one_task:
+        return rows.coalesce(1).mapInArrow(
+            _decode_matmul_arrow_iter(bval, avgdl, keep_col, tmap, k,
+                                      round_dp),
+            SCORE_ROWS_TOPK)
+    sc = rows.sparkSession.sparkContext
     # reduce-partition wave factor 2: each kernel task spends ~1 s
     # waiting on the JVM side (shuffle fetch + building its Arrow
     # input), so the factor was swept rather than kept at
@@ -642,8 +692,7 @@ def _matmul_score_topk_packed(rows: DataFrame, keep_col: str | None,
     # tracked in the serving registry so the NEXT search_index call's
     # entry release drops it (same capped-at-one lifecycle as the
     # persisted posting rows)
-    bcast = _track_persist(sc.broadcast(
-        (qids, len(terms_u), qptr, qtidx, qw, dead_ids)))
+    bcast = _track_persist(sc.broadcast(bval))
     return packed.mapInArrow(
         _matmul_topk_packed_iter(bcast, k, round_dp), SCORE_ROWS_TOPK)
 
@@ -730,47 +779,26 @@ def _track_persist(obj):
 
 
 def warm_serving(spark: SparkSession, index: dict,
-                 payload_cache: str | None = "memory",
-                 max_terms: int = 2_000_000) -> dict:
+                 payload_cache: str | None = "memory") -> dict:
     """Prepare an opened index for REPEATED search_index calls on one
     long-lived session (round-4 verdict #3: back-to-back serving
     batches re-paid a ~30 s per-batch constant that neither executor
-    count nor batch size shrank). Two artifacts become resident:
+    count nor batch size shrank): the postings table is persisted
+    (payload_cache 'memory' | 'disk' | None), so each batch's term
+    IN-scan reads resident columnar data instead of re-opening parquet.
+    search_index skips its per-call payload persist while this is
+    active (entry-release keeps applying to cold indexes only). At
+    north-star scale the payload blocks are TB-class: use 'disk' or
+    None there, exactly the cache_level guidance in search_index.
+    Per-term metadata needs no warm copy: every call reads its terms'
+    rows on the driver without a job (_term_meta).
 
-    * ``warm_tmeta`` — per-term (df, raw block-max, impacts) for the
-      WHOLE index (_term_meta), collected once from the metadata
-      columns (column pruning keeps the payload bytes unread). Every
-      subsequent batch builds its per-(query, term) weight table as a
-      pure local relation — zero index-metadata scan jobs per batch,
-      and idf/w still
-      evaluate in the JVM so scores stay bit-identical to cold calls.
-      Driver memory is one dict entry per distinct term (~100 B); the
-      max_terms guard refuses vocabularies where that stops being
-      sane — at 10^9-term scale serve COLD instead: the cold path's
-      broadcast-tmeta join is exactly the scale-out variant of this
-      cache.
-    * the postings table persisted (payload_cache 'memory' | 'disk' |
-      None), so each batch's term IN-scan reads resident columnar
-      data instead of re-opening parquet. search_index skips its
-      per-call payload persist while this is active (entry-release
-      keeps applying to cold indexes only). At north-star scale the
-      payload blocks are TB-class: use 'disk' or None there, exactly
-      the cache_level guidance in search_index.
-
-    Stats-drift safety: the warm map records (n_docs, avgdl,
-    encode_avgdl) at warm time; search_index silently falls back to
-    the cold path when they no longer match (an incremental merge or
+    Stats-drift safety: warm_stats records (n_docs, avgdl,
+    encode_avgdl) at warm time; search_index drops the persisted copy
+    and serves cold when they no longer match (an incremental merge or
     compaction landed) — re-run warm_serving after maintenance.
     Returns the same dict, mutated in place."""
     posts = index["postings"]
-    nt = posts.agg(F.countDistinct("term")).collect()[0][0]
-    if nt > max_terms:
-        raise ValueError(
-            f"warm_serving: {nt} distinct terms exceeds max_terms="
-            f"{max_terms}; a driver-side tmeta map is not sane at this "
-            "vocabulary — serve cold (broadcast tmeta join) or raise "
-            "max_terms explicitly")
-    index["warm_tmeta"] = _term_meta(posts, _impact_ranks(index, posts))
     index["warm_stats"] = (index["n_docs"], index["avgdl"],
                            index.get("encode_avgdl"))
     if payload_cache is not None:
@@ -791,34 +819,40 @@ def warm_serving(spark: SparkSession, index: dict,
 
 def release_warm(index: dict) -> None:
     """Undo warm_serving: unpersist the postings table and drop the
-    warm tmeta map (call before delete/merge maintenance that will
-    change stats anyway, or at shutdown)."""
+    warm stats (call before delete/merge maintenance that will change
+    stats anyway, or at shutdown)."""
     wp = index.pop("warm_persisted", None)
     if wp is not None:
         try:
             wp.unpersist()
         except Exception:
             pass  # session already stopped
-    index.pop("warm_tmeta", None)
     index.pop("warm_stats", None)
 
 
-def _pb_pruned_postings(index: dict, terms: list[str]) -> DataFrame:
-    """Static partition pruning on the tid-bucket layout: each query
-    term's bucket is pb = pmod(xxhash64(term), pb_mod), computed
-    driver-side with the pure-Python XXH64 twin (engine/xxh, equality
-    with Spark's xxhash64 is test-pinned) so the `pb IN (...)` filter
-    is a literal Catalyst can prune partition DIRECTORIES with — a
-    5-term query touches <= 5 of the table's pb_mod partitions before a
-    single file is opened. Pre-bucket indexes (no pb_mod) pass
-    through."""
-    posts = index["postings"]
+def _query_pbs(index: dict, terms) -> list[int] | None:
+    """The tid buckets pb = pmod(xxhash64(term), pb_mod) of the terms,
+    computed driver-side with the pure-Python XXH64 twin (engine/xxh,
+    equality with Spark's xxhash64 is test-pinned); None on a
+    pre-bucket index (no pb_mod)."""
     pb_mod = index.get("pb_mod")
-    if not pb_mod or "pb" not in posts.columns:
-        return posts
+    if not pb_mod:
+        return None
     from .xxh import spark_xxhash64_str
 
-    pbs = sorted({spark_xxhash64_str(t) % pb_mod for t in terms})
+    return sorted({spark_xxhash64_str(t) % pb_mod for t in terms})
+
+
+def _pb_pruned_postings(index: dict, terms: list[str]) -> DataFrame:
+    """Static partition pruning on the tid-bucket layout: the `pb IN
+    (...)` filter over the terms' buckets (_query_pbs) is a literal
+    Catalyst can prune partition DIRECTORIES with — a 5-term query
+    touches <= 5 of the table's pb_mod partitions before a single file
+    is opened. Pre-bucket indexes (no pb_mod) pass through."""
+    posts = index["postings"]
+    pbs = _query_pbs(index, terms)
+    if pbs is None or "pb" not in posts.columns:
+        return posts
     return posts.where(in_list("pb", pbs))
 
 
@@ -830,22 +864,59 @@ def _impact_ranks(index: dict, posts: DataFrame) -> tuple:
     return tuple(index.get("impact_ranks") or ())
 
 
-def _term_meta(posts: DataFrame, ranks: tuple) -> dict:
-    """term -> (df, raw block-max, per-rank impacts) over the given
-    posting rows, in ONE metadata-column aggregation (column pruning
-    keeps the byte payloads unread): the per-term max of each stored
-    impact rank (NULL when no chunk of the term holds that many
-    postings). F.get returns NULL past an array's end whatever the
-    ANSI setting."""
-    aggs = [F.max("df").alias("df"),
-            F.max(F.array_max("block_max")).alias("bmax_raw")]
-    aggs += [F.max(F.get("impacts", i)).alias(f"imp{i}")
-             for i in range(len(ranks))]
-    return {
-        r["term"]: (r["df"], r["bmax_raw"],
-                    tuple(r[f"imp{i}"] for i in range(len(ranks))))
-        for r in posts.groupBy("term").agg(*aggs).collect()
-    }
+def _sql_max(a, b):
+    """SQL max of two values: NULL only when both are."""
+    return b if a is None else a if b is None else max(a, b)
+
+
+def _term_meta(index: dict, terms, ranks: tuple) -> dict:
+    """term -> (df, raw block-max, per-rank impacts) for the given
+    terms, read on the driver from the serving rows' own metadata
+    columns — no Spark job. pyarrow.dataset filters with `pb IN` (the
+    terms' buckets, _query_pbs) and `term IN`: the rows are
+    term-sorted, so row-group statistics skip groups without a query
+    term, and the byte payloads are never read. Per term, over its
+    chunk rows: the max df (every chunk carries the term's full df),
+    the max block-max and the max of each stored impact rank (NULL when
+    no chunk of the term holds that many postings). Those are the
+    values of the Spark aggregation tests/oracle.term_meta keeps as the
+    reference, except that a chunk whose block-max list is NULL, empty
+    or holds a NULL leaves the term's block-max NULL (unbounded)
+    whatever its other chunks hold: a max over the rest could
+    understate it and make the block thresholds unsound.
+
+    The path is always local: the engine writes indexes with
+    os/shutil only."""
+    import pyarrow.dataset as ds
+
+    terms = list(terms)
+    dset = ds.dataset(index["postings_path"], format="parquet",
+                      partitioning="hive")
+    filt = ds.field("term").isin(terms)
+    pbs = _query_pbs(index, terms)
+    if pbs is not None and "pb" in dset.schema.names:
+        filt = ds.field("pb").isin(pbs) & filt
+    cols = ["term", "df", "block_max"] + (["impacts"] if ranks else [])
+    tbl = dset.to_table(columns=cols, filter=filt)
+    imps = (tbl.column("impacts").to_pylist() if ranks
+            else [None] * tbl.num_rows)
+    meta: dict = {}
+    unbounded = set()
+    for t_, dfv, bm, imp in zip(tbl.column("term").to_pylist(),
+                                tbl.column("df").to_pylist(),
+                                tbl.column("block_max").to_pylist(), imps):
+        bmax = max(bm) if bm and None not in bm else None
+        if bmax is None:
+            unbounded.add(t_)
+        ri = tuple(imp[i] if imp is not None and i < len(imp) else None
+                   for i in range(len(ranks)))
+        old = meta.get(t_)
+        meta[t_] = (dfv, bmax, ri) if old is None else (
+            _sql_max(old[0], dfv), _sql_max(old[1], bmax),
+            tuple(map(_sql_max, old[2], ri)))
+    for t_ in unbounded:
+        meta[t_] = (meta[t_][0], None, meta[t_][2])
+    return meta
 
 
 def _read_tombstones(spark: SparkSession, index: dict):
@@ -986,6 +1057,17 @@ def _decode_theta(spark: SparkSession, payload: DataFrame, meta: dict,
     }
 
 
+def _impact_rank(ranks: tuple, k: int,
+                 tombs: DataFrame | None) -> int | None:
+    """Position in the stored impact ranks of the smallest rank >= k,
+    or None when θ takes the exact decode fallback: standing
+    tombstones (a stored impact may count deleted docs), k above every
+    stored rank, or no impacts column (no ranks)."""
+    if tombs is not None:
+        return None
+    return next((i for i, r in enumerate(ranks) if r >= k), None)
+
+
 def _theta(spark: SparkSession, index: dict, payload: DataFrame,
            meta: dict, qt_rows, k: int, tombs: DataFrame | None
            ) -> dict[str, float]:
@@ -994,9 +1076,8 @@ def _theta(spark: SparkSession, index: dict, payload: DataFrame,
     The one θ source of search_index and pruning_stats."""
     n_docs, avgdl = index["n_docs"], index["avgdl"]
     enc_avgdl = float(index.get("encode_avgdl") or avgdl) or avgdl
-    ranks = _impact_ranks(index, payload)
-    rank_i = next((i for i, r in enumerate(ranks) if r >= k), None)
-    if tombs is None and rank_i is not None:
+    rank_i = _impact_rank(_impact_ranks(index, payload), k, tombs)
+    if rank_i is not None:
         scale = min(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
         return _impact_theta(qt_rows, meta, rank_i, n_docs, scale)
     return _decode_theta(spark, payload, meta, qt_rows, k, n_docs, avgdl,
@@ -1059,6 +1140,23 @@ def _block_thresholds(qt_rows, meta: dict, theta: dict, n_docs: int,
     return out
 
 
+def _keep_blocks_sql(bthresh: dict[str, float]) -> str:
+    """SQL for a posting row's kept block indexes: those whose raw
+    block_max reaches its term's threshold, read from a literal
+    term -> threshold map (no broadcast join, no job). Terms are
+    analyzer tokens ([a-z0-9]+), so they always render as literals.
+    try_element_at is NULL for a term outside the map under either ANSI
+    setting (element_at raises under ANSI), and the NULL becomes
+    -Infinity: such a term keeps every block."""
+    ninf = "CAST('-Infinity' AS DOUBLE)"
+    pairs = ", ".join(f"{sql_literal(t_)}, {sql_literal(float(v))}"
+                      for t_, v in sorted(bthresh.items()))
+    th = (f"coalesce(try_element_at(map({pairs}), term), {ninf})"
+          if pairs else ninf)
+    return (f"filter(transform(block_max, (x, i) -> IF(x >= {th}, i, -1)),"
+            f" i -> i >= 0)")
+
+
 def _single_query_topk(rows: DataFrame, qt_rows, n_docs: int,
                        avgdl: float) -> DataFrame:
     """One query's unrounded (doc_id, score, query_id) as ONE Spark task
@@ -1104,8 +1202,10 @@ def search_index(
     quantum of theta can change rounded order, and those are kept.
 
     cache_level ('memory' | 'disk' | 'none'): how the pruned plan holds
-    the query's posting rows (byte payloads included) across its
-    phase-1/2/3 reuse. 'memory' (default) is fastest when the touched
+    the query's posting rows (byte payloads included) when the exact
+    decode θ reads them before the final plan does (θ from the stored
+    impacts reads them once, so nothing is persisted there). 'memory'
+    (default) is fastest when the touched
     slice fits executor storage; at north-star scale a hot term's
     payload blocks are TB-class, so serving there should use 'disk'
     (spill-backed) or 'none' (re-scan: the term IN-pushdown scan is
@@ -1157,24 +1257,23 @@ def search_index(
     n_docs, avgdl = index["n_docs"], index["avgdl"]
     enc_avgdl = float(index.get("encode_avgdl") or avgdl) or avgdl
     bfac = max(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
-    # Warm-serving state. ADVICE-r5 #1: the per-call payload persist is
+    # Warm serving (ADVICE-r5 #1): the per-call payload persist is
     # skipped only while the warm persist is VALID — stats unchanged
     # AND the persisted handle still IS index['postings']; on detected
     # drift (maintenance landed under a live warm index) the stale
     # persisted copy is dropped here instead of pinning pre-maintenance
     # bytes in executor storage until someone calls release_warm().
-    wt = index.get("warm_tmeta")
-    warm_ok = wt is not None and index.get("warm_stats") == (
-        n_docs, avgdl, index.get("encode_avgdl"))
-    if index.get("warm_persisted") is not None:
-        if warm_ok and index.get("warm_persisted") is index.get("postings"):
+    warm = index.get("warm_persisted")
+    if warm is not None:
+        if (index.get("warm_stats") == (n_docs, avgdl,
+                                        index.get("encode_avgdl"))
+                and warm is index.get("postings")):
             # warm_serving already holds the postings table resident: a
             # per-call payload persist would be a second copy of the
             # same bytes, paid per batch
             cache_level = "none"
         else:
             release_warm(index)
-            wt, warm_ok = None, False
     import time as _time
 
     _prof_t0 = _time.time()
@@ -1189,7 +1288,7 @@ def search_index(
 
     if prune == "auto":
         prune = n_docs >= AUTO_PRUNE_MIN_DOCS
-    qt, terms, qt_rows = local_query_terms(spark, queries)
+    _qt, terms, qt_rows = local_query_terms(spark, queries)
     _mark("local_query_terms")
     if not terms or n_docs == 0 or avgdl <= 0:
         # an empty LocalRelation: collecting it runs no Spark job
@@ -1208,38 +1307,23 @@ def search_index(
     # decode makes batch cost proportional to UNIQUE terms, which is
     # what a 1000-executor batch-serving job needs.
     payload = _pb_pruned_postings(index, terms).where(in_list("term", terms))
-    if prune and cache_level == "memory":
-        payload = _track_persist(payload.cache())
-    elif prune and cache_level == "disk":
-        from pyspark import StorageLevel
 
-        payload = _track_persist(payload.persist(StorageLevel.DISK_ONLY))
-    # 'none': no persist — phases re-run the IN-pushdown scan
-
-    # Per-term metadata strategy (round 6, action-count driven — see
-    # BASELINE.md "Single-query latency anatomy": every Spark
-    # action/AQE stage launch costs ~0.3 s on this host class, so
-    # serving latency is dominated by how many chained jobs the plan
-    # materializes, not by per-row work at bench scale):
-    #   * unpruned join route: NO per-term metadata job at all — the
-    #     payload's own df column rides through the decode kernel
-    #     (TFPART_DF_ROWS) and idf/w evaluate JVM-side on the decoded
-    #     rows; the (query_id, term, qtf) table is already driver-side
-    #     (local_query_terms) and joins as a broadcast local relation
-    #     (one job to build). A single query on a small index needs no
-    #     table at all (_single_query_topk).
-    #   * pruned route: per-term (df, raw block-max, impacts) is brought
-    #     driver-side ONCE — from the warm map when warm, else via one
-    #     metadata-column aggregation (column pruning keeps the byte
-    #     payloads unread) — and every downstream consumer (θ, UB sums,
-    #     per-term block thresholds) is plain driver arithmetic instead
-    #     of its own chain of Spark stages. The r05
-    #     in-plan variant re-evaluated that scan in four separate
-    #     broadcast sub-jobs (~30 chained stages at sf0.1).
-    #   * scoring weights stay JVM-evaluated everywhere: qterm becomes
-    #     a LOCAL relation carrying (qtf, df) and idf/w are Catalyst
-    #     expressions over it — the same expression on the same inputs
-    #     as the old tmeta-join route, so scores are bit-identical
+    # Per-term metadata (action-count driven — see BASELINE.md
+    # "Single-query latency anatomy": every Spark action/AQE stage
+    # launch costs ~0.3 s on this host class, so serving latency is
+    # dominated by how many chained jobs the plan materializes, not by
+    # per-row work at bench scale):
+    #   * unpruned join route: none — the payload's own df column rides
+    #     through the decode kernel (TFPART_DF_ROWS) and idf/w evaluate
+    #     JVM-side on the decoded rows.
+    #   * pruned and matmul routes: per-term (df, raw block-max,
+    #     impacts) read on the driver from the serving rows (_term_meta,
+    #     no job); every downstream consumer (θ, UB sums, per-term block
+    #     thresholds, the one-task bound) is plain driver arithmetic.
+    #   * scoring weights stay JVM-evaluated everywhere: the matmul
+    #     weights come from a LOCAL relation carrying (qtf, df) with
+    #     idf/w as Catalyst expressions — the join route's own
+    #     expression on the same inputs, so scores are bit-identical
     #     (fuzz rank identity at 9 dp; tests pin route equality) — and
     #     it collects driver-side without a job.
     # spread decode work off the tid-bucketed co-location once the
@@ -1249,152 +1333,103 @@ def search_index(
     if agg_impl == "auto":
         agg_impl = "matmul" if spread else "join"
     meta: dict = {}
-    if prune:
-        # a warm row with a NULL df, block-max or impacts (foreign or
-        # hand-edited index) is not trusted: the whole call reads its
-        # metadata cold (Job A), and _block_thresholds keeps every
-        # block of a query whose term stays degenerate there too
-        if warm_ok and not any(
-                None in wt[t] for t in terms if t in wt):
-            meta = {t: wt[t] for t in terms if t in wt}
-        else:
-            # Job A: the ONE per-call index-metadata aggregation
-            meta = _term_meta(payload, _impact_ranks(index, payload))
-        _mark("meta(JobA)")
+    ranks = _impact_ranks(index, payload) if prune else ()
+    if prune or agg_impl == "matmul":
+        meta = _term_meta(index, terms, ranks)
+        _mark("meta")
 
-    def _qterm_local() -> DataFrame:
-        """(query_id, term, qtf, df, idf, w) as a LOCAL relation —
-        idf/w are JVM expressions (scores stay bit-identical to the
-        old tmeta-join route) and it collects without a Spark job.
-        Pruned-path only (meta is populated there)."""
-        rows = [(q, t_, f, float(meta[t_][0]))
-                for (q, t_, f) in qt_rows
-                if t_ in meta and meta[t_][0] is not None]
-        return (
-            local_df(spark, rows,
-                     "query_id string, term string, qtf double, df double")
-            .withColumn("idf", idf_expr(n_docs))
-            .withColumn("w", F.col("qtf") * F.col("idf"))
-        )
-
-    def _finish(scored: DataFrame) -> DataFrame:
-        scored = _live(scored, tombs)
+    def _finish(scored: DataFrame, dead=tombs) -> DataFrame:
+        scored = _live(scored, dead)
         if round_dp is not None:
             scored = scored.withColumn("score", F.round("score", round_dp))
         return _topk(scored, k)
 
-    def _score_topk(rows: DataFrame, keep_col: str | None) -> DataFrame:
-        """posting payload rows -> exact top-k, via the configured
-        aggregation (module doc for AGG_IMPL; the matmul kernel's own
-        docstring for why the join plan loses at scale). All routes
-        end in _finish, so rounding/tombstone/tie-break semantics are
-        shared: _finish's F.round is the single rounding authority
-        (the matmul kernel emits unrounded candidate scores cut with
-        a one-quantum relaxation), and matmul pre-drops tombstones,
-        making _finish's anti-join a no-op."""
-        if agg_impl == "matmul":
-            if prune:
-                # local qterm relation: JVM w, no metadata re-scan
-                qterm_pd = (_qterm_local()
-                            .select("query_id", "term", "w").toPandas())
-            else:
-                # unpruned matmul: derive w in-plan from the payload's
-                # df metadata column (one bounded action, no tmax)
-                qterm_pd = (
-                    qt.join(F.broadcast(
-                        payload.groupBy("term").agg(
-                            F.max("df").alias("df"))), "term")
-                    .withColumn("w", F.col("qtf") * idf_expr(n_docs))
-                    .select("query_id", "term", "w").toPandas())
-            return _finish(_matmul_score_topk_packed(
-                rows, keep_col, avgdl, qterm_pd, k, round_dp,
-                dead_ids, spread))
-        # df-passthrough (round 6), pruned AND unpruned: idf/w from
-        # the decoded rows' own df column, query weights a broadcast
-        # local relation (one build job, no scan) — zero metadata jobs,
-        # and ONE shared plan shape
-        # for both routes (the bench warmup exercises the pruned
-        # shape, so the timed unpruned batch reuses its compiled
-        # codegen instead of paying first-compile). Same
-        # multiplication chain as the old qterm route
-        # ((qtf*idf)*tf_part) over the same df value — every chunk of
-        # a term carries the term's full df, equal to the tmeta max —
-        # so scores are bit-identical.
-        decoded = _decode_tf_parts(rows, avgdl, keep_col,
-                                   spread=spread, with_df=True)
-        qtl = F.broadcast(local_df(
-            spark, qt_rows,
-            "query_id string, term string, qtf double"))
-        return _finish(
-            decoded.join(qtl, "term")
-            .withColumn("w", F.col("qtf") * idf_expr(n_docs))
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum(F.col("w") * F.col("tf_part")).alias("score"))
-        )
+    cols = PAYLOAD_COLS if agg_impl == "matmul" else (*PAYLOAD_COLS, "df")
+    keep_col, keep = None, ()
+    if prune:
+        # ---- pruned path: the metadata above, then driver arithmetic,
+        # then the returned plan. The r05 version kept θ/UB/thresholds
+        # in-plan: every broadcast ran as its own AQE sub-job — ~30
+        # chained stage launches at sf0.1 (BASELINE.md anatomy). Now:
+        #   θ (_theta): from the stored impacts in `meta` — no job — or,
+        #     on the exact fallback, one decode of each query's rarest
+        #     term; only then does the payload have a second consumer
+        #     worth persisting.
+        #   Driver: phase 2 — per-query UB sums and the per-term block
+        #     threshold (_block_thresholds; the MIN of the keep
+        #     condition over sharing queries). These feed PRUNING BOUNDS
+        #     only and are relaxed toward KEEP.
+        #   Plan: keep_blocks from a literal term -> threshold map (no
+        #     broadcast) -> decode survivors -> aggregate -> top-k.
+        # Decoding a superset of a query's own keep list is always safe:
+        # the WAND argument only ever uses "a block was skipped ⇒ its
+        # docs provably score below θ(q)", and the union skips a block
+        # only when EVERY sharing query's condition skips it — extra
+        # decoded blocks just move partial scores toward their exact
+        # values (rank identity to the unpruned plan is pytest- and
+        # oracle-gated).
+        if _impact_rank(ranks, k, tombs) is None:
+            if cache_level == "memory":
+                payload = _track_persist(payload.cache())
+            elif cache_level == "disk":
+                from pyspark import StorageLevel
 
-    if not prune:
-        cols = PAYLOAD_COLS if agg_impl == "matmul" else (
-            *PAYLOAD_COLS, "df")
-        rows = payload.selectExpr(*cols)
-        if agg_impl == "join" and not spread and len(
-                {q for q, _t, _f in qt_rows}) == 1:
-            return _finish(_single_query_topk(rows, qt_rows, n_docs, avgdl))
-        return _score_topk(rows, None)
+                payload = _track_persist(
+                    payload.persist(StorageLevel.DISK_ONLY))
+            # 'none': no persist — the final plan re-runs the scan
+        theta = _theta(spark, index, payload, meta, qt_rows, k, tombs)
+        _mark("theta")
+        quant = 10.0 ** -round_dp if round_dp is not None else 0.0
+        bthresh: dict[str, float] = {}
+        for (_q, t_), v in _block_thresholds(qt_rows, meta, theta, n_docs,
+                                             bfac, quant).items():
+            bthresh[t_] = min(v, bthresh.get(t_, v))
+        keep_col, keep = "keep_blocks", (
+            f"{_keep_blocks_sql(bthresh)} AS keep_blocks",)
+        _mark("thresholds(driver)")
+    rows = payload.selectExpr(*cols, *keep)
 
-    # ---- pruned path: the metadata above, then driver arithmetic, then
-    # the returned plan. The r05 version kept θ/UB/thresholds in-plan:
-    # qterm was re-evaluated by four consumers and every broadcast ran
-    # as its own AQE sub-job — ~30 chained stage launches at sf0.1
-    # (BASELINE.md anatomy), i.e. the whole forced-prune wall was
-    # scheduler floor. Now:
-    #   θ (_theta): from the stored impacts in `meta` — no job — or, on
-    #     the exact fallback, one decode of each query's rarest term.
-    #   Driver: phase 2 — per-query UB sums and the per-term block
-    #     threshold (_block_thresholds; the MIN of the keep condition
-    #     over sharing queries, exactly the old groupBy). These feed
-    #     PRUNING BOUNDS only and are relaxed toward KEEP.
-    #   Plan: payload ⋈ broadcast(local thresholds) -> keep_blocks ->
-    #     decode survivors -> aggregate -> top-k window; every
-    #     broadcast is of a local relation (one build job each, no
-    #     scan sub-jobs).
-    # Decoding a superset of a query's own keep list is always safe:
-    # the WAND argument only ever uses "a block was skipped ⇒ its docs
-    # provably score below θ(q)", and the union skips a block only when
-    # EVERY sharing query's condition skips it — extra decoded blocks
-    # just move partial scores toward their exact values (rank identity
-    # to the unpruned plan is pytest- and oracle-gated).
-    theta = _theta(spark, index, payload, meta, qt_rows, k, tombs)
-    _mark("theta")
-    quant = 10.0 ** -round_dp if round_dp is not None else 0.0
-    ninf = float("-inf")
-    bthresh: dict[str, float] = {}
-    for (_q, t_), v in _block_thresholds(qt_rows, meta, theta, n_docs,
-                                         bfac, quant).items():
-        bthresh[t_] = min(v, bthresh.get(t_, v))
-
-    thresh_local = F.broadcast(local_df(
-        spark, [(t_, float(bthresh.get(t_, ninf))) for t_ in terms],
-        "term string, bthresh double"))
-    blocks = (
-        payload.join(thresh_local, "term")
-        .withColumn(
-            "keep_blocks",
-            F.filter(
-                F.transform(
-                    "block_max",
-                    lambda x, i: F.when(
-                        x >= F.col("bthresh"), i
-                    ).otherwise(F.lit(-1)),
-                ),
-                lambda i: i >= 0,
-            ),
-        )
+    if agg_impl == "matmul":
+        # (query_id, term, w) as a LOCAL relation: idf/w are JVM
+        # expressions and it collects without a job; a term with a
+        # NULL df (degenerate metadata) has no weight
+        qw_rows = local_df(
+            spark,
+            [(q, t_, f, float(meta[t_][0])) for (q, t_, f) in qt_rows
+             if t_ in meta and meta[t_][0] is not None],
+            "query_id string, term string, qtf double, df double",
+        ).selectExpr("query_id", "term",
+                     f"qtf * ({idf_sql(n_docs)}) AS w").collect()
+        one_task = sum(m[0] or 0 for m in meta.values()) <= \
+            ONE_TASK_MAX_POSTINGS
+        # the kernels drop the tombstoned docs themselves (dead_ids), so
+        # no anti-join
+        return _finish(_matmul_score_topk(
+            rows, keep_col, avgdl, qw_rows, k, round_dp, dead_ids, spread,
+            one_task), dead=None)
+    if not prune and not spread and len({q for q, _t, _f in qt_rows}) == 1:
+        return _finish(_single_query_topk(rows, qt_rows, n_docs, avgdl))
+    # df-passthrough (round 6), pruned AND unpruned: idf/w from the
+    # decoded rows' own df column and the query weights a broadcast
+    # local relation — no metadata job, and the broadcast is the one
+    # job its build costs (a scan job too once the batch has more
+    # (query, term) rows than local_df renders), with ONE shared plan
+    # shape for both routes (the bench warmup exercises the pruned
+    # shape, so the timed unpruned batch reuses its compiled codegen
+    # instead of paying first-compile). Same multiplication chain as
+    # the old qterm route ((qtf*idf)*tf_part) over the same df value —
+    # every chunk of a term carries the term's full df, equal to the
+    # metadata max — so scores are bit-identical.
+    decoded = _decode_tf_parts(rows, avgdl, keep_col, spread=spread,
+                               with_df=True)
+    qtl = F.broadcast(local_df(
+        spark, qt_rows, "query_id string, term string, qtf double"))
+    return _finish(
+        decoded.join(qtl, "term")
+        .withColumn("w", F.col("qtf") * idf_expr(n_docs))
+        .groupBy("query_id", "doc_id")
+        .agg(F.sum(F.col("w") * F.col("tf_part")).alias("score"))
     )
-    _mark("thresholds(driver)")
-    keep_cols = (PAYLOAD_COLS if agg_impl == "matmul"
-                 else (*PAYLOAD_COLS, "df"))
-    return _score_topk(blocks.selectExpr(*keep_cols, "keep_blocks"),
-                       "keep_blocks")
 
 
 def pruning_stats(
@@ -1420,7 +1455,7 @@ def pruning_stats(
         return {"total_blocks": 0, "kept_blocks": 0, "pruned_fraction": 0.0}
     tombs, _dead = _read_tombstones(spark, index)
     payload = _pb_pruned_postings(index, terms).where(in_list("term", terms))
-    meta = _term_meta(payload, _impact_ranks(index, payload))
+    meta = _term_meta(index, terms, _impact_ranks(index, payload))
     theta = _theta(spark, index, payload, meta, qt_rows, k, tombs)
     rhs = F.broadcast(local_df(
         spark,

@@ -1841,8 +1841,12 @@ def read_index(spark: SparkSession, out_dir: str) -> dict:
     st = spark.read.parquet(os.path.join(out_dir, "stats")).collect()[0]
     ds = _dedup_doc_stats(spark, out_dir)
     m = load_manifest(out_dir)
+    postings_path = _postings_dir(out_dir, m)
     return {
-        "postings": spark.read.parquet(_postings_dir(out_dir, m)),
+        "postings": spark.read.parquet(postings_path),
+        # where those rows live: csearch reads the serving rows'
+        # metadata columns from here on the driver, with no Spark job
+        "postings_path": postings_path,
         "doc_stats": ds,
         "n_docs": int(st["n_docs"]),
         "avgdl": float(st["avgdl"]),

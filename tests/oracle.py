@@ -115,3 +115,22 @@ def row_key(row, cols: tuple[str, ...]) -> tuple:
             v = tuple(v)
         out.append(v)
     return tuple(out)
+
+
+def term_meta(posts, ranks: tuple) -> dict:
+    """Reference for csearch._term_meta: term -> (df, raw block-max,
+    per-rank impacts) over the given serving rows, as ONE Spark
+    aggregation over the metadata columns — the per-term max df, max
+    block-max and max of each stored impact rank. F.get is NULL past an
+    array's end whatever the ANSI setting."""
+    from pyspark.sql import functions as F
+
+    aggs = [F.max("df").alias("df"),
+            F.max(F.array_max("block_max")).alias("bmax_raw")]
+    aggs += [F.max(F.get("impacts", i)).alias(f"imp{i}")
+             for i in range(len(ranks))]
+    return {
+        r["term"]: (r["df"], r["bmax_raw"],
+                    tuple(r[f"imp{i}"] for i in range(len(ranks))))
+        for r in posts.groupBy("term").agg(*aggs).collect()
+    }

@@ -147,7 +147,7 @@ def test_fuzz_impact_theta_rank_identical_to_decode_theta(spark,
         agg = ("join", "matmul")[seed % 2]
         _qt, terms, qt_rows = local_query_terms(spark, qs)
         pay = built["postings"].where(F.col("term").isin(terms))
-        meta = _term_meta(pay, _impact_ranks(built, pay))
+        meta = _term_meta(built, terms, _impact_ranks(built, pay))
         for drift in (1.0, 0.8):
             idx = dict(built, avgdl=built["avgdl"] * drift)
             no_imp = dict(idx, postings=idx["postings"].drop("impacts"))
@@ -169,3 +169,65 @@ def test_fuzz_impact_theta_rank_identical_to_decode_theta(spark,
                     theta_ks.add(k)
     # both stored ranks served a θ somewhere in the sweep
     assert theta_ks == {7, 100}
+
+
+def test_fuzz_driver_term_meta_equals_spark_aggregation(spark,
+                                                       tmp_path_factory):
+    """The driver-side metadata read (csearch._term_meta: pyarrow over
+    the serving rows, pb- and term-filtered) must equal the Spark
+    aggregation it replaced (oracle.term_meta) for random term sets —
+    absent terms included — on a build with hot-term chunks, after an
+    incremental merge of a stream batch, after a merge whose stream
+    dedup removes a re-dropped batch doc, after a compaction of
+    tombstoned docs, and at every stage with the impacts column
+    dropped."""
+    from engine.csearch import _impact_ranks, _term_meta
+    from engine.postings import (build_index, compact_tombstones,
+                                 delete_docs, merge_partials, read_index)
+    from engine.streaming import start_incremental_index
+
+    from .oracle import term_meta
+
+    rng = random.Random(7)
+    rows = _zipf_docs(rng, 300)
+    out = str(tmp_path_factory.mktemp("tm_idx"))
+    inp = str(tmp_path_factory.mktemp("tm_in"))
+    build_index(spark, spark.createDataFrame(rows, DOC_SCHEMA), out,
+                n_shards=2, hot_df_threshold=40, n_salts=2,
+                id_col="doc_id", text_col="text")
+
+    def check(stage):
+        idx = read_index(spark, out)
+        for no_imp in (False, True):
+            if no_imp:
+                idx = dict(idx, postings=idx["postings"].drop("impacts"))
+            posts = idx["postings"]
+            ranks = _impact_ranks(idx, posts)
+            assert bool(ranks) != no_imp, stage
+            for _ in range(3):
+                terms = rng.sample(VOCAB, rng.randint(1, 25)) + ["absentterm"]
+                got = _term_meta(idx, terms, ranks)
+                want = term_meta(posts.where(F.col("term").isin(terms)),
+                                 ranks)
+                assert got == want, (stage, no_imp, terms)
+                assert got, stage
+
+    check("build")
+    # two stream cycles: pure-append new docs (an incremental merge),
+    # then new docs plus a re-dropped batch doc, which the merge's
+    # stream dedup removes (a dedup removal re-baselines fully)
+    for cycle, extra, kind in ((0, [], "incremental"), (1, rows[:1], "full")):
+        new = [(1000 + 100 * cycle + i,) + r[1:]
+               for i, r in enumerate(_zipf_docs(rng, 30))]
+        spark.createDataFrame(new + extra, DOC_SCHEMA).write.mode(
+            "append").parquet(inp + "/drop")
+        q = start_incremental_index(spark, inp + "/drop", out,
+                                    avgdl_hint=7.0)
+        q.awaitTermination(120)
+        m = merge_partials(spark, out, hot_df_threshold=40, n_salts=2,
+                           incremental=True)
+        assert m.get("last_merge") == kind, (cycle, m.get("last_merge"))
+        check(f"stream cycle {cycle}")
+    delete_docs(spark, out, [1, 2, 3, 1005, 1105])
+    compact_tombstones(spark, out, hot_df_threshold=40, n_salts=2)
+    check("compaction")

@@ -55,26 +55,35 @@ def test_search_index_serving_persists_capped_at_one(spark, tmp_path):
     build_index(spark, docs, out, n_shards=2, hot_df_threshold=10**9,
                 n_salts=2)
     idx = read_index(spark, out)
+    # the payload is persisted only where the decode θ reads it before
+    # the final plan does: k above every stored impact rank
+    k_dec = max(idx["impact_ranks"]) + 1
     qs = queries_df(spark)
     _clear_persisted(spark)
     for _ in range(3):
-        search_index(spark, idx, qs, k=5, prune=True,
+        search_index(spark, idx, qs, k=k_dec, prune=True,
                      cache_level="memory").collect()
         # repeated serving calls must not accumulate persisted plans
         assert _n_persisted(spark) <= 1
     release_serving_cache()
     assert _n_persisted(spark) == 0
 
+    # θ from the stored impacts: the payload has one consumer, so
+    # nothing is persisted
+    search_index(spark, idx, qs, k=5, prune=True,
+                 cache_level="memory").collect()
+    assert _n_persisted(spark) == 0
+
     # pruning_stats collects internally -> releases eagerly
-    pruning_stats(spark, idx, qs, k=5)
+    pruning_stats(spark, idx, qs, k=k_dec)
     assert _n_persisted(spark) == 0
 
     # release happens on ENTRY, not just on the pruned branch: an
     # unpruned call after a pruned one must drop the pruned call's plan
-    search_index(spark, idx, qs, k=5, prune=True,
+    search_index(spark, idx, qs, k=k_dec, prune=True,
                  cache_level="memory").collect()
     assert _n_persisted(spark) == 1
-    search_index(spark, idx, qs, k=5, prune=False).collect()
+    search_index(spark, idx, qs, k=k_dec, prune=False).collect()
     assert _n_persisted(spark) == 0
 
 
@@ -549,26 +558,31 @@ def _matmul_fixture(spark, tmp_path_factory, tag, n_docs=600):
 
 
 def test_matmul_agg_identical_to_join(spark, tmp_path_factory):
-    """agg_impl='matmul' (doc-partitioned dense matmul + per-partition
-    top-k) must reproduce the join plan's (query_id, doc_id, score,
-    rank) rows exactly — across prune on/off and round_dp on/off, with
-    tombstones standing (the packed feed drops them in-kernel from the
-    broadcast dead set, not via the JVM anti-join). Raw-precision
-    scores are compared at 9 dp (all plans' sum orders are
-    partition-nondeterministic)."""
+    """agg_impl='matmul' (dense matmul + per-partition top-k) must
+    reproduce the join plan's (query_id, doc_id, score, rank) rows
+    exactly — across prune on/off, round_dp on/off and both matmul
+    plans (one task; packed, forced by a one-task bound of 0), with
+    tombstones standing (the kernels drop them from the dead set, not
+    via the JVM anti-join). Raw-precision scores are compared at 9 dp
+    (all plans' sum orders are partition-nondeterministic)."""
+    from engine import csearch
     from engine.corpusgen import synth_queries
-    from engine.csearch import search_index
 
     idx = _matmul_fixture(spark, tmp_path_factory, "mm_id")
     qs = synth_queries(spark, 40)
     for prune in (False, True):
         for dp in (None, 4):
-            def rows(impl):
-                r = search_index(spark, idx, qs, k=10, prune=prune,
-                                 round_dp=dp, agg_impl=impl).collect()
+            def rows(impl, bound=csearch.ONE_TASK_MAX_POSTINGS):
+                with pytest.MonkeyPatch.context() as mp:
+                    mp.setattr(csearch, "ONE_TASK_MAX_POSTINGS", bound)
+                    r = csearch.search_index(
+                        spark, idx, qs, k=10, prune=prune, round_dp=dp,
+                        agg_impl=impl).collect()
                 return sorted((x.query_id, x.doc_id,
                                round(x.score, 9), x.rank) for x in r)
-            assert rows("join") == rows("matmul"), (prune, dp)
+            want = rows("join")
+            assert want == rows("matmul"), (prune, dp)
+            assert want == rows("matmul", 0), (prune, dp, "packed")
 
 
 def test_matmul_ties_subk_and_no_phantom_zero_docs(spark, tmp_path):
@@ -614,25 +628,38 @@ def test_matmul_ties_subk_and_no_phantom_zero_docs(spark, tmp_path):
 
 def test_matmul_plan_repartitions_by_doc_and_auto_gates(
         spark, tmp_path_factory):
-    """Plan shape: the matmul route must hash-repartition by the
-    doc-co-locating `part` doc-bucket column (co-location makes
-    per-partition scores final); the auto route at tiny n_docs must
-    pick the join plan (no such exchange). Also: a typo'd agg_impl
-    fails loudly."""
+    """Plan shape: the packed matmul plan (forced by a one-task bound
+    of 0) must hash-repartition by the doc-co-locating `part`
+    doc-bucket column (co-location makes per-partition scores final);
+    below the bound the matmul route is one task, with no Exchange at
+    all, pruned or not; the auto route at tiny n_docs must pick the
+    join plan (no such exchange). Also: a typo'd agg_impl fails
+    loudly."""
+    from engine import csearch
     from engine.corpusgen import synth_queries
     from engine.csearch import search_index
 
     idx = _matmul_fixture(spark, tmp_path_factory, "mm_plan", n_docs=80)
     qs = synth_queries(spark, 5)
+
+    def plan(df):
+        df.collect()  # the final adaptive plan, not the initial one
+        return df._jdf.queryExecution().executedPlan().toString()
+
     def repart_on(df, key):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return [ln for ln in plan.splitlines()
+        return [ln for ln in plan(df).splitlines()
                 if f"hashpartitioning({key}" in ln
                 and "REPARTITION_BY_NUM" in ln]
 
-    mm = search_index(spark, idx, qs, k=5, agg_impl="matmul")
-    assert repart_on(mm, "part")  # packed feed: bucket exchange
-    assert not repart_on(mm, "doc_id")
+    for prune in (False, True):
+        one = search_index(spark, idx, qs, k=5, prune=prune,
+                           agg_impl="matmul")
+        assert "Exchange" not in plan(one), prune
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(csearch, "ONE_TASK_MAX_POSTINGS", 0)
+        mm = search_index(spark, idx, qs, k=5, agg_impl="matmul")
+        assert repart_on(mm, "part")  # packed feed: bucket exchange
+        assert not repart_on(mm, "doc_id")
     auto = search_index(spark, idx, qs, k=5)  # auto, n_docs < 100k
     assert not repart_on(auto, "doc_id") and not repart_on(auto, "part")
     with pytest.raises(ValueError, match="agg_impl"):

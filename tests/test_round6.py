@@ -37,7 +37,8 @@ def _mixed_sign_fixture(spark, tmp_path):
 
 
 def test_negative_weight_window_rank_identity(spark, tmp_path):
-    """All four serving plans (prune on/off x join/matmul) must agree
+    """All serving plans (prune on/off x join/matmul, the matmul route
+    on both its one-task and packed plans) must agree
     when some query weights are negative. Before the
     fix: phase 2 divided the keep condition by w without flipping the
     inequality (pruning away blocks the query must decode), and the
@@ -47,7 +48,9 @@ def test_negative_weight_window_rank_identity(spark, tmp_path):
     k=3 the rare positive term 'kiwi' matches exactly 3 docs, so θ is
     FINITE and phase 2's threshold math actually engages (at k>3 it
     degenerates to θ=-inf / keep-everything and proves nothing)."""
-    from engine.csearch import search_index
+    import pytest
+
+    from engine import csearch
 
     idx = _mixed_sign_fixture(spark, tmp_path)
     qs = spark.createDataFrame(
@@ -56,9 +59,11 @@ def test_negative_weight_window_rank_identity(spark, tmp_path):
          ("pos", "kiwi")],            # control: all-positive
         "query_id string, query string")
 
-    def rows(prune, impl):
-        r = search_index(spark, idx, qs, k=3, prune=prune,
-                         agg_impl=impl).collect()
+    def rows(prune, impl, bound=csearch.ONE_TASK_MAX_POSTINGS):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(csearch, "ONE_TASK_MAX_POSTINGS", bound)
+            r = csearch.search_index(spark, idx, qs, k=3, prune=prune,
+                                     agg_impl=impl).collect()
         return sorted((x.query_id, x.doc_id, round(x.score, 9), x.rank)
                       for x in r)
 
@@ -68,6 +73,8 @@ def test_negative_weight_window_rank_identity(spark, tmp_path):
     for prune in (False, True):
         for impl in ("join", "matmul"):
             assert rows(prune, impl) == want, (prune, impl)
+        # the matmul route's packed plan (a one-task bound of 0)
+        assert rows(prune, "matmul", 0) == want, (prune, "packed")
 
 
 def test_chunk_width_bounds_dense_transient():
@@ -120,15 +127,9 @@ def test_matmul_round_matches_jvm_half_up(spark):
     2.4-scoring lower-doc_id doc won the rounded tie — the join plan
     (and the oracle) return the 2.5 doc at 3.0."""
     import numpy as np
-    import pyarrow as pa
 
     from engine.csearch import _matmul_emit, _topk
 
-    out_schema = pa.schema([
-        ("query_id", pa.string()),
-        ("doc_id", pa.int64()),
-        ("score", pa.float64()),
-    ])
     # one query, one term, w = 1.25; doc 3 tf_part = 1.92 (score 2.4),
     # doc 5 tf_part = 2.0 (score 2.5 — an exact decimal midpoint at
     # round_dp=0)
@@ -137,8 +138,7 @@ def test_matmul_round_matches_jvm_half_up(spark):
     tidx = np.array([0, 0], dtype=np.int64)
     doc = np.array([3, 5], dtype=np.int64)
     x = np.array([1.92, 2.0], dtype=np.float64)
-    rb, _ = _matmul_emit(bval, tidx, doc, x, k=1, round_dp=0,
-                         out_schema=out_schema)
+    rb, _ = _matmul_emit(bval, tidx, doc, x, k=1, round_dp=0)
     got = {int(d): float(s) for d, s in
            zip(rb.column("doc_id").to_pylist(),
                rb.column("score").to_pylist())}
@@ -161,22 +161,15 @@ def test_matmul_quantum_relaxation_keeps_rounded_tie_winner(spark):
     tie-break — cutting exactly at k kernel-side would evict the true
     winner."""
     import numpy as np
-    import pyarrow as pa
 
     from engine.csearch import _matmul_emit, _topk
 
-    out_schema = pa.schema([
-        ("query_id", pa.string()),
-        ("doc_id", pa.int64()),
-        ("score", pa.float64()),
-    ])
     bval = (["q"], 1, np.array([0]), np.array([0]),
             np.array([1.0], dtype=np.float64))
     tidx = np.array([0, 0], dtype=np.int64)
     doc = np.array([9, 2], dtype=np.int64)
     x = np.array([1.00004, 1.00001], dtype=np.float64)
-    rb, _ = _matmul_emit(bval, tidx, doc, x, k=1, round_dp=4,
-                         out_schema=out_schema)
+    rb, _ = _matmul_emit(bval, tidx, doc, x, k=1, round_dp=4)
     assert sorted(rb.column("doc_id").to_pylist()) == [2, 9]
     cand = spark.createDataFrame(
         [("q", int(d), float(s)) for d, s in

@@ -5,6 +5,8 @@ the bench headline-size canary."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -41,30 +43,38 @@ R9_QUERIES = [("q0", "apple fig"), ("q1", "banana t3 zzz_absent"),
               ("q'2", "cherry cherry apple")]
 
 
-def _res(spark, idx, qs, **kw):
-    from engine.csearch import search_index
+def _res(spark, idx, qs, packed=False, **kw):
+    """search_index rows, scores to 9 dp. packed=True forces the matmul
+    route's packed plan (a one-task bound of 0)."""
+    from engine import csearch
 
-    return sorted(
-        (r.query_id, r.doc_id, round(r.score, 9), r.rank)
-        for r in search_index(spark, idx, qs, **kw).collect()
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        if packed:
+            mp.setattr(csearch, "ONE_TASK_MAX_POSTINGS", 0)
+        return sorted(
+            (r.query_id, r.doc_id, round(r.score, 9), r.rank)
+            for r in csearch.search_index(spark, idx, qs, **kw).collect()
+        )
 
 
-ROUTES = [(p, a) for p in (False, True) for a in ("join", "matmul")]
+#: (prune, agg_impl, packed): every route, the matmul ones on both plans
+ROUTES = [(p, a, packed) for p in (False, True) for a in ("join", "matmul")
+          for packed in ((False, True) if a == "matmul" else (False,))]
 
 
 def _routes_identical(spark, idx, **kw):
-    """Serve R9_QUERIES as one batch on every (prune x agg_impl) route,
-    then each query alone on every route, cold and then warm: all must
-    equal the unpruned join batch (rows, scores to 9 dp, ranks)."""
+    """Serve R9_QUERIES as one batch on every (prune x agg_impl x
+    matmul plan) route, then each query alone on every route, cold and
+    then warm: all must equal the unpruned join batch (rows, scores to
+    9 dp, ranks)."""
     from engine.csearch import release_warm, warm_serving
 
     qs = spark.createDataFrame(R9_QUERIES, "query_id string, query string")
     base = _res(spark, idx, qs, prune=False, agg_impl="join", **kw)
     assert {r[0] for r in base} == {q for q, _ in R9_QUERIES}
-    for p, a in ROUTES:
-        assert _res(spark, idx, qs, prune=p, agg_impl=a, **kw) == base, (
-            f"batch route {(p, a)} diverged")
+    for p, a, packed in ROUTES:
+        assert _res(spark, idx, qs, packed, prune=p, agg_impl=a,
+                    **kw) == base, f"batch route {(p, a, packed)} diverged"
     singles = [(q, spark.createDataFrame([(q, text)],
                                          "query_id string, query string"))
                for q, text in R9_QUERIES]
@@ -74,10 +84,11 @@ def _routes_identical(spark, idx, **kw):
         try:
             for q, one in singles:
                 want = [r for r in base if r[0] == q]
-                for p, a in ROUTES:
-                    assert _res(spark, idx, one, prune=p, agg_impl=a,
-                                **kw) == want, (
-                        f"{posture} single {q} on route {(p, a)} diverged")
+                for p, a, packed in ROUTES:
+                    assert _res(spark, idx, one, packed, prune=p,
+                                agg_impl=a, **kw) == want, (
+                        f"{posture} single {q} on route {(p, a, packed)} "
+                        "diverged")
         finally:
             release_warm(idx)
 
@@ -88,16 +99,17 @@ def test_all_routes_rank_identical(spark, r9_index, round_dp):
     batch and for each query served alone, cold and warm: unpruned join
     scores from the decoded rows' own df column (a single query as one
     task with a literal weight map), pruned computes its block
-    thresholds driver-side from collected metadata, matmul feeds from
-    the local qterm relation. Any driver-float slack in the pruning
-    bounds may only widen the kept-block superset, never change
-    results."""
+    thresholds driver-side from the metadata read on the driver,
+    matmul takes its weights from the local qterm relation and runs as
+    one task and, forced, as the packed plan. Any driver-float slack in
+    the pruning bounds may only widen the kept-block superset, never
+    change results."""
     _routes_identical(spark, r9_index, k=10, round_dp=round_dp)
 
 
 def test_all_routes_rank_identical_tombstoned(spark, r9_dir, tmp_path):
     """The same identity on an index with standing tombstones: every
-    route, the one-task single-query plan included, drops deleted docs
+    route, the one-task plans included, drops deleted docs
     through _finish's anti-join and still ranks exactly like the
     batch."""
     import shutil
@@ -118,7 +130,7 @@ def test_all_routes_rank_identical_tombstoned(spark, r9_dir, tmp_path):
 def test_warm_drift_releases_persisted(spark, r9_index):
     """ADVICE r5 #1: when collection stats drift under a live warm
     index (maintenance landed), search_index must DROP the stale
-    persisted postings and warm map — not just serve cold while the
+    persisted postings and warm stats — not just serve cold while the
     pre-maintenance bytes stay pinned in executor storage."""
     from engine.csearch import release_warm, warm_serving
 
@@ -135,7 +147,7 @@ def test_warm_drift_releases_persisted(spark, r9_index):
             r9_index["n_docs"] -= 1
         # the stale warm state must be gone after the drifted call
         assert "warm_persisted" not in r9_index
-        assert "warm_tmeta" not in r9_index
+        assert "warm_stats" not in r9_index
         assert len(drifted) > 0
         # and the index serves correctly cold afterwards
         assert _res(spark, r9_index, qs, k=10, prune=False) == cold
@@ -143,32 +155,141 @@ def test_warm_drift_releases_persisted(spark, r9_index):
         release_warm(r9_index)
 
 
+def _null_fig_rows(src: str, dst: str, cols: tuple, every: bool) -> None:
+    """Copy the index at src to dst, then set `cols` to NULL with
+    pyarrow on one (every=False) or every serving row of the term
+    'fig', which the r9 fixture splits into several chunk rows."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from engine.postings import _postings_dir
+
+    shutil.copytree(src, dst)
+    n_rows = 0
+    for f in sorted(glob.glob(os.path.join(_postings_dir(dst), "*",
+                                           "*.parquet"))):
+        tbl = pq.read_table(f)
+        terms = tbl.column("term").to_pylist()
+        hit = [i for i, t in enumerate(terms) if t == "fig"]
+        n_rows += len(hit)
+        if not hit or (n_rows > len(hit) and not every):
+            continue
+        for c in cols:
+            vals = tbl.column(c).to_pylist()
+            for i in (hit if every else hit[:1]):
+                vals[i] = None
+            j = tbl.schema.get_field_index(c)
+            tbl = tbl.set_column(j, tbl.schema.field(j).with_nullable(True),
+                                 pa.array(vals, type=tbl.schema.field(j).type))
+        pq.write_table(tbl, f)
+        # the rewritten file no longer matches Spark's checksum file
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    assert n_rows > 1
+
+
+@pytest.fixture(scope="module")
+def degenerate_dirs(r9_dir, tmp_path_factory):
+    """'all': one of fig's chunk rows without its block-max and impacts;
+    'impacts': every fig row without its impacts; 'df': one fig row
+    without its df."""
+    out = {}
+    for name, cols, every in (("all", ("block_max", "impacts"), False),
+                              ("impacts", ("impacts",), True),
+                              ("df", ("df",), False)):
+        out[name] = str(tmp_path_factory.mktemp(f"r9_null_{name}"))
+        os.rmdir(out[name])
+        _null_fig_rows(r9_dir, out[name], cols, every)
+    return out
+
+
 @pytest.mark.parametrize("degenerate", ["all", "impacts"])
 @pytest.mark.parametrize("agg_impl", ["join", "matmul"])
 @pytest.mark.parametrize("prune", [False, True])
-def test_warm_null_tmeta_degrades(spark, r9_index, prune, agg_impl,
-                                  degenerate):
-    """ADVICE r5 #2: a warm tmeta row whose collected df/block_max or
-    impacts is NULL (foreign or hand-edited index) must never change
-    results: the pruned routes read that call's metadata cold instead
-    of dropping the term (which lost its weight on matmul and made the
-    join route's block thresholds unsound), and the unpruned routes
-    score from the payload rows' own df."""
-    from engine.csearch import release_warm, warm_serving
+def test_warm_null_tmeta_degrades(spark, r9_index, degenerate_dirs, prune,
+                                  agg_impl, degenerate):
+    """ADVICE r5 #2: NULL term metadata in the serving rows (a foreign
+    or hand-edited index) must never change results, cold or warm.
+    'all': the driver read leaves fig's block-max NULL although its
+    other chunks hold one — a max over those could understate it — so
+    the pruned routes keep every block of a query holding fig.
+    'impacts': θ skips fig's missing impacts."""
+    from engine.csearch import _term_meta, release_warm, warm_serving
+    from engine.postings import read_index
 
     qs = spark.createDataFrame([("q0", "apple fig")],
                                "query_id string, query string")
-    cold = _res(spark, r9_index, qs, k=10, prune=prune, agg_impl=agg_impl)
-    assert len(cold) > 0
-    warm_serving(spark, r9_index, payload_cache=None)
+    want = _res(spark, r9_index, qs, k=10, prune=prune, agg_impl=agg_impl)
+    assert len(want) > 0
+    idx = read_index(spark, degenerate_dirs[degenerate])
+    df, bmax, imps = _term_meta(idx, ["fig"], idx["impact_ranks"])["fig"]
+    assert df == 40
+    assert (bmax is None) == (degenerate == "all")
+    assert imps == (None, None) or degenerate == "all"
+    assert _res(spark, idx, qs, k=10, prune=prune,
+                agg_impl=agg_impl) == want
+    warm_serving(spark, idx)
     try:
-        df, bmax, _imps = r9_index["warm_tmeta"]["fig"]
-        r9_index["warm_tmeta"]["fig"] = (
-            (None, None, None) if degenerate == "all" else (df, bmax, None))
-        assert _res(spark, r9_index, qs, k=10, prune=prune,
-                    agg_impl=agg_impl) == cold
+        assert _res(spark, idx, qs, k=10, prune=prune,
+                    agg_impl=agg_impl) == want
     finally:
-        release_warm(r9_index)
+        release_warm(idx)
+
+
+@pytest.mark.parametrize("prune", [False, True])
+def test_null_df_chunk_keeps_term_weight(spark, r9_index, degenerate_dirs,
+                                         prune):
+    """One of fig's chunk rows without its df: every chunk carries the
+    term's full df, so the driver read takes it from the others and the
+    matmul routes, which weight each term from that read, rank exactly
+    as on the intact index. (The join routes read each decoded row's
+    own df.)"""
+    from engine.csearch import _term_meta
+    from engine.postings import read_index
+
+    qs = spark.createDataFrame([("q0", "apple fig"), ("q1", "fig")],
+                               "query_id string, query string")
+    idx = read_index(spark, degenerate_dirs["df"])
+    assert _term_meta(idx, ["fig"], ())["fig"][0] == 40
+    for packed in (False, True):
+        assert _res(spark, idx, qs, packed, k=10, prune=prune,
+                    agg_impl="matmul") == _res(
+            spark, r9_index, qs, k=10, prune=prune, agg_impl="matmul")
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_threshold_map_ansi_safe(spark, r9_index, ansi):
+    """The pruned plan reads each row's block threshold from a literal
+    term -> threshold map. Under either ANSI setting a term in the map
+    keeps exactly the blocks reaching its threshold, a term outside it
+    keeps every block (element_at would raise under ANSI), and pruned
+    serving ranks like unpruned serving."""
+    from engine.csearch import _keep_blocks_sql
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        rows = spark.createDataFrame(
+            [("a", [0.5, 2.0, 1.0]), ("b", [0.1, 0.2])],
+            "term string, block_max array<double>")
+        for bthresh, want in (({"a": 1.0}, {"a": [1, 2], "b": [0, 1]}),
+                              ({}, {"a": [0, 1, 2], "b": [0, 1]})):
+            got = rows.selectExpr(
+                "term", f"{_keep_blocks_sql(bthresh)} AS keep").collect()
+            assert {r.term: r.keep for r in got} == want
+        qs = spark.createDataFrame(R9_QUERIES,
+                                   "query_id string, query string")
+        base = _res(spark, r9_index, qs, k=10, prune=False, agg_impl="join")
+        for a in ("join", "matmul"):
+            assert _res(spark, r9_index, qs, k=10, prune=True,
+                        agg_impl=a) == base
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_bench_headline_bounded():

@@ -1,8 +1,12 @@
 """Spark job budgets of the serving routes.
 
-Pruned: θ from the stored impacts launches no job of its own, so a cold
-pruned batch runs exactly the decode θ's jobs fewer than the decode
-route; an index with standing tombstones keeps the decode θ.
+Matmul below csearch.ONE_TASK_MAX_POSTINGS: the term metadata is read on
+the driver and θ comes from the stored impacts, so a pruned batch, cold
+or warm, is one job (one task, no broadcast, no exchange), and so is an
+unpruned one. Above the bound the packed plan runs its decode+pack
+stage, its doc-bucket exchange and its matmul stage. The decode θ (an
+index without impacts, or with standing tombstones) adds exactly its own
+jobs.
 
 Unpruned join below the spread bar: a single query, cold or warm, is
 one job (one task, no broadcast, no exchange); a query with no indexed
@@ -52,17 +56,20 @@ def budget_dir(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def queries(spark):
-    return spark.createDataFrame(
+    from engine.localrel import local_df
+
+    return local_df(
+        spark,
         [("q0", "w0 w7"), ("q1", "w3 w12 w1"), ("q2", "w5"),
          ("q3", "w2 w9 absentterm")],
         "query_id string, query string")
 
 
-def _serve(spark, idx, qs):
+def _serve(spark, idx, qs, prune=True):
     from engine.csearch import search_index
 
     return sorted(tuple(r) for r in search_index(
-        spark, idx, qs, k=10, prune=True, agg_impl="matmul").collect())
+        spark, idx, qs, k=10, prune=prune, agg_impl="matmul").collect())
 
 
 def _without_impacts(idx):
@@ -80,6 +87,8 @@ def _tombstoned(spark, budget_dir, tmp_path):
 
 def test_impact_theta_drops_exactly_the_decode_theta_jobs(spark, budget_dir,
                                                           queries):
+    """A one-task batch: θ from the impacts is the plan's one job; the
+    decode θ adds exactly its own jobs in front of the same plan."""
     from engine.csearch import (_decode_theta, _pb_pruned_postings,
                                 _term_meta, local_query_terms)
     from engine.localrel import in_list
@@ -91,13 +100,14 @@ def test_impact_theta_drops_exactly_the_decode_theta_jobs(spark, budget_dir,
     n_dec, res_dec = _jobs(
         spark, lambda: _serve(spark, _without_impacts(idx), queries))
     assert res_imp == res_dec and res_imp
+    assert n_imp == 1, n_imp
 
     # the decode θ on its own, over the same payload filter
     _qt, terms, qt_rows = local_query_terms(spark, queries)
     pay = (_pb_pruned_postings(idx, terms)
            .where(in_list("term", terms)).cache())
     try:
-        meta = _term_meta(pay, ())
+        meta = _term_meta(idx, terms, ())
         n_theta, theta = _jobs(spark, lambda: _decode_theta(
             spark, pay, meta, qt_rows, 10, idx["n_docs"], idx["avgdl"],
             False, None))
@@ -105,6 +115,33 @@ def test_impact_theta_drops_exactly_the_decode_theta_jobs(spark, budget_dir,
         pay.unpersist()
     assert theta and n_theta >= 1
     assert n_dec - n_imp == n_theta, (n_imp, n_dec, n_theta)
+
+
+def test_matmul_job_budget(spark, budget_dir, queries, monkeypatch):
+    """Below the work bound a matmul batch is one job: pruned cold,
+    pruned warm and unpruned. Forced above it (bound 0), the packed
+    plan's three: decode+pack, then the matmul stage behind the
+    doc-bucket exchange, then the final window. Both plans give the
+    same rows."""
+    from engine import csearch
+    from engine.postings import read_index
+
+    idx = read_index(spark, budget_dir)
+    n_cold, cold = _jobs(spark, lambda: _serve(spark, idx, queries))
+    assert cold and n_cold == 1, n_cold
+    n_unpr, unpr = _jobs(
+        spark, lambda: _serve(spark, idx, queries, prune=False))
+    assert unpr == cold and n_unpr == 1, n_unpr
+    csearch.warm_serving(spark, idx)
+    try:
+        n_warm, warm = _jobs(spark, lambda: _serve(spark, idx, queries))
+    finally:
+        csearch.release_warm(idx)
+    assert warm == cold and n_warm == 1, n_warm
+
+    monkeypatch.setattr(csearch, "ONE_TASK_MAX_POSTINGS", 0)
+    n_packed, packed = _jobs(spark, lambda: _serve(spark, idx, queries))
+    assert packed == cold and n_packed == 3, n_packed
 
 
 def test_tombstoned_index_keeps_decode_theta(spark, budget_dir, queries,
