@@ -379,8 +379,8 @@ def cmd_stream_ingest(args) -> None:
         schema=args.schema, text_col=args.text_col)
     drained = q.awaitTermination(args.timeout)
     if not drained:
-        # merging while the stream is still appending shards would race
-        # the dedup's rmtree/manifest writes — stop and refuse
+        # a merge racing a still-committing stream fails its generation
+        # check and redoes its work — stop and refuse instead
         q.stop()
         raise SystemExit(
             f"stream_ingest: backlog not drained within --timeout "
@@ -440,8 +440,8 @@ def cmd_delete(args) -> None:
 def cmd_compact(args) -> None:
     """Beyond-reference ops: physically expunge tombstoned docs and
     re-baseline stats/df (Lucene forceMergeDeletes analog —
-    engine/postings.compact_tombstones). Crash-safe: re-running after
-    any interruption finishes the job."""
+    engine/postings.compact_tombstones). One commit: an interruption
+    leaves the index as it was, and re-running finishes the job."""
     from engine.postings import compact_tombstones
 
     spark = _spark("cli-compact")

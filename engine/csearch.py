@@ -295,7 +295,7 @@ def _matmul_emit(bval, tidx, doc, x, k, round_dp):
     weight of q is positive (idf = ln(1+x), x > 0 on any
     self-consistent index — so a dense zero means "no term of q
     occurs in d", which the join plan never emits); if any weight is
-    <= 0 (the hybrid stats window, see search_index phase 2) the
+    <= 0 (an index whose df exceeds N, see _block_thresholds) the
     kernel falls back to presence-in-X so negatively-scored hit docs
     still rank, as they do under the join plan. Rounding: the kernel
     emits UNROUNDED scores and the caller's _finish applies the ONE
@@ -359,8 +359,8 @@ def _matmul_emit(bval, tidx, doc, x, k, round_dp):
     CHUNK = _chunk_width(n_t, n_q)
     # hit = "doc contains a term of q". With all-positive weights
     # (any self-consistent index) score > 0 is that test exactly and
-    # costs nothing extra; under the hybrid stats window where w can
-    # go negative (see search_index phase 2) a hit doc can score
+    # costs nothing extra; on an index whose df exceeds N, w can go
+    # negative (see _block_thresholds) and a hit doc can score
     # <= 0, so fall back to presence in the dense X — the join plan
     # ranks those docs and the kernel must too.
     allpos = [bool((qw[qpf[q]:qpf[q + 1]] > 0).all()) for q in range(n_q)]
@@ -1093,10 +1093,10 @@ def _block_thresholds(qt_rows, meta: dict, theta: dict, n_docs: int,
     ⟺  bmax >= (θ(q) - UBsum(q)) / (w*bfac) + tmax/bfac.
     Negative-weight safety (all three guards are exact no-ops when
     every w > 0, i.e. on any self-consistent index — idf = ln(1+x),
-    x > 0. They matter only in the hybrid stats window
-    compact_tombstones documents: stats refreshed, merge pending — or a
-    crash between them — where a term's stale df can exceed the
-    refreshed N, making idf and hence w NEGATIVE):
+    x > 0. They matter only on an index that is not — a foreign or
+    hand-edited one — where a term's df exceeds N, making idf and hence
+    w NEGATIVE; the engine commits stats and postings in one flip, so
+    it never serves refreshed stats beside stale df):
       (a) a term's max contribution to a doc's score is w*tmax when
           w > 0 but 0 when w <= 0 (the doc simply not containing it
           beats any positive tf), so UBsum sums max(w,0)*tmax;

@@ -17,9 +17,9 @@ are later merged. Here (north_rule):
       partition in numpy, splits (shard, tid, doc) runs (tf = run
       length), and emits blocked delta+varbyte lists (dl inline like
       Lucene norms, per-128-posting block-max metadata). Output lands
-      under partials/shard=s via dynamic partition overwrite; the
-      manifest records per-shard lineage (term/posting counts, wall,
-      status) and a re-run skips shards already marked ok — the
+      under partials/shard=s via dynamic partition overwrite; each
+      batch commits its per-shard lineage (term/posting counts, wall,
+      status, dir) and a re-run skips shards already committed — the
       shard/batch is the resumable checkpoint (reference analog: the
       10,000-doc IndexWriter commit, LuceneIndexBuilder.java:42-45).
 
@@ -39,20 +39,32 @@ are later merged. Here (north_rule):
       (tid, salt) group decodes its few partials, re-sorts, re-encodes
       in numpy; the term dictionary restores strings.
 
-Final layout (parquet, PARTITIONED by tid bucket pb = pmod(tid, pb_mod)
-and term-sorted within files, so serving prunes whole partition dirs
-for the query's terms and row-group min/max stats serve the term
-IN (...) pushdown inside the survivors):
-  postings/pb=N/  term, tid, salt, df, n_docs, doc_bytes, tf_bytes,
-                  dl_bytes, block_max, impacts, doc_off, tf_off,
-                  dl_off (impacts: codec.IMPACT_RANKS; the partials
-                  carry block_last instead)
-  doc_stats/      doc_id, dl, content_sha
-  stats/          n_docs, avgdl
-  term_dict/      tid, term
-  _manifest.json  per-shard lineage + collection stats + merge status
-                  + the postings_dir pointer (incremental merges write
-                  versioned dirs, hardlinking untouched buckets)
+Final layout (parquet, the serving table PARTITIONED by tid bucket
+pb = pmod(tid, pb_mod) and term-sorted within files, so serving prunes
+whole partition dirs for the query's terms and row-group min/max stats
+serve the term IN (...) pushdown inside the survivors):
+  postings_vK/pb=N/   term, tid, salt, df, n_docs, doc_bytes, tf_bytes,
+                      dl_bytes, block_max, impacts, doc_off, tf_off,
+                      dl_off (impacts: codec.IMPACT_RANKS)
+  partials/shard=S/   the encoded partials (block_last, not impacts)
+  doc_stats*/         doc_id, dl, content_sha (+ batch_id for streamed)
+  term_dict*/         tid, term
+  tombstones_gN/      doc_id
+  _manifest.json      generation N, the live set, per-shard lineage,
+                      collection stats (n_docs, avgdl) and merge status
+
+Commit protocol: a mutation never renames or deletes a dir the
+manifest lists. It writes new dirs (batch shards and the build's
+doc_stats/term_dict keep their classic names; stream, dedup and
+compaction dirs carry a _g<N>/_c<N> generation suffix, postings a
+version) and commits with one atomic replace of _manifest.json holding
+generation N+1 and the complete live set: the partial dirs (the
+lineage rows' "dir"), postings_dir, and the doc-stats, term-dict and
+tombstone dir lists ("live"). Readers resolve only listed dirs. A
+commit first checks that the generation on disk is still the one its
+op read (else it raises: another writer committed), and after the
+flip sweeps the engine's unlisted dirs — so recovery from a crash is
+nothing more than the next commit's sweep (_commit).
 
 Scale notes: at 10^12 files n_shards grows to O(10^4-10^5) and
 shard_batch bounds the work a single failure can lose; the merge
@@ -67,6 +79,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 
@@ -536,28 +549,25 @@ def _merge_onepass_arrow_fn(avgdl: float, pb_mod: int, chunk_postings: int,
 
 def merge_onepass_plan(spark: SparkSession, out_dir: str, avgdl: float,
                        pb_mod: int, chunk_postings: int,
-                       dict_distinct: bool = True) -> DataFrame:
+                       dict_distinct: bool = True,
+                       manifest: dict | None = None) -> DataFrame:
     """The one-pass full-merge dataflow (see _merge_onepass_arrow_fn):
     (partials ∪ term_dict) -> repartition by pb -> batched kernel ->
     final serving rows, one payload exchange total. Dict rows travel
     as n_docs=0 + empty payload so the union is null-free; partials
     never contain n_docs=0 rows (the encoders skip empty groups).
 
-    dict_distinct: only STREAM micro-batches ever append (possibly
+    dict_distinct: only STREAM micro-batches ever add (possibly
     repeated) dictionary rows — init_stats writes the dict distinct by
     construction — so a never-streamed index skips the full-vocabulary
-    distinct shuffle (round 6; merge_partials passes the durable
-    ever-streamed signal)."""
-    partials = spark.read.option(
-        "basePath", os.path.join(out_dir, "partials")
-    ).parquet(os.path.join(out_dir, "partials"))
-    pay = partials.where(F.col("n_docs") > 0).select(
+    distinct shuffle (round 6; merge_partials passes whether the
+    manifest lists a stream dictionary dir). manifest: whose listed
+    dirs to merge (default: the committed one)."""
+    m = manifest if manifest is not None else load_manifest(out_dir)
+    pay = _read_partials(spark, out_dir, m).where(F.col("n_docs") > 0).select(
         F.lit("").alias("term"), "tid", "n_docs",
         "doc_bytes", "tf_bytes", "dl_bytes", "doc_off")
-    tdict = spark.read.schema(TERM_DICT_SCHEMA).parquet(
-        os.path.join(out_dir, "term_dict"))
-    if dict_distinct:
-        tdict = tdict.distinct()
+    tdict = _read_term_dict(spark, out_dir, m, dict_distinct)
     empty = F.lit(b"")
     dict_rows = tdict.select(
         "term", "tid", F.lit(0).cast("long").alias("n_docs"),
@@ -655,121 +665,160 @@ def _reencode_partition_arrow_fn(avgdl: float, group_cols: tuple,
     return fn
 
 
-def _recover_dedup_pending(out_dir: str) -> int:
-    """Crash recovery for the dedup journaled swap: a pending entry in
-    the manifest means the consolidated output was fully written but
-    the rmtree+rename swap may have been interrupted anywhere — finish
-    it before anything else looks at (or writes to) the partials. The
-    journal is only written AFTER both tmp and ds_tmp completed, so
-    with a pending entry at least one recovery artifact exists: tmp
-    itself, ds_tmp (doc-stats half not yet promoted), or the renamed
-    final (crash after the tmp->final rename but before the journal was
-    cleared).
+# ------------------------------------------------------------ commit protocol
+#
+# Every mutation (a build's shard batch, a stream micro-batch, a merge,
+# a delete, a compaction) writes only dirs that no committed generation
+# lists, then commits with ONE atomic replace of _manifest.json carrying
+# generation N+1 and the complete live set: the partial shard dirs (the
+# lineage rows' "dir"), the postings dir (postings_dir) and the LIVE_KINDS
+# lists below. Readers resolve only listed dirs, so a crash anywhere
+# before the replace leaves generation N serving exactly as before, and
+# the dirs the crashed op wrote are garbage that the next commit sweeps.
+# Reference analog: Lucene writes new segment files, then one segments_N.
 
-    Returns the removed-count to report: a finished crash recovery must
-    still report what the interrupted dedup removed — returning 0 after
-    recovering a removal would let merge_partials' pure-append guard
-    take the incremental merge and keep ghost rows for terms the
-    recovered consolidation erased (belt; the durable
-    ``dedup_removed_unmerged`` manifest flag is braces). max(1, ...)
-    keeps the guard conservative even for a recovered entry that
-    recorded 0.
+#: live dir lists of the manifest (names relative to the index dir)
+LIVE_KINDS = ("doc_stats", "doc_stats_stream", "term_dict", "tombstones")
 
-    Single-writer guard: if stream shards exist on disk that the
-    journal does not list, someone appended a micro-batch BETWEEN the
-    crash and this recovery (the engine's own entry points all recover
-    BEFORE writing, so this means an out-of-band or concurrent writer).
-    Replaying the journaled doc-stats snapshot would silently erase
-    those batches' doc stats, so fail loudly instead."""
+#: index-dir entries the sweep may delete when no live list names them:
+#: the classic names, versioned postings, and the generation-suffixed
+#: doc-stats, term-dict and tombstone dirs (partial shard dirs are swept
+#: under partials/). `_stream_checkpoint` and the manifest never match.
+_SWEPT_NAME = re.compile(
+    r"postings|postings_v\d+|stats|doc_stats|doc_stats_stream|term_dict"
+    r"|tombstones|(doc_stats|term_dict|tombstones)\w*_g\d+")
+
+
+def _manifest_path(out_dir: str) -> str:
+    return os.path.join(out_dir, "_manifest.json")
+
+
+def load_manifest(out_dir: str) -> dict:
+    """The committed manifest. A manifest written before generations
+    existed opens as generation 0 over the classic dir names."""
+    p = _manifest_path(out_dir)
+    if not os.path.exists(p):
+        return {"generation": 0, "shards": {}, "stats": None,
+                "merged": False, "live": {k: [] for k in LIVE_KINDS}}
+    with open(p) as f:
+        m = json.load(f)
+    if "generation" not in m:
+        m["generation"] = 0
+        m.setdefault("postings_dir", "postings")
+        # each live kind's classic dir has the kind's own name
+        m["live"] = {k: [k] if os.path.isdir(os.path.join(out_dir, k))
+                     else [] for k in LIVE_KINDS}
+        for key, row in m["shards"].items():
+            d = f"shard={key}"
+            row["dir"] = (d if os.path.isdir(os.path.join(
+                out_dir, "partials", d)) else None)
+    return m
+
+
+def _save_manifest(out_dir: str, m: dict) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    tmp = _manifest_path(out_dir) + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(m, f, indent=1, sort_keys=True)
+    os.replace(tmp, _manifest_path(out_dir))
+
+
+def _sweep(out_dir: str, m: dict) -> None:
+    """Delete the engine's dirs that the committed manifest ``m`` does
+    not list. Runs only AFTER a successful commit: swept at an op's
+    start, an in-flight writer's uncommitted dirs would go while that
+    writer could still pass its generation check."""
+    live = {os.path.join("partials", r["dir"])
+            for r in m["shards"].values() if r.get("dir")}
+    live.update(d for k in LIVE_KINDS for d in m["live"][k])
+    live.add(m.get("postings_dir"))
+    names = [n for n in os.listdir(out_dir) if _SWEPT_NAME.fullmatch(n)]
     part_dir = os.path.join(out_dir, "partials")
-    tmp = os.path.join(out_dir, "_stream_dedup_tmp")
-    ds_tmp = os.path.join(out_dir, "_doc_stats_stream_tmp")
-    final = os.path.join(part_dir, "shard=streamdedup")
-    manifest = load_manifest(out_dir)
-    pending = manifest.get("stream_dedup_pending")
-    recoverable = pending and (
-        os.path.exists(os.path.join(tmp, "_SUCCESS"))
-        or os.path.exists(os.path.join(ds_tmp, "_SUCCESS"))
-        or os.path.exists(os.path.join(final, "_SUCCESS"))
-    )
-    if recoverable:
-        listed = set(pending.get("shards") or [])
-        on_disk = (
-            {s for s in os.listdir(part_dir)
-             if s.startswith("shard=stream")}
-            if os.path.isdir(part_dir) else set()
-        )
-        extra = sorted(on_disk - listed - {os.path.basename(final)})
-        if extra:
-            raise RuntimeError(
-                f"stream dedup crash recovery in {out_dir}: stream "
-                f"shards {extra} were written AFTER the interrupted "
-                f"dedup journaled its snapshot — replaying the swap "
-                f"would erase their doc stats. This index has a "
-                f"concurrent or out-of-band writer (the engine's entry "
-                f"points recover pending swaps before writing); move "
-                f"the extra shard dirs aside, finish recovery, then "
-                f"re-ingest them.")
-        _finish_dedup_swap(out_dir, part_dir, tmp, ds_tmp, final,
-                           pending["shards"], pending["n_postings"],
-                           pending["removed"])
-        return max(1, int(pending.get("removed", 0)))
-    if pending:
-        # no recovery artifact at all — unreachable under the
-        # journal-after-write invariant, kept as a defensive fallback:
-        # clear the entry, drop any half-written tmp dirs, and reconcile
-        # lineage against the shard dirs actually on disk so no
-        # status-ok row outlives its directory (ADVICE r2)
-        manifest.pop("stream_dedup_pending", None)
-        _reconcile_stream_lineage(part_dir, manifest)
-        _save_manifest(out_dir, manifest)
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(ds_tmp, ignore_errors=True)
-    return 0
+    if os.path.isdir(part_dir):
+        names += [os.path.join("partials", n) for n in os.listdir(part_dir)
+                  if n.startswith("shard=")]
+    for rel in names:
+        if rel not in live:
+            shutil.rmtree(os.path.join(out_dir, rel), ignore_errors=True)
 
 
-def _recover_compact_pending(out_dir: str) -> None:
-    """Crash recovery for the compaction journaled swap, with the same
-    single-writer guard as _recover_dedup_pending: the compact tmp dirs
-    are whole-table snapshots, so promoting them would silently destroy
-    any shard (and its doc stats) ingested after the crash. Journals
-    written before the guard existed carry no shard list and recover
-    unguarded (their windows predate the guard's entry points)."""
-    manifest = load_manifest(out_dir)
-    pending = manifest.get("compact_pending")
-    if not pending:
-        return
-    listed = pending.get("shards")
-    part_dir = os.path.join(out_dir, "partials")
-    if listed is not None and os.path.isdir(part_dir):
-        on_disk = {s for s in os.listdir(part_dir)
-                   if s.startswith("shard=")}
-        extra = sorted(on_disk - set(listed))
-        if extra:
-            raise RuntimeError(
-                f"compaction crash recovery in {out_dir}: shards "
-                f"{extra} were written AFTER the interrupted compaction "
-                f"snapshotted the partials — promoting the snapshot "
-                f"would destroy them. This index has a concurrent or "
-                f"out-of-band writer; move the extra shard dirs aside, "
-                f"finish recovery, then re-ingest them.")
-    _finish_compact_swap(out_dir)
+def _commit(out_dir: str, m: dict, op: str) -> dict:
+    """Commit ``m`` as generation m["generation"] + 1, then sweep.
+
+    ``m`` carries the generation its op read at its start; if the one
+    on disk differs, another writer committed in between and this op's
+    view is stale: raise and sweep nothing. That check is the whole
+    single-writer guard."""
+    on_disk = load_manifest(out_dir)["generation"]
+    if on_disk != m["generation"]:
+        raise RuntimeError(
+            f"{op} in {out_dir}: the index moved from generation "
+            f"{m['generation']} to {on_disk} while this operation ran "
+            f"(another writer committed); nothing was committed — re-run "
+            f"it against the new generation")
+    m["generation"] += 1
+    _save_manifest(out_dir, m)
+    _sweep(out_dir, m)
+    return m
 
 
-def recover_pending(out_dir: str) -> int:
-    """Finish any journaled swap a crashed dedup/compaction left
-    standing. EVERY mutating entry point (stream ingest, merge,
-    compaction, dedup) calls this first, which is what makes the three
-    swap protocols compose: recovery always replays onto exactly the
-    state its journal describes, never onto state another writer
-    changed in between (the guards above fail loudly if one did).
-    Filesystem + manifest only — no SparkSession needed. Returns the
-    recovered dedup removed-count (0 when nothing was pending)."""
-    _recover_compact_pending(out_dir)
-    return _recover_dedup_pending(out_dir)
+def _new_name(m: dict, name: str) -> str:
+    """``name`` suffixed with the generation the running op commits."""
+    return f"{name}_g{m['generation'] + 1}"
 
 
-def dedup_stream_partials(spark: SparkSession, out_dir: str,
+def _paths(out_dir: str, m: dict, kind: str) -> list[str]:
+    return [os.path.join(out_dir, d) for d in m["live"][kind]]
+
+
+def _partial_paths(out_dir: str, m: dict, stream_only: bool = False):
+    return [os.path.join(out_dir, "partials", r["dir"])
+            for r in m["shards"].values()
+            if r.get("dir") and (r.get("streaming") or not stream_only)]
+
+
+def _read_partials(spark: SparkSession, out_dir: str, m: dict,
+                   stream_only: bool = False) -> DataFrame | None:
+    """The listed partial shard dirs, with their `shard` partition
+    column (None when none is listed)."""
+    paths = _partial_paths(out_dir, m, stream_only)
+    if not paths:
+        return None
+    return spark.read.option(
+        "basePath", os.path.join(out_dir, "partials")).parquet(*paths)
+
+
+def _read_term_dict(spark: SparkSession, out_dir: str, m: dict,
+                    distinct: bool) -> DataFrame:
+    tdict = spark.read.schema(TERM_DICT_SCHEMA).parquet(
+        *_paths(out_dir, m, "term_dict"))
+    return tdict.distinct() if distinct else tdict
+
+
+def stream_batch_dirs(m: dict, batch_id: int) -> dict:
+    """The dirs a stream micro-batch writes: its partial shard (under
+    partials/), its doc-stats rows and its dictionary rows."""
+    tag = _new_name(m, f"stream{batch_id}")
+    return {"partials": f"shard={tag}",
+            "doc_stats_stream": f"doc_stats_{tag}",
+            "term_dict": f"term_dict_{tag}"}
+
+
+def commit_stream_batch(out_dir: str, m: dict, batch_id: int,
+                        dirs: dict) -> dict:
+    """List a written micro-batch (stream_batch_dirs) in one commit. A
+    replayed batch id replaces that batch's listed dirs."""
+    key = f"stream{batch_id}"
+    own = re.compile(rf"\w+_{key}_g\d+")
+    for kind in ("doc_stats_stream", "term_dict"):
+        m["live"][kind] = [d for d in m["live"][kind]
+                           if not own.fullmatch(d)] + [dirs[kind]]
+    m["shards"][key] = {"status": "ok", "streaming": True,
+                        "dir": dirs["partials"]}
+    return _commit(out_dir, m, "stream batch")
+
+
+def dedup_stream_partials(spark: SparkSession, out_dir: str, m: dict,
                           avgdl: float) -> int:
     """Remove duplicate docs from the stream partials before the merge.
 
@@ -784,40 +833,35 @@ def dedup_stream_partials(spark: SparkSession, out_dir: str,
     content update, so a re-drop is treated as idempotent re-ingest —
     and among stream versions the LATEST micro-batch wins.
 
-    Mechanics: decode every stream partial to long posting rows tagged
-    with their micro-batch id, keep max_by(batch) per (tid, doc),
+    Mechanics: decode every listed stream partial to long posting rows
+    tagged with their micro-batch id, keep max_by(batch) per (tid, doc),
     anti-join docs already in the batch doc_stats, re-encode into ONE
-    consolidated `shard=streamdedup` partial (grouped by (tid,
+    consolidated `shard=streamdedup_g<N>` partial (grouped by (tid,
     doc-hash salt) so a hot term's backlog spreads across tasks), and
-    rewrite doc_stats_stream to match. All dedup joins are distributed
-    (semi/anti joins + one grouped re-encode) — no driver-side sets, no
-    broadcasts, so the pass survives arbitrarily large stream backlogs.
-    Returns the number of posting rows removed (0 = nothing to do).
-    """
-    part_dir = os.path.join(out_dir, "partials")
-    tmp = os.path.join(out_dir, "_stream_dedup_tmp")
-    ds_tmp = os.path.join(out_dir, "_doc_stats_stream_tmp")
-    final = os.path.join(part_dir, "shard=streamdedup")
+    write the matching consolidated stream doc stats. All dedup joins
+    are distributed (semi/anti joins + one grouped re-encode) — no
+    driver-side sets, no broadcasts, so the pass survives arbitrarily
+    large stream backlogs.
 
-    recovered_removed = _recover_dedup_pending(out_dir)
-
-    stream_shards = (
-        [s for s in os.listdir(part_dir) if s.startswith("shard=stream")]
-        if os.path.isdir(part_dir) else []
-    )
-    if not stream_shards:
-        return recovered_removed
-
-    sd_path = os.path.join(out_dir, "doc_stats_stream")
-    bp = os.path.join(out_dir, "doc_stats")
-    sd = (spark.read.schema(STREAM_DOC_STATS_SCHEMA).parquet(sd_path)
-          if os.path.exists(sd_path) else None)
+    Nothing is committed here: the new dirs replace the stream entries
+    of the manifest dict ``m`` in place, and the caller (merge_partials)
+    lists them in its own single commit. A crash before that commit
+    leaves the previous generation, and the re-run redoes the dedup and
+    sees the removal again. Returns the number of posting rows removed
+    (0 = nothing to do)."""
+    if not _partial_paths(out_dir, m, stream_only=True):
+        return 0
+    live = m["live"]
+    sd = (spark.read.schema(STREAM_DOC_STATS_SCHEMA).parquet(
+              *_paths(out_dir, m, "doc_stats_stream"))
+          if live["doc_stats_stream"] else None)
     # "batch wins" only applies when batch POSTINGS exist: init_stats
     # writes doc_stats on its own (stream-only ingest runs it just for
     # collection stats), and those docs are not batch-indexed
-    batch_ids = (spark.read.schema(DOC_STATS_SCHEMA).parquet(bp)
+    batch_ids = (spark.read.schema(DOC_STATS_SCHEMA)
+                 .parquet(*_paths(out_dir, m, "doc_stats"))
                  .select("doc_id")
-                 if os.path.exists(bp) and _batch_built(out_dir) else None)
+                 if live["doc_stats"] and _batch_built(m) else None)
     n_dup_batch = 0
     if sd is not None and batch_ids is not None:
         n_dup_batch = (sd.select("doc_id").distinct()
@@ -826,21 +870,21 @@ def dedup_stream_partials(spark: SparkSession, out_dir: str,
     if sd is not None:
         n_within = sd.count() - sd.select("doc_id").distinct().count()
     if n_dup_batch == 0 and n_within == 0:
-        return recovered_removed
+        return 0
 
-    parts = (
-        spark.read.option("basePath", part_dir).parquet(part_dir)
-        .where(F.col("shard").cast("string").startswith("stream"))
+    parts = _read_partials(spark, out_dir, m, stream_only=True)
+    shard = F.col("shard").cast("string")
+    dec = (
         # micro-batch id from the shard dir name; the consolidated
-        # shard ("streamdedup") predates any later re-drop -> -1
-        .withColumn("bid", F.coalesce(
-            F.nullif(F.regexp_extract(F.col("shard").cast("string"),
-                                      r"stream(\d+)", 1), F.lit("")),
+        # shard ("streamdedup_g<N>") predates any later re-drop -> -1
+        parts.withColumn("bid", F.coalesce(
+            F.nullif(F.regexp_extract(shard, r"stream(\d+)", 1),
+                     F.lit("")),
             F.lit("-1")).cast("long"))
         .select("tid", "n_docs", "doc_bytes", "tf_bytes", "dl_bytes",
                 "doc_off", "bid")
+        .mapInPandas(_decode_partials_fn, DECODED_PARTIAL_SCHEMA)
     )
-    dec = parts.mapInPandas(_decode_partials_fn, DECODED_PARTIAL_SCHEMA)
     # "latest micro-batch wins" must hold at the DOCUMENT level, not
     # per (tid, doc): a per-term max_by would keep ghost terms that the
     # winning version no longer contains. Pick each doc's winning batch
@@ -858,27 +902,25 @@ def dedup_stream_partials(spark: SparkSession, out_dir: str,
         kept = kept.join(batch_ids, "doc_id", "left_anti")
     # posting rows before dedup: the partials already store each row's
     # count in n_docs — a columnar agg, not a second full decode pass
-    n_before = int(
-        spark.read.option("basePath", part_dir).parquet(part_dir)
-        .where(F.col("shard").cast("string").startswith("stream"))
-        .agg(F.sum("n_docs")).collect()[0][0] or 0
-    )
+    n_before = int(parts.agg(F.sum("n_docs")).collect()[0][0] or 0)
     # salt the re-encode groups by doc hash: a hot term's entire stream
     # backlog must never materialize in ONE re-encode task (the
     # same single-task hotspot the merge phase's salting exists to
     # prevent). Multiple encoded rows per tid are the partials' normal
     # shape — the merge decodes and regroups them anyway.
     n_groups = 8
-    enc = (
+    shard_dir = f"shard={_new_name(m, 'streamdedup')}"
+    out_path = os.path.join(out_dir, "partials", shard_dir)
+    (
         kept.withColumn(
             "_grp", F.pmod(F.xxhash64("doc_id"), F.lit(n_groups)))
         .repartition("tid", "_grp")
         .mapInArrow(_reencode_partition_arrow_fn(avgdl, ("tid", "_grp")),
                     STREAM_ENC_SCHEMA)
+        .write.mode("overwrite").parquet(out_path)
     )
-    enc.write.mode("overwrite").parquet(tmp)
     n_after = int(
-        spark.read.schema(STREAM_ENC_SCHEMA).parquet(tmp)
+        spark.read.schema(STREAM_ENC_SCHEMA).parquet(out_path)
         .agg(F.sum("n_docs")).collect()[0][0] or 0
     )
 
@@ -895,124 +937,18 @@ def dedup_stream_partials(spark: SparkSession, out_dir: str,
         )
         if batch_ids is not None:
             ds_new = ds_new.join(batch_ids, "doc_id", "left_anti")
-        ds_new.write.mode("overwrite").parquet(ds_tmp)
+        ds_name = _new_name(m, "doc_stats_streamdedup")
+        ds_new.write.mode("overwrite").parquet(os.path.join(out_dir, ds_name))
+        live["doc_stats_stream"] = [ds_name]
 
-    # journal THEN swap: once the journal entry is durable, any crash
-    # inside the rmtree/rename sequence is finished by the recovery
-    # branch above (the consolidated tmp supersedes every listed shard,
-    # so re-deleting/renaming is idempotent)
     removed = int(n_before - n_after)
-    manifest = load_manifest(out_dir)
-    manifest["stream_dedup_pending"] = {
-        "shards": stream_shards, "n_postings": n_after, "removed": removed,
+    for key in [k for k, r in m["shards"].items() if r.get("streaming")]:
+        del m["shards"][key]
+    m["shards"]["streamdedup"] = {
+        "status": "ok", "streaming": True, "dir": shard_dir,
+        "n_postings": n_after, "dedup_removed": removed,
     }
-    _save_manifest(out_dir, manifest)
-    _finish_dedup_swap(out_dir, part_dir, tmp, ds_tmp, final,
-                       stream_shards, n_after, removed)
-    return removed + recovered_removed
-
-
-def _finish_dedup_swap(out_dir: str, part_dir: str, tmp: str, ds_tmp: str,
-                       final: str, shards: list[str], n_postings: int,
-                       removed: int) -> None:
-    """The (re-runnable) second half of dedup_stream_partials: promote
-    the consolidated doc stats, delete superseded stream shards, promote
-    the consolidated partial, update lineage, clear the journal entry.
-
-    Ordering is load-bearing for crash safety (ADVICE r2): the
-    doc-stats swap runs FIRST, while tmp/_SUCCESS still exists, so the
-    recovery marker stays alive through its destructive
-    rmtree(doc_stats_stream)+rename window — a crash inside it re-enters
-    this function (via tmp) and re-runs the swap from ds_tmp. The
-    tmp->final rename is the LAST destructive step; once it has
-    happened, the listed old consolidated shard (a previous dedup's
-    shard=streamdedup) IS the new output, so recovery excludes it from
-    the re-delete list."""
-    tmp_done = os.path.exists(os.path.join(tmp, "_SUCCESS"))
-    if os.path.exists(os.path.join(ds_tmp, "_SUCCESS")):
-        shutil.rmtree(os.path.join(out_dir, "doc_stats_stream"),
-                      ignore_errors=True)
-        os.rename(ds_tmp, os.path.join(out_dir, "doc_stats_stream"))
-    final_name = os.path.basename(final)
-    for s in shards:
-        if not tmp_done and s == final_name:
-            continue  # recovering after the rename: this IS the output
-        shutil.rmtree(os.path.join(part_dir, s), ignore_errors=True)
-    if tmp_done:
-        os.rename(tmp, final)
-    manifest = load_manifest(out_dir)
-    for s in shards:
-        manifest["shards"].pop(s.split("=", 1)[1], None)
-    manifest["shards"]["streamdedup"] = {
-        "status": "ok", "streaming": True,
-        "n_postings": n_postings,
-        "dedup_removed": removed,
-    }
-    if removed > 0:
-        # durable ghost guard: a removal may have ERASED a term from
-        # the stream partials; until a FULL merge re-baselines, the
-        # incremental path must not run (its touched-tid set cannot see
-        # an absence). The in-call return value covers the normal flow;
-        # this flag covers every crash/recovery interleaving — a dedup
-        # recovered by another entry point (ingest, compaction), or a
-        # merge that crashed after this swap completed — where the
-        # count would otherwise be lost before the next merge reads it.
-        manifest["dedup_removed_unmerged"] = int(
-            manifest.get("dedup_removed_unmerged", 0)) + int(removed)
-    manifest.pop("stream_dedup_pending", None)
-    _reconcile_stream_lineage(part_dir, manifest)
-    _save_manifest(out_dir, manifest)
-
-
-def _reconcile_stream_lineage(part_dir: str, manifest: dict) -> None:
-    """Drop lineage rows for stream shard dirs no longer on disk. A
-    crash between a shard rmtree and the manifest update would otherwise
-    leave a status-ok row for a deleted directory forever — re-dedup
-    only lists directories actually present, so nothing else would ever
-    clean the row up (ADVICE r2). Batch shards are exempt: a batch
-    shard that received no docs legitimately has a row but no dir."""
-    for key, row in list(manifest["shards"].items()):
-        if row.get("streaming") and not os.path.isdir(
-                os.path.join(part_dir, f"shard={key}")):
-            manifest["shards"].pop(key)
-
-
-def _manifest_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "_manifest.json")
-
-
-def load_manifest(out_dir: str) -> dict:
-    p = _manifest_path(out_dir)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {"shards": {}, "stats": None, "merged": False}
-
-
-def _save_manifest(out_dir: str, m: dict) -> None:
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = _manifest_path(out_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(m, f, indent=1, sort_keys=True)
-    os.replace(tmp, _manifest_path(out_dir))
-
-
-def _write_stats_parquet(out_dir: str, n_docs: int, avgdl: float) -> None:
-    """Write the 1-row stats/ table driver-side with pyarrow (round 6:
-    a Spark write of a 1-row local relation is a full job at the
-    ~0.3 s action floor; the bytes are identical for readers —
-    spark.read.parquet infers the same long/double schema)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    st_path = os.path.join(out_dir, "stats")
-    shutil.rmtree(st_path, ignore_errors=True)
-    os.makedirs(st_path, exist_ok=True)
-    pq.write_table(
-        pa.table({"n_docs": pa.array([int(n_docs)], type=pa.int64()),
-                  "avgdl": pa.array([float(avgdl)], type=pa.float64())}),
-        os.path.join(st_path, "part-00000.parquet"),
-    )
+    return removed
 
 
 def _tokenized_projection(corpus: DataFrame, id_col: str, text_col: str):
@@ -1081,16 +1017,19 @@ def _write_term_dict_checked(spark: SparkSession, tokenized: DataFrame,
     return n_terms
 
 
-def _finalize_stats(out_dir: str, manifest: dict, n_docs: int,
-                    avgdl: float, n_tokens: int, n_terms: int) -> dict:
-    """Durable stats checkpoint: written ONLY once doc_stats, the
-    term dictionary AND the collision check are all complete, so
-    `manifest['stats'] is not None` keeps implying every init output
-    exists (the resume contract)."""
-    _write_stats_parquet(out_dir, n_docs, avgdl)
+def _finalize_stats(manifest: dict, n_docs: int, avgdl: float,
+                    n_tokens: int, n_terms: int) -> dict:
+    """Stats checkpoint, set ONLY once doc_stats, the term dictionary
+    AND the collision check are all complete, and committed in the same
+    flip that lists those two dirs — so `manifest['stats'] is not None`
+    keeps implying every init output exists (the resume contract).
+    Stream dictionary dirs listed before it stay listed."""
     manifest["stats"] = {"n_docs": n_docs, "avgdl": avgdl,
                          "n_tokens": n_tokens, "n_terms": n_terms}
-    _save_manifest(out_dir, manifest)
+    live = manifest["live"]
+    live["doc_stats"] = ["doc_stats"]
+    live["term_dict"] = ["term_dict"] + [
+        d for d in live["term_dict"] if d != "term_dict"]
     return manifest
 
 
@@ -1100,32 +1039,25 @@ def init_stats(
     out_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    _keep_tokenized: bool = False,
 ) -> dict:
-    """Write doc_stats + collection stats (idempotent; its own
-    checkpoint in the manifest). Returns the manifest.
-
-    _keep_tokenized (build_index internal): return
-    (manifest, tokenized_df-or-None) instead, with the persisted
-    (doc_id, dl, content_sha, tokens) projection still live so the
-    encode stage can read the already-tokenized corpus instead of
-    re-scanning + re-tokenizing the raw input (round 6 — the build
-    paid the tokenize pass twice). None when the stats checkpoint
-    already existed (resume: the persist was never created)."""
+    """Write doc_stats + the term dictionary and commit the collection
+    stats (idempotent; its own checkpoint in the manifest). Returns the
+    manifest."""
     manifest = load_manifest(out_dir)
     if manifest["stats"] is not None:
-        return (manifest, None) if _keep_tokenized else manifest
+        return manifest
     from pyspark import StorageLevel
 
     tokenized = _tokenized_projection(corpus, id_col, text_col).persist(
         StorageLevel.DISK_ONLY)
-    n_docs, avgdl, n_tokens = _write_doc_stats_observed(tokenized, out_dir)
-    n_terms = _write_term_dict_checked(spark, tokenized, out_dir)
-    if not _keep_tokenized:
+    try:
+        n_docs, avgdl, n_tokens = _write_doc_stats_observed(tokenized,
+                                                            out_dir)
+        n_terms = _write_term_dict_checked(spark, tokenized, out_dir)
+    finally:
         tokenized.unpersist()
-    manifest = _finalize_stats(out_dir, manifest, n_docs, avgdl,
-                               n_tokens, n_terms)
-    return (manifest, tokenized) if _keep_tokenized else manifest
+    _finalize_stats(manifest, n_docs, avgdl, n_tokens, n_terms)
+    return _commit(out_dir, manifest, "stats")
 
 
 def raw_token_projection(docs: DataFrame, n_shards: int,
@@ -1204,10 +1136,10 @@ def build_index(
     # — independent jobs back-fill executors; both only read the
     # shared tokenized persist, which the doc_stats write has already
     # materialized, and they write disjoint directories). The stats
-    # checkpoint is finalized only after BOTH the dictionary thread
-    # and (implicitly) doc_stats complete, so `manifest['stats'] is
-    # not None` keeps implying every init output exists; a crash
-    # mid-encode re-runs init idempotently on resume.
+    # checkpoint is committed with the FIRST shard batch, after the
+    # dictionary thread joins, so `manifest['stats'] is not None` keeps
+    # implying every init output exists; a crash mid-encode re-runs
+    # init idempotently on resume.
     manifest = load_manifest(out_dir)
     tokenized = None
     dict_pool = dict_future = pending_stats = None
@@ -1324,15 +1256,21 @@ def build_index(
                     "wall_ms": wall_ms,
                     "batch": [int(b) for b in batch],
                     "status": "ok",
+                    # a shard that received no docs writes no dir
+                    "dir": f"shard={s}" if r and r[0] else None,
                 }
-            _save_manifest(out_dir, manifest)
+            if dict_future is not None:
+                # join the overlapped dictionary/collision thread
+                # (raises here on a tid collision, exactly like the
+                # sequential init did); the first commit lists the
+                # init outputs with the batch
+                _finalize_stats(manifest, *pending_stats,
+                                dict_future.result())
+                dict_future = None
+            manifest = _commit(out_dir, manifest, "shards")
         if dict_future is not None:
-            # join the overlapped dictionary/collision thread, then
-            # make the stats checkpoint durable (raises here on a tid
-            # collision, exactly like the sequential init did)
-            n_terms = dict_future.result()
-            manifest = _finalize_stats(out_dir, manifest, *pending_stats,
-                                       n_terms)
+            _finalize_stats(manifest, *pending_stats, dict_future.result())
+            manifest = _commit(out_dir, manifest, "stats")
     finally:
         if dict_pool is not None:
             dict_pool.shutdown(wait=True)
@@ -1343,43 +1281,44 @@ def build_index(
                           pb_mod=pb_mod)
 
 
-def _batch_built(out_dir: str) -> bool:
+def _batch_built(m: dict) -> bool:
     """True when at least one NON-streaming shard completed — i.e. the
     batch build phase actually encoded postings (not just init_stats)."""
-    m = load_manifest(out_dir)
     return any(
         s.get("status") == "ok" and not s.get("streaming")
         for s in m["shards"].values()
     )
 
 
-def _dedup_doc_stats(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Union batch + stream doc stats, one row per doc under the
-    dedup_stream_partials precedence: the batch version wins when batch
-    postings exist (else the stream version is the indexed one), then
-    the latest stream micro-batch. One grouped max_by — no window."""
-    bp = os.path.join(out_dir, "doc_stats")
-    sp = os.path.join(out_dir, "doc_stats_stream")
+def _dedup_doc_stats(spark: SparkSession, out_dir: str,
+                     m: dict | None = None) -> DataFrame:
+    """Union the listed batch + stream doc stats, one row per doc under
+    the dedup_stream_partials precedence: the batch version wins when
+    batch postings exist (else the stream version is the indexed one),
+    then the latest stream micro-batch. One grouped max_by — no
+    window. ``m``: the manifest (default: the committed one)."""
+    m = m if m is not None else load_manifest(out_dir)
     parts = []
-    if os.path.exists(bp):
+    if m["live"]["doc_stats"]:
         parts.append(
-            spark.read.schema(DOC_STATS_SCHEMA).parquet(bp).select(
+            spark.read.schema(DOC_STATS_SCHEMA)
+            .parquet(*_paths(out_dir, m, "doc_stats")).select(
                 "doc_id", "dl", "content_sha",
-                F.lit(1 if _batch_built(out_dir) else 0).alias("_pri"),
+                F.lit(1 if _batch_built(m) else 0).alias("_pri"),
                 F.lit(-1).cast("long").alias("_bid"))
         )
-    if os.path.exists(sp):
+    if m["live"]["doc_stats_stream"]:
         # forced schema: old layouts without batch_id read it as null
-        d = spark.read.schema(STREAM_DOC_STATS_SCHEMA).parquet(sp)
+        d = spark.read.schema(STREAM_DOC_STATS_SCHEMA).parquet(
+            *_paths(out_dir, m, "doc_stats_stream"))
         bid = F.coalesce(F.col("batch_id").cast("long"),
                          F.lit(-1).cast("long"))
         parts.append(d.select("doc_id", "dl", "content_sha",
                               F.lit(0).alias("_pri"), bid.alias("_bid")))
     if not parts:
         raise FileNotFoundError(
-            f"no index at {out_dir}: neither doc_stats nor "
-            f"doc_stats_stream exists (wrong path, or the build died "
-            f"before init_stats)")
+            f"no index at {out_dir}: its manifest lists no doc stats "
+            f"(wrong path, or the build died before init_stats)")
     u = parts[0]
     for p in parts[1:]:
         u = u.unionAll(p)
@@ -1392,20 +1331,17 @@ def _dedup_doc_stats(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def refresh_stats(spark: SparkSession, out_dir: str, manifest: dict) -> dict:
-    """Recompute n_docs/avgdl from batch + streamed doc stats (one row
-    per doc under the batch-wins precedence) and rewrite stats/ + the
-    manifest. Called at merge time so streamed docs enter the collection
-    statistics BM25 idf/avgdl reads."""
+    """Recompute n_docs/avgdl in ``manifest`` (uncommitted) from its
+    listed batch + stream doc stats, one row per doc under the
+    batch-wins precedence. Called at merge time so streamed docs enter
+    the collection statistics BM25 idf/avgdl reads."""
     n_docs, avgdl = (
-        _dedup_doc_stats(spark, out_dir)
+        _dedup_doc_stats(spark, out_dir, manifest)
         .agg(F.count(F.lit(1)), F.avg("dl"))
         .collect()[0]
     )
-    avgdl = float(avgdl or 0.0)
-    _write_stats_parquet(out_dir, int(n_docs), avgdl)
     manifest["stats"]["n_docs"] = int(n_docs)
-    manifest["stats"]["avgdl"] = avgdl
-    _save_manifest(out_dir, manifest)
+    manifest["stats"]["avgdl"] = float(avgdl or 0.0)
     return manifest
 
 
@@ -1417,15 +1353,16 @@ def merge_plan(
     n_salts: int = 8,
     only_tids: DataFrame | None = None,
     dict_distinct: bool = True,
+    manifest: dict | None = None,
 ) -> DataFrame:
     """The merge dataflow as an unexecuted DataFrame (separated so plan
     tests can assert its physical shape — no broadcast of per-term
     tables). only_tids (a (tid) DataFrame) restricts the merge to those
     terms — the incremental path's re-merge set; df is still computed
-    from ALL partials of each kept tid, so it equals the full merge's."""
-    partials = spark.read.option(
-        "basePath", os.path.join(out_dir, "partials")
-    ).parquet(os.path.join(out_dir, "partials"))
+    from ALL partials of each kept tid, so it equals the full merge's.
+    manifest: whose listed dirs to merge (default: the committed one)."""
+    m = manifest if manifest is not None else load_manifest(out_dir)
+    partials = _read_partials(spark, out_dir, m)
     if only_tids is not None:
         partials = partials.join(only_tids, "tid", "left_semi")
     dfs = partials.groupBy("tid").agg(F.sum("n_docs").alias("df"))
@@ -1454,12 +1391,9 @@ def merge_plan(
         .repartition("tid", "msalt")
         .mapInArrow(_merge_partition_arrow_fn(avgdl), TID_MERGED_SCHEMA)
     )
-    # distinct: streaming batches append (possibly repeated) dict rows
+    # distinct: streaming batches add (possibly repeated) dict rows
     # — skipped for never-streamed indexes (see merge_onepass_plan)
-    tdict = spark.read.schema(TERM_DICT_SCHEMA).parquet(
-        os.path.join(out_dir, "term_dict"))
-    if dict_distinct:
-        tdict = tdict.distinct()
+    tdict = _read_term_dict(spark, out_dir, m, dict_distinct)
     return merged.join(dfs, "tid").join(tdict, "tid").select(
         *SERVING_COLUMNS)
 
@@ -1504,22 +1438,9 @@ def _pb_col(pb_mod: int):
 
 
 def _postings_dir(out_dir: str, manifest: dict | None = None) -> str:
-    """The CURRENT postings dir: the manifest pointer (incremental
-    merges write versioned dirs and flip it atomically), defaulting to
-    the classic `postings`."""
+    """The listed postings dir (default: of the committed manifest)."""
     m = manifest if manifest is not None else load_manifest(out_dir)
     return os.path.join(out_dir, m.get("postings_dir", "postings"))
-
-
-def _clean_stale_postings(out_dir: str, manifest: dict) -> None:
-    """Delete versioned postings dirs that are not the current pointer
-    (leftovers of an interrupted incremental merge — the pointer flip
-    is the atomic commit, so a non-pointer dir is garbage)."""
-    keep = os.path.basename(_postings_dir(out_dir, manifest))
-    for name in os.listdir(out_dir):
-        if name != keep and (name == "postings"
-                             or name.startswith("postings_v")):
-            shutil.rmtree(os.path.join(out_dir, name), ignore_errors=True)
 
 
 def _batch_shard_keys(manifest: dict) -> list[str]:
@@ -1537,10 +1458,12 @@ def merge_partials(
     incremental_max_touched_frac: float = 0.2,
     pb_mod: int | str = "auto",
 ) -> dict:
-    """Merge all partial shards (batch- or stream-written) into the
-    final postings table with explicit hot-term salt splitting. Safe to
-    re-run. Refreshes n_docs/avgdl first (streamed docs enter collection
-    stats).
+    """Merge all listed partial shards (batch- or stream-written) into
+    the final postings table with explicit hot-term salt splitting, and
+    commit it in ONE manifest flip together with the refreshed
+    n_docs/avgdl (streamed docs enter collection stats) and the stream
+    dedup's consolidated dirs (dedup_stream_partials). Safe to re-run:
+    a crash before the flip leaves the previous generation serving.
 
     Re-merge cost (round-2 judge item 9): a FULL merge decodes and
     re-encodes every partial with the refreshed avgdl — correct, but at
@@ -1552,8 +1475,8 @@ def merge_partials(
     present in stream partials are re-merged (from all their partials,
     at the OLD encode avgdl so the table stays homogeneous), only the
     tid-BUCKETS those terms hash into are rewritten, and every
-    untouched bucket dir is hardlinked into a versioned dir committed
-    by an atomic manifest-pointer flip (_incremental_merge).
+    untouched bucket dir is hardlinked into a new versioned dir
+    (_incremental_merge).
     Safety: stored block-max bounds are upper bounds for the avgdl they
     were encoded at; serving re-validates them against the CURRENT
     avgdl by inflating with max(1, serving/encode) (csearch docstring
@@ -1581,73 +1504,65 @@ def merge_partials(
     scale. The incremental path still scans every partial file for the
     touched-tid semi-join; at north-star scale partials would be
     bucketed by tid so that scan prunes too."""
+    manifest = load_manifest(out_dir)
+    _merge(spark, out_dir, manifest, hot_df_threshold, n_salts,
+           incremental, max_bound_drift, incremental_max_touched_frac,
+           pb_mod, refresh=bool(manifest["live"]["doc_stats_stream"]))
+    return _commit(out_dir, manifest, "merge")
+
+
+def _merge(spark: SparkSession, out_dir: str, manifest: dict,
+           hot_df_threshold: int, n_salts: int, incremental: bool | str,
+           max_bound_drift: float, incremental_max_touched_frac: float,
+           pb_mod: int | str, refresh: bool) -> dict:
+    """merge_partials' work over the manifest dict ``manifest``: write
+    a new postings version from its listed dirs and record it in the
+    dict, uncommitted (compact_tombstones merges its filtered dirs the
+    same way before its one commit). refresh: recompute n_docs/avgdl
+    from the listed doc stats first."""
     import math
 
-    # finish any journaled swap FIRST: refresh_stats below reads
-    # doc_stats_stream, which a crashed dedup/compaction may have left
-    # mid-swap (even rmtree'd). The recovery's removed-count accounting
-    # survives through the durable dedup_removed_unmerged flag, so the
-    # pure-append guard stays correct even though dedup_stream_partials
-    # later finds nothing pending.
-    recover_pending(out_dir)
-    manifest = load_manifest(out_dir)
-    if os.path.exists(os.path.join(out_dir, "doc_stats_stream")):
-        manifest = refresh_stats(spark, out_dir, manifest)
+    if refresh:
+        refresh_stats(spark, out_dir, manifest)
     avgdl = manifest["stats"]["avgdl"]
     pb_mod = _resolve_pb_mod(pb_mod, manifest["stats"]["n_docs"],
                              manifest["stats"].get("n_terms"))
     enc_prev = manifest.get("encode_avgdl")
     batch_keys_prev = manifest.get("merged_batch_shards")
     # stats above and the dedup below apply the SAME precedence, so the
-    # already-refreshed n_docs/avgdl stay valid after the rewrite.
-    # ALWAYS reload after it: even a 0-removed call may have finished a
-    # journaled crash recovery that rewrote the lineage — saving a stale
-    # in-memory manifest at the end of the merge would resurrect it
-    dedup_removed = dedup_stream_partials(spark, out_dir, enc_prev or avgdl)
-    manifest = load_manifest(out_dir)
+    # already-refreshed n_docs/avgdl stay valid after the rewrite
+    dedup_removed = dedup_stream_partials(spark, out_dir, manifest,
+                                          enc_prev or avgdl)
     t0 = time.time()
-    part_root = os.path.join(out_dir, "partials")
-    has_partials = os.path.isdir(part_root) and any(
-        s.startswith("shard=") for s in os.listdir(part_root))
-    if not has_partials:
-        # empty corpus: no partial was ever written (the dir may exist
-        # but hold no shard subdirs) — materialize an empty postings
-        # table with the serving schema so read_index / search over a
-        # 0-doc index work instead of failing schema inference
+    ver = int(manifest.get("postings_version", 0)) + 1
+    new_name = f"postings_v{ver}"
+    new_dir = os.path.join(out_dir, new_name)
+    stream_dirs = sorted(r["dir"] for r in manifest["shards"].values()
+                         if r.get("streaming") and r.get("dir"))
+    if not _partial_paths(out_dir, manifest):
+        # empty corpus: no partial was ever written — materialize an
+        # empty postings table with the serving schema so read_index /
+        # search over a 0-doc index work instead of failing schema
+        # inference
         fields = ([StructField("term", StringType(), False)]
                   + [f for f in TID_MERGED_SCHEMA.fields if f.name != "salt"]
                   + [StructField("salt", IntegerType(), False),
                      StructField("df", LongType(), False),
                      StructField("pb", IntegerType(), False)])
-        ver = int(manifest.get("postings_version", 0)) + 1
-        new_name = f"postings_v{ver}"
         spark.createDataFrame([], StructType(fields)).select(
             *SERVING_COLUMNS, "pb",
-        ).write.mode("overwrite").parquet(os.path.join(out_dir, new_name))
-        manifest["merged"] = True
-        manifest["postings_dir"] = new_name
-        manifest["postings_version"] = ver
-        manifest["encode_avgdl"] = avgdl
-        manifest["impact_ranks"] = list(IMPACT_RANKS)
-        manifest["pb_mod"] = pb_mod
-        manifest["merged_batch_shards"] = _batch_shard_keys(manifest)
-        manifest["merged_stream_shards"] = []
-        manifest.pop("dedup_removed_unmerged", None)
-        manifest["merge_wall_ms"] = int((time.time() - t0) * 1000)
-        _save_manifest(out_dir, manifest)
-        _clean_stale_postings(out_dir, manifest)
-        return manifest
+        ).write.mode("overwrite").parquet(new_dir)
+        return _set_merged(manifest, new_name, ver, avgdl, pb_mod,
+                           stream_dirs, "full", t0)
 
-    stream_shards = [s for s in os.listdir(part_root)
-                     if s.startswith("shard=stream")]
     # retire already-merged stream shards from the touched set: the
-    # manifest records which stream shards the CURRENT postings version
-    # reflects, so each incremental merge's data movement tracks the
-    # NEW micro-batches, not every term ever streamed (without this the
-    # touched set grows monotonically and the economic guard eventually
-    # forces full merges forever)
+    # manifest records which stream shard dirs the CURRENT postings
+    # version reflects, so each incremental merge's data movement tracks
+    # the NEW micro-batches, not every term ever streamed (without this
+    # the touched set grows monotonically and the economic guard
+    # eventually forces full merges forever)
     merged_prev = set(manifest.get("merged_stream_shards") or [])
-    new_stream = [s for s in stream_shards if s not in merged_prev]
+    new_stream = [s for s in stream_dirs if s not in merged_prev]
     drift_ok = (
         enc_prev and enc_prev > 0 and avgdl > 0
         and abs(math.log(avgdl / enc_prev)) <= math.log1p(max_bound_drift)
@@ -1657,16 +1572,14 @@ def merge_partials(
         and manifest.get("merged")
         and drift_ok
         and batch_keys_prev == _batch_shard_keys(manifest)
-        and stream_shards
+        and stream_dirs
         # pure-append only: a dedup that removed rows may have ERASED a
         # term from the stream partials entirely (content re-drop), and
         # the touched-tid set can't see an absence — the standing row
         # would survive as a ghost. Re-baseline with a full merge then.
-        # dedup_removed covers this call's dedup; the durable manifest
-        # flag covers a removal whose merge never completed (recovered
-        # by another entry point, or a crash after the dedup swap)
+        # The dedup commits with this merge, so a crashed merge's
+        # removal is redone (and seen here) by its re-run.
         and dedup_removed == 0
-        and not manifest.get("dedup_removed_unmerged")
         # bucket-level partial rewrite needs the bucketed layout (and
         # the same fan-out); a pre-bucketing index re-baselines fully
         and manifest.get("pb_mod") == pb_mod
@@ -1675,7 +1588,6 @@ def merge_partials(
         and manifest.get("impact_ranks") == list(IMPACT_RANKS)
         and os.path.isdir(_postings_dir(out_dir, manifest))
     )
-    touched_df = None
     if go_incremental:
         # the touched-tid set is built (and cached) ONCE and shared by
         # the economic guard's count and the incremental merge itself —
@@ -1683,82 +1595,62 @@ def merge_partials(
         # Only NEW stream shards contribute (retirement above); each
         # touched tid is still re-merged from ALL its partials, so df
         # and salting match a full merge.
+        shard_dir = F.concat(F.lit("shard="), F.col("shard").cast("string"))
         touched_df = (
-            spark.read.option("basePath", part_root).parquet(part_root)
-            .where(F.col("shard").cast("string").isin(
-                [s.split("=", 1)[1] for s in new_stream]))
+            _read_partials(spark, out_dir, manifest, stream_only=True)
+            .where(shard_dir.isin(new_stream))
             .select("tid").distinct().cache()
         )
     if go_incremental and incremental == "auto":
         # economic guard (incremental=True skips it; the correctness
         # guards above always apply)
         touched_n = touched_df.count()
-        total_n = (
-            spark.read.schema(TERM_DICT_SCHEMA)
-            .parquet(os.path.join(out_dir, "term_dict"))
-            .select("tid").distinct().count()
-        )
+        total_n = (_read_term_dict(spark, out_dir, manifest, False)
+                   .select("tid").distinct().count())
         if total_n == 0 or touched_n / total_n > incremental_max_touched_frac:
             go_incremental = False
             touched_df.unpersist()
-            touched_df = None
     if go_incremental:
-        manifest = _incremental_merge(
-            spark, out_dir, manifest, float(enc_prev),
-            hot_df_threshold, n_salts, pb_mod, touched_df)
-        manifest["merged_stream_shards"] = sorted(stream_shards)
-        manifest["merge_wall_ms"] = int((time.time() - t0) * 1000)
-        manifest["last_merge"] = "incremental"
-        _save_manifest(out_dir, manifest)
-        return manifest
+        _incremental_merge(spark, out_dir, manifest, new_dir,
+                           float(enc_prev), hot_df_threshold, n_salts,
+                           pb_mod, touched_df)
+        return _set_merged(manifest, new_name, ver, float(enc_prev),
+                           pb_mod, stream_dirs, "incremental", t0)
 
-    # Versioned dir + manifest pointer flip, like the incremental path:
-    # a plain overwrite of the live table is delete-then-write, so a
-    # crash mid-merge would leave the pointer aimed at a half-written
-    # dir and every reader failing until a rebuild — here the standing
-    # version serves until the flip, and a crash leaves only a garbage
-    # dir that _clean_stale_postings sweeps. Rows are term-sorted
-    # within each pb partition (row-group min/max stats serve the term
-    # IN pushdown inside the surviving partitions).
-    ver = int(manifest.get("postings_version", 0)) + 1
-    new_name = f"postings_v{ver}"
-    new_dir = os.path.join(out_dir, new_name)
-    shutil.rmtree(new_dir, ignore_errors=True)
-    # dictionary duplicates can only exist once ANY stream micro-batch
-    # appended dict rows (streaming.start_incremental_index appends per
-    # batch; init_stats writes distinct); belt-and-braces durable
-    # signals so a retired/deduped stream history still counts
-    ever_streamed = (
-        bool(stream_shards)
-        or bool(manifest.get("merged_stream_shards"))
-        or any(v.get("streaming") for v in manifest["shards"].values())
-        or os.path.exists(os.path.join(out_dir, "doc_stats_stream"))
-    )
+    # dictionary duplicates can only exist once a stream micro-batch
+    # added dict rows (init_stats writes the dictionary distinct)
+    ever_streamed = manifest["live"]["term_dict"] != ["term_dict"]
     # one payload exchange total; rows already live in their pb's
-    # partition, so the partitioned write needs no repartition
+    # partition, so the partitioned write needs no repartition. Rows
+    # are term-sorted within each pb partition (row-group min/max
+    # stats serve the term IN pushdown inside the surviving partitions)
     out = merge_onepass_plan(spark, out_dir, avgdl, pb_mod,
                              chunk_postings=hot_df_threshold,
-                             dict_distinct=ever_streamed)
+                             dict_distinct=ever_streamed,
+                             manifest=manifest)
     (
         out.sortWithinPartitions("pb", "term")
         .write.mode("overwrite").partitionBy("pb")
         .parquet(new_dir)
     )
-    manifest["merged"] = True
-    manifest["postings_dir"] = new_name
-    manifest["postings_version"] = ver
-    manifest["encode_avgdl"] = avgdl
-    manifest["impact_ranks"] = list(IMPACT_RANKS)
-    manifest["pb_mod"] = pb_mod
-    manifest["merged_batch_shards"] = _batch_shard_keys(manifest)
-    manifest["merged_stream_shards"] = sorted(stream_shards)
-    # a full merge re-baselines: every erased term is re-derived from
-    # the partials, so the durable ghost guard clears
-    manifest.pop("dedup_removed_unmerged", None)
-    manifest["last_merge"] = "full"
-    manifest["merge_wall_ms"] = int((time.time() - t0) * 1000)
-    _save_manifest(out_dir, manifest)
-    _clean_stale_postings(out_dir, manifest)
+    return _set_merged(manifest, new_name, ver, avgdl, pb_mod, stream_dirs,
+                       "full", t0)
+
+
+def _set_merged(manifest: dict, new_name: str, ver: int, enc_avgdl: float,
+                pb_mod: int, stream_dirs: list, kind: str,
+                t0: float) -> dict:
+    """Record a written postings version in the (uncommitted) dict.
+    enc_avgdl: the avgdl its block-max bounds were encoded at (an
+    incremental merge keeps the standing baseline)."""
+    manifest.update({
+        "merged": True, "postings_dir": new_name, "postings_version": ver,
+        "encode_avgdl": enc_avgdl, "impact_ranks": list(IMPACT_RANKS),
+        "pb_mod": pb_mod,
+        "merged_batch_shards": _batch_shard_keys(manifest),
+        "merged_stream_shards": stream_dirs, "last_merge": kind,
+        "merge_wall_ms": int((time.time() - t0) * 1000),
+    })
     return manifest
 
 
@@ -1766,43 +1658,39 @@ def _incremental_merge(
     spark: SparkSession,
     out_dir: str,
     manifest: dict,
+    new_dir: str,
     enc_avgdl: float,
     hot_df_threshold: int,
     n_salts: int,
     pb_mod: int,
     touched: DataFrame,
-) -> dict:
-    """Bucket-level partial rewrite: re-merge ONLY the tids that appear
-    in stream partials (each from ALL its partials, so df and salting
-    match what a full merge would produce for that tid), rewrite ONLY
-    the tid-buckets those terms hash into (touched-bucket rows =
-    untouched old rows of the bucket + the re-merged rows), and
-    HARDLINK every untouched bucket dir from the standing table into
-    the new version — data movement is proportional to touched buckets,
-    not table size (on object storage this linking step is a manifest
-    rewrite; Iceberg snapshots work the same way). New rows are encoded
-    at the OLD encode-avgdl, keeping the table's bound baseline
-    homogeneous — the serving-time inflation factor covers the
-    (bounded) drift. Commit = the atomic manifest-pointer flip; a crash
-    before it leaves only a garbage dir that the next merge sweeps, and
-    hardlinks mean deleting the old version never touches the new one's
-    shared files."""
+) -> None:
+    """Bucket-level partial rewrite into ``new_dir``: re-merge ONLY the
+    tids that appear in new stream partials (each from ALL its
+    partials, so df and salting match what a full merge would produce
+    for that tid), rewrite ONLY the tid-buckets those terms hash into
+    (touched-bucket rows = untouched old rows of the bucket + the
+    re-merged rows), and HARDLINK every untouched bucket dir from the
+    standing table into the new version — data movement is proportional
+    to touched buckets, not table size (on object storage this linking
+    step is a manifest rewrite; Iceberg snapshots work the same way).
+    New rows are encoded at the OLD encode-avgdl, keeping the table's
+    bound baseline homogeneous — the serving-time inflation factor
+    covers the (bounded) drift. Hardlinks mean sweeping the old version
+    after the commit never touches the new one's shared files."""
     old_dir = _postings_dir(out_dir, manifest)
     touched_pbs = sorted(
         r.pb for r in touched.select(_pb_col(pb_mod)).distinct().collect()
     )
     new_rows = merge_plan(spark, out_dir, enc_avgdl, hot_df_threshold,
-                          n_salts, only_tids=touched).withColumn(
+                          n_salts, only_tids=touched,
+                          manifest=manifest).withColumn(
         "pb", _pb_col(pb_mod))
     old = spark.read.parquet(old_dir)
     keep_old = (
         old.where(F.col("pb").isin(touched_pbs))
         .join(touched, "tid", "left_anti")
     )
-    ver = int(manifest.get("postings_version", 0)) + 1
-    new_name = f"postings_v{ver}"
-    new_dir = os.path.join(out_dir, new_name)
-    shutil.rmtree(new_dir, ignore_errors=True)
     (
         keep_old.unionByName(new_rows)
         .repartition("pb")
@@ -1820,13 +1708,6 @@ def _incremental_merge(
         os.makedirs(dst, exist_ok=True)
         for f in os.listdir(src):
             os.link(os.path.join(src, f), os.path.join(dst, f))
-    manifest["postings_dir"] = new_name
-    manifest["postings_version"] = ver
-    manifest["merged"] = True
-    # encode_avgdl and pb_mod UNCHANGED: same baseline, same layout
-    _save_manifest(out_dir, manifest)
-    _clean_stale_postings(out_dir, manifest)
-    return manifest
 
 
 def read_index(spark: SparkSession, out_dir: str) -> dict:
@@ -1837,17 +1718,26 @@ def read_index(spark: SparkSession, out_dir: str) -> dict:
     agrees with what the merged postings contain. encode_avgdl is the
     avgdl the stored block-max bounds were computed at (== avgdl except
     after incremental merges); csearch inflates bounds by
-    max(1, avgdl/encode_avgdl) to keep pruning safe."""
-    st = spark.read.parquet(os.path.join(out_dir, "stats")).collect()[0]
-    ds = _dedup_doc_stats(spark, out_dir)
+    max(1, avgdl/encode_avgdl) to keep pruning safe.
+
+    Everything comes from the committed manifest and its listed dirs,
+    and no Spark job runs: n_docs/avgdl are manifest values, and the
+    postings schema is read from a parquet footer on the driver (Spark's
+    own schema inference is a job)."""
+    import pyarrow.dataset as pads
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     m = load_manifest(out_dir)
+    st = m["stats"]
     postings_path = _postings_dir(out_dir, m)
+    schema = from_arrow_schema(pads.dataset(
+        postings_path, format="parquet", partitioning="hive").schema)
     return {
-        "postings": spark.read.parquet(postings_path),
+        "postings": spark.read.schema(schema).parquet(postings_path),
         # where those rows live: csearch reads the serving rows'
         # metadata columns from here on the driver, with no Spark job
         "postings_path": postings_path,
-        "doc_stats": ds,
+        "doc_stats": _dedup_doc_stats(spark, out_dir, m),
         "n_docs": int(st["n_docs"]),
         "avgdl": float(st["avgdl"]),
         "encode_avgdl": float(m.get("encode_avgdl") or st["avgdl"]),
@@ -1862,7 +1752,7 @@ def read_index(spark: SparkSession, out_dir: str) -> dict:
         # docs marked deleted but not yet compacted away (None when the
         # index has no standing tombstones): serving anti-joins results
         # against this set — delete_docs docstring has the semantics
-        "tombstones": read_tombstones(spark, out_dir),
+        "tombstones": read_tombstones(spark, out_dir, m),
     }
 
 
@@ -1894,7 +1784,8 @@ def verify_index(spark: SparkSession, out_dir: str, docs: DataFrame,
     # doc with NULL text indexes fine (dl=0) but sha2(NULL) is NULL on
     # both sides — using the sha as the row-existence proxy would count
     # such a doc missing from BOTH tables and fail a healthy audit
-    idx = _dedup_doc_stats(spark, out_dir).select(
+    m = load_manifest(out_dir)
+    idx = _dedup_doc_stats(spark, out_dir, m).select(
         "doc_id", F.col("dl").alias("_idx_dl"),
         F.col("content_sha").alias("_idx_sha"),
         F.lit(True).alias("_in_idx"))
@@ -1913,7 +1804,7 @@ def verify_index(spark: SparkSession, out_dir: str, docs: DataFrame,
             F.sha2(F.col(text_col).cast("string"), 256).alias("_src_sha"),
             F.lit(True).alias("_in_src"),
         )
-    tomb = read_tombstones(spark, out_dir)
+    tomb = read_tombstones(spark, out_dir, m)
     j = idx.join(src, "doc_id", "full_outer")
     if tomb is not None:
         j = j.join(
@@ -1983,9 +1874,10 @@ def delete_docs(spark: SparkSession, out_dir: str, doc_ids) -> int:
     deleted docs stop appearing in results immediately, but stay
     physically present until a merge expunges them).
 
-    doc_ids: iterable of ints or a (doc_id) DataFrame. Appends to the
-    ``tombstones/`` parquet table; serving (csearch.search_index)
-    anti-joins every result set against it. Lucene-parity semantics
+    doc_ids: iterable of ints or a (doc_id) DataFrame. Writes them to a
+    new ``tombstones_g<N>`` dir, committed as one more listed tombstone
+    dir; serving (csearch.search_index) anti-joins every result set
+    against the union of the listed dirs. Lucene-parity semantics
     until compact_tombstones runs: collection stats (n_docs, avgdl) and
     per-term df still COUNT the deleted docs — exactly as Lucene's
     docFreq/sumTotalTermFreq ignore liveDocs — so surviving docs keep
@@ -2000,25 +1892,25 @@ def delete_docs(spark: SparkSession, out_dir: str, doc_ids) -> int:
     else:
         df = spark.createDataFrame(
             [(int(d),) for d in doc_ids], TOMBSTONES_SCHEMA).distinct()
-    path = os.path.join(out_dir, "tombstones")
-    df.write.mode("append").parquet(path)
-    n = int(spark.read.schema(TOMBSTONES_SCHEMA).parquet(path)
-            .select("doc_id").distinct().count())
-    manifest = load_manifest(out_dir)
-    manifest["n_tombstones"] = n
-    _save_manifest(out_dir, manifest)
+    m = load_manifest(out_dir)
+    name = _new_name(m, "tombstones")
+    df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
+    m["live"]["tombstones"].append(name)
+    n = int(read_tombstones(spark, out_dir, m).count())
+    m["n_tombstones"] = n
+    _commit(out_dir, m, "delete")
     return n
 
 
-def read_tombstones(spark: SparkSession, out_dir: str) -> DataFrame | None:
+def read_tombstones(spark: SparkSession, out_dir: str,
+                    m: dict | None = None) -> DataFrame | None:
     """The standing tombstone set as a distinct (doc_id) DataFrame, or
-    None when the index has none (no dir, or an empty dir left by an
-    interrupted cleanup)."""
-    path = os.path.join(out_dir, "tombstones")
-    if not os.path.isdir(path) or not any(
-            f.endswith(".parquet") for f in os.listdir(path)):
+    None when the manifest (default: the committed one) lists none."""
+    m = m if m is not None else load_manifest(out_dir)
+    if not m["live"]["tombstones"]:
         return None
-    return (spark.read.schema(TOMBSTONES_SCHEMA).parquet(path)
+    return (spark.read.schema(TOMBSTONES_SCHEMA)
+            .parquet(*_paths(out_dir, m, "tombstones"))
             .select("doc_id").distinct())
 
 
@@ -2026,7 +1918,7 @@ def _decode_partials_shard_fn(batches):
     """mapInPandas: encoded partial rows (shard partition column kept)
     -> long (shard, tid, doc_id, tf, dl) posting rows. The compaction
     twin of _decode_partials_fn — shard is carried so the filtered
-    rewrite can restore the exact partials/shard=X layout."""
+    rewrite can restore the per-shard layout."""
     for pdf in batches:
         if not len(pdf):
             continue
@@ -2040,28 +1932,6 @@ def _decode_partials_shard_fn(batches):
             "tid": np.repeat(pdf["tid"].to_numpy(np.int64), counts),
             "doc_id": d, "tf": t, "dl": dl,
         })
-
-
-def _finish_compact_swap(out_dir: str) -> None:
-    """The (re-runnable) destructive half of compact_tombstones: promote
-    whichever filtered tmp tables exist. Each swap is conditioned on its
-    OWN tmp's _SUCCESS, so a crash anywhere inside the window is
-    finished by re-entry — a tmp disappears only via its own rename, and
-    the journal entry is cleared last."""
-    swaps = (
-        ("_compact_partials_tmp", "partials"),
-        ("_compact_doc_stats_tmp", "doc_stats"),
-        ("_compact_doc_stats_stream_tmp", "doc_stats_stream"),
-    )
-    for tmp_name, final_name in swaps:
-        tmp = os.path.join(out_dir, tmp_name)
-        if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            final = os.path.join(out_dir, final_name)
-            shutil.rmtree(final, ignore_errors=True)
-            os.rename(tmp, final)
-    manifest = load_manifest(out_dir)
-    manifest.pop("compact_pending", None)
-    _save_manifest(out_dir, manifest)
 
 
 def compact_tombstones(
@@ -2080,126 +1950,99 @@ def compact_tombstones(
     surviving docs (pytest-gated).
 
     Dataflow (all distributed, no driver-side doc sets): decode every
-    partial shard to long posting rows (shard kept), anti-join the
-    tombstones, re-encode per (shard, tid) group, and rewrite the
-    partials dir in its original shard=X layout; filter doc_stats (+
-    the stream table when present) the same way; refresh collection
-    stats; run a full (re-baselining) merge_partials; only then clear
-    the tombstones.
+    listed partial shard to long posting rows (shard kept), anti-join
+    the tombstones, re-encode per (shard, tid) group into new
+    ``shard=<key>_c<N>`` dirs; filter the batch and stream doc stats
+    into new dirs the same way; then refresh the collection stats and
+    run a full (re-baselining) merge over that uncommitted set.
 
-    Crash safety: tombstones stay standing — and serving keeps
-    filtering — until the final merge completes, so a crash at ANY
-    point leaves an index that NEVER serves a deleted doc, and a re-run
-    finishes the job. The partials/doc_stats swap window is journaled
-    (manifest 'compact_pending'); each swap is conditioned on its own
-    tmp _SUCCESS so recovery is idempotent. Filtering an
-    already-filtered table is a no-op, so replays are harmless. One
-    honest caveat: in the window between the stats refresh and the
-    merge, serving scores mix re-baselined collection stats with the
-    old postings' df — internally consistent (pruned == unpruned,
-    pytest-pinned) and monotonically converging to the post-compaction
-    scores, but not equal to either endpoint; Lucene serves the same
-    kind of hybrid while a merge is in flight.
+    Commits ONCE: the flip lists the filtered dirs, the new postings
+    and no tombstones. A crash at any point before it leaves the
+    previous generation — tombstones standing, every deleted doc
+    filtered by serving — and a re-run starts over from it.
 
-    Returns the post-merge manifest. No-op (returns the manifest
+    Returns the committed manifest. No-op (returns the manifest
     unchanged) when no tombstones stand."""
-    # finish BOTH pending journals before snapshotting: a standing
-    # dedup journal means the partials are mid-swap — reading them now
-    # would snapshot a state the dedup recovery later renames stale
-    # artifacts over, resurrecting the very docs this call expunges
-    recover_pending(out_dir)
-    manifest = load_manifest(out_dir)
-    tombs = read_tombstones(spark, out_dir)
+    m = load_manifest(out_dir)
+    tombs = read_tombstones(spark, out_dir, m)
     if tombs is None:
-        return manifest
+        return m
+    n_tombs = tombs.count()
+    gen = m["generation"] + 1
+    avgdl = float(m["stats"]["avgdl"]) or 200.0
 
-    part_dir = os.path.join(out_dir, "partials")
-    tmp = os.path.join(out_dir, "_compact_partials_tmp")
-    ds_tmp = os.path.join(out_dir, "_compact_doc_stats_tmp")
-    dss_tmp = os.path.join(out_dir, "_compact_doc_stats_stream_tmp")
-    for stale in (tmp, ds_tmp, dss_tmp):
-        shutil.rmtree(stale, ignore_errors=True)
-    avgdl = float(manifest["stats"]["avgdl"]) or 200.0
-
-    has_partials = os.path.isdir(part_dir) and any(
-        s.startswith("shard=") for s in os.listdir(part_dir))
-    shard_counts: dict[str, int] = {}
-    if has_partials:
-        parts = spark.read.option("basePath", part_dir).parquet(part_dir)
+    counts: dict[str, int] = {}
+    parts = _read_partials(spark, out_dir, m)
+    if parts is not None:
+        part_dir = os.path.join(out_dir, "partials")
+        new_shard = F.concat(F.regexp_replace(
+            F.col("shard").cast("string"), _GEN_SUFFIX, ""),
+            F.lit(f"_c{gen}"))
         dec = parts.select(
-            F.col("shard").cast("string").alias("shard"), "tid", "n_docs",
+            new_shard.alias("shard"), "tid", "n_docs",
             "doc_bytes", "tf_bytes", "dl_bytes", "doc_off",
         ).mapInPandas(_decode_partials_shard_fn, DECODED_SHARD_SCHEMA)
-        kept = dec.join(tombs, "doc_id", "left_anti")
-        enc = kept.repartition("shard", "tid").mapInArrow(
-            _reencode_partition_arrow_fn(avgdl, ("shard", "tid"),
-                                         shard_col="shard"),
-            SHARD_ENC_SCHEMA)
-        enc.repartition("shard").write.mode("overwrite").partitionBy(
-            "shard").parquet(tmp)
-        # post-filter lineage counts per shard (small: one row per shard)
-        shard_counts = {
-            str(r["shard"]): int(r["n"])
-            for r in spark.read.option("basePath", tmp).parquet(tmp)
+        (
+            dec.join(tombs, "doc_id", "left_anti")
+            .repartition("shard", "tid").mapInArrow(
+                _reencode_partition_arrow_fn(avgdl, ("shard", "tid"),
+                                             shard_col="shard"),
+                SHARD_ENC_SCHEMA)
+            .repartition("shard").write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("shard").parquet(part_dir)
+        )
+        # post-filter lineage counts per shard (small: one row per
+        # shard); a shard whose every posting was deleted has no dir
+        new_paths = [p for p in (
+            os.path.join(part_dir, _compacted_dir(r["dir"], gen))
+            for r in m["shards"].values() if r.get("dir"))
+            if os.path.isdir(p)]
+        counts = {
+            f"shard={r['shard']}": int(r["n"])
+            for r in spark.read.option("basePath", part_dir)
+            .parquet(*new_paths)
             .groupBy("shard").agg(F.sum("n_docs").alias("n")).collect()
-        }
-
-    bp = os.path.join(out_dir, "doc_stats")
-    if os.path.exists(bp):
-        (spark.read.schema(DOC_STATS_SCHEMA).parquet(bp)
-         .join(tombs, "doc_id", "left_anti")
-         .write.mode("overwrite").parquet(ds_tmp))
-    sp = os.path.join(out_dir, "doc_stats_stream")
-    if os.path.exists(sp):
-        (spark.read.schema(STREAM_DOC_STATS_SCHEMA).parquet(sp)
-         .join(tombs, "doc_id", "left_anti")
-         .write.mode("overwrite").parquet(dss_tmp))
-    n_tombs = tombs.count()
-
-    # journal THEN swap (same contract as the stream-dedup swap): once
-    # the entry is durable every crash inside the destructive window is
-    # finished by the recovery branch on re-entry
-    manifest = load_manifest(out_dir)
-    manifest["compact_pending"] = {
-        "n_tombstones": int(n_tombs),
-        # shard list at snapshot time: recovery fails loudly if an
-        # out-of-band writer added shards the snapshot doesn't hold
-        # (_recover_compact_pending), instead of destroying them
-        "shards": sorted(
-            s for s in os.listdir(part_dir) if s.startswith("shard=")
-        ) if os.path.isdir(part_dir) else [],
-    }
-    _save_manifest(out_dir, manifest)
-    _finish_compact_swap(out_dir)
-
-    # lineage: replace per-shard posting counts with the post-filter
-    # values; shards whose every posting was deleted keep their row
-    # (count 0) for batch shards — _reconcile_stream_lineage drops
-    # stream rows whose dir vanished
-    manifest = load_manifest(out_dir)
-    for key, row in manifest["shards"].items():
+        } if new_paths else {}
+    for key, row in list(m["shards"].items()):
+        if not row.get("dir"):
+            continue
+        new = _compacted_dir(row["dir"], gen)
+        row["dir"] = new if counts.get(new) else None
         if "n_postings" in row:
-            row["n_postings"] = shard_counts.get(str(key), 0)
-    _reconcile_stream_lineage(part_dir, manifest)
-    _save_manifest(out_dir, manifest)
+            row["n_postings"] = counts.get(new, 0)
+        if row.get("streaming") and not row["dir"]:
+            del m["shards"][key]
 
-    # collection stats now reflect the survivors (refresh_stats reads
-    # the already-filtered doc_stats tables)
-    manifest = refresh_stats(spark, out_dir, manifest)
+    live = m["live"]
+    for kind, schema in (("doc_stats", DOC_STATS_SCHEMA),
+                         ("doc_stats_stream", STREAM_DOC_STATS_SCHEMA)):
+        if live[kind]:
+            name = _new_name(m, kind)
+            (spark.read.schema(schema).parquet(*_paths(out_dir, m, kind))
+             .join(tombs, "doc_id", "left_anti")
+             .write.mode("overwrite").parquet(os.path.join(out_dir, name)))
+            live[kind] = [name]
+    live["tombstones"] = []
+    m["n_tombstones"] = 0
+    m["compacted_removed"] = int(m.get("compacted_removed", 0) + n_tombs)
 
-    # full re-baselining merge: df recomputed from the filtered
-    # partials, bounds re-encoded at the refreshed avgdl
-    manifest = merge_partials(
-        spark, out_dir, hot_df_threshold=hot_df_threshold,
-        n_salts=n_salts, incremental=False, pb_mod=pb_mod)
+    # collection stats re-baselined from the filtered doc stats, then a
+    # full merge: df recomputed from the filtered partials, bounds
+    # re-encoded at the refreshed avgdl
+    _merge(spark, out_dir, m, hot_df_threshold, n_salts,
+           incremental=False, max_bound_drift=0.05,
+           incremental_max_touched_frac=0.2, pb_mod=pb_mod, refresh=True)
+    return _commit(out_dir, m, "compaction")
 
-    # tombstones applied everywhere — clear them LAST (serving filtered
-    # against them up to this point, so a crash above never resurrects
-    # a deleted doc)
-    shutil.rmtree(os.path.join(out_dir, "tombstones"), ignore_errors=True)
-    manifest = load_manifest(out_dir)
-    manifest["n_tombstones"] = 0
-    manifest["compacted_removed"] = int(
-        manifest.get("compacted_removed", 0) + n_tombs)
-    _save_manifest(out_dir, manifest)
-    return manifest
+
+#: a dir name's generation suffix: _g<N> (stream ingest, dedup) or
+#: _c<N> (compaction)
+_GEN_SUFFIX = r"_[gc]\d+$"
+
+
+def _compacted_dir(shard_dir: str, gen: int) -> str:
+    """A shard's dir after compaction at generation ``gen``: its key
+    (the dir name less any generation suffix) + _c<gen>, distinct from
+    the _g<gen> dirs the same commit's dedup writes."""
+    return re.sub(_GEN_SUFFIX, "", shard_dir) + f"_c{gen}"

@@ -6,10 +6,11 @@ incremental behavior is the IndexWriter commit every 10,000 docs
 that commit cadence is a Structured Streaming file source +
 foreachBatch: every micro-batch of newly-arrived corpus files is
 tokenized and encoded into a partial postings shard (the same blocked
-delta+varbyte layout as the batch build), appended under
-partials/shard=stream<batchId>, and recorded in the manifest — so the
-streaming ingest and the batch build share one on-disk format, one
-merge path, and one query engine.
+delta+varbyte layout as the batch build) under
+partials/shard=stream<batchId>_g<N>, with its doc-stats and dictionary
+rows in dirs of their own, and all three are listed in the manifest by
+one commit (postings._commit) — so the streaming ingest and the batch
+build share one on-disk format, one merge path, and one query engine.
 
 Trigger.AvailableNow processes the backlog exactly once and stops
 (batch-incremental); a real deployment leaves the query running with a
@@ -31,8 +32,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .analysis import with_tokens
 from .postings import (
-    STREAM_ENC_SCHEMA, _encode_partition_arrow_fn, _save_manifest,
-    load_manifest,
+    STREAM_ENC_SCHEMA, _encode_partition_arrow_fn, commit_stream_batch,
+    load_manifest, stream_batch_dirs,
 )
 
 
@@ -61,15 +62,8 @@ def start_incremental_index(
     survive to serving."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # finish any journaled swap a crashed dedup/compaction left
-        # standing BEFORE appending: writing a new shard into a
-        # mid-swap partials dir would hand the pending recovery a state
-        # its snapshot doesn't describe — the replayed snapshot would
-        # silently erase this batch's doc stats (postings.recover_pending
-        # has the full composition argument)
-        from engine.postings import recover_pending
-
-        recover_pending(out_dir)
+        m = load_manifest(out_dir)
+        dirs = stream_batch_dirs(m, batch_id)
         # a doc duplicated WITHIN one micro-batch would have its
         # occurrences summed into a single doubled-tf posting by the
         # np.unique encode kernel — a row the merge-time per-(tid, doc)
@@ -81,8 +75,8 @@ def start_incremental_index(
         # persist so the batch is tokenized once, not three times
         tokenized = with_tokens(batch_df, text_col).persist()
         try:
-            # streamed docs must enter collection stats: doc_id/dl/sha
-            # rows land in doc_stats_stream; merge_partials folds them in
+            # streamed docs must enter collection stats: merge_partials
+            # folds these doc_id/dl/sha rows in
             (
                 tokenized.select(
                     F.col(id_col).alias("doc_id"),
@@ -92,8 +86,8 @@ def start_incremental_index(
                     # LATER micro-batch supersedes earlier stream
                     # versions at merge-dedup time
                     F.lit(batch_id).cast("long").alias("batch_id"))
-                .write.mode("append")
-                .parquet(os.path.join(out_dir, "doc_stats_stream"))
+                .write.mode("overwrite")
+                .parquet(os.path.join(out_dir, dirs["doc_stats_stream"]))
             )
             raw = (
                 tokenized
@@ -105,24 +99,21 @@ def start_incremental_index(
             (
                 raw.select(F.xxhash64("term").alias("tid"), "term")
                 .distinct()
-                .write.mode("append")
-                .parquet(os.path.join(out_dir, "term_dict"))
+                .write.mode("overwrite")
+                .parquet(os.path.join(out_dir, dirs["term_dict"]))
             )
             occ = raw.select(F.xxhash64("term").alias("tid"), "doc_id", "dl")
             # the batched kernel needs each tid partition-local
             enc = occ.repartition("tid").mapInArrow(
                 _encode_partition_arrow_fn(avgdl_hint, ("tid",)),
                 STREAM_ENC_SCHEMA)
-            shard_path = os.path.join(out_dir, "partials",
-                                      f"shard=stream{batch_id}")
-            enc.write.mode("overwrite").parquet(shard_path)
+            enc.write.mode("overwrite").parquet(
+                os.path.join(out_dir, "partials", dirs["partials"]))
         finally:
             # release even when a sink write fails — a retried batch
             # must not leak a cached copy per attempt
             tokenized.unpersist()
-        m = load_manifest(out_dir)
-        m["shards"][f"stream{batch_id}"] = {"status": "ok", "streaming": True}
-        _save_manifest(out_dir, m)
+        commit_stream_batch(out_dir, m, batch_id, dirs)
 
     reader = (
         spark.readStream.schema(schema).parquet(input_dir)

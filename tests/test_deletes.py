@@ -11,14 +11,13 @@ compact_tombstones, engine/csearch.py search_index tombstone filter):
 2. compact_tombstones makes the index rank-AND-score identical to a
    from-scratch build over the surviving corpus, and clears the
    tombstones;
-3. every crash window (before the journaled swap, inside it, after it
-   but before the final merge) leaves a correct-serving index and a
-   re-run finishes the job.
+3. a crash anywhere before compaction's one commit leaves the previous
+   generation serving (tombstones standing) and a re-run finishes the
+   job (crashes just before and just after the commit itself:
+   tests/test_commit.py).
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -138,39 +137,36 @@ def test_compact_noop_without_tombstones(spark, built):
     m0 = load_manifest(built)
     m = compact_tombstones(spark, built)
     assert m["stats"] == m0["stats"]
-    assert "compact_pending" not in m
+    assert m == m0  # nothing committed
 
 
 def test_compact_crash_before_merge_serves_correctly(spark, corpus, built,
                                                      monkeypatch, tmp_path):
-    """Crash AFTER the journaled swap but BEFORE the re-baselining
-    merge: tombstones still stand, so NO deleted doc is ever served, and
-    pruned/unpruned serving stay rank-identical (the hybrid
-    stats-refreshed-postings-old window is internally consistent); a
-    re-run finishes compaction."""
+    """Crash AFTER the filtered partials and doc stats are written but
+    BEFORE the re-baselining merge: nothing is committed, so the
+    previous generation serves unchanged — tombstones standing, NO
+    deleted doc served, pre-compaction stats, pruned == unpruned — and
+    a re-run finishes compaction."""
     import engine.postings as P
 
     qdf = queries_df(spark)
     victims = {r.doc_id
                for r in corpus.where(DELETED()).select("doc_id").collect()}
     delete_docs(spark, built, corpus.where(DELETED()).select("doc_id"))
+    m0 = load_manifest(built)
 
     class Boom(Exception):
         pass
 
-    real_merge = P.merge_partials
-
     def boom(*a, **kw):
         raise Boom()
 
-    monkeypatch.setattr(P, "merge_partials", boom)
+    monkeypatch.setattr(P, "_merge", boom)
     with pytest.raises(Boom):
         compact_tombstones(spark, built, hot_df_threshold=100, n_salts=4)
-    monkeypatch.setattr(P, "merge_partials", real_merge)
+    monkeypatch.undo()
 
-    # tombstones still standing -> no deleted doc served, and the
-    # hybrid window (stats already re-baselined, postings still old) is
-    # internally consistent: pruned == unpruned
+    assert load_manifest(built) == m0
     idx = read_index(spark, built)
     assert idx["tombstones"] is not None
     got_p = _rows(search_index(spark, idx, qdf, k=10, prune=True))
@@ -188,54 +184,3 @@ def test_compact_crash_before_merge_serves_correctly(spark, corpus, built,
     want2 = _rows(search_index(spark, read_index(spark, fresh_dir), qdf,
                                k=10, prune=True))
     assert got2 == want2
-
-
-def test_compact_crash_inside_swap_recovers(spark, corpus, built, tmp_path,
-                                            monkeypatch):
-    """Crash INSIDE the journaled rmtree+rename window: the journal
-    entry + per-tmp _SUCCESS conditions make re-entry idempotent."""
-    import engine.postings as P
-
-    qdf = queries_df(spark)
-    delete_docs(spark, built, corpus.where(DELETED()).select("doc_id"))
-
-    real_swap = P._finish_compact_swap
-    calls = {"n": 0}
-
-    class Boom(Exception):
-        pass
-
-    def crashing_swap(out_dir):
-        # simulate dying after the FIRST rename only
-        calls["n"] += 1
-        swaps = [("_compact_partials_tmp", "partials")]
-        for tmp_name, final_name in swaps:
-            tmp = os.path.join(out_dir, tmp_name)
-            if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-                final = os.path.join(out_dir, final_name)
-                import shutil as _sh
-
-                _sh.rmtree(final, ignore_errors=True)
-                os.rename(tmp, final)
-        raise Boom()
-
-    monkeypatch.setattr(P, "_finish_compact_swap", crashing_swap)
-    with pytest.raises(Boom):
-        compact_tombstones(spark, built, hot_df_threshold=100, n_salts=4)
-    monkeypatch.setattr(P, "_finish_compact_swap", real_swap)
-
-    # journal entry stands; re-entry finishes the remaining swaps and
-    # the whole compaction
-    assert load_manifest(built).get("compact_pending")
-    compact_tombstones(spark, built, hot_df_threshold=100, n_salts=4)
-    assert "compact_pending" not in load_manifest(built)
-    assert load_manifest(built)["n_tombstones"] == 0
-
-    fresh_dir = str(tmp_path / "fresh")
-    build_index(spark, corpus.where(~DELETED()), fresh_dir, n_shards=4,
-                hot_df_threshold=100, n_salts=4)
-    got = _rows(search_index(spark, read_index(spark, built), qdf, k=10,
-                             prune=True))
-    want = _rows(search_index(spark, read_index(spark, fresh_dir), qdf,
-                              k=10, prune=True))
-    assert got == want

@@ -134,7 +134,8 @@ def test_compressed_search_rank_identity(spark, documents, index_dir):
 
 
 def test_resumability(spark, documents, tmp_path):
-    """Kill after shard i, re-run, identical final postings (section 5.6)."""
+    """Kill at the second shard-batch commit, re-run, identical final
+    postings (section 5.6)."""
     out = str(tmp_path / "idx2")
 
     class Boom(Exception):
@@ -142,26 +143,28 @@ def test_resumability(spark, documents, tmp_path):
 
     import engine.postings as P
 
-    orig = P._save_manifest
-    calls = {"n": 0}
+    orig = P._commit
+    shard_commits = []
 
-    def sabotage(out_dir, m):
-        calls["n"] += 1
-        if calls["n"] >= 3:  # stats + 1 shard commit, then die
-            raise Boom()
-        orig(out_dir, m)
+    def sabotage(out_dir, m, op):
+        if op == "shards":
+            shard_commits.append(m["generation"])
+            if len(shard_commits) == 2:  # stats + shard 0 committed
+                raise Boom()
+        return orig(out_dir, m, op)
 
-    P._save_manifest = sabotage
+    P._commit = sabotage
     try:
         with pytest.raises(Boom):
             build_index(spark, documents, out, n_shards=4,
                         hot_df_threshold=100, n_salts=4, shard_batch=1)
     finally:
-        P._save_manifest = orig
+        P._commit = orig
 
     m = load_manifest(out)
     done_before = set(m["shards"])
     assert 0 < len(done_before) < 4 and not m["merged"]
+    assert m["stats"] is not None  # committed with the first batch
 
     build_index(spark, documents, out, n_shards=4,
                 hot_df_threshold=100, n_salts=4, shard_batch=1)

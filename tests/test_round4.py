@@ -1,159 +1,60 @@
-"""Round-4 fixes (ADVICE r2): dedup-swap crash windows, stale stream
-lineage, within-batch duplicate docs, bare-filename corpus sources."""
+"""Round-4 fixes (ADVICE r2): a crashed dedup merge re-baselines, within-
+batch duplicate docs, bare-filename corpus sources."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
-def _build_batch_and_stream(spark, tmp_path_factory, tag):
-    """Batch index {0: apple banana} + streamed {0 re-drop, 5: banana
-    fig}, fully merged. Returns the index dir."""
-    from engine.postings import build_index, merge_partials
+def test_recovered_dedup_removal_forces_full_merge(spark,
+                                                   tmp_path_factory,
+                                                   monkeypatch):
+    """A merge whose dedup REMOVED rows and that crashed before its
+    commit leaves nothing durable behind; its re-run redoes the dedup,
+    sees the removal in-call, and must re-baseline fully — the
+    pure-append guard would otherwise take the incremental merge over a
+    stream-partial set the consolidation erased terms from, keeping
+    ghost rows. incremental=True (which skips only the economic guard)
+    must still end in a full merge."""
+    import engine.postings as P
+    from engine.postings import (
+        build_index, load_manifest, merge_partials,
+    )
     from engine.streaming import start_incremental_index
 
-    out = str(tmp_path_factory.mktemp(f"{tag}_idx"))
-    inp = str(tmp_path_factory.mktemp(f"{tag}_in"))
-    batch = spark.createDataFrame(
-        [(0, "apple banana", "en", "s", 12)], DOC_SCHEMA)
-    build_index(spark, batch, out, n_shards=2, hot_df_threshold=10**9,
-                n_salts=2, id_col="doc_id", text_col="text")
+    out = str(tmp_path_factory.mktemp("rr_idx"))
+    inp = str(tmp_path_factory.mktemp("rr_in"))
+    build_index(spark, spark.createDataFrame(
+        [(0, "apple banana", "en", "s", 12)], DOC_SCHEMA), out,
+        n_shards=2, hot_df_threshold=10**9, n_salts=2,
+        id_col="doc_id", text_col="text")
+    # doc 0 re-dropped: the merge's dedup removes its stream rows
     spark.createDataFrame(
         [(0, "apple banana", "en", "s", 12),
          (5, "banana fig", "en", "s", 10)],
         DOC_SCHEMA).write.mode("overwrite").parquet(inp + "/drop")
-    q = start_incremental_index(spark, inp + "/drop", out, avgdl_hint=3.0)
-    q.awaitTermination(120)
-    merge_partials(spark, out, hot_df_threshold=10**9, n_salts=2)
-    return out
+    start_incremental_index(spark, inp + "/drop", out,
+                            avgdl_hint=3.0).awaitTermination(120)
+    m0 = load_manifest(out)
 
+    def crash(*a, **kw):
+        raise OSError("crash before the merge commit")
 
-def _assert_recovered(spark, out):
-    from engine.csearch import search_index
-    from engine.postings import load_manifest, merge_partials, read_index
-
-    merge_partials(spark, out, hot_df_threshold=10**9, n_salts=2)
-    m = load_manifest(out)
-    assert "stream_dedup_pending" not in m
-    assert "stream0" not in m["shards"]
-    assert m["shards"]["streamdedup"]["status"] == "ok"
-    idx = read_index(spark, out)
-    assert idx["n_docs"] == 2
-    # streamed doc stats survived: doc 5 has its dl
-    assert idx["doc_stats"].where("doc_id = 5").collect()[0]["dl"] == 2
-    qs = spark.createDataFrame([("q0", "banana")],
-                               "query_id string, query string")
-    res = search_index(spark, idx, qs, k=10).collect()
-    assert sorted(r.doc_id for r in res) == [0, 5]
-
-
-def test_crash_between_docstats_delete_and_rename(spark, tmp_path_factory):
-    """The ADVICE r2 medium window: crash AFTER
-    rmtree(doc_stats_stream) but BEFORE os.rename(ds_tmp, ...). The old
-    recovery keyed only on tmp/_SUCCESS and, in the sibling window with
-    tmp already renamed, deleted ds_tmp — the only remaining copy of the
-    stream doc stats. The reordered swap keeps tmp (and its _SUCCESS)
-    alive through the doc-stats window, so recovery re-runs the swap."""
-    from engine.postings import _save_manifest, load_manifest
-
-    out = _build_batch_and_stream(spark, tmp_path_factory, "wA")
-    final = out + "/partials/shard=streamdedup"
-    tmp = out + "/_stream_dedup_tmp"
-    ds_tmp = out + "/_doc_stats_stream_tmp"
-    # reconstruct the mid-swap state: consolidated postings still in
-    # tmp, doc stats renamed down to ds_tmp, live doc_stats_stream GONE
-    shutil.move(final, tmp)
-    shutil.move(out + "/doc_stats_stream", ds_tmp)
-    m = load_manifest(out)
-    n_post = m["shards"]["streamdedup"]["n_postings"]
-    del m["shards"]["streamdedup"]
-    m["shards"]["stream0"] = {"status": "ok", "streaming": True}
-    m["stream_dedup_pending"] = {
-        "shards": ["shard=streamdedup", "shard=stream0"],
-        "n_postings": n_post, "removed": 0,
-    }
-    _save_manifest(out, m)
-    _assert_recovered(spark, out)
-
-
-def test_crash_after_final_rename_before_journal_clear(spark,
-                                                      tmp_path_factory):
-    """Crash after the tmp->final rename (the LAST destructive step) but
-    before the journal is cleared: recovery must finish the bookkeeping
-    WITHOUT deleting final — which is listed in the pending shards
-    (a previous dedup's shard=streamdedup) but now IS the new output."""
-    from engine.postings import _save_manifest, load_manifest
-
-    out = _build_batch_and_stream(spark, tmp_path_factory, "wB")
-    # swap fully done on disk; only the journal/lineage update is missing
-    m = load_manifest(out)
-    n_post = m["shards"]["streamdedup"]["n_postings"]
-    del m["shards"]["streamdedup"]
-    m["shards"]["stream0"] = {"status": "ok", "streaming": True}
-    m["stream_dedup_pending"] = {
-        "shards": ["shard=streamdedup", "shard=stream0"],
-        "n_postings": n_post, "removed": 0,
-    }
-    _save_manifest(out, m)
-    _assert_recovered(spark, out)
-
-
-def test_recovered_dedup_removal_forces_full_merge(spark,
-                                                   tmp_path_factory):
-    """Review finding: a dedup consolidation that REMOVED rows, crashed
-    mid-swap, and was finished by recovery must still count as a
-    removal — otherwise the pure-append guard would take the
-    incremental merge over a stream-partial set the recovery erased
-    terms from, keeping ghost rows. incremental=True (which skips only
-    the economic guard) must still re-baseline fully."""
-    import shutil as _sh
-
-    from engine.postings import _save_manifest, load_manifest, merge_partials
-
-    out = _build_batch_and_stream(spark, tmp_path_factory, "rr")
-    # reconstruct the crash state exactly like the swap-window tests:
-    # consolidated output demoted to tmp, journal pending with the
-    # REAL removed count restored
-    final = out + "/partials/shard=streamdedup"
-    tmp = out + "/_stream_dedup_tmp"
-    _sh.move(final, tmp)
-    m = load_manifest(out)
-    n_post = m["shards"]["streamdedup"]["n_postings"]
-    removed = m["shards"]["streamdedup"]["dedup_removed"]
-    assert removed > 0  # the re-drop really removed rows
-    del m["shards"]["streamdedup"]
-    m["shards"]["stream0"] = {"status": "ok", "streaming": True}
-    m["stream_dedup_pending"] = {
-        "shards": ["shard=streamdedup", "shard=stream0"],
-        "n_postings": n_post, "removed": removed,
-    }
-    _save_manifest(out, m)
-    merge_partials(spark, out, hot_df_threshold=10**9, n_salts=2,
-                   incremental=True)
-    assert load_manifest(out)["last_merge"] == "full"
-
-
-def test_stale_stream_lineage_reconciled(spark, tmp_path_factory):
-    """A status-ok lineage row for a stream shard dir that no longer
-    exists must be dropped at the next dedup bookkeeping pass, not kept
-    forever (ADVICE r2 low: re-dedup only lists directories on disk)."""
-    from engine.postings import (
-        _reconcile_stream_lineage, _save_manifest, load_manifest,
-    )
-
-    out = _build_batch_and_stream(spark, tmp_path_factory, "wC")
-    m = load_manifest(out)
-    m["shards"]["stream7"] = {"status": "ok", "streaming": True}
-    _reconcile_stream_lineage(os.path.join(out, "partials"), m)
-    assert "stream7" not in m["shards"]
-    # batch rows exempt even without a dir (0-doc shards have no dir)
-    assert any(not v.get("streaming") for v in m["shards"].values())
-    _save_manifest(out, m)
+    monkeypatch.setattr(P, "_commit", crash)
+    with pytest.raises(OSError):
+        merge_partials(spark, out, hot_df_threshold=10**9, n_salts=2,
+                       incremental=True)
+    monkeypatch.undo()
+    assert load_manifest(out) == m0
+    m = merge_partials(spark, out, hot_df_threshold=10**9, n_salts=2,
+                       incremental=True)
+    assert m["last_merge"] == "full"
+    assert m["shards"]["streamdedup"]["dedup_removed"] > 0
 
 
 def test_within_batch_duplicate_doc_tf_not_doubled(spark,
@@ -570,8 +471,9 @@ def test_pb_partition_pruning_and_hardlinked_buckets(spark,
 
 
 def test_read_index_pre_pointer_manifest_compat(spark, tmp_path):
-    """An index written before the pointer/encode_avgdl manifest keys
-    existed must still open and serve: postings_dir defaults to
+    """An index written before the pointer/encode_avgdl/generation
+    manifest keys existed must still open and serve: it opens as
+    generation 0 over the classic dir names, postings_dir defaults to
     'postings', encode_avgdl defaults to the serving avgdl (inflation
     factor 1)."""
     import json
@@ -592,8 +494,10 @@ def test_read_index_pre_pointer_manifest_compat(spark, tmp_path):
     # the old on-disk shape too)
     os.rename(out + "/" + m["postings_dir"], out + "/postings")
     for k in ("postings_dir", "encode_avgdl", "merged_batch_shards",
-              "last_merge", "postings_version"):
+              "last_merge", "postings_version", "generation", "live"):
         m.pop(k, None)
+    for row in m["shards"].values():
+        row.pop("dir", None)
     json.dump(m, open(mp, "w"))
     idx = read_index(spark, out)
     assert idx["encode_avgdl"] == idx["avgdl"]

@@ -1,9 +1,9 @@
 """Round-6 (round-4 session-2) regression tests: the in-round code
 review findings over the matmul/packed-feed/deletes commits.
 
-1. Negative-weight hybrid window: compact_tombstones' documented
-   stats-refreshed-merge-pending window can leave a term's df above
-   the refreshed N, making idf (hence w) negative. Phase-2's
+1. Negative weights: an index whose metadata is not self-consistent
+   (a foreign or hand-edited one) can hold a term's df above N, making
+   idf (hence w) negative. Phase-2's
    division-by-w threshold must not flip its inequality, and the
    matmul kernel's hit test must not drop legitimately
    negative-scoring docs the join plan ranks.
@@ -21,8 +21,7 @@ from pyspark.sql import functions as F
 def _mixed_sign_fixture(spark, tmp_path):
     """Index whose stats we then desync: 'apple' in every doc (df=50),
     'kiwi' in 3 docs. Overriding n_docs=10 makes w(apple) < 0 while
-    w(kiwi) > 0 — exactly the hybrid window compact_tombstones
-    documents (stale per-term df vs refreshed N)."""
+    w(kiwi) > 0 — stale per-term df vs a smaller N."""
     from engine.postings import build_index, read_index
 
     rows = [(i, "apple pear " + ("kiwi" if i < 3 else "plum") +

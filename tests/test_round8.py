@@ -40,6 +40,7 @@ def test_stream_encode_kernels_byte_identical(spark, tmp_path_factory):
     postings, tallied by the test oracle and encoded by
     codec.encode_blocked at the avgdl hint — payload bytes, offsets,
     block arrays, everything."""
+    from engine.postings import load_manifest
     from engine.streaming import start_incremental_index
     from engine.xxh import spark_xxhash64_str
 
@@ -58,7 +59,8 @@ def test_stream_encode_kernels_byte_identical(spark, tmp_path_factory):
     cols = ("n_docs", "doc_bytes", "tf_bytes", "dl_bytes", "block_last",
             "block_max", "doc_off", "tf_off", "dl_off")
     got = sorted((r.tid,) + row_key(r, cols) for r in
-                 spark.read.parquet(out + "/partials/shard=stream0")
+                 spark.read.parquet(out + "/partials/" + load_manifest(
+                     out)["shards"]["stream0"]["dir"])
                  .collect())
     ref = posting_rows([(r.doc_id, r.text) for r in docs.collect()], 6.0)
     want = sorted((spark_xxhash64_str(t),) + row_key(r, cols)

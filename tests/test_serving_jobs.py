@@ -11,7 +11,8 @@ jobs.
 Unpruned join below the spread bar: a single query, cold or warm, is
 one job (one task, no broadcast, no exchange); a query with no indexed
 term is none; a batch keeps its broadcast-join plan. Query tables are
-local relations here, so collecting them adds no job to the count."""
+local relations here, so collecting them adds no job to the count.
+Opening the index (read_index) launches no job at all."""
 
 from __future__ import annotations
 
@@ -201,3 +202,20 @@ def test_unpruned_join_job_budget(spark, budget_dir, tmp_path):
     n_tomb, res = _jobs(spark, lambda: _serve_join(spark, tomb, one))
     assert res and not {0, 1, 2, 3, 5, 8} & {r[1] for r in res}
     assert n_tomb == 4, n_tomb
+
+
+def test_read_index_runs_no_job(spark, budget_dir, tmp_path):
+    """read_index takes n_docs/avgdl from the committed manifest and
+    the postings schema from a parquet footer on the driver: opening an
+    index, with or without standing tombstones, launches no Spark job."""
+    from engine.postings import delete_docs, read_index
+
+    n, idx = _jobs(spark, lambda: read_index(spark, budget_dir))
+    assert n == 0, n
+    assert idx["n_docs"] == 400 and idx["tombstones"] is None
+    out = str(tmp_path / "tomb_idx")
+    shutil.copytree(budget_dir, out)
+    delete_docs(spark, out, [0, 1])
+    n, idx = _jobs(spark, lambda: read_index(spark, out))
+    assert n == 0, n
+    assert idx["tombstones"] is not None
