@@ -149,10 +149,10 @@ def _batch_compressed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain SQL oracle BY CONSTRUCTION: round_dp=4 rounds scores before
     the search's own top-k window and relaxes the prune threshold by one
     rounding quantum (no raw-precision buffer re-ranked afterwards).
-    Served with agg_impl='matmul' (the at-scale default aggregation,
-    csearch._matmul_emit) so the matmul route gets an oracle-gated
-    hash row; the stream/deleted halves of the union keep gating the
-    'join' route, so one bm25_topk_compressed hash evidences both."""
+    Served through the matmul kernel (csearch._matmul_emit), the one
+    score aggregation, like the stream/deleted halves of the union;
+    agg_impl='matmul' names it explicitly, the default 'auto' picks the
+    same kernel."""
     from engine.csearch import search_index
     from engine.postings import read_index
 

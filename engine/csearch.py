@@ -10,9 +10,9 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
            IN list is pushed into the parquet scan, so only matching
            row groups are read. The byte payloads are NEVER joined
            with the query table: each payload row decodes ONCE into
-           query-independent (term, doc_id, tf_part) rows, and the
-           tiny broadcast (query_id, term, w) table joins onto those
-           numeric rows JVM-side — batch cost is proportional to the
+           query-independent (term, doc_id, tf_part) triples, and the
+           whole batch's (query, term, w) weights ride the scoring
+           kernel as one CSR matrix — batch cost is proportional to the
            UNIQUE terms of the batch, not Σ per-query terms.
   phase 1  threshold θ(q), a lower bound on the final k-th score, from
            metadata alone: every merged chunk stores its r-th largest
@@ -44,37 +44,26 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
            a superset decode, which is always safe.
   phase 3  decode only surviving blocks (blocks are delta-restarted, so
            pruned blocks are never touched), compute tf_parts in
-           numpy, then aggregate per (query, doc) one of two ways
-           (AGG_IMPL): 'join' — JVM-side broadcast weight join +
-           groupBy(query,doc).sum — for small indexes, or 'matmul' —
-           doc-partitioned dense matmul emitting per-partition top-k
-           candidates (_matmul_emit) — at scale, where the join
-           plan's per-(query,term) fan-out dominates the batch wall.
-           Both end in the same top-k window and are rank-identical
-           (pytest-gated).
+           numpy, and score the whole batch in the one aggregation,
+           the doc-partitioned matmul kernel (_matmul_score_topk,
+           scoring core _matmul_emit): every doc's postings meet in one
+           kernel call, which emits its partition's per-query top-k
+           candidates for the final top-k window.
 
-Small posting sets run as ONE Spark job of one task. At that size
-latency is the number of jobs and Python stages (~0.3 s each), not
-per-row work. Two plans do it:
-  * a single query served unpruned with the join aggregation on an
-    index below the spread bar (n_docs < AUTO_PRUNE_MIN_DOCS —
-    prune="auto" sends every single query there;
-    _single_query_topk): the payload rows coalesce to one partition
-    and decode; a groupBy(doc_id) sums (qtf * idf(df)) * tf_part with
-    qtf read from a literal term -> qtf map, the join route's own
-    per-term chain over the payload's own df. The batch join plan pays
-    four jobs instead (the query table's broadcast, two exchanges, the
-    final stage);
-  * a matmul batch, pruned or not, whose terms hold at most
-    ONE_TASK_MAX_POSTINGS postings in all (Σ df from the metadata
-    read): the payload rows coalesce to one partition and one
-    mapInArrow decodes and scores them (_decode_matmul_arrow_iter),
-    instead of a decode+pack stage, a doc-bucket exchange and a matmul
-    stage. The pruned route's block thresholds ride a literal
-    term -> threshold map, so nothing is broadcast.
-The child is one partition, so the aggregate and the top-k window need
-no Exchange. Warm and cold calls take the same plans; larger batches
-and indexes at or above the bar keep theirs.
+The kernel runs one of two plans, chosen from the Σ df of the query
+terms the metadata read already holds, not by a knob:
+  * at most ONE_TASK_MAX_POSTINGS postings: the payload rows coalesce
+    to one partition and one mapInArrow decodes and scores them
+    (_decode_matmul_arrow_iter) — ONE Spark job of one task, the
+    latency floor on small posting sets, where cost is the number of
+    jobs and Python stages (~0.3 s each), not per-row work. The pruned
+    route's block thresholds ride a literal term -> threshold map, so
+    nothing is broadcast, and the child is one partition, so the top-k
+    window needs no Exchange. A single query and a batch, cold and
+    warm, take this plan;
+  * above it, the packed plan: a decode+pack stage, a doc-bucket
+    exchange and a matmul stage, which spread the per-posting work
+    over the cluster.
 """
 
 from __future__ import annotations
@@ -89,40 +78,16 @@ from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
-from pyspark.sql.window import Window
 
 from . import TOP_K
 from .codec import decode_blocked, tf_part
 from .localrel import in_list, local_df, sql_literal
-from .search import idf_expr, idf_sql
+from .search import idf_sql
 
 
 #: the posting-row columns every decode kernel reads
 PAYLOAD_COLS = ("term", "doc_bytes", "tf_bytes", "dl_bytes",
                 "doc_off", "tf_off", "dl_off")
-
-TFPART_ROWS = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("tf_part", DoubleType(), False),
-    ]
-)
-
-#: df-passthrough variant (round 6): the payload row's own `df` column
-#: rides through the decode, so the unpruned join route can compute
-#: idf/w JVM-side from the decoded rows directly — no per-term metadata
-#: aggregation job at all (every chunk of a term carries the term's
-#: full df; merge_plan/merge_onepass join it per tid onto every row)
-TFPART_DF_ROWS = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("tf_part", DoubleType(), False),
-        StructField("df", LongType(), False),
-    ]
-)
-
 
 def _decode_rows(b, avgdl: float, keep_col: str | None):
     """The decode loop every serving kernel shares: for each posting row
@@ -151,91 +116,6 @@ def _decode_rows(b, avgdl: float, keep_col: str | None):
             yield i, d.astype(np.int64, copy=False), tf_part(t, dl, avgdl)
 
 
-def _decode_tf_arrow_iter(avgdl: float, keep_col: str | None,
-                          with_df: bool = False):
-    """mapInArrow kernel: posting rows -> (term, doc_id, tf_part).
-
-    The query-independent half of the score (BM25 tf saturation): each
-    payload row is decoded ONCE regardless of how many queries share
-    the term — the per-query weight joins onto these small numeric rows
-    JVM-side afterwards. This is what makes batch serving scale-safe:
-    the multi-MB byte payload of a hot term is never replicated per
-    query (a 400-query zipf batch OOM'd a 10g executor under the old
-    per-(query,term) decode). Byte payloads are read straight from the
-    Arrow batch as buffers and the output batch is assembled from the
-    numpy arrays. with_df passes the payload row's df column through
-    (see TFPART_DF_ROWS)."""
-    import pyarrow as pa
-
-    fields = [
-        ("term", pa.string()),
-        ("doc_id", pa.int64()),
-        ("tf_part", pa.float64()),
-    ]
-    if with_df:
-        fields.append(("df", pa.int64()))
-    out_schema = pa.schema(fields)
-
-    def fn(batches):
-        for b in batches:
-            term = b.column(b.schema.get_field_index("term"))
-            dfc = b.column(b.schema.get_field_index("df")) if with_df else None
-            terms, docs, parts, dfs = [], [], [], []
-            for i, d, x in _decode_rows(b, avgdl, keep_col):
-                terms.append(np.full(d.size, term[i].as_py(), dtype=object))
-                docs.append(d)
-                parts.append(x)
-                if with_df:
-                    dfs.append(np.full(d.size, dfc[i].as_py(),
-                                       dtype=np.int64))
-            if terms:
-                arrays = [
-                    pa.array(np.concatenate(terms), type=pa.string()),
-                    pa.array(np.concatenate(docs), type=pa.int64()),
-                    pa.array(np.concatenate(parts), type=pa.float64()),
-                ]
-                if with_df:
-                    arrays.append(pa.array(np.concatenate(dfs),
-                                           type=pa.int64()))
-                yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-    return fn
-
-
-def _decode_tf_parts(rows: DataFrame, avgdl: float,
-                     keep_col: str | None,
-                     spread: bool = False,
-                     with_df: bool = False) -> DataFrame:
-    """Apply the decode kernel, emitting query-independent
-    (term, doc_id, tf_part) rows (decode once per payload row).
-
-    spread=True round-robin repartitions the input first: the
-    tid-bucketed layout co-locates ALL posting rows of a term (every
-    shard x salt chunk) in one pb partition, so a scan split holding a
-    hot term would otherwise decode it — and run the pipelined weight
-    join + partial aggregate over its df x sharing-queries fan-out —
-    in a SINGLE task (measured on the 500k-doc/300k-term fixture: one
-    task 267 s CPU / 91M partial rows vs a 0.9 s median; the whole
-    400-query batch WAS that straggler, 311 s -> 41 s with the
-    spread). Spreading the (post-pruning) payload rows caps a task's
-    decode work at ~one chunk: the hottest salted term has
-    n_shards*n_salts chunks, so its decode+join fans out across that
-    many tasks. The shuffle moves only bytes that will actually be
-    decoded — phase 2's block filter has already dropped pruned
-    blocks' terms — and is the batch-serving analog of the build's
-    salted hot-term split. Callers gate it on index size (the same
-    n_docs >= AUTO_PRUNE_MIN_DOCS bar as auto-prune): on a tiny index
-    the extra shuffle stage is pure latency (measured +0.5 s on the
-    sf0.1 p50), while at scale the skew it removes is the whole batch
-    wall."""
-    if spread:
-        sc = rows.sparkSession.sparkContext
-        rows = rows.repartition(sc.defaultParallelism * 4)
-    schema = TFPART_DF_ROWS if with_df else TFPART_ROWS
-    return rows.mapInArrow(
-        _decode_tf_arrow_iter(avgdl, keep_col, with_df), schema)
-
-
 def _topk(scored: DataFrame, k: int) -> DataFrame:
     """Per-query top-k by (score desc, doc_id asc), built as parsed
     expressions: two py4j calls instead of one per column operator."""
@@ -244,14 +124,6 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
         "row_number() OVER (PARTITION BY query_id "
         "ORDER BY score DESC, doc_id ASC) AS rank",
     ).where(f"rank <= {int(k)}")
-
-
-#: which batch score-aggregation serves: 'join' (broadcast weight join
-#: + groupBy(query,doc).sum — the small-index default), 'matmul'
-#: (doc-partitioned dense matmul, see _matmul_emit — the
-#: at-scale default), or 'auto' (matmul iff n_docs >=
-#: AUTO_PRUNE_MIN_DOCS, the same bar as auto-prune/spread)
-AGG_IMPL = os.environ.get("SPARK_GRAFT_AGG_IMPL", "auto")
 
 
 def _chunk_width(n_t: int, n_q: int) -> int:
@@ -272,46 +144,45 @@ def _matmul_emit(bval, tidx, doc, x, k, round_dp):
     partition's per-query top-k candidates | None, (sort_sec,
     score_sec)). bval is (qids, n_terms, qptr, qtidx, qw[, dead]): the
     CSR weights and optionally a sorted int64 array of tombstoned
-    doc_ids (or None) dropped BEFORE candidate selection (kernel rows
-    can't be anti-joined JVM-side — see _matmul_score_topk).
+    doc_ids (or None) dropped BEFORE candidate selection (see
+    _matmul_score_topk).
 
-    Why: the join plan shuffles Σ_q Σ_{t∈q} |postings(t)| fanned-out
-    partial rows into a groupBy(query,doc) whose map-side combine
-    collapses ~nothing (decode output is term-major: a (query,doc)
-    pair never repeats within a task), measured at 91M partial rows /
-    357 s task-time for a 400-query zipf batch over the 500k-doc
-    design-regime fixture. Batch BM25 is a sparse-matrix product
-    S = W·X (W: query×term weights, tiny; X: term×doc tf_parts), so
-    instead the kernel receives the UNIQUE decoded (term, doc, tf_part)
-    triples partitioned by doc — every row of a doc in one partition,
-    so scores are FINAL within the kernel — densifies X one doc-column
-    chunk at a time, multiplies CSR-W against it (see scale notes), and
-    emits ≤k rows per (query, partition). The shuffle moves the unique
-    decoded rows once (int term-index, not the string), never the
-    query fan-out, and the downstream window sees
+    Why: a broadcast weight join + groupBy(query,doc).sum plan shuffles
+    Σ_q Σ_{t∈q} |postings(t)| fanned-out partial rows into a groupBy
+    whose map-side combine collapses ~nothing (decode output is
+    term-major: a (query,doc) pair never repeats within a task),
+    measured at 91M partial rows / 357 s task-time for a 400-query zipf
+    batch over the 500k-doc design-regime fixture. Batch BM25 is a
+    sparse-matrix product S = W·X (W: query×term weights, tiny; X:
+    term×doc tf_parts), so instead the kernel receives the UNIQUE
+    decoded (term, doc, tf_part) triples partitioned by doc — every row
+    of a doc in one partition, so scores are FINAL within the kernel —
+    densifies X one doc-column chunk at a time, multiplies CSR-W against
+    it (see scale notes), and emits ≤k rows per (query, partition). The
+    shuffle moves the unique decoded rows once (int term-index, not the
+    string), never the query fan-out, and the downstream window sees
     n_partitions×n_queries×k rows instead of 91M.
 
     Exactness: hits are detected as unrounded score > 0 when every
     weight of q is positive (idf = ln(1+x), x > 0 on any
     self-consistent index — so a dense zero means "no term of q
-    occurs in d", which the join plan never emits); if any weight is
+    occurs in d", which the OR query never matches); if any weight is
     <= 0 (an index whose df exceeds N, see _block_thresholds) the
     kernel falls back to presence-in-X so negatively-scored hit docs
-    still rank, as they do under the join plan. Rounding: the kernel
-    emits UNROUNDED scores and the caller's _finish applies the ONE
-    F.round both aggregation routes share — JVM BigDecimal HALF_UP,
-    where np.round's half-to-even would diverge at decimal midpoints
-    — while every candidate cut is relaxed by one rounding quantum so
-    a doc that rounds into a kth-score tie (and could then win the
-    doc_id asc tie-break) is never cut kernel-side; candidates are
-    ordered by (score desc, doc_id asc), the exact _topk tie-break.
+    still rank, as the OR query ranks them. Rounding: the kernel
+    emits UNROUNDED scores and search_index applies the ONE F.round —
+    JVM BigDecimal HALF_UP, where np.round's half-to-even would
+    diverge at decimal midpoints — while every candidate cut is
+    relaxed by one rounding quantum so a doc that rounds into a
+    kth-score tie (and could then win the doc_id asc tie-break) is
+    never cut kernel-side; candidates are ordered by (score desc,
+    doc_id asc), the exact _topk tie-break.
     The per-partition candidate set is thus a superset of each query's
     global rounded top-k members from that partition, so the final
-    small window reproduces the join plan's ranking bit-for-bit
-    (pytest-gated identical on fixtures incl. ties, tombstones, and
-    sub-k term matches). FP note: the sum order differs from the hash
-    aggregate's, but the join plan's own sum order is already
-    partition-nondeterministic, and the oracle gate rounds.
+    small window reproduces the exact top-k (pytest-gated against
+    tests/oracle.bm25_topk on fixtures incl. ties, tombstones, and
+    sub-k term matches). FP note: the sum order is the CSR term order,
+    not the oracle's, so tests compare scores to 9 dp.
 
     Scale notes: W is ~99.9% sparse (a query holds a handful of the
     batch's unique terms), so it ships and multiplies as CSR —
@@ -348,8 +219,7 @@ def _matmul_emit(bval, tidx, doc, x, k, round_dp):
     n_q = len(qids)
     qpf = np.append(qptr, qtidx.size)
     # one rounding quantum: the kernel emits UNROUNDED scores (the
-    # caller's _finish applies the single authoritative F.round, so
-    # matmul and join rounding are the same JVM HALF_UP operation —
+    # caller applies the single authoritative F.round, JVM HALF_UP —
     # np.round's half-to-even diverged from F.round at decimal
     # midpoints) and instead relaxes every candidate cut by `quant`:
     # two scores that round equal differ by < quant, so no doc that
@@ -361,7 +231,7 @@ def _matmul_emit(bval, tidx, doc, x, k, round_dp):
     # (any self-consistent index) score > 0 is that test exactly and
     # costs nothing extra; on an index whose df exceeds N, w can go
     # negative (see _block_thresholds) and a hit doc can score
-    # <= 0, so fall back to presence in the dense X — the join plan
+    # <= 0, so fall back to presence in the dense X — the OR query
     # ranks those docs and the kernel must too.
     allpos = [bool((qw[qpf[q]:qpf[q + 1]] > 0).all()) for q in range(n_q)]
     udocs, dinv = np.unique(doc, return_inverse=True)
@@ -461,8 +331,8 @@ def _decode_triples(batches, avgdl: float, keep_col: str | None,
 
 def _decode_matmul_arrow_iter(bval, avgdl: float, keep_col: str | None,
                               tmap: dict, k: int, round_dp: int | None):
-    """mapInArrow kernel of the one-task matmul plan (module doc, "small
-    posting sets"): posting rows in, the batch's top-k candidates out.
+    """mapInArrow kernel of the one-task matmul plan (module doc):
+    posting rows in, the batch's top-k candidates out.
     The task holds the only partition, so every doc's postings are
     present and _matmul_emit's scores are final. bval is what the
     packed plan broadcasts; here it rides the closure of one task."""
@@ -608,7 +478,7 @@ def _csr_weights(qw_rows):
     """Query-major CSR layout of the batch weight matrix (see
     _matmul_emit scale notes) from (query_id, term, w) rows. Returns
     (qids, tmap, qptr, qtidx, qw); duplicate (q, t) entries sum in the
-    kernel's segment-sum, same as the join plan's groupBy."""
+    kernel's per-query dot."""
     qids = sorted({q for q, _t, _w in qw_rows})
     tmap = {t: i for i, t in enumerate(sorted({t for _q, t, _w in qw_rows}))}
     qmap = {q: i for i, q in enumerate(qids)}
@@ -640,30 +510,44 @@ ONE_TASK_MAX_POSTINGS = 1_000_000
 
 def _matmul_score_topk(rows: DataFrame, keep_col: str | None,
                        avgdl: float, qw_rows, k: int,
-                       round_dp: int | None, dead_ids, spread: bool,
-                       one_task: bool) -> DataFrame:
-    """The matmul route's per-partition top-k candidate rows (query_id,
-    doc_id, score) — the caller's final window cuts them to the exact
-    global top-k. qw_rows are the batch's (query_id, term, w).
+                       round_dp: int | None, dead_ids, n_postings: int,
+                       spread: bool) -> DataFrame:
+    """The one score aggregation: per-partition top-k candidate rows
+    (query_id, doc_id, score) of the posting rows `rows` (PAYLOAD_COLS,
+    plus keep_col when pruned) — the caller's final window cuts them to
+    the exact global top-k. qw_rows are the batch's (query_id, term, w)
+    (_weights).
 
-    one_task: the payload rows coalesce to one partition and
-    _decode_matmul_arrow_iter decodes and scores them in one task
-    (module doc, "small posting sets"). Otherwise the packed plan:
-    _decode_pack_arrow_iter (decode + tidx map + doc-bucket pack in ONE
-    python pass) -> a binary-blob exchange of <= n_tasks x part_space
-    rows -> _matmul_topk_packed_iter. Scores are bit-identical between
-    the two: a (term, doc) cell occurs once, and each doc sums
-    qw @ Xq over its query's CSR terms in the same order whatever
-    partition it lands in.
+    n_postings (Σ df of the terms served) picks the plan (module doc):
+    at most ONE_TASK_MAX_POSTINGS, the payload rows coalesce to one
+    partition and _decode_matmul_arrow_iter decodes and scores them in
+    one task. Above it the packed plan: _decode_pack_arrow_iter (decode
+    + tidx map + doc-bucket pack in ONE python pass) -> a binary-blob
+    exchange of <= n_tasks x part_space rows ->
+    _matmul_topk_packed_iter. Scores are bit-identical between the two:
+    a (term, doc) cell occurs once, and each doc sums qw @ Xq over its
+    query's CSR terms in the same order whatever partition it lands in.
+
+    spread=True (packed plan only) round-robin repartitions the payload
+    rows before the decode: the tid-bucketed layout co-locates ALL
+    posting rows of a term (every shard x salt chunk) in one pb
+    partition, so a scan split holding a hot term would otherwise
+    decode it in a SINGLE task (measured on the 500k-doc/300k-term
+    fixture: one task 267 s CPU vs a 0.9 s median; the whole 400-query
+    batch WAS that straggler, 311 s -> 41 s with the spread). The
+    hottest salted term has n_shards*n_salts chunks, so its decode fans
+    out across that many tasks, and the shuffle moves only bytes that
+    phase 2 kept. Callers gate it on index size (n_docs >=
+    AUTO_PRUNE_MIN_DOCS): on a tiny index the extra shuffle stage is
+    pure latency (measured +0.5 s on the sf0.1 p50).
 
     dead_ids: sorted int64 numpy array of tombstoned doc_ids (or
-    None) — kernel rows can't be anti-joined JVM-side, and a dead doc
-    inside a partition could otherwise displace a live doc from that
-    partition's k candidates, so the kernel drops them before
-    candidate selection; the caller needs no anti-join."""
+    None) — a dead doc inside a partition could otherwise displace a
+    live doc from that partition's k candidates, so the kernel drops
+    them before candidate selection; the caller needs no anti-join."""
     qids, tmap, qptr, qtidx, qw = _csr_weights(qw_rows)
     bval = (qids, len(tmap), qptr, qtidx, qw, dead_ids)
-    if one_task:
+    if n_postings <= ONE_TASK_MAX_POSTINGS:
         return rows.coalesce(1).mapInArrow(
             _decode_matmul_arrow_iter(bval, avgdl, keep_col, tmap, k,
                                       round_dp),
@@ -712,8 +596,7 @@ def local_query_terms(spark: SparkSession, queries: DataFrame):
     (LuceneQueryBuilder.java:98-117). Avoids two Spark jobs per search.
     Returns (qt DataFrame (query_id, term, qtf), distinct term list,
     qt_rows list) — the driver-side rows feed search_index's pruning
-    bounds, its warm-serving qterm local relation and the single-query
-    weight map without any extra Spark job. Plain column lists go
+    bounds and its weights without any extra Spark job. Plain column lists go
     through selectExpr here and in search_index: one py4j call per
     name instead of several."""
     from collections import Counter
@@ -919,28 +802,43 @@ def _term_meta(index: dict, terms, ranks: tuple) -> dict:
     return meta
 
 
-def _read_tombstones(spark: SparkSession, index: dict):
-    """(broadcast local (doc_id) relation, sorted int64 ids), or
-    (None, None) without standing tombstones. The tombstone parquet is
-    read ONCE per call: the ids feed both the packed matmul kernel's
-    dead-id array and every anti-join (a local relation, so no re-scan
-    per consumer)."""
+def _read_tombstones(index: dict):
+    """The standing tombstones as a sorted int64 doc_id array, or None
+    without any. The kernels drop these docs themselves (dead_ids of
+    _matmul_score_topk), so the set is read once per call and never
+    joined."""
     tombs = index.get("tombstones")
     if tombs is None:
-        return None, None
+        return None
     dead_ids = np.sort(np.array(
         [r.doc_id for r in tombs.select("doc_id").collect()],
         dtype=np.int64))
-    if not dead_ids.size:
-        return None, None
-    return F.broadcast(local_df(
-        spark, [(int(i),) for i in dead_ids.tolist()], "doc_id long")
-    ), dead_ids
+    return dead_ids if dead_ids.size else None
 
 
-def _live(scored: DataFrame, tombs: DataFrame | None) -> DataFrame:
-    return (scored.join(tombs, "doc_id", "left_anti")
-            if tombs is not None else scored)
+def _weights(spark: SparkSession, qt_rows, meta: dict, n_docs: int):
+    """The score weights: (query_id, term, w) rows, w = qtf * idf(df),
+    for every (query, term) row whose term has a df in meta (a term
+    absent from the index, or with a NULL df — degenerate metadata —
+    has no weight). idf/w are JVM expressions (idf_sql) on a local
+    relation, the one weight expression every serving score uses. The
+    collect runs no Spark job up to localrel.MAX_LOCAL_ROWS (query,
+    term) rows; above that, or for a query id no SQL literal renders,
+    local_df falls back to createDataFrame and the collect is one
+    job."""
+    rows = [(q, t_, f, float(meta[t_][0])) for (q, t_, f) in qt_rows
+            if t_ in meta and meta[t_][0] is not None]
+    if not rows:
+        return []
+    return local_df(
+        spark, rows, "query_id string, term string, qtf double, df double",
+    ).selectExpr("query_id", "term",
+                 f"qtf * ({idf_sql(n_docs)}) AS w").collect()
+
+
+def _n_postings(meta: dict, terms) -> int:
+    """Σ df of the terms: the kernel's work bound, before pruning."""
+    return sum(meta[t_][0] or 0 for t_ in terms if t_ in meta)
 
 
 def _py_w(qtf: float, dfv: float, n_docs: int) -> float:
@@ -987,101 +885,59 @@ def _impact_theta(qt_rows, meta: dict, rank_i: int, n_docs: int,
 
 def _decode_theta(spark: SparkSession, payload: DataFrame, meta: dict,
                   qt_rows, k: int, n_docs: int, avgdl: float,
-                  spread: bool, tombs: DataFrame | None
-                  ) -> dict[str, float]:
-    """The exact θ fallback (one Spark job chain): decode ONLY each
-    query's rarest term and take its k-th best live single-term score.
+                  spread: bool, dead_ids) -> dict[str, float]:
+    """The exact θ fallback: score ONLY each query's rarest term with
+    the serving kernel and take its k-th best live single-term score.
     Rarest = highest idf = LOWEST df (idf is strictly decreasing in df,
-    ties to min term). w for these term_scores is JVM-evaluated on a
-    local relation; the rare-term payload filter is a driver literal
+    ties to min term). The (query, rare term) rows take the serving
+    weights (_weights) and the kernel drops the dead docs (dead_ids),
+    so θ is scored exactly as the final plan scores and never counts a
+    deleted doc; the rare-term payload filter is a driver literal
     (IN-pushdown, no semi-join). Queries with fewer than k live docs
     for the term get no θ (-inf)."""
-    qtf_map = {(q, t_): f for (q, t_, f) in qt_rows}
-    rare_pick: dict[str, tuple] = {}  # query -> ((df, term), term)
+    rare: dict[str, tuple] = {}  # query -> (df, term, qtf)
     for (q, t_, f) in qt_rows:
         row = meta.get(t_)
         if row is None or row[0] is None:
             continue
-        key = (float(row[0]), t_)
-        cur = rare_pick.get(q)
-        if cur is None or key < cur[0]:
-            rare_pick[q] = (key, t_)
-    rare_terms = sorted({v[1] for v in rare_pick.values()})
+        pick = (float(row[0]), t_, f)
+        if q not in rare or pick[:2] < rare[q][:2]:
+            rare[q] = pick
+    rare_rows = [(q, t_, f) for q, (_df, t_, f) in rare.items()]
+    rare_terms = sorted({t_ for _q, t_, _f in rare_rows})
     if not rare_terms:
         return {}
-    rareq_local = F.broadcast(
-        local_df(
-            spark,
-            [(q, v[1], qtf_map[(q, v[1])], float(meta[v[1]][0]))
-             for q, v in rare_pick.items()],
-            "query_id string, term string, qtf double, df double")
-        .withColumn("w", F.col("qtf") * idf_expr(n_docs))
-        .select("query_id", "term", "w"))
-    # Usually tiny posting lists. The blanket spread (defaultParallelism
-    # x 4) made this a 128-task stage of pure scheduling overhead
-    # (measured ~3.5 s of a 12 s design-regime batch); the rare dfs are
-    # already driver-side, so derive the fan-out from the actual decode
-    # row count instead (scale-adaptive): below 200k rows the natural
-    # scan partitioning is plenty, above it spread ~100k rows per task,
-    # capped at the old width. A single all-hot-term query (its "rare"
-    # term is still hot) therefore still spreads across that term's
-    # salted chunks.
-    ph_rows = (payload.where(in_list("term", rare_terms))
-               .select(*PAYLOAD_COLS))
-    est_rows = sum(float(meta[v[1]][0]) for v in rare_pick.values())
-    if spread and est_rows >= 200_000:
-        width = int(min(
-            spark.sparkContext.defaultParallelism * 4,
-            max(2, est_rows // 100_000),
-        ))
-        ph_rows = ph_rows.repartition(width)
-    phase1 = _live(
-        _decode_tf_parts(ph_rows, avgdl, None, spread=False)
-        .join(rareq_local, "term")
-        .withColumn("term_score", F.col("w") * F.col("tf_part")),
-        tombs)
-    wrank = Window.partitionBy("query_id").orderBy(
-        F.col("term_score").desc(), F.col("doc_id").asc()
-    )
-    return {
-        r["query_id"]: float(r["theta"])
-        for r in (
-            phase1.withColumn("rn", F.row_number().over(wrank))
-            .where(F.col("rn") <= k)
-            .groupBy("query_id")
-            .agg(F.min("term_score").alias("theta"),
-                 F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
-        if r["cnt"] >= k  # fewer than k docs: θ stays -inf
-    }
+    rows = payload.where(in_list("term", rare_terms)).select(*PAYLOAD_COLS)
+    cand = _matmul_score_topk(
+        rows, None, avgdl, _weights(spark, rare_rows, meta, n_docs), k,
+        None, dead_ids, _n_postings(meta, rare_terms), spread)
+    return {r["query_id"]: float(r["score"])
+            for r in _topk(cand, k).where(f"rank = {int(k)}").collect()}
 
 
-def _impact_rank(ranks: tuple, k: int,
-                 tombs: DataFrame | None) -> int | None:
+def _impact_rank(ranks: tuple, k: int, dead_ids) -> int | None:
     """Position in the stored impact ranks of the smallest rank >= k,
     or None when θ takes the exact decode fallback: standing
     tombstones (a stored impact may count deleted docs), k above every
     stored rank, or no impacts column (no ranks)."""
-    if tombs is not None:
+    if dead_ids is not None:
         return None
     return next((i for i, r in enumerate(ranks) if r >= k), None)
 
 
 def _theta(spark: SparkSession, index: dict, payload: DataFrame,
-           meta: dict, qt_rows, k: int, tombs: DataFrame | None
-           ) -> dict[str, float]:
+           meta: dict, qt_rows, k: int, dead_ids) -> dict[str, float]:
     """Phase-1 θ per query (module doc): from the stored impacts when
     they are sound and deep enough, else the exact decode fallback.
     The one θ source of search_index and pruning_stats."""
     n_docs, avgdl = index["n_docs"], index["avgdl"]
     enc_avgdl = float(index.get("encode_avgdl") or avgdl) or avgdl
-    rank_i = _impact_rank(_impact_ranks(index, payload), k, tombs)
+    rank_i = _impact_rank(_impact_ranks(index, payload), k, dead_ids)
     if rank_i is not None:
         scale = min(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
         return _impact_theta(qt_rows, meta, rank_i, n_docs, scale)
     return _decode_theta(spark, payload, meta, qt_rows, k, n_docs, avgdl,
-                         n_docs >= AUTO_PRUNE_MIN_DOCS, tombs)
+                         n_docs >= AUTO_PRUNE_MIN_DOCS, dead_ids)
 
 
 def _block_thresholds(qt_rows, meta: dict, theta: dict, n_docs: int,
@@ -1157,28 +1013,6 @@ def _keep_blocks_sql(bthresh: dict[str, float]) -> str:
             f" i -> i >= 0)")
 
 
-def _single_query_topk(rows: DataFrame, qt_rows, n_docs: int,
-                       avgdl: float) -> DataFrame:
-    """One query's unrounded (doc_id, score, query_id) as ONE Spark task
-    (module doc, "single query"): the payload rows (PAYLOAD_COLS + df)
-    coalesce to one partition, so the decode, the per-doc aggregate and
-    the caller's top-k window all satisfy their distribution without an
-    Exchange, and the query's qtf weights ride a literal term -> qtf map
-    instead of a broadcast join. Per-term contributions are the join
-    route's own chain, (qtf * idf(df)) * tf_part over the payload's df.
-    Terms are analyzer tokens ([a-z0-9]+), so they always render as
-    literals; the query id is caller input and rides F.lit."""
-    wmap = ", ".join(f"{sql_literal(t_)}, {sql_literal(f)}"
-                     for _q, t_, f in qt_rows)
-    score = (f"sum((element_at(map({wmap}), term) * "
-             f"{idf_sql(n_docs)}) * tf_part) AS score")
-    return (
-        _decode_tf_parts(rows.coalesce(1), avgdl, None, with_df=True)
-        .groupBy("doc_id").agg(F.expr(score))
-        .withColumn("query_id", F.lit(qt_rows[0][0]))
-    )
-
-
 def search_index(
     spark: SparkSession,
     index: dict,
@@ -1187,7 +1021,7 @@ def search_index(
     prune: bool | str = "auto",
     round_dp: int | None = None,
     cache_level: str = "memory",
-    agg_impl: str = "env",
+    agg_impl: str = "auto",
 ) -> DataFrame:
     """Top-k BM25 over a compressed index (from postings.build_index /
     read_index). Returns (query_id, doc_id, score, rank).
@@ -1226,17 +1060,17 @@ def search_index(
     take the mirror factor min(1, serving/encode): for serving < encode
     the same ratio argument gives tf_part(serving) > tf_part(encode) *
     serving/encode. merge_partials re-baselines with a full re-encode
-    once the drift exceeds its max_bound_drift."""
+    once the drift exceeds its max_bound_drift.
+
+    agg_impl ('auto' | 'matmul'): both name the one score aggregation,
+    the matmul kernel (module doc); any other value raises."""
     if cache_level not in ("memory", "disk", "none"):
         raise ValueError(
             f"cache_level must be 'memory', 'disk', or 'none', got "
             f"{cache_level!r}")
-    if agg_impl == "env":
-        agg_impl = AGG_IMPL
-    if agg_impl not in ("auto", "join", "matmul"):
+    if agg_impl not in ("auto", "matmul"):
         raise ValueError(
-            f"agg_impl must be 'auto', 'join', or 'matmul', got "
-            f"{agg_impl!r}")
+            f"agg_impl must be 'auto' or 'matmul', got {agg_impl!r}")
     # release the PREVIOUS call's persisted posting rows on ENTRY — not
     # just on the pruned branch — so an unpruned (or empty-query) call
     # after a pruned one can't leave the old plan pinned forever
@@ -1244,16 +1078,17 @@ def search_index(
     # Standing tombstones (postings.delete_docs): Lucene-liveDocs
     # semantics — deleted docs vanish from results immediately, while
     # n_docs/avgdl/df keep counting them until compact_tombstones
-    # re-baselines. The set is anti-joined from the final scores before
-    # the top-k window, and θ must not be supported by deleted docs (it
+    # re-baselines. The kernel drops them before its candidate cut
+    # (dead_ids), and θ must not be supported by deleted docs (it
     # would be too high for the surviving corpus and could prune a
     # surviving doc out of the true top-k): stored impacts may count
-    # deleted docs, so a tombstoned index takes the decode θ, which
-    # anti-joins its phase-1 scores. Block-max bounds may still include
-    # deleted docs' tf: upper bounds stay valid, just less sharp.
-    # Broadcast: the tombstone set is meant to stay small relative to
-    # the index (compact when it grows — same guidance as Lucene's
-    # forceMergeDeletes). Read below, once the call has a term to serve.
+    # deleted docs, so a tombstoned index takes the decode θ, whose
+    # kernel drops them too. Block-max bounds may still include
+    # deleted docs' tf: upper bounds stay valid, just less sharp. The
+    # id array rides every kernel task, so the set is meant to stay
+    # small relative to the index (compact when it grows — same
+    # guidance as Lucene's forceMergeDeletes). Read below, once the
+    # call has a term to serve.
     n_docs, avgdl = index["n_docs"], index["avgdl"]
     enc_avgdl = float(index.get("encode_avgdl") or avgdl) or avgdl
     bfac = max(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
@@ -1294,57 +1129,34 @@ def search_index(
         # an empty LocalRelation: collecting it runs no Spark job
         return local_df(
             spark, [], "query_id string, doc_id long, score double, rank int")
-    tombs, dead_ids = _read_tombstones(spark, index)
 
     # Batch-sharing design (scale invariant): the byte payloads are
     # NEVER joined with the query table. Each payload row is decoded
-    # ONCE into (term, doc_id, tf_part) numeric rows — the
-    # query-independent half of BM25 — and the tiny broadcast
-    # (query_id, term, w) table joins onto those decoded rows JVM-side
-    # (score = w * tf_part). Under the old per-(query,term) plan a
-    # zipf batch replicated each hot term's multi-MB payload per query
-    # containing it: 400 queries OOM'd a 10 GiB executor; per-term
-    # decode makes batch cost proportional to UNIQUE terms, which is
-    # what a 1000-executor batch-serving job needs.
+    # ONCE into (term, doc_id, tf_part) triples — the query-independent
+    # half of BM25 — and the kernel scores them against the whole
+    # batch's CSR weights (score = w * tf_part). Under the old
+    # per-(query,term) plan a zipf batch replicated each hot term's
+    # multi-MB payload per query containing it: 400 queries OOM'd a
+    # 10 GiB executor; per-term decode makes batch cost proportional to
+    # UNIQUE terms, which is what a 1000-executor batch-serving job
+    # needs.
     payload = _pb_pruned_postings(index, terms).where(in_list("term", terms))
 
-    # Per-term metadata (action-count driven — see BASELINE.md
+    # Per-term (df, raw block-max, impacts), read on the driver from the
+    # serving rows (_term_meta, no job): every downstream consumer (θ,
+    # UB sums, per-term block thresholds, the one-task bound) is plain
+    # driver arithmetic (action-count driven — see BASELINE.md
     # "Single-query latency anatomy": every Spark action/AQE stage
     # launch costs ~0.3 s on this host class, so serving latency is
     # dominated by how many chained jobs the plan materializes, not by
-    # per-row work at bench scale):
-    #   * unpruned join route: none — the payload's own df column rides
-    #     through the decode kernel (TFPART_DF_ROWS) and idf/w evaluate
-    #     JVM-side on the decoded rows.
-    #   * pruned and matmul routes: per-term (df, raw block-max,
-    #     impacts) read on the driver from the serving rows (_term_meta,
-    #     no job); every downstream consumer (θ, UB sums, per-term block
-    #     thresholds, the one-task bound) is plain driver arithmetic.
-    #   * scoring weights stay JVM-evaluated everywhere: the matmul
-    #     weights come from a LOCAL relation carrying (qtf, df) with
-    #     idf/w as Catalyst expressions — the join route's own
-    #     expression on the same inputs, so scores are bit-identical
-    #     (fuzz rank identity at 9 dp; tests pin route equality) — and
-    #     it collects driver-side without a job.
-    # spread decode work off the tid-bucketed co-location once the
-    # index is big enough that one hot term saturates a task (same bar
-    # as auto-prune; see _decode_tf_parts)
-    spread = n_docs >= AUTO_PRUNE_MIN_DOCS
-    if agg_impl == "auto":
-        agg_impl = "matmul" if spread else "join"
-    meta: dict = {}
+    # per-row work at bench scale). The score weights stay
+    # JVM-evaluated (_weights), collected without a job up to
+    # localrel.MAX_LOCAL_ROWS (query, term) rows and with one above.
     ranks = _impact_ranks(index, payload) if prune else ()
-    if prune or agg_impl == "matmul":
-        meta = _term_meta(index, terms, ranks)
-        _mark("meta")
-
-    def _finish(scored: DataFrame, dead=tombs) -> DataFrame:
-        scored = _live(scored, dead)
-        if round_dp is not None:
-            scored = scored.withColumn("score", F.round("score", round_dp))
-        return _topk(scored, k)
-
-    cols = PAYLOAD_COLS if agg_impl == "matmul" else (*PAYLOAD_COLS, "df")
+    meta = _term_meta(index, terms, ranks)
+    qw_rows = _weights(spark, qt_rows, meta, n_docs)
+    _mark("meta")
+    dead_ids = _read_tombstones(index)
     keep_col, keep = None, ()
     if prune:
         # ---- pruned path: the metadata above, then driver arithmetic,
@@ -1352,15 +1164,15 @@ def search_index(
         # in-plan: every broadcast ran as its own AQE sub-job — ~30
         # chained stage launches at sf0.1 (BASELINE.md anatomy). Now:
         #   θ (_theta): from the stored impacts in `meta` — no job — or,
-        #     on the exact fallback, one decode of each query's rarest
-        #     term; only then does the payload have a second consumer
-        #     worth persisting.
+        #     on the exact fallback, one kernel run over each query's
+        #     rarest term; only then does the payload have a second
+        #     consumer worth persisting.
         #   Driver: phase 2 — per-query UB sums and the per-term block
         #     threshold (_block_thresholds; the MIN of the keep
         #     condition over sharing queries). These feed PRUNING BOUNDS
         #     only and are relaxed toward KEEP.
         #   Plan: keep_blocks from a literal term -> threshold map (no
-        #     broadcast) -> decode survivors -> aggregate -> top-k.
+        #     broadcast) -> decode survivors -> kernel -> top-k.
         # Decoding a superset of a query's own keep list is always safe:
         # the WAND argument only ever uses "a block was skipped ⇒ its
         # docs provably score below θ(q)", and the union skips a block
@@ -1368,7 +1180,7 @@ def search_index(
         # decoded blocks just move partial scores toward their exact
         # values (rank identity to the unpruned plan is pytest- and
         # oracle-gated).
-        if _impact_rank(ranks, k, tombs) is None:
+        if _impact_rank(ranks, k, dead_ids) is None:
             if cache_level == "memory":
                 payload = _track_persist(payload.cache())
             elif cache_level == "disk":
@@ -1377,7 +1189,7 @@ def search_index(
                 payload = _track_persist(
                     payload.persist(StorageLevel.DISK_ONLY))
             # 'none': no persist — the final plan re-runs the scan
-        theta = _theta(spark, index, payload, meta, qt_rows, k, tombs)
+        theta = _theta(spark, index, payload, meta, qt_rows, k, dead_ids)
         _mark("theta")
         quant = 10.0 ** -round_dp if round_dp is not None else 0.0
         bthresh: dict[str, float] = {}
@@ -1387,49 +1199,13 @@ def search_index(
         keep_col, keep = "keep_blocks", (
             f"{_keep_blocks_sql(bthresh)} AS keep_blocks",)
         _mark("thresholds(driver)")
-    rows = payload.selectExpr(*cols, *keep)
-
-    if agg_impl == "matmul":
-        # (query_id, term, w) as a LOCAL relation: idf/w are JVM
-        # expressions and it collects without a job; a term with a
-        # NULL df (degenerate metadata) has no weight
-        qw_rows = local_df(
-            spark,
-            [(q, t_, f, float(meta[t_][0])) for (q, t_, f) in qt_rows
-             if t_ in meta and meta[t_][0] is not None],
-            "query_id string, term string, qtf double, df double",
-        ).selectExpr("query_id", "term",
-                     f"qtf * ({idf_sql(n_docs)}) AS w").collect()
-        one_task = sum(m[0] or 0 for m in meta.values()) <= \
-            ONE_TASK_MAX_POSTINGS
-        # the kernels drop the tombstoned docs themselves (dead_ids), so
-        # no anti-join
-        return _finish(_matmul_score_topk(
-            rows, keep_col, avgdl, qw_rows, k, round_dp, dead_ids, spread,
-            one_task), dead=None)
-    if not prune and not spread and len({q for q, _t, _f in qt_rows}) == 1:
-        return _finish(_single_query_topk(rows, qt_rows, n_docs, avgdl))
-    # df-passthrough (round 6), pruned AND unpruned: idf/w from the
-    # decoded rows' own df column and the query weights a broadcast
-    # local relation — no metadata job, and the broadcast is the one
-    # job its build costs (a scan job too once the batch has more
-    # (query, term) rows than local_df renders), with ONE shared plan
-    # shape for both routes (the bench warmup exercises the pruned
-    # shape, so the timed unpruned batch reuses its compiled codegen
-    # instead of paying first-compile). Same multiplication chain as
-    # the old qterm route ((qtf*idf)*tf_part) over the same df value —
-    # every chunk of a term carries the term's full df, equal to the
-    # metadata max — so scores are bit-identical.
-    decoded = _decode_tf_parts(rows, avgdl, keep_col, spread=spread,
-                               with_df=True)
-    qtl = F.broadcast(local_df(
-        spark, qt_rows, "query_id string, term string, qtf double"))
-    return _finish(
-        decoded.join(qtl, "term")
-        .withColumn("w", F.col("qtf") * idf_expr(n_docs))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("w") * F.col("tf_part")).alias("score"))
-    )
+    scored = _matmul_score_topk(
+        payload.selectExpr(*PAYLOAD_COLS, *keep), keep_col, avgdl, qw_rows,
+        k, round_dp, dead_ids, _n_postings(meta, terms),
+        n_docs >= AUTO_PRUNE_MIN_DOCS)
+    if round_dp is not None:
+        scored = scored.withColumn("score", F.round("score", round_dp))
+    return _topk(scored, k)
 
 
 def pruning_stats(
@@ -1453,10 +1229,10 @@ def pruning_stats(
     _qt, terms, qt_rows = local_query_terms(spark, queries)
     if not terms:
         return {"total_blocks": 0, "kept_blocks": 0, "pruned_fraction": 0.0}
-    tombs, _dead = _read_tombstones(spark, index)
+    dead_ids = _read_tombstones(index)
     payload = _pb_pruned_postings(index, terms).where(in_list("term", terms))
     meta = _term_meta(index, terms, _impact_ranks(index, payload))
-    theta = _theta(spark, index, payload, meta, qt_rows, k, tombs)
+    theta = _theta(spark, index, payload, meta, qt_rows, k, dead_ids)
     rhs = F.broadcast(local_df(
         spark,
         [(q, t_, v) for (q, t_), v in _block_thresholds(

@@ -1750,8 +1750,8 @@ def read_index(spark: SparkSession, out_dir: str) -> dict:
         # the pruning threshold θ from them
         "impact_ranks": tuple(m.get("impact_ranks") or ()),
         # docs marked deleted but not yet compacted away (None when the
-        # index has no standing tombstones): serving anti-joins results
-        # against this set — delete_docs docstring has the semantics
+        # index has no standing tombstones): serving drops these docs
+        # from results — delete_docs docstring has the semantics
         "tombstones": read_tombstones(spark, out_dir, m),
     }
 
@@ -1876,8 +1876,8 @@ def delete_docs(spark: SparkSession, out_dir: str, doc_ids) -> int:
 
     doc_ids: iterable of ints or a (doc_id) DataFrame. Writes them to a
     new ``tombstones_g<N>`` dir, committed as one more listed tombstone
-    dir; serving (csearch.search_index) anti-joins every result set
-    against the union of the listed dirs. Lucene-parity semantics
+    dir; serving (csearch.search_index) drops the union of the listed
+    dirs' docs from every result set. Lucene-parity semantics
     until compact_tombstones runs: collection stats (n_docs, avgdl) and
     per-term df still COUNT the deleted docs — exactly as Lucene's
     docFreq/sumTotalTermFreq ignore liveDocs — so surviving docs keep

@@ -32,12 +32,25 @@ def bm25_topk(
     k: int = 100,
     k1: float = 1.2,
     b: float = 0.75,
+    round_dp: int | None = None,
+    dead: frozenset | set = frozenset(),
+    n_docs: int | None = None,
+    avgdl: float | None = None,
 ) -> list[tuple[str, int, float, int]]:
-    """Returns [(query_id, doc_id, score, rank)] sorted per query."""
+    """Returns [(query_id, doc_id, score, rank)] sorted per query.
+
+    round_dp rounds every score HALF_UP on its shortest decimal repr
+    (Spark's F.round on a double) BEFORE ranking. Docs in `dead` are
+    deleted: they still count in N, avgdl and df, but never rank.
+    n_docs and avgdl override the collection stats the scores use (an
+    index whose stats were edited or drifted)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
     toks = {d: tokenize(t) for d, t in docs}
     dl = {d: len(ts) for d, ts in toks.items()}
-    n = len(docs)
-    avgdl = sum(dl.values()) / n if n else 0.0
+    n = len(docs) if n_docs is None else n_docs
+    if avgdl is None:
+        avgdl = sum(dl.values()) / len(docs) if docs else 0.0
     tf: dict[str, Counter] = {}
     df: Counter = Counter()
     for d, ts in toks.items():
@@ -57,9 +70,30 @@ def bm25_topk(
             for d, f in tf[term].items():
                 part = f * (k1 + 1.0) / (f + k1 * (1.0 - b + b * dl[d] / avgdl))
                 scores[d] = scores.get(d, 0.0) + q_f * idf * part
+        for d in dead:
+            scores.pop(d, None)
+        if round_dp is not None:
+            q = Decimal(1).scaleb(-round_dp)
+            scores = {d: float(Decimal(repr(s)).quantize(q, ROUND_HALF_UP))
+                      for d, s in scores.items()}
         ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
         out.extend((qid, d, s, i + 1) for i, (d, s) in enumerate(ranked))
     return out
+
+
+def assert_matches_topk(got, want) -> None:
+    """Serving rows (Rows or tuples of query_id, doc_id, score, rank)
+    equal bm25_topk's: the same (query, doc, rank) rows, each score
+    within 1e-9 of the oracle's (the engine sums a doc's terms in
+    another order)."""
+    import pytest
+
+    got = sorted(tuple(r) for r in got)
+    want = sorted(want)
+    assert [(q, d, r) for q, d, _s, r in got] == \
+        [(q, d, r) for q, d, _s, r in want]
+    for g, w in zip(got, want):
+        assert g[2] == pytest.approx(w[2], rel=1e-9, abs=1e-9), (g, w)
 
 
 def postings(docs: list[tuple[int, str]]) -> dict[str, list[tuple[int, int, int]]]:

@@ -13,8 +13,8 @@ compact_tombstones, engine/csearch.py search_index tombstone filter):
    tombstones;
 3. a crash anywhere before compaction's one commit leaves the previous
    generation serving (tombstones standing) and a re-run finishes the
-   job (crashes just before and just after the commit itself:
-   tests/test_commit.py).
+   job — tested with the rest of the commit protocol in
+   tests/test_commit.py.
 """
 
 from __future__ import annotations
@@ -98,6 +98,45 @@ def test_delete_hides_docs_immediately_stats_unchanged(spark, corpus, built):
     assert _rows(got_pruned) == sorted(want)
 
 
+def test_decode_theta_counts_only_live_docs(spark, tmp_path):
+    """A tombstoned index takes the decode θ, which must be the k-th
+    best LIVE single-term score of each query's rarest term: deleted
+    docs among that term's best would raise θ above what the surviving
+    corpus reaches, and the block filter could then prune a surviving
+    top-k doc."""
+    from engine.csearch import (_impact_ranks, _pb_pruned_postings,
+                                _read_tombstones, _term_meta, _theta,
+                                local_query_terms)
+    from engine.localrel import in_list
+
+    from .oracle import assert_matches_topk, bm25_topk
+
+    # kiwi (df 12) is rarer than apple (df 24); its tf, hence its
+    # score, grows with the doc id, and the two best kiwi docs die
+    docs = ([(i, "apple apple apple " + "kiwi " * i) for i in range(1, 13)]
+            + [(i, "apple pear") for i in range(13, 25)])
+    dead = {11, 12}
+    out = str(tmp_path / "theta_idx")
+    build_index(spark, spark.createDataFrame(docs, "doc_id long, text string"),
+                out, n_shards=2, hot_df_threshold=10**9, n_salts=2)
+    delete_docs(spark, out, sorted(dead))
+    idx = read_index(spark, out)
+    queries = [("q0", "kiwi apple")]
+    qs = spark.createDataFrame(queries, "query_id string, query string")
+    k = 3
+    _qt, terms, qt_rows = local_query_terms(spark, qs)
+    pay = _pb_pruned_postings(idx, terms).where(in_list("term", terms))
+    meta = _term_meta(idx, terms, _impact_ranks(idx, pay))
+    theta = _theta(spark, idx, pay, meta, qt_rows, k, _read_tombstones(idx))
+    want_kth = bm25_topk(docs, [("q0", "kiwi")], k=k, dead=dead)[-1]
+    assert want_kth[1] == 8 and want_kth[3] == k  # docs 10, 9, 8 live
+    assert theta["q0"] == pytest.approx(want_kth[2], rel=1e-9)
+    for prune in (False, True):
+        assert_matches_topk(
+            search_index(spark, idx, qs, k=k, prune=prune).collect(),
+            bm25_topk(docs, queries, k=k, dead=dead))
+
+
 def test_delete_accepts_iterable_and_dedups(spark, corpus, built):
     n1 = delete_docs(spark, built, [3, 13, 3])
     assert n1 == 2
@@ -139,48 +178,3 @@ def test_compact_noop_without_tombstones(spark, built):
     assert m["stats"] == m0["stats"]
     assert m == m0  # nothing committed
 
-
-def test_compact_crash_before_merge_serves_correctly(spark, corpus, built,
-                                                     monkeypatch, tmp_path):
-    """Crash AFTER the filtered partials and doc stats are written but
-    BEFORE the re-baselining merge: nothing is committed, so the
-    previous generation serves unchanged — tombstones standing, NO
-    deleted doc served, pre-compaction stats, pruned == unpruned — and
-    a re-run finishes compaction."""
-    import engine.postings as P
-
-    qdf = queries_df(spark)
-    victims = {r.doc_id
-               for r in corpus.where(DELETED()).select("doc_id").collect()}
-    delete_docs(spark, built, corpus.where(DELETED()).select("doc_id"))
-    m0 = load_manifest(built)
-
-    class Boom(Exception):
-        pass
-
-    def boom(*a, **kw):
-        raise Boom()
-
-    monkeypatch.setattr(P, "_merge", boom)
-    with pytest.raises(Boom):
-        compact_tombstones(spark, built, hot_df_threshold=100, n_salts=4)
-    monkeypatch.undo()
-
-    assert load_manifest(built) == m0
-    idx = read_index(spark, built)
-    assert idx["tombstones"] is not None
-    got_p = _rows(search_index(spark, idx, qdf, k=10, prune=True))
-    got_u = _rows(search_index(spark, idx, qdf, k=10, prune=False))
-    assert got_p == got_u and got_p
-    assert not any(d in victims for _, d, _, _ in got_p)
-
-    # re-run finishes: equals a fresh build on the survivors
-    compact_tombstones(spark, built, hot_df_threshold=100, n_salts=4)
-    fresh_dir = str(tmp_path / "fresh")
-    build_index(spark, corpus.where(~DELETED()), fresh_dir, n_shards=4,
-                hot_df_threshold=100, n_salts=4)
-    got2 = _rows(search_index(spark, read_index(spark, built), qdf, k=10,
-                              prune=True))
-    want2 = _rows(search_index(spark, read_index(spark, fresh_dir), qdf,
-                               k=10, prune=True))
-    assert got2 == want2

@@ -119,32 +119,32 @@ def test_fuzz_impact_theta_rank_identical_to_decode_theta(spark,
                                                           tmp_path_factory):
     """Random skewed corpora x random queries: the pruned route with θ
     from the stored impacts, the pruned route with the decode θ (the
-    same index minus its impacts column) and the unpruned route give
-    identical top-k — on the index as built and with the serving avgdl
-    drifted below the encode avgdl (the stored impacts are then scaled
-    down). Every impact θ must also lower-bound the query's true k-th
-    score."""
+    same index minus its impacts column) and the unpruned route all
+    return the test oracle's top-k — on the index as built and with the
+    serving avgdl drifted below the encode avgdl (the stored impacts
+    are then scaled down). Every impact θ must also lower-bound the
+    query's true k-th score."""
     from engine.csearch import (_impact_ranks, _term_meta, _theta,
                                 local_query_terms, search_index)
     from engine.postings import build_index, read_index
 
+    from .oracle import assert_matches_topk, bm25_topk
+
     theta_ks = set()
     for seed in range(3):
         rng = random.Random(100 + seed)
-        docs = spark.createDataFrame(_zipf_docs(rng, rng.randint(250, 400)),
-                                     DOC_SCHEMA)
-        qs = spark.createDataFrame(
-            [(f"q{j}", " ".join(rng.choice(VOCAB[:20] + ["absentterm"])
-                                for _ in range(rng.randint(1, 4))))
-             for j in range(5)],
-            "query_id string, query string")
+        rows = _zipf_docs(rng, rng.randint(250, 400))
+        docs = spark.createDataFrame(rows, DOC_SCHEMA)
+        qrows = [(f"q{j}", " ".join(rng.choice(VOCAB[:20] + ["absentterm"])
+                                    for _ in range(rng.randint(1, 4))))
+                 for j in range(5)]
+        qs = spark.createDataFrame(qrows, "query_id string, query string")
         out = str(tmp_path_factory.mktemp(f"fzt{seed}"))
         build_index(spark, docs, out, n_shards=2,
                     hot_df_threshold=(40, 10**9, 10**9)[seed], n_salts=2,
                     id_col="doc_id", text_col="text")
         built = read_index(spark, out)
         assert built["impact_ranks"] and "impacts" in built["postings"].columns
-        agg = ("join", "matmul")[seed % 2]
         _qt, terms, qt_rows = local_query_terms(spark, qs)
         pay = built["postings"].where(F.col("term").isin(terms))
         meta = _term_meta(built, terms, _impact_ranks(built, pay))
@@ -152,17 +152,16 @@ def test_fuzz_impact_theta_rank_identical_to_decode_theta(spark,
             idx = dict(built, avgdl=built["avgdl"] * drift)
             no_imp = dict(idx, postings=idx["postings"].drop("impacts"))
             for k in (7, 100):
-                want = search_index(spark, idx, qs, k=k, prune=False,
-                                    agg_impl=agg).collect()
-                got = _topk_sig(search_index(spark, idx, qs, k=k, prune=True,
-                                             agg_impl=agg).collect())
-                dec = _topk_sig(search_index(spark, no_imp, qs, k=k,
-                                             prune=True,
-                                             agg_impl=agg).collect())
-                assert got == _topk_sig(want) == dec, (seed, drift, k)
+                # the drifted serving avgdl is not the corpus's own
+                want = bm25_topk([r[:2] for r in rows], qrows, k=k,
+                                 avgdl=idx["avgdl"] if drift != 1.0 else None)
+                for served, prune in ((idx, False), (idx, True),
+                                      (no_imp, True)):
+                    assert_matches_topk(search_index(
+                        spark, served, qs, k=k, prune=prune).collect(), want)
                 # θ soundness, checked directly against the true scores
                 theta = _theta(spark, idx, pay, meta, qt_rows, k, None)
-                kth = {r.query_id: r.score for r in want if r.rank == k}
+                kth = {q: s for q, _d, s, rk in want if rk == k}
                 for q, th in theta.items():
                     assert q in kth and th <= kth[q], (seed, drift, k, q)
                 if theta:

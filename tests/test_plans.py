@@ -44,11 +44,16 @@ def test_term_filter_reaches_parquet_scan(spark, built):
     assert "In(term" in pushed and "spark" in pushed
 
 
-def test_query_side_is_broadcast(spark, built):
-    plan = _formatted(search_index(spark, built, queries_df(spark),
-                                   k=10, prune=False))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan  # tiny query side must never SMJ
+def test_small_index_plan_has_no_join_or_exchange(spark, built):
+    """On a small index the whole query batch is one kernel task: the
+    weights ride the kernel's closure, so the query side is never
+    joined or broadcast, and the one partition needs no Exchange."""
+    for prune in (False, True):
+        plan = _formatted(search_index(spark, built, queries_df(spark),
+                                       k=10, prune=prune))
+        assert "Join" not in plan, prune
+        assert "Broadcast" not in plan, prune
+        assert "Exchange" not in plan, prune
 
 
 def test_topk_is_bounded_before_exchange(spark, built):
@@ -124,12 +129,10 @@ def test_decode_stage_is_query_independent(spark, built):
     """The scale invariant of batch serving: byte payloads are decoded
     ONCE per posting row, never replicated per query — below a
     MapInArrow/MapInPandas decode operator, query_id may appear ONLY
-    inside a BroadcastExchange subtree (the tiny per-term threshold
-    table built from theta is broadcast onto the payload rows; the
-    per-query weight join happens ABOVE the decode, on small numeric
-    rows). A query_id join on the STREAMED (payload) side would mean
-    each byte payload is replicated per sharing query — the plan shape
-    that OOMs batch serving on zipf query sets."""
+    inside a BroadcastExchange subtree (the per-query weights ride the
+    kernel, not the plan). A query_id join on the STREAMED (payload)
+    side would mean each byte payload is replicated per sharing query —
+    the plan shape that OOMs batch serving on zipf query sets."""
     df = search_index(spark, built, queries_df(spark), k=10, prune=True)
     plan = _plan(df)
     lines = plan.splitlines()
@@ -164,19 +167,23 @@ def test_decode_stage_is_query_independent(spark, built):
 
 def test_decode_spread_adds_roundrobin_exchange_only_at_scale(spark, built):
     """At-scale serving (n_docs >= AUTO_PRUNE_MIN_DOCS) must round-robin
-    the payload rows before the decode kernel — the tid-bucketed layout
-    co-locates every chunk of a hot term in one pb partition, so
-    without the spread one scan task runs the whole hot term's
-    decode+join+partial-agg (the measured 400-query-batch straggler).
-    On a small index the spread must be absent: it is pure latency
-    there (measured +0.5 s on the sf0.1 p50)."""
-    from engine.csearch import _decode_tf_parts
+    the payload rows before the packed plan's decode kernel — the
+    tid-bucketed layout co-locates every chunk of a hot term in one pb
+    partition, so without the spread one scan task runs the whole hot
+    term's decode (the measured 400-query-batch straggler). On a small
+    index the spread must be absent: it is pure latency there
+    (measured +0.5 s on the sf0.1 p50)."""
+    from engine.csearch import PAYLOAD_COLS, _matmul_score_topk
 
-    payload = built["postings"].select(
-        "term", "doc_bytes", "tf_bytes", "dl_bytes",
-        "doc_off", "tf_off", "dl_off")
-    spread_plan = _plan(_decode_tf_parts(payload, 10.0, None, spread=True))
-    flat_plan = _plan(_decode_tf_parts(payload, 10.0, None, spread=False))
+    payload = built["postings"].select(*PAYLOAD_COLS)
+    qw_rows = [("q0", "spark", 1.0)]
+
+    def packed(spread):
+        # a work bound above ONE_TASK_MAX_POSTINGS: the packed plan
+        return _plan(_matmul_score_topk(payload, None, 10.0, qw_rows, 10,
+                                        None, None, 10**12, spread))
+
+    spread_plan, flat_plan = packed(True), packed(False)
     assert "RoundRobinPartitioning" in spread_plan
     assert "RoundRobinPartitioning" not in flat_plan
     # the small `built` fixture is below the bar: end-to-end serving on

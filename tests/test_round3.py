@@ -3,7 +3,6 @@ byte-histogram bucket clamping, multiprobe prefix width."""
 
 from __future__ import annotations
 
-import os
 
 import numpy as np
 import pytest
@@ -131,58 +130,6 @@ def test_stream_dedup_across_salted_hot_groups(spark, tmp_path_factory):
                                "query_id string, query string")
     res = search_index(spark, idx, qs, k=10).collect()
     assert len({r.doc_id for r in res}) == len(res)  # no duplicate docs
-
-
-def test_dedup_swap_crash_recovery(spark, tmp_path_factory,
-                                   monkeypatch):
-    """A crash between the dedup's consolidation write and the merge's
-    commit leaves the previous generation serving, and the next merge
-    finishes the job, never silently dropping stream postings."""
-    import engine.postings as P
-    from engine.csearch import search_index
-    from engine.postings import (
-        build_index, load_manifest, merge_partials, read_index,
-    )
-    from engine.streaming import start_incremental_index
-
-    out = str(tmp_path_factory.mktemp("rec_idx"))
-    inp = str(tmp_path_factory.mktemp("rec_in"))
-    batch = spark.createDataFrame(
-        [(0, "apple banana", "en", "s", 12)], DOC_SCHEMA)
-    build_index(spark, batch, out, n_shards=2, hot_df_threshold=10**9,
-                n_salts=2, id_col="doc_id", text_col="text")
-    spark.createDataFrame(
-        [(0, "apple banana", "en", "s", 12),
-         (5, "banana fig", "en", "s", 10)],
-        DOC_SCHEMA).write.mode("overwrite").parquet(inp + "/drop")
-    start_incremental_index(spark, inp + "/drop", out,
-                            avgdl_hint=3.0).awaitTermination(120)
-    m0 = load_manifest(out)
-
-    def crash(*a, **kw):
-        raise OSError("crash before the merge commit")
-
-    monkeypatch.setattr(P, "_commit", crash)
-    with pytest.raises(OSError):
-        merge_partials(spark, out, hot_df_threshold=10**9, n_salts=2)
-    monkeypatch.undo()
-    # the consolidated shard was written but is not listed
-    assert load_manifest(out) == m0
-    assert any(d.startswith("shard=streamdedup")
-               for d in os.listdir(out + "/partials"))
-
-    merge_partials(spark, out, hot_df_threshold=10**9, n_salts=2)
-    m = load_manifest(out)
-    assert "stream0" not in m["shards"]
-    assert m["shards"]["streamdedup"]["status"] == "ok"
-    assert sorted(os.listdir(out + "/partials")) == sorted(
-        r["dir"] for r in m["shards"].values() if r.get("dir"))
-    idx = read_index(spark, out)
-    assert idx["n_docs"] == 2
-    qs = spark.createDataFrame([("q0", "banana")],
-                               "query_id string, query string")
-    res = search_index(spark, idx, qs, k=10).collect()
-    assert sorted(r.doc_id for r in res) == [0, 5]
 
 
 def test_stream_redrop_latest_version_wins_whole_doc(spark,

@@ -5,56 +5,9 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-
-def test_recovered_dedup_removal_forces_full_merge(spark,
-                                                   tmp_path_factory,
-                                                   monkeypatch):
-    """A merge whose dedup REMOVED rows and that crashed before its
-    commit leaves nothing durable behind; its re-run redoes the dedup,
-    sees the removal in-call, and must re-baseline fully — the
-    pure-append guard would otherwise take the incremental merge over a
-    stream-partial set the consolidation erased terms from, keeping
-    ghost rows. incremental=True (which skips only the economic guard)
-    must still end in a full merge."""
-    import engine.postings as P
-    from engine.postings import (
-        build_index, load_manifest, merge_partials,
-    )
-    from engine.streaming import start_incremental_index
-
-    out = str(tmp_path_factory.mktemp("rr_idx"))
-    inp = str(tmp_path_factory.mktemp("rr_in"))
-    build_index(spark, spark.createDataFrame(
-        [(0, "apple banana", "en", "s", 12)], DOC_SCHEMA), out,
-        n_shards=2, hot_df_threshold=10**9, n_salts=2,
-        id_col="doc_id", text_col="text")
-    # doc 0 re-dropped: the merge's dedup removes its stream rows
-    spark.createDataFrame(
-        [(0, "apple banana", "en", "s", 12),
-         (5, "banana fig", "en", "s", 10)],
-        DOC_SCHEMA).write.mode("overwrite").parquet(inp + "/drop")
-    start_incremental_index(spark, inp + "/drop", out,
-                            avgdl_hint=3.0).awaitTermination(120)
-    m0 = load_manifest(out)
-
-    def crash(*a, **kw):
-        raise OSError("crash before the merge commit")
-
-    monkeypatch.setattr(P, "_commit", crash)
-    with pytest.raises(OSError):
-        merge_partials(spark, out, hot_df_threshold=10**9, n_salts=2,
-                       incremental=True)
-    monkeypatch.undo()
-    assert load_manifest(out) == m0
-    m = merge_partials(spark, out, hot_df_threshold=10**9, n_salts=2,
-                       incremental=True)
-    assert m["last_merge"] == "full"
-    assert m["shards"]["streamdedup"]["dedup_removed"] > 0
 
 
 def test_within_batch_duplicate_doc_tf_not_doubled(spark,

@@ -543,6 +543,8 @@ def test_batch_pruned_identical_to_unpruned_with_shared_terms(
 
 
 def _matmul_fixture(spark, tmp_path_factory, tag, n_docs=600):
+    """(index with standing tombstones, its docs as (doc_id, text),
+    the tombstoned ids)."""
     from engine.corpusgen import synth_corpus
     from engine.postings import build_index, delete_docs, read_index
 
@@ -550,52 +552,59 @@ def _matmul_fixture(spark, tmp_path_factory, tag, n_docs=600):
     docs = synth_corpus(spark, n_docs)
     build_index(spark, docs, out, n_shards=2, hot_df_threshold=200,
                 n_salts=2, text_col="content")
-    # standing tombstones so the matmul path's pre-kernel anti-join is
-    # exercised (a dead doc displacing a live one from a partition's k
-    # candidates would be invisible without them)
-    delete_docs(spark, out, [3, 11, 42])
-    return read_index(spark, out)
+    # standing tombstones so the kernels' dead-doc drop is exercised (a
+    # dead doc displacing a live one from a partition's k candidates
+    # would be invisible without them)
+    dead = {3, 11, 42}
+    delete_docs(spark, out, sorted(dead))
+    return (read_index(spark, out),
+            [(r.doc_id, r.content)
+             for r in docs.select("doc_id", "content").collect()],
+            dead)
 
 
-def test_matmul_agg_identical_to_join(spark, tmp_path_factory):
-    """agg_impl='matmul' (dense matmul + per-partition top-k) must
-    reproduce the join plan's (query_id, doc_id, score, rank) rows
-    exactly — across prune on/off, round_dp on/off and both matmul
-    plans (one task; packed, forced by a one-task bound of 0), with
-    tombstones standing (the kernels drop them from the dead set, not
-    via the JVM anti-join). Raw-precision scores are compared at 9 dp
-    (all plans' sum orders are partition-nondeterministic)."""
+def test_matmul_plans_match_oracle(spark, tmp_path_factory):
+    """The matmul kernel (dense matmul + per-partition top-k) must
+    return the test oracle's (query_id, doc_id, score, rank) rows —
+    across prune on/off, round_dp on/off and both plans (one task;
+    packed, forced by a one-task bound of 0), with tombstones standing
+    (the kernels drop them from the dead set). Raw-precision scores are
+    compared at 9 dp (the kernel and the oracle sum in different
+    orders)."""
     from engine import csearch
     from engine.corpusgen import synth_queries
 
-    idx = _matmul_fixture(spark, tmp_path_factory, "mm_id")
+    from .oracle import assert_matches_topk, bm25_topk
+
+    idx, docs, dead = _matmul_fixture(spark, tmp_path_factory, "mm_id")
     qs = synth_queries(spark, 40)
+    queries = [(r.query_id, r.query) for r in qs.collect()]
     for prune in (False, True):
         for dp in (None, 4):
-            def rows(impl, bound=csearch.ONE_TASK_MAX_POSTINGS):
+            want = bm25_topk(docs, queries, k=10, round_dp=dp, dead=dead)
+            assert want
+            for bound in (csearch.ONE_TASK_MAX_POSTINGS, 0):
                 with pytest.MonkeyPatch.context() as mp:
                     mp.setattr(csearch, "ONE_TASK_MAX_POSTINGS", bound)
-                    r = csearch.search_index(
-                        spark, idx, qs, k=10, prune=prune, round_dp=dp,
-                        agg_impl=impl).collect()
-                return sorted((x.query_id, x.doc_id,
-                               round(x.score, 9), x.rank) for x in r)
-            want = rows("join")
-            assert want == rows("matmul"), (prune, dp)
-            assert want == rows("matmul", 0), (prune, dp, "packed")
+                    got = csearch.search_index(
+                        spark, idx, qs, k=10, prune=prune, round_dp=dp
+                    ).collect()
+                assert_matches_topk(got, want)
 
 
 def test_matmul_ties_subk_and_no_phantom_zero_docs(spark, tmp_path):
     """Three matmul edge cases the dense chunk could get wrong:
     (a) exact score ties cut by doc_id asc at the k boundary — the
-        kernel's lexsort + the final window must agree with the join
-        plan's row_number tie-break;
+        kernel's lexsort + the final window must agree with the
+        oracle's (score desc, doc_id asc) tie-break;
     (b) a query matching FEWER than k docs — the dense S row is 0 for
         every non-matching doc in the partition, and those zeros must
         never surface as phantom hits;
     (c) a term absent from the corpus entirely."""
-    from engine.csearch import search_index
+    from engine import csearch
     from engine.postings import build_index, read_index
+
+    from .oracle import assert_matches_topk, bm25_topk
 
     # 12 identical docs -> 12 exactly-tied scores for "apple"; only
     # docs 0-2 contain "kiwi"
@@ -606,17 +615,16 @@ def test_matmul_ties_subk_and_no_phantom_zero_docs(spark, tmp_path):
     build_index(spark, docs, out, n_shards=2, hot_df_threshold=10**9,
                 n_salts=2)
     idx = read_index(spark, out)
-    qs = spark.createDataFrame(
-        [("t", "apple"), ("s", "kiwi"), ("z", "nosuchterm")],
-        "query_id string, query string")
-    got = {}
-    for impl in ("join", "matmul"):
-        r = search_index(spark, idx, qs, k=5, agg_impl=impl).collect()
-        got[impl] = sorted((x.query_id, x.doc_id, round(x.score, 9),
-                            x.rank) for x in r)
-    assert got["join"] == got["matmul"]
+    queries = [("t", "apple"), ("s", "kiwi"), ("z", "nosuchterm")]
+    qs = spark.createDataFrame(queries, "query_id string, query string")
+    want = bm25_topk(rows, queries, k=5)
+    for bound in (csearch.ONE_TASK_MAX_POSTINGS, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(csearch, "ONE_TASK_MAX_POSTINGS", bound)
+            got = csearch.search_index(spark, idx, qs, k=5).collect()
+        assert_matches_topk(got, want)
     by_q = {}
-    for q, d, s, rk in got["matmul"]:
+    for q, d, s, rk in want:
         by_q.setdefault(q, []).append((d, rk))
     # (a) ties cut to doc_id 0..4 in rank order
     assert by_q["t"] == [(i, i + 1) for i in range(5)]
@@ -631,15 +639,16 @@ def test_matmul_plan_repartitions_by_doc_and_auto_gates(
     """Plan shape: the packed matmul plan (forced by a one-task bound
     of 0) must hash-repartition by the doc-co-locating `part`
     doc-bucket column (co-location makes per-partition scores final);
-    below the bound the matmul route is one task, with no Exchange at
-    all, pruned or not; the auto route at tiny n_docs must pick the
-    join plan (no such exchange). Also: a typo'd agg_impl fails
-    loudly."""
+    below the bound the kernel is one task, with no Exchange at all,
+    pruned or not, and so is the default (auto) route at tiny n_docs.
+    Also: agg_impl accepts only 'auto' and 'matmul' — the deleted
+    'join' and a typo fail loudly."""
     from engine import csearch
     from engine.corpusgen import synth_queries
     from engine.csearch import search_index
 
-    idx = _matmul_fixture(spark, tmp_path_factory, "mm_plan", n_docs=80)
+    idx, _docs, _dead = _matmul_fixture(spark, tmp_path_factory, "mm_plan",
+                                        n_docs=80)
     qs = synth_queries(spark, 5)
 
     def plan(df):
@@ -661,6 +670,7 @@ def test_matmul_plan_repartitions_by_doc_and_auto_gates(
         assert repart_on(mm, "part")  # packed feed: bucket exchange
         assert not repart_on(mm, "doc_id")
     auto = search_index(spark, idx, qs, k=5)  # auto, n_docs < 100k
-    assert not repart_on(auto, "doc_id") and not repart_on(auto, "part")
-    with pytest.raises(ValueError, match="agg_impl"):
-        search_index(spark, idx, qs, k=5, agg_impl="matmlu")
+    assert "Exchange" not in plan(auto)
+    for bad in ("join", "matmlu"):
+        with pytest.raises(ValueError, match="agg_impl"):
+            search_index(spark, idx, qs, k=5, agg_impl=bad)

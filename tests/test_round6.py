@@ -6,7 +6,7 @@ review findings over the matmul/packed-feed/deletes commits.
    idf (hence w) negative. Phase-2's
    division-by-w threshold must not flip its inequality, and the
    matmul kernel's hit test must not drop legitimately
-   negative-scoring docs the join plan ranks.
+   negative-scoring docs the OR query ranks.
 2. The matmul chunk width must keep the dense transient X bounded
    (~128 MB) instead of growing linearly with batch term count.
 3. lsh_bucket_stats' capped-pair formula must clamp the anchor count
@@ -19,9 +19,10 @@ from pyspark.sql import functions as F
 
 
 def _mixed_sign_fixture(spark, tmp_path):
-    """Index whose stats we then desync: 'apple' in every doc (df=50),
-    'kiwi' in 3 docs. Overriding n_docs=10 makes w(apple) < 0 while
-    w(kiwi) > 0 — stale per-term df vs a smaller N."""
+    """(index whose stats we then desync, its docs): 'apple' in every
+    doc (df=50), 'kiwi' in 3 docs. Overriding n_docs=10 makes
+    w(apple) < 0 while w(kiwi) > 0 — stale per-term df vs a smaller
+    N."""
     from engine.postings import build_index, read_index
 
     rows = [(i, "apple pear " + ("kiwi" if i < 3 else "plum") +
@@ -32,13 +33,13 @@ def _mixed_sign_fixture(spark, tmp_path):
                 n_salts=2)
     idx = dict(read_index(spark, out))
     idx["n_docs"] = 10  # < df(apple)=50: idf(apple) = ln(1+x), x<0
-    return idx
+    return idx, rows
 
 
 def test_negative_weight_window_rank_identity(spark, tmp_path):
-    """All serving plans (prune on/off x join/matmul, the matmul route
-    on both its one-task and packed plans) must agree
-    when some query weights are negative. Before the
+    """All serving routes (prune on/off x the kernel's one-task and
+    packed plans) must return the oracle's top-k (scored with the same
+    desynced N) when some query weights are negative. Before the
     fix: phase 2 divided the keep condition by w without flipping the
     inequality (pruning away blocks the query must decode), and the
     matmul kernel's score>0 hit test dropped negatively-scoring hit
@@ -51,29 +52,24 @@ def test_negative_weight_window_rank_identity(spark, tmp_path):
 
     from engine import csearch
 
-    idx = _mixed_sign_fixture(spark, tmp_path)
-    qs = spark.createDataFrame(
-        [("neg", "apple"),            # single negative-w term
-         ("mix", "apple kiwi"),       # mixed signs, kiwi rarest
-         ("pos", "kiwi")],            # control: all-positive
-        "query_id string, query string")
+    from .oracle import assert_matches_topk, bm25_topk
 
-    def rows(prune, impl, bound=csearch.ONE_TASK_MAX_POSTINGS):
-        with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(csearch, "ONE_TASK_MAX_POSTINGS", bound)
-            r = csearch.search_index(spark, idx, qs, k=3, prune=prune,
-                                     agg_impl=impl).collect()
-        return sorted((x.query_id, x.doc_id, round(x.score, 9), x.rank)
-                      for x in r)
-
-    want = rows(False, "join")
+    idx, docs = _mixed_sign_fixture(spark, tmp_path)
+    queries = [("neg", "apple"),            # single negative-w term
+               ("mix", "apple kiwi"),       # mixed signs, kiwi rarest
+               ("pos", "kiwi")]             # control: all-positive
+    qs = spark.createDataFrame(queries, "query_id string, query string")
+    want = bm25_topk(docs, queries, k=3, n_docs=idx["n_docs"])
     # negative-w docs must actually rank (score < 0 rows exist)
     assert any(q == "neg" and s < 0 for q, _, s, _ in want)
     for prune in (False, True):
-        for impl in ("join", "matmul"):
-            assert rows(prune, impl) == want, (prune, impl)
-        # the matmul route's packed plan (a one-task bound of 0)
-        assert rows(prune, "matmul", 0) == want, (prune, "packed")
+        # the one-task plan, then the packed plan (a one-task bound of 0)
+        for bound in (csearch.ONE_TASK_MAX_POSTINGS, 0):
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(csearch, "ONE_TASK_MAX_POSTINGS", bound)
+                got = csearch.search_index(spark, idx, qs, k=3,
+                                           prune=prune).collect()
+            assert_matches_topk(got, want)
 
 
 def test_chunk_width_bounds_dense_transient():
@@ -118,13 +114,13 @@ def test_matmul_round_matches_jvm_half_up(spark):
     decimal repr; np.round is half-to-even — at a decimal midpoint the
     two diverge (np.round(2.5) = 2.0, F.round(2.5, 0) = 3.0). The
     matmul kernels therefore emit UNROUNDED candidate scores cut with
-    a one-quantum relaxation, and _finish's F.round is the single
-    rounding authority for every aggregation route.
+    a one-quantum relaxation, and search_index's F.round is the single
+    rounding authority for every serving route.
 
     Regression for the round-4 review finding: with kernel-side
     np.round, a doc whose exact score is 2.5 was emitted as 2.0 and a
-    2.4-scoring lower-doc_id doc won the rounded tie — the join plan
-    (and the oracle) return the 2.5 doc at 3.0."""
+    2.4-scoring lower-doc_id doc won the rounded tie — the oracle
+    returns the 2.5 doc at 3.0."""
     import numpy as np
 
     from engine.csearch import _matmul_emit, _topk
@@ -144,7 +140,7 @@ def test_matmul_round_matches_jvm_half_up(spark):
     # the kernel keeps BOTH candidates (2.4 is within one quantum of
     # the kth unrounded score 2.5) and rounds NEITHER
     assert got == {3: 2.4, 5: 2.5}
-    # _finish's F.round + window: doc 5 rounds HALF_UP to 3.0 and wins
+    # search_index's F.round + window: doc 5 rounds HALF_UP to 3.0 and wins
     cand = spark.createDataFrame(
         [("q", d, s) for d, s in got.items()],
         "query_id string, doc_id long, score double",

@@ -1,7 +1,7 @@
-"""Round-6 optimization tests: serving-route identity after the
-action-count restructure (driver-side prune thresholds, df-passthrough
-unpruned scoring), the warm stats-drift release (ADVICE r5 #1/#2), and
-the bench headline-size canary."""
+"""Round-6 optimization tests: serving-route identity against the
+test oracle after the action-count restructure (driver-side prune
+thresholds, one-task kernel plans), the warm stats-drift release
+(ADVICE r5 #1/#2), and the bench headline-size canary."""
 
 from __future__ import annotations
 
@@ -12,18 +12,19 @@ import pytest
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
+#: tie-heavy corpus: repeated docs produce equal scores so the
+#: (score desc, doc_id asc) tie-break is exercised on every route
+R9_DOCS = [(i, f"apple banana {'fig ' * (i % 3)}cherry t{i % 5}")
+           for i in range(60)]
+
+
 @pytest.fixture(scope="module")
 def r9_dir(spark, tmp_path_factory):
     from engine.postings import build_index
 
     out = str(tmp_path_factory.mktemp("r9_idx"))
-    # tie-heavy corpus: repeated docs produce equal scores so the
-    # (score desc, doc_id asc) tie-break is exercised on every route
     docs = spark.createDataFrame(
-        [(i, f"apple banana {'fig ' * (i % 3)}cherry t{i % 5}", "en",
-          "s", 30) for i in range(60)],
-        DOC_SCHEMA,
-    )
+        [(i, text, "en", "s", 30) for i, text in R9_DOCS], DOC_SCHEMA)
     build_index(spark, docs, out, n_shards=2, hot_df_threshold=20,
                 n_salts=2)
     return out
@@ -44,8 +45,8 @@ R9_QUERIES = [("q0", "apple fig"), ("q1", "banana t3 zzz_absent"),
 
 
 def _res(spark, idx, qs, packed=False, **kw):
-    """search_index rows, scores to 9 dp. packed=True forces the matmul
-    route's packed plan (a one-task bound of 0)."""
+    """search_index rows, scores to 9 dp. packed=True forces the
+    kernel's packed plan (a one-task bound of 0)."""
     from engine import csearch
 
     with pytest.MonkeyPatch.context() as mp:
@@ -57,24 +58,31 @@ def _res(spark, idx, qs, packed=False, **kw):
         )
 
 
-#: (prune, agg_impl, packed): every route, the matmul ones on both plans
-ROUTES = [(p, a, packed) for p in (False, True) for a in ("join", "matmul")
-          for packed in ((False, True) if a == "matmul" else (False,))]
+#: (prune, packed): every route, the kernel on both of its plans
+ROUTES = [(p, packed) for p in (False, True) for packed in (False, True)]
 
 
-def _routes_identical(spark, idx, **kw):
-    """Serve R9_QUERIES as one batch on every (prune x agg_impl x
-    matmul plan) route, then each query alone on every route, cold and
-    then warm: all must equal the unpruned join batch (rows, scores to
-    9 dp, ranks)."""
+def _oracle(queries, k, round_dp=None, dead=frozenset()):
+    from .oracle import bm25_topk
+
+    return bm25_topk(R9_DOCS, queries, k=k, round_dp=round_dp, dead=dead)
+
+
+def _routes_identical(spark, idx, k, round_dp, dead=frozenset()):
+    """Serve R9_QUERIES as one batch on every (prune x kernel plan)
+    route, then each query alone on every route, cold and then warm:
+    all must return the test oracle's top-k (rows, scores to 9 dp,
+    ranks)."""
     from engine.csearch import release_warm, warm_serving
 
+    from .oracle import assert_matches_topk
+
     qs = spark.createDataFrame(R9_QUERIES, "query_id string, query string")
-    base = _res(spark, idx, qs, prune=False, agg_impl="join", **kw)
-    assert {r[0] for r in base} == {q for q, _ in R9_QUERIES}
-    for p, a, packed in ROUTES:
-        assert _res(spark, idx, qs, packed, prune=p, agg_impl=a,
-                    **kw) == base, f"batch route {(p, a, packed)} diverged"
+    want = _oracle(R9_QUERIES, k, round_dp, dead)
+    assert {r[0] for r in want} == {q for q, _ in R9_QUERIES}
+    for p, packed in ROUTES:
+        assert_matches_topk(_res(spark, idx, qs, packed, prune=p, k=k,
+                                 round_dp=round_dp), want)
     singles = [(q, spark.createDataFrame([(q, text)],
                                          "query_id string, query string"))
                for q, text in R9_QUERIES]
@@ -83,35 +91,32 @@ def _routes_identical(spark, idx, **kw):
             warm_serving(spark, idx)
         try:
             for q, one in singles:
-                want = [r for r in base if r[0] == q]
-                for p, a, packed in ROUTES:
-                    assert _res(spark, idx, one, packed, prune=p,
-                                agg_impl=a, **kw) == want, (
-                        f"{posture} single {q} on route {(p, a, packed)} "
-                        "diverged")
+                for p, packed in ROUTES:
+                    assert_matches_topk(
+                        _res(spark, idx, one, packed, prune=p, k=k,
+                             round_dp=round_dp),
+                        [r for r in want if r[0] == q])
         finally:
             release_warm(idx)
 
 
 @pytest.mark.parametrize("round_dp", [None, 4])
 def test_all_routes_rank_identical(spark, r9_index, round_dp):
-    """Every (prune x agg_impl) route must rank identically, for the
-    batch and for each query served alone, cold and warm: unpruned join
-    scores from the decoded rows' own df column (a single query as one
-    task with a literal weight map), pruned computes its block
-    thresholds driver-side from the metadata read on the driver,
-    matmul takes its weights from the local qterm relation and runs as
-    one task and, forced, as the packed plan. Any driver-float slack in
-    the pruning bounds may only widen the kept-block superset, never
-    change results."""
+    """Every (prune x kernel plan) route must return the oracle's
+    top-k, for the batch and for each query served alone, cold and
+    warm: pruned computes its block thresholds driver-side from the
+    metadata read on the driver, and the kernel runs as one task and,
+    forced, as the packed plan. Any driver-float slack in the pruning
+    bounds may only widen the kept-block superset, never change
+    results."""
     _routes_identical(spark, r9_index, k=10, round_dp=round_dp)
 
 
 def test_all_routes_rank_identical_tombstoned(spark, r9_dir, tmp_path):
     """The same identity on an index with standing tombstones: every
-    route, the one-task plans included, drops deleted docs
-    through _finish's anti-join and still ranks exactly like the
-    batch."""
+    route, the one-task plans included, drops the deleted docs in the
+    kernel (pruned, also in the decode θ's kernel, which a tombstoned
+    index takes) and returns the oracle's top-k over the live docs."""
     import shutil
 
     from engine.postings import delete_docs, read_index
@@ -122,7 +127,7 @@ def test_all_routes_rank_identical_tombstoned(spark, r9_dir, tmp_path):
     delete_docs(spark, out, sorted(dead))
     idx = read_index(spark, out)
     assert idx["tombstones"] is not None
-    _routes_identical(spark, idx, k=10, round_dp=4)
+    _routes_identical(spark, idx, k=10, round_dp=4, dead=dead)
     qs = spark.createDataFrame(R9_QUERIES, "query_id string, query string")
     assert not dead & {r[1] for r in _res(spark, idx, qs, k=10)}
 
@@ -209,12 +214,13 @@ def degenerate_dirs(r9_dir, tmp_path_factory):
 
 
 @pytest.mark.parametrize("degenerate", ["all", "impacts"])
-@pytest.mark.parametrize("agg_impl", ["join", "matmul"])
+@pytest.mark.parametrize("agg_impl", ["auto", "matmul"])
 @pytest.mark.parametrize("prune", [False, True])
-def test_warm_null_tmeta_degrades(spark, r9_index, degenerate_dirs, prune,
-                                  agg_impl, degenerate):
+def test_warm_null_tmeta_degrades(spark, degenerate_dirs, prune, agg_impl,
+                                  degenerate):
     """ADVICE r5 #2: NULL term metadata in the serving rows (a foreign
-    or hand-edited index) must never change results, cold or warm.
+    or hand-edited index) must never change results, cold or warm, on
+    either kernel plan or either accepted agg_impl value.
     'all': the driver read leaves fig's block-max NULL although its
     other chunks hold one — a max over those could understate it — so
     the pruned routes keep every block of a query holding fig.
@@ -222,44 +228,54 @@ def test_warm_null_tmeta_degrades(spark, r9_index, degenerate_dirs, prune,
     from engine.csearch import _term_meta, release_warm, warm_serving
     from engine.postings import read_index
 
-    qs = spark.createDataFrame([("q0", "apple fig")],
-                               "query_id string, query string")
-    want = _res(spark, r9_index, qs, k=10, prune=prune, agg_impl=agg_impl)
+    from .oracle import assert_matches_topk
+
+    query = [("q0", "apple fig")]
+    qs = spark.createDataFrame(query, "query_id string, query string")
+    want = _oracle(query, 10)
     assert len(want) > 0
     idx = read_index(spark, degenerate_dirs[degenerate])
     df, bmax, imps = _term_meta(idx, ["fig"], idx["impact_ranks"])["fig"]
     assert df == 40
     assert (bmax is None) == (degenerate == "all")
     assert imps == (None, None) or degenerate == "all"
-    assert _res(spark, idx, qs, k=10, prune=prune,
-                agg_impl=agg_impl) == want
-    warm_serving(spark, idx)
-    try:
-        assert _res(spark, idx, qs, k=10, prune=prune,
-                    agg_impl=agg_impl) == want
-    finally:
-        release_warm(idx)
+    for posture in ("cold", "warm"):
+        if posture == "warm":
+            warm_serving(spark, idx)
+        try:
+            for packed in (False, True):
+                assert_matches_topk(_res(spark, idx, qs, packed, k=10,
+                                         prune=prune, agg_impl=agg_impl),
+                                    want)
+        finally:
+            release_warm(idx)
 
 
 @pytest.mark.parametrize("prune", [False, True])
-def test_null_df_chunk_keeps_term_weight(spark, r9_index, degenerate_dirs,
-                                         prune):
+def test_null_df_chunk_keeps_term_weight(spark, degenerate_dirs, prune):
     """One of fig's chunk rows without its df: every chunk carries the
-    term's full df, so the driver read takes it from the others and the
-    matmul routes, which weight each term from that read, rank exactly
-    as on the intact index. (The join routes read each decoded row's
-    own df.)"""
+    term's full df, so the driver read takes it from the others, and
+    every route, which weights each term from that read, ranks exactly
+    as the oracle on the intact corpus — the default route
+    (prune='auto', default agg_impl) too, for a batch and for a single
+    query."""
     from engine.csearch import _term_meta
     from engine.postings import read_index
 
-    qs = spark.createDataFrame([("q0", "apple fig"), ("q1", "fig")],
-                               "query_id string, query string")
+    from .oracle import assert_matches_topk
+
+    queries = [("q0", "apple fig"), ("q1", "fig")]
+    qs = spark.createDataFrame(queries, "query_id string, query string")
+    one = spark.createDataFrame(queries[:1], "query_id string, query string")
     idx = read_index(spark, degenerate_dirs["df"])
     assert _term_meta(idx, ["fig"], ())["fig"][0] == 40
+    want = _oracle(queries, 10)
     for packed in (False, True):
-        assert _res(spark, idx, qs, packed, k=10, prune=prune,
-                    agg_impl="matmul") == _res(
-            spark, r9_index, qs, k=10, prune=prune, agg_impl="matmul")
+        assert_matches_topk(_res(spark, idx, qs, packed, k=10, prune=prune,
+                                 agg_impl="matmul"), want)
+    assert_matches_topk(_res(spark, idx, qs, k=10), want)
+    assert_matches_topk(_res(spark, idx, one, k=10),
+                        [r for r in want if r[0] == "q0"])
 
 
 @pytest.mark.parametrize("ansi", ["true", "false"])
@@ -268,8 +284,10 @@ def test_threshold_map_ansi_safe(spark, r9_index, ansi):
     term -> threshold map. Under either ANSI setting a term in the map
     keeps exactly the blocks reaching its threshold, a term outside it
     keeps every block (element_at would raise under ANSI), and pruned
-    serving ranks like unpruned serving."""
+    serving on both kernel plans returns the oracle's top-k."""
     from engine.csearch import _keep_blocks_sql
+
+    from .oracle import assert_matches_topk
 
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", ansi)
@@ -284,10 +302,10 @@ def test_threshold_map_ansi_safe(spark, r9_index, ansi):
             assert {r.term: r.keep for r in got} == want
         qs = spark.createDataFrame(R9_QUERIES,
                                    "query_id string, query string")
-        base = _res(spark, r9_index, qs, k=10, prune=False, agg_impl="join")
-        for a in ("join", "matmul"):
-            assert _res(spark, r9_index, qs, k=10, prune=True,
-                        agg_impl=a) == base
+        want = _oracle(R9_QUERIES, 10)
+        for packed in (False, True):
+            assert_matches_topk(_res(spark, r9_index, qs, packed, k=10,
+                                     prune=True), want)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
 
