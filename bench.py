@@ -453,9 +453,9 @@ def _BURN(n):  # top-level for pickling
 
 
 def _raw_tokens_df(spark, corpus_path: str):
-    """The build's pre-shuffle projection, via the SAME function the
-    real build uses (engine.postings.raw_token_projection), so the
-    phase-scaling numbers can't drift from the measured plan."""
+    """The shard-batch build's pre-shuffle projection, via the SAME
+    function that build uses (engine.postings.raw_token_projection),
+    so the phase-scaling numbers can't drift from its plan."""
     from pyspark.sql import functions as F
 
     from engine.analysis import with_tokens
@@ -499,9 +499,9 @@ def run_shuffle_phase(corpus_path: str, cpus: int) -> float:
 
 
 def run_encode_phase(corpus_path: str, cpus: int) -> float:
-    """The full build hot path minus parquet output: shuffle + Arrow
-    JVM->Python transfer + numpy lexsort/encode kernel, noop sink —
-    the same kernel the real build runs."""
+    """The shard-batch build's hot path minus parquet output: shuffle +
+    Arrow JVM->Python transfer + numpy lexsort/encode kernel, noop sink
+    — the same kernel that build and stream ingest run."""
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from engine.postings import TID_ENC_SCHEMA, _encode_partition_arrow_fn
 
@@ -744,10 +744,7 @@ def run_scaling(n_docs: int, mode: str = "local",
     if mode == "local-cluster":
         mem = int(os.environ.get("SPARK_GRAFT_LC_MEM_MB", "10240"))
         # SPARK_GRAFT_LC_CORES: task slots per executor JVM (default
-        # 4). 2 gives the hybrid-slot shape ([2,2] -> [8,2]) the
-        # round-4 combine A/B documented as the 100 TB sizing for
-        # combine='mapside' (fused JVM+Python stages want ~2 threads
-        # per slot); executor count still scales 2 -> 8 = N -> 4N.
+        # 4); executor count scales 2 -> 8 = N -> 4N.
         cores = int(os.environ.get("SPARK_GRAFT_LC_CORES", "4"))
         legs = {8: f"local-cluster[2,{cores},{mem}]",
                 32: f"local-cluster[8,{cores},{mem}]"}
@@ -832,8 +829,6 @@ def run_scaling(n_docs: int, mode: str = "local",
         "mode": mode,
         "vocab_size": vocab_size,
         "masters": {str(c): (legs[c] or f"local[{c}]") for c in legs},
-        # disclose the build-plan knobs this run measured under
-        "combine": os.environ.get("SPARK_GRAFT_BUILD_COMBINE", "shuffle"),
         "n_docs": n_docs,
         "build_wall_8": w8, "build_wall_32": w32,
         "build_docs_per_sec_32": round(n_docs / w32, 1),

@@ -13,7 +13,8 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
            query-independent (term, doc_id, tf_part) triples, and the
            whole batch's (query, term, w) weights ride the scoring
            kernel as one CSR matrix — batch cost is proportional to the
-           UNIQUE terms of the batch, not Σ per-query terms.
+           UNIQUE terms of the batch, not Σ per-query terms. A query
+           set with no indexed term returns here, before any job.
   phase 1  threshold θ(q), a lower bound on the final k-th score, from
            metadata alone: every merged chunk stores its r-th largest
            tf_part for r in codec.IMPACT_RANKS, so a term t with w_t > 0
@@ -29,7 +30,8 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
            support an impact, when k exceeds the largest rank, or on an
            index without impacts: fully score ONLY the rarest
            (highest-idf) term of each query; its k-th best single-term
-           score is the bound.
+           score is the bound. Only above ONE_TASK_MAX_POSTINGS is the
+           payload persisted for it: below, the one-task plan re-scans.
   phase 2  block filter: a block b of term t is provably irrelevant
            for query q if
                UBsum(q) - w_t*tmax_t + w_t*block_max_b < θ(q)
@@ -1038,8 +1040,9 @@ def search_index(
     cache_level ('memory' | 'disk' | 'none'): how the pruned plan holds
     the query's posting rows (byte payloads included) when the exact
     decode θ reads them before the final plan does (θ from the stored
-    impacts reads them once, so nothing is persisted there). 'memory'
-    (default) is fastest when the touched
+    impacts reads them once, and a set of at most ONE_TASK_MAX_POSTINGS
+    postings is re-scanned by the kernel's one task, so nothing is
+    persisted there). 'memory' (default) is fastest when the touched
     slice fits executor storage; at north-star scale a hot term's
     payload blocks are TB-class, so serving there should use 'disk'
     (spill-backed) or 'none' (re-scan: the term IN-pushdown scan is
@@ -1156,7 +1159,13 @@ def search_index(
     meta = _term_meta(index, terms, ranks)
     qw_rows = _weights(spark, qt_rows, meta, n_docs)
     _mark("meta")
+    if not qw_rows:
+        # no query term is in the index: nothing can score, so no
+        # persist, θ or kernel — collecting the empty relation is no job
+        return local_df(
+            spark, [], "query_id string, doc_id long, score double, rank int")
     dead_ids = _read_tombstones(index)
+    n_postings = _n_postings(meta, terms)
     keep_col, keep = None, ()
     if prune:
         # ---- pruned path: the metadata above, then driver arithmetic,
@@ -1180,7 +1189,11 @@ def search_index(
         # decoded blocks just move partial scores toward their exact
         # values (rank identity to the unpruned plan is pytest- and
         # oracle-gated).
-        if _impact_rank(ranks, k, dead_ids) is None:
+        # a one-task posting set is re-scanned by that one task: a
+        # persist would cost a job of its own (adaptive execution
+        # materializes a cached relation as a stage) and save none
+        if (_impact_rank(ranks, k, dead_ids) is None
+                and n_postings > ONE_TASK_MAX_POSTINGS):
             if cache_level == "memory":
                 payload = _track_persist(payload.cache())
             elif cache_level == "disk":
@@ -1201,8 +1214,7 @@ def search_index(
         _mark("thresholds(driver)")
     scored = _matmul_score_topk(
         payload.selectExpr(*PAYLOAD_COLS, *keep), keep_col, avgdl, qw_rows,
-        k, round_dp, dead_ids, _n_postings(meta, terms),
-        n_docs >= AUTO_PRUNE_MIN_DOCS)
+        k, round_dp, dead_ids, n_postings, n_docs >= AUTO_PRUNE_MIN_DOCS)
     if round_dp is not None:
         scored = scored.withColumn("score", F.round("score", round_dp))
     return _topk(scored, k)

@@ -1,78 +1,86 @@
-"""Compressed posting-list build: sharded, checkpointed, skew-salted.
+"""Compressed posting-list build: sharded, checkpointed, skew-split.
 
 Reference analog: Lucene IndexWriter builds per-segment posting lists
 and commits every 10,000 docs (LuceneIndexBuilder.java:39-49); segments
-are later merged. Here (north_rule):
+are later merged and the merge inputs dropped. Here (north_rule):
 
-  stats pass (init_stats):
-      one scan computes doc_stats (exact dl + sha256(content) — the
+  stats pass (init_stats, or inline in build_index):
+      one scan computes doc_stats (exact dl + raw sha256(content) — the
       per-row invariant), collection stats (N, avgdl), and the term
-      dictionary tid = xxhash64(term) -> term (collision-checked).
+      dictionary tid = xxhash64(term) -> term (n_terms observed on its
+      write). Two dict rows sharing a tid are a collision, and the
+      merge kernel raises on it: every dict row of a tid meets in one
+      partition of the merge's exchange.
 
-  build phase (batched; shard = xxhash64(doc) % S):
-      one scan+tokenize per BATCH of shards (per-shard jobs would each
-      re-scan the whole input); raw (shard, tid, doc_id, dl) token
-      occurrences — integers only — are hash-repartitioned by
-      (shard, tid) and encoded by a mapInArrow kernel that lexsorts the
-      partition in numpy, splits (shard, tid, doc) runs (tf = run
-      length), and emits blocked delta+varbyte lists (dl inline like
-      Lucene norms, per-128-posting block-max metadata). Output lands
-      under partials/shard=s via dynamic partition overwrite; each
-      batch commits its per-shard lineage (term/posting counts, wall,
-      status, dir) and a re-run skips shards already committed — the
-      shard/batch is the resumable checkpoint (reference analog: the
-      10,000-doc IndexWriter commit, LuceneIndexBuilder.java:42-45).
+  the merge kernel (_merge_onepass_arrow_fn): ONE exchange by tid bucket
+      pb = pmod(tid, pb_mod) carries a tid's postings together with its
+      dictionary row. The kernel sorts the partition's postings by
+      (tid, doc) in numpy, takes tf from (tid, doc) run lengths, df
+      from the group size and the term string from the dict row, splits
+      a term with df > hot_df_threshold into contiguous doc-range chunks
+      of at most that many postings (salt = chunk index), and emits the
+      blocked delta+varbyte serving rows (dl inline like Lucene norms,
+      per-128-posting block-max, stored impacts). Its input is either
+      raw token occurrences or rows that already carry the payload
+      codec (serving rows, partials), decoded in one batched call.
 
-  merge phase (explicit skew handling, north_rule):
-      full merge (merge_onepass_plan): partials and the term dictionary
-      ride ONE exchange by tid bucket; the kernel computes df in-kernel,
-      restores term strings from the dictionary rows, and splits a term
-      with df > hot_df_threshold into contiguous doc-range chunks of at
-      most that many postings (salt = chunk index), so no serving row
-      grows without bound.
-      incremental merge (merge_plan, only the terms new stream shards
-      touched): df(tid) = sum of partial counts; terms with
-      df > hot_threshold keep up to n_salts rows (salt = hash(shard,
-      payload) % n_salts — shard doc spaces are disjoint, so per-salt
-      lists are independent and the giant hot-term group is never
-      materialized in a single task); cold terms merge to one row. Each
-      (tid, salt) group decodes its few partials, re-sorts, re-encodes
-      in numpy; the term dictionary restores strings.
+  build (build_index):
+      default (one shard batch): raw (tid, doc_id, dl) token rows and
+      the dictionary rows go through the kernel and land as postings_v1
+      directly — no partials are written, one commit lists everything.
+      shard_batch=k: each batch of k shards is scanned, hash-partitioned
+      by (shard, tid) and encoded into partials/shard=S — the resumable
+      checkpoint (the 10,000-doc IndexWriter commit,
+      LuceneIndexBuilder.java:42-45); a re-run skips committed shards.
+      The merge that follows reads them once and unlists them.
 
-Final layout (parquet, the serving table PARTITIONED by tid bucket
-pb = pmod(tid, pb_mod) and term-sorted within files, so serving prunes
-whole partition dirs for the query's terms and row-group min/max stats
-serve the term IN (...) pushdown inside the survivors):
+  merge (merge_partials):
+      every merge feeds the kernel the standing serving rows (the base:
+      they carry term, df and the same payload codec) plus the listed
+      stream partials, the only delta kept on disk.
+      full: base ∪ every listed stream partial; the docs of the listed
+      stream doc stats are dropped from the base (they come back from
+      the deduped stream partials), compaction also drops tombstoned
+      docs. All rows are re-encoded at the refreshed avgdl.
+      incremental: the base rows of the buckets new stream partials
+      touch ∪ those partials, at the standing encode avgdl; untouched
+      bucket dirs are hardlinked.
+
+Final layout (parquet, the serving table PARTITIONED by tid bucket pb
+and term-sorted within files, so serving prunes whole partition dirs
+for the query's terms and row-group min/max stats serve the term IN
+(...) pushdown inside the survivors):
   postings_vK/pb=N/   term, tid, salt, df, n_docs, doc_bytes, tf_bytes,
                       dl_bytes, block_max, impacts, doc_off, tf_off,
                       dl_off (impacts: codec.IMPACT_RANKS)
-  partials/shard=S/   the encoded partials (block_last, not impacts)
-  doc_stats*/         doc_id, dl, content_sha (+ batch_id for streamed)
+  partials/shard=S/   stream partials (block_last, not impacts); batch
+                      partials only until a shard_batch build's merge
+  doc_stats*/         doc_id, dl, content_sha (32 raw bytes; + batch_id
+                      for streamed)
   term_dict*/         tid, term
   tombstones_gN/      doc_id
   _manifest.json      generation N, the live set, per-shard lineage,
                       collection stats (n_docs, avgdl) and merge status
 
 Commit protocol: a mutation never renames or deletes a dir the
-manifest lists. It writes new dirs (batch shards and the build's
-doc_stats/term_dict keep their classic names; stream, dedup and
-compaction dirs carry a _g<N>/_c<N> generation suffix, postings a
-version) and commits with one atomic replace of _manifest.json holding
-generation N+1 and the complete live set: the partial dirs (the
-lineage rows' "dir"), postings_dir, and the doc-stats, term-dict and
-tombstone dir lists ("live"). Readers resolve only listed dirs. A
-commit first checks that the generation on disk is still the one its
-op read (else it raises: another writer committed), and after the
-flip sweeps the engine's unlisted dirs — so recovery from a crash is
-nothing more than the next commit's sweep (_commit).
+manifest lists. It writes new dirs (a build's doc_stats/term_dict/batch
+shards keep their classic names; stream, dedup and compaction dirs
+carry a _g<N>/_c<N> generation suffix, postings a version) and commits
+with one atomic replace of _manifest.json holding generation N+1 and
+the complete live set: the partial dirs (the lineage rows' "dir"),
+postings_dir, and the doc-stats, term-dict and tombstone dir lists
+("live"). Readers resolve only listed dirs. A commit first checks that
+the generation on disk is still the one its op read (else it raises:
+another writer committed), and after the flip sweeps the engine's
+unlisted dirs — so recovery from a crash is nothing more than the next
+commit's sweep (_commit).
 
 Scale notes: at 10^12 files n_shards grows to O(10^4-10^5) and
-shard_batch bounds the work a single failure can lose; the merge
-shuffles only already-compressed partials — a small fraction of raw
-token volume. Query-time dl comes from the posting list itself, so
-serving needs no doc_stats join at all. The encode shuffle carries
-fixed-width integers exclusively; sizing spark.sql.shuffle.partitions
-bounds per-task buffer memory (~28 B/occurrence).
+shard_batch bounds the work a single failure can lose. A kernel task
+holds one pb bucket's postings, so pb_mod grows with the vocabulary
+(_resolve_pb_mod). Query-time dl comes from the posting list itself, so
+serving needs no doc_stats join at all. The build's exchange carries
+fixed-width integers only (~28 B/occurrence).
 """
 
 from __future__ import annotations
@@ -110,7 +118,7 @@ STREAM_ENC_SCHEMA = StructType(
 )
 
 
-DOC_STATS_SCHEMA = "doc_id long, dl long, content_sha string"
+DOC_STATS_SCHEMA = "doc_id long, dl long, content_sha binary"
 TERM_DICT_SCHEMA = "tid long, term string"
 STREAM_DOC_STATS_SCHEMA = DOC_STATS_SCHEMA + ", batch_id long"
 
@@ -138,8 +146,8 @@ def _emit_enc_batches(key_arrays, enc, yield_rows, tail_arrays=(),
 
     key_arrays / tail_arrays: lists of (name, pa_type,
     per-group-values) columns emitted before / after the payload
-    columns (e.g. shard+tid for the build, tid+salt for the merge,
-    term..df / pb for the one-pass merge). Binary payload columns are
+    columns (e.g. shard+tid for a batch partial, term..df / pb for the
+    merge kernel's serving rows). Binary payload columns are
     built ZERO-COPY with Array.from_buffers over the batch buffers
     (offsets from the per-group byte-length cumsums); list columns
     likewise via ListArray.from_arrays. Slices stay under
@@ -215,8 +223,8 @@ def _encode_partition_arrow_fn(avgdl: float,
     """mapInArrow encode kernel over raw (*key_cols, doc_id, dl) token
     occurrence rows, hash-distributed by key_cols — NOT sorted — so
     every group's rows are partition-local: one encoded partial row per
-    key group. The build passes ("shard", "tid"), stream ingest
-    ("tid",) (STREAM_ENC_SCHEMA).
+    key group. The shard-batch build passes ("shard", "tid"), stream
+    ingest ("tid",) (STREAM_ENC_SCHEMA).
 
     * input: pyarrow RecordBatches — the non-null int columns go
       straight to numpy (zero-copy), no per-batch pandas DataFrame;
@@ -286,244 +294,171 @@ def _encode_partition_arrow_fn(avgdl: float,
     return fn
 
 
-TID_MERGED_SCHEMA = StructType(
-    [
-        StructField("tid", LongType(), False),
-        StructField("salt", IntegerType(), False),
-        StructField("n_docs", LongType(), False),
-        StructField("doc_bytes", BinaryType(), False),
-        StructField("tf_bytes", BinaryType(), False),
-        StructField("dl_bytes", BinaryType(), False),
-        StructField("block_max", ArrayType(DoubleType()), False),
-        StructField("impacts", ArrayType(DoubleType()), False),
-        StructField("doc_off", ArrayType(IntegerType()), False),
-        StructField("tf_off", ArrayType(IntegerType()), False),
-        StructField("dl_off", ArrayType(IntegerType()), False),
-    ]
-)
-
-#: column order of the merged serving table (pb is the partition dir)
-SERVING_COLUMNS = (
-    "term", "tid", "salt", "df", "n_docs", "doc_bytes", "tf_bytes",
-    "dl_bytes", "block_max", "impacts", "doc_off", "tf_off", "dl_off",
-)
-
-
-def _merge_partition_arrow_fn(avgdl: float, yield_rows: int = 65536):
-    """Batched mapInArrow merge kernel of merge_plan (the incremental
-    merge). A grouped-map applyInPandas merge pays a fixed per-group
-    cost (Arrow->pandas DataFrame in, pandas->Arrow out, per-row
-    decode_blocked, per-block varbyte encode) that is irrelevant at toy
-    vocabularies but is THE merge at design-regime ones (10^5+ (tid,
-    msalt) groups). This kernel receives a partition hash-distributed by (tid, msalt) —
-    carrying ALL rows of each group, like the groupBy — and merges
-    every group in one vectorized pass:
-
-      * rows lexsorted by (msalt, tid) so groups are contiguous;
-      * ONE decode_blocked_batch call for the whole partition (one
-        varbyte pass per stream, globalized block-offset delta repair);
-      * postings lexsorted by (group, doc_id) — the ordering
-        codec.encode_blocked's stable per-group sort produces;
-      * ONE encode_blocked_batch call, emitted zero-copy via
-        _emit_enc_batches.
-
-    Memory: the partition's postings are materialized (~40 B transient
-    per posting) — sized by spark.sql.shuffle.partitions exactly like
-    the encode kernel's token slice. Each group's row equals
-    codec.encode_blocked over its doc-sorted postings (pinned by
-    test_merge_arrow_kernel_identical); byte order among duplicate
-    (tid, doc) postings follows shuffle arrival order."""
-    import pyarrow as pa
-
-    def fn(batches):
-        tid_l, ms_l, nd_l = [], [], []
-        rows_db: list = []
-        rows_tb: list = []
-        rows_lb: list = []
-        rows_off: list = []
-        for b in batches:
-            if not b.num_rows:
-                continue
-            cols = {n: b.column(i) for i, n in enumerate(b.schema.names)}
-            tid_l.append(np.asarray(cols["tid"]))
-            ms_l.append(np.asarray(cols["msalt"]))
-            nd_l.append(np.asarray(cols["n_docs"]))
-            rows_db.extend(cols["doc_bytes"].to_pylist())
-            rows_tb.extend(cols["tf_bytes"].to_pylist())
-            rows_lb.extend(cols["dl_bytes"].to_pylist())
-            oc = cols["doc_off"]
-            ov = np.asarray(oc.values)
-            oo = np.asarray(oc.offsets)
-            rows_off.extend(ov[oo[i]:oo[i + 1]] for i in range(len(oc)))
-        if not tid_l:
-            return
-        tid = np.concatenate(tid_l)
-        ms = np.concatenate(ms_l)
-        nd = np.concatenate(nd_l)
-        order = np.lexsort((tid, ms))
-        tid_s, ms_s, nd_s = tid[order], ms[order], nd[order]
-        d, t, dl, _ = decode_blocked_batch(
-            [rows_db[i] for i in order], [rows_tb[i] for i in order],
-            [rows_lb[i] for i in order], [rows_off[i] for i in order],
-            nd_s)
-        R = tid_s.size
-        gchange = np.empty(R, dtype=bool)
-        gchange[0] = True
-        gchange[1:] = (tid_s[1:] != tid_s[:-1]) | (ms_s[1:] != ms_s[:-1])
-        row_gidx = np.cumsum(gchange) - 1
-        gidx = np.repeat(row_gidx, nd_s)
-        order2 = np.lexsort((d, gidx))
-        d2, t2, dl2, g2 = d[order2], t[order2], dl[order2], gidx[order2]
-        gs = np.flatnonzero(
-            np.concatenate(([True], g2[1:] != g2[:-1])))
-        # groups that contributed no postings (all-empty rows) emit no
-        # output row — map emitted groups back to their key rows
-        grow = np.flatnonzero(gchange)
-        present = g2[gs]
-        g_tid = tid_s[grow][present]
-        g_salt = ms_s[grow][present].astype(np.int32)
-        enc = encode_blocked_batch(d2, t2, dl2, gs, avgdl,
-                                   impact_ranks=IMPACT_RANKS)
-        yield from _emit_enc_batches(
-            [("tid", pa.int64(), g_tid), ("salt", pa.int32(), g_salt)],
-            enc, yield_rows)
-
-    return fn
-
-
-#: one-pass merge output: the FINAL postings serving schema, column
-#: order matching SERVING_COLUMNS (pb is consumed by the
-#: partitioned write)
+#: the merge kernel's output: the serving table's columns, then pb
+#: (consumed by the partitioned write as the partition dir)
 ONEPASS_MERGED_SCHEMA = StructType(
     [StructField("term", StringType(), False),
      StructField("tid", LongType(), False),
      StructField("salt", IntegerType(), False),
-     StructField("df", LongType(), False)]
-    + [f for f in TID_MERGED_SCHEMA.fields
-       if f.name not in ("tid", "salt")]
-    + [StructField("pb", IntegerType(), False)]
+     StructField("df", LongType(), False),
+     StructField("n_docs", LongType(), False),
+     StructField("doc_bytes", BinaryType(), False),
+     StructField("tf_bytes", BinaryType(), False),
+     StructField("dl_bytes", BinaryType(), False),
+     StructField("block_max", ArrayType(DoubleType()), False),
+     StructField("impacts", ArrayType(DoubleType()), False),
+     StructField("doc_off", ArrayType(IntegerType()), False),
+     StructField("tf_off", ArrayType(IntegerType()), False),
+     StructField("dl_off", ArrayType(IntegerType()), False),
+     StructField("pb", IntegerType(), False)]
 )
+
+#: the columns the kernel reads from a row that carries the payload
+#: codec — a serving row or a partial alike (forced on read: no schema
+#: inference job)
+ENC_READ_SCHEMA = ("tid long, n_docs long, doc_bytes binary, "
+                   "tf_bytes binary, dl_bytes binary, doc_off array<int>")
 
 
 def _merge_onepass_arrow_fn(avgdl: float, pb_mod: int, chunk_postings: int,
+                            drop_ids: np.ndarray | None = None,
                             yield_rows: int = 65536):
-    """ONE-PASS full-merge kernel (round-4). A merge_plan-shaped full
-    merge would move the payload through three passes: a SortMergeJoin with the
-    per-tid df table (to decide hot-term salting), the (tid, msalt)
-    group exchange, then a second SMJ with dfs+term_dict plus a
-    repartition("pb") before the partitioned write. With the batched
-    kernel all of that collapses into ONE exchange:
+    """THE merge kernel (module doc): one partition of the pb exchange
+    in, final serving rows out. Every row of a tid — and its dictionary
+    row — lands in one partition, so df, the term string and the
+    collision check are all partition-local. Input rows, told apart by
+    their columns:
 
-      * the input is (partials ∪ term_dict) repartitioned by
-        pb = pmod(tid, pb_mod) — every row of a tid (and its dict row)
-        lands in one partition, so df is computable IN-kernel (sum of
-        n_docs over the tid's rows) and the term string is resolved
-        from the dict rows riding the same shuffle (dict rows carry
-        n_docs=0 + empty payload; real partial rows always have
-        n_docs > 0);
-      * hot-term splitting needs no df pre-pass: after the (tid, doc)
-        sort, any group over ``chunk_postings`` is split into
-        CONTIGUOUS doc-range chunks (salt = chunk index) — the same
-        `df > threshold ⇒ multiple rows` contract as hash-salting,
-        with strictly tighter per-row doc ranges for block-max
-        pruning, and it is also what bounds a single row's payload
-        under codec.MAX_LIST_BYTES at any scale;
-      * output rows already live in their pb's partition, so the
-        partitioned write needs no further exchange.
+      * dictionary rows: ``term`` set (it is NULL on every other row).
+        Two of them with one tid are an xxhash64 collision, which would
+        merge two terms' postings into one list: RuntimeError;
+      * raw token occurrences (tid, doc_id, dl), one per token (the
+        build): tf is the (tid, doc) run length;
+      * rows carrying the payload codec (tid, n_docs, payload, doc_off,
+        base): standing serving rows (base) and partials, decoded in
+        one decode_blocked_batch call over zero-copy buffer views. Docs
+        in ``drop_ids`` (sorted) are dropped from the BASE rows only.
 
-    tids with no dict row are dropped, matching merge_plan's inner join
-    with term_dict.
+    After one (tid, doc) lexsort each tid's postings are contiguous and
+    doc-sorted; a tid without a dict row is dropped; a group over
+    ``chunk_postings`` is split into CONTIGUOUS doc-range chunks (salt
+    = chunk index), which bounds a row's payload under
+    codec.MAX_LIST_BYTES at any scale and keeps per-row doc ranges
+    tight for block-max pruning; ONE encode_blocked_batch call encodes
+    every chunk of the partition, emitted zero-copy.
 
-    Per-task memory model (ADVICE r4): a task holds ONE pb bucket's
-    compressed payload (as zero-copy Arrow buffer views, not copies)
-    PLUS its fully decoded postings plus one lexsort permutation —
-    roughly 28-35 bytes per posting of the bucket. Peak scales with
-    total_postings / pb_mod (times the skew of pb-value hashing into
-    tasks), NOT with spark.sql.shuffle.partitions: at 10^12-doc scale
-    size pb_mod so corpus_postings/pb_mod stays a few hundred million
-    (merge_partials' auto pb_mod grows with term count for exactly
-    this reason), and prefer more pb buckets over more shuffle
-    partitions when sizing the merge."""
+    Per-task memory: one pb bucket's input (compressed payloads as
+    buffer views, or ~28 B per raw occurrence) plus its decoded
+    postings and one lexsort permutation, ~30-40 B per posting of the
+    bucket — it scales with total_postings / pb_mod, not with
+    spark.sql.shuffle.partitions, which is why the auto pb_mod grows
+    with the vocabulary (_resolve_pb_mod). Each row equals
+    codec.encode_blocked over the chunk's doc-sorted postings
+    (tests/oracle.posting_rows)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     def fn(batches):
-        tid_l, nd_l = [], []
+        dict_tid: list = []
+        dict_term: list = []
+        raw: dict[str, list] = {"tid": [], "doc_id": [], "dl": []}
+        enc: dict[str, list] = {"tid": [], "n_docs": [], "base": []}
         rows_db: list = []
         rows_tb: list = []
         rows_lb: list = []
         rows_off: list = []
-        dict_map: dict[int, str] = {}
         for b in batches:
             if not b.num_rows:
                 continue
-            cols = {n: b.column(i) for i, n in enumerate(b.schema.names)}
-            dmask = pc.equal(cols["n_docs"], 0)
-            if pc.any(dmask).as_py():
-                db = b.filter(dmask)
-                dtids = np.asarray(db.column(b.schema.names.index("tid")))
-                dterms = db.column(b.schema.names.index("term"))
-                for i in range(len(dtids)):
-                    dict_map[int(dtids[i])] = dterms[i].as_py()
-                b = b.filter(pc.invert(dmask))
+            names = b.schema.names
+            is_dict = pc.is_valid(b.column(names.index("term")))
+            if pc.any(is_dict).as_py():
+                db = b.filter(is_dict)
+                dict_tid.append(np.asarray(db.column(names.index("tid"))))
+                dict_term.extend(db.column(names.index("term")).to_pylist())
+                b = b.filter(pc.invert(is_dict))
                 if not b.num_rows:
                     continue
-                cols = {n: b.column(i)
-                        for i, n in enumerate(b.schema.names)}
-            tid_l.append(np.asarray(cols["tid"]))
-            nd_l.append(np.asarray(cols["n_docs"]))
+            cols = {n: b.column(i) for i, n in enumerate(names)}
+            if "doc_id" in cols:  # raw token occurrences
+                for c, acc in raw.items():
+                    acc.append(np.asarray(cols[c]))
+                continue
+            for c, acc in enc.items():
+                acc.append(np.asarray(cols[c]))
             # zero-copy pa.Buffer views into the Arrow batch (the
             # codec accepts buffers): the bucket's compressed payload
             # is held ONCE, not copied row-by-row into bytes
-            db_a, tb_a, lb_a = (cols["doc_bytes"], cols["tf_bytes"],
-                                cols["dl_bytes"])
-            rows_db.extend(db_a[i].as_buffer() for i in range(len(db_a)))
-            rows_tb.extend(tb_a[i].as_buffer() for i in range(len(tb_a)))
-            rows_lb.extend(lb_a[i].as_buffer() for i in range(len(lb_a)))
+            for acc, name in ((rows_db, "doc_bytes"), (rows_tb, "tf_bytes"),
+                              (rows_lb, "dl_bytes")):
+                col = cols[name]
+                acc.extend(col[i].as_buffer() for i in range(len(col)))
             oc = cols["doc_off"]
             ov = np.asarray(oc.values)
             oo = np.asarray(oc.offsets)
             rows_off.extend(ov[oo[i]:oo[i + 1]] for i in range(len(oc)))
-        if not tid_l:
+
+        tid_d = (np.concatenate(dict_tid) if dict_tid
+                 else np.empty(0, dtype=np.int64))
+        o = np.argsort(tid_d, kind="stable")
+        tid_d = tid_d[o]
+        term_d = np.array(dict_term, dtype=object)[o]
+        dup = np.flatnonzero(tid_d[1:] == tid_d[:-1])
+        if dup.size:
+            i = int(dup[0])
+            raise RuntimeError(
+                f"{dup.size} xxhash64 term-id collision(s), e.g. "
+                f"{term_d[i]!r} and {term_d[i + 1]!r} share tid "
+                f"{tid_d[i]} — rebuild with a wider term key (tid+length) "
+                "before trusting this index")
+
+        # one plan feeds one input kind, so a partition holds either
+        # raw occurrences (tf None: counted below) or payload rows
+        if raw["tid"]:
+            tid, d, dl = (np.concatenate(raw[c])
+                          for c in ("tid", "doc_id", "dl"))
+            tf = None
+        elif enc["tid"]:
+            nd = np.concatenate(enc["n_docs"])
+            d, tf, dl, _ = decode_blocked_batch(rows_db, rows_tb, rows_lb,
+                                                rows_off, nd)
+            tid = np.repeat(np.concatenate(enc["tid"]), nd)
+            if drop_ids is not None:
+                keep = ~(np.repeat(np.concatenate(enc["base"]), nd)
+                         & np.isin(d, drop_ids))
+                tid, d, tf, dl = tid[keep], d[keep], tf[keep], dl[keep]
+        else:
             return
-        tid = np.concatenate(tid_l)
-        nd = np.concatenate(nd_l)
-        order = np.argsort(tid, kind="stable")
-        tid_s, nd_s = tid[order], nd[order]
-        d, t, dl, _ = decode_blocked_batch(
-            [rows_db[i] for i in order], [rows_tb[i] for i in order],
-            [rows_lb[i] for i in order], [rows_off[i] for i in order],
-            nd_s)
-        R = tid_s.size
-        gchange = np.empty(R, dtype=bool)
-        gchange[0] = True
-        gchange[1:] = tid_s[1:] != tid_s[:-1]
-        row_gidx = np.cumsum(gchange) - 1
-        gidx = np.repeat(row_gidx, nd_s)
-        order2 = np.lexsort((d, gidx))
-        d2, t2, dl2, g2 = d[order2], t[order2], dl[order2], gidx[order2]
-        gs = np.flatnonzero(
-            np.concatenate(([True], g2[1:] != g2[:-1])))
-        grow = np.flatnonzero(gchange)
-        present = g2[gs]
-        g_tid = tid_s[grow][present]
-        sizes = np.diff(np.append(gs, d2.size))
-        # drop tids without a dict row (merge_plan's inner join)
-        terms = [dict_map.get(int(x)) for x in g_tid]
-        keep_g = np.array([s is not None for s in terms], dtype=bool)
-        if not keep_g.all():
-            keep_p = np.repeat(keep_g, sizes)
-            d2, t2, dl2 = d2[keep_p], t2[keep_p], dl2[keep_p]
-            g_tid = g_tid[keep_g]
-            sizes = sizes[keep_g]
-            gs = np.concatenate(([0], np.cumsum(sizes)[:-1]))
-            terms = [s for s in terms if s is not None]
+        if d.size == 0:
+            return
+        order = np.lexsort((d, tid))
+        tid, d, dl = tid[order], d[order], dl[order]
+        n = d.size
+        # one posting per (tid, doc) run: tf is its summed occurrences
+        first = np.empty(n, dtype=bool)
+        first[0] = True
+        first[1:] = (tid[1:] != tid[:-1]) | (d[1:] != d[:-1])
+        uidx = np.flatnonzero(first)
+        tf = (np.diff(np.append(uidx, n)) if tf is None
+              else np.add.reduceat(tf[order], uidx))
+        tid, d, dl = tid[uidx], d[uidx], dl[uidx]
+        gs = np.flatnonzero(np.concatenate(([True], tid[1:] != tid[:-1])))
+        g_tid = tid[gs]
+        sizes = np.diff(np.append(gs, d.size))
+        # each tid's term from its dict row; a tid without one is dropped
+        pos = np.searchsorted(tid_d, g_tid)
+        found = pos < tid_d.size
+        found[found] = tid_d[pos[found]] == g_tid[found]
+        if not found.all():
+            keep_p = np.repeat(found, sizes)
+            d, tf, dl = d[keep_p], tf[keep_p], dl[keep_p]
+            g_tid, sizes, pos = g_tid[found], sizes[found], pos[found]
             if g_tid.size == 0:
                 return
-        # in-kernel df: every partial row of the tid is in this
-        # partition, so its merged posting count IS the df
+            gs = np.concatenate(([0], np.cumsum(sizes)[:-1]))
+        # in-kernel df: every posting of the tid is in this partition
         df_g = sizes.astype(np.int64)
-        # contiguous chunk split (bounded rows; replaces hash-salting)
+        # contiguous chunk split (bounded rows)
         n_chunks = ((sizes + chunk_postings - 1)
                     // chunk_postings).astype(np.int64)
         first_chunk = np.cumsum(n_chunks) - n_chunks
@@ -533,53 +468,128 @@ def _merge_onepass_arrow_fn(avgdl: float, pb_mod: int, chunk_postings: int,
         c_gs = np.repeat(gs, n_chunks) + cidx * chunk_postings
         c_tid = np.repeat(g_tid, n_chunks)
         c_df = np.repeat(df_g, n_chunks)
-        c_terms = np.repeat(np.array(terms, dtype=object), n_chunks)
+        c_terms = np.repeat(term_d[pos], n_chunks)
         c_salt = cidx.astype(np.int32)
         c_pb = np.mod(c_tid, pb_mod).astype(np.int32)
-        enc = encode_blocked_batch(d2, t2, dl2, c_gs, avgdl,
+        out = encode_blocked_batch(d, tf, dl, c_gs, avgdl,
                                    impact_ranks=IMPACT_RANKS)
         yield from _emit_enc_batches(
             [("term", pa.string(), c_terms), ("tid", pa.int64(), c_tid),
              ("salt", pa.int32(), c_salt), ("df", pa.int64(), c_df)],
-            enc, yield_rows,
+            out, yield_rows,
             tail_arrays=[("pb", pa.int32(), c_pb)])
 
     return fn
 
 
+def _onepass_plan(rows: DataFrame, tdict: DataFrame, avgdl: float,
+                  pb_mod: int, chunk_postings: int,
+                  drop_ids: np.ndarray | None = None) -> DataFrame:
+    """rows ∪ dictionary rows -> ONE repartition by pb -> the merge
+    kernel -> serving rows, already in their pb's partition (the
+    partitioned write needs no further exchange). ``rows`` is raw token
+    occurrences (term, tid, doc_id, dl) or payload rows (_enc_rows),
+    with a NULL term; the dict rows take the same columns with zeros
+    and empty payloads so the union is null-free beyond ``term``."""
+    empty = F.lit(b"")
+    zero = F.lit(0).cast("long")
+    fill = {"doc_id": zero, "dl": zero, "n_docs": zero, "doc_bytes": empty,
+            "tf_bytes": empty, "dl_bytes": empty,
+            "doc_off": F.array().cast("array<int>"), "base": F.lit(False)}
+    dict_rows = tdict.select("term", "tid", *(fill[c].alias(c)
+                                              for c in rows.columns[2:]))
+    return rows.unionByName(dict_rows).repartition(
+        F.pmod(F.col("tid"), F.lit(pb_mod))
+    ).mapInArrow(
+        _merge_onepass_arrow_fn(avgdl, pb_mod, chunk_postings, drop_ids),
+        ONEPASS_MERGED_SCHEMA)
+
+
+def _enc_rows(rows: DataFrame, base: bool) -> DataFrame:
+    """Payload rows (serving rows or partials) as kernel input."""
+    return rows.select(F.lit(None).cast("string").alias("term"), "tid",
+                       "n_docs", "doc_bytes", "tf_bytes", "dl_bytes",
+                       "doc_off", F.lit(base).alias("base"))
+
+
+def _read_base(spark: SparkSession, postings_path: str,
+               pbs: list | None = None) -> DataFrame:
+    """The standing serving rows as base kernel input; ``pbs``: only
+    those tid buckets (partition pruning)."""
+    base = spark.read.schema(ENC_READ_SCHEMA + ", pb int").parquet(
+        postings_path)
+    if pbs is not None:
+        base = base.where(F.col("pb").isin(pbs))
+    return _enc_rows(base, True)
+
+
 def merge_onepass_plan(spark: SparkSession, out_dir: str, avgdl: float,
                        pb_mod: int, chunk_postings: int,
                        dict_distinct: bool = True,
-                       manifest: dict | None = None) -> DataFrame:
-    """The one-pass full-merge dataflow (see _merge_onepass_arrow_fn):
-    (partials ∪ term_dict) -> repartition by pb -> batched kernel ->
-    final serving rows, one payload exchange total. Dict rows travel
-    as n_docs=0 + empty payload so the union is null-free; partials
-    never contain n_docs=0 rows (the encoders skip empty groups).
+                       manifest: dict | None = None,
+                       dead_ids: np.ndarray | None = None
+                       ) -> DataFrame | None:
+    """The full merge's dataflow over the manifest's listed dirs
+    (default: the committed manifest): base ∪ listed partials ∪ dict
+    rows -> the one-pass kernel (_onepass_plan). None when there is
+    nothing to merge.
+
+    The base is the standing serving table; batch partials whose shard
+    it already reflects (merged_batch_shards) are not fed again. The
+    docs of the listed stream doc stats are dropped from the base —
+    they come back from the (deduped) stream partials — and so are
+    ``dead_ids`` (compaction's tombstones).
 
     dict_distinct: only STREAM micro-batches ever add (possibly
-    repeated) dictionary rows — init_stats writes the dict distinct by
+    repeated) dictionary rows — the build writes the dict distinct by
     construction — so a never-streamed index skips the full-vocabulary
-    distinct shuffle (round 6; merge_partials passes whether the
-    manifest lists a stream dictionary dir). manifest: whose listed
-    dirs to merge (default: the committed one)."""
+    distinct shuffle (merge_partials passes whether the manifest lists
+    a stream dictionary dir)."""
     m = manifest if manifest is not None else load_manifest(out_dir)
-    pay = _read_partials(spark, out_dir, m).where(F.col("n_docs") > 0).select(
-        F.lit("").alias("term"), "tid", "n_docs",
-        "doc_bytes", "tf_bytes", "dl_bytes", "doc_off")
-    tdict = _read_term_dict(spark, out_dir, m, dict_distinct)
-    empty = F.lit(b"")
-    dict_rows = tdict.select(
-        "term", "tid", F.lit(0).cast("long").alias("n_docs"),
-        empty.alias("doc_bytes"), empty.alias("tf_bytes"),
-        empty.alias("dl_bytes"),
-        F.array().cast("array<int>").alias("doc_off"))
-    un = pay.unionByName(dict_rows)
-    return un.repartition(
-        F.pmod(F.col("tid"), F.lit(pb_mod))
-    ).mapInArrow(
-        _merge_onepass_arrow_fn(avgdl, pb_mod, chunk_postings),
-        ONEPASS_MERGED_SCHEMA)
+    inputs = []
+    drop = None
+    in_base: set = set()
+    postings_path = _postings_dir(out_dir, m)
+    if m.get("merged") and os.path.isdir(postings_path):
+        inputs.append(_read_base(spark, postings_path))
+        in_base = set(m.get("merged_batch_shards") or ())
+        drop = _listed_doc_ids(out_dir, m, "doc_stats_stream")
+        if dead_ids is not None:
+            drop = np.union1d(drop, dead_ids)
+    # a batch partial still listed beside a base the same shard was
+    # merged into (an index written before merges unlisted them) is
+    # already in the base
+    paths = [os.path.join(out_dir, "partials", r["dir"])
+             for key, r in m["shards"].items()
+             if r.get("dir") and key not in in_base]
+    if paths:
+        inputs.append(_enc_rows(
+            spark.read.schema(ENC_READ_SCHEMA).parquet(*paths), False))
+    if not inputs:
+        return None
+    rows = inputs[0]
+    for more in inputs[1:]:
+        rows = rows.unionByName(more)
+    return _onepass_plan(
+        rows, _read_term_dict(spark, out_dir, m, dict_distinct), avgdl,
+        pb_mod, chunk_postings,
+        drop if drop is not None and drop.size else None)
+
+
+def _listed_doc_ids(out_dir: str, m: dict, kind: str) -> np.ndarray:
+    """The sorted distinct doc ids of ``kind``'s listed dirs, read on
+    the driver with pyarrow (no Spark job; the index path is always
+    local)."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    paths = _paths(out_dir, m, kind)
+    if not paths:
+        return np.empty(0, dtype=np.int64)
+    schema = pa.schema([("doc_id", pa.int64())])
+    tbl = pads.dataset([pads.dataset(p, format="parquet", schema=schema)
+                        for p in paths]).to_table(columns=["doc_id"])
+    return np.unique(tbl.column("doc_id").drop_null().to_numpy())
 
 
 DECODED_PARTIAL_SCHEMA = StructType(
@@ -956,21 +966,22 @@ def _tokenized_projection(corpus: DataFrame, id_col: str, text_col: str):
     persisted DISK_ONLY by callers — at 100 TB the tokenized corpus
     never fits in executor memory and evicting it through the memory
     pool just adds GC pressure. Three consumers: the doc_stats write,
-    the term dictionary, and the encode stage (round 6 — the build
-    used to pay the tokenize pass twice)."""
+    the term dictionary, and the encode. content_sha is the raw 32-byte
+    sha256 (unhex of the hex digest: 32 B a doc, not a 64-char
+    string)."""
     return with_tokens(corpus, text_col).select(
         F.col(id_col).alias("doc_id"),
         F.size("tokens").cast("long").alias("dl"),
-        F.sha2(F.col(text_col), 256).alias("content_sha"),
+        F.unhex(F.sha2(F.col(text_col), 256)).alias("content_sha"),
         "tokens",
     )
 
 
 def _write_doc_stats_observed(tokenized: DataFrame, out_dir: str):
     """doc_stats write with collection stats observed ON the write
-    itself (round 6: the dedicated read-back aggregation job was pure
-    action overhead — observe() accumulates the same count/avg/sum
-    during the write). Returns (n_docs, avgdl, n_tokens)."""
+    itself (observe() accumulates count/avg/sum during the write; a
+    read-back aggregation would be one more job). Returns (n_docs,
+    avgdl, n_tokens)."""
     from pyspark.sql import Observation
 
     obs = Observation("collection_stats")
@@ -987,43 +998,40 @@ def _write_doc_stats_observed(tokenized: DataFrame, out_dir: str):
             int(vals["n_tokens"] or 0))
 
 
-def _write_term_dict_checked(spark: SparkSession, tokenized: DataFrame,
-                             out_dir: str) -> int:
-    """Term dictionary (tid = xxhash64(term) -> term) write + collision
-    check: the build shuffles integer tids only; the dictionary
-    restores strings at merge. A 64-bit collision would corrupt a
-    posting list, so fail loudly. Returns n_terms (feeds the
-    term-aware auto pb_mod — _resolve_pb_mod)."""
-    dict_path = os.path.join(out_dir, "term_dict")
+def _write_term_dict_observed(tokenized: DataFrame, out_dir: str) -> int:
+    """Term dictionary (tid = xxhash64(term) -> term) write: the build
+    shuffles integer tids only and the dictionary restores strings at
+    merge, where the kernel raises on two dict rows with one tid (a
+    64-bit collision would corrupt a posting list). Returns n_terms,
+    observed on the write (feeds the term-aware auto pb_mod —
+    _resolve_pb_mod)."""
+    from pyspark.sql import Observation
+
+    obs = Observation("term_dict")
     (
         tokenized.select(F.explode("tokens").alias("term"))
         .distinct()
         .select(F.xxhash64("term").alias("tid"), "term")
-        .write.mode("overwrite").parquet(dict_path)
+        .observe(obs, F.count(F.lit(1)).alias("n_terms"))
+        .write.mode("overwrite").parquet(os.path.join(out_dir, "term_dict"))
     )
-    n_terms, collisions = (
-        spark.read.schema(TERM_DICT_SCHEMA).parquet(dict_path)
-        .groupBy("tid").agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.count(F.lit(1)),
-             F.sum(F.when(F.col("c") > 1, 1).otherwise(0)))
-        .collect()[0]
-    )
-    n_terms, collisions = int(n_terms or 0), int(collisions or 0)
-    if collisions:
-        raise RuntimeError(
-            f"{collisions} xxhash64 term-id collisions — rebuild with a "
-            "wider term key (tid+length) before trusting this index"
-        )
-    return n_terms
+    return int(obs.get["n_terms"] or 0)
+
+
+def _write_init(tokenized: DataFrame, out_dir: str) -> tuple:
+    """The init outputs (doc_stats, term_dict) of a tokenized corpus;
+    returns (n_docs, avgdl, n_tokens, n_terms) for _finalize_stats."""
+    return (*_write_doc_stats_observed(tokenized, out_dir),
+            _write_term_dict_observed(tokenized, out_dir))
 
 
 def _finalize_stats(manifest: dict, n_docs: int, avgdl: float,
                     n_tokens: int, n_terms: int) -> dict:
-    """Stats checkpoint, set ONLY once doc_stats, the term dictionary
-    AND the collision check are all complete, and committed in the same
-    flip that lists those two dirs — so `manifest['stats'] is not None`
-    keeps implying every init output exists (the resume contract).
-    Stream dictionary dirs listed before it stay listed."""
+    """Stats checkpoint, set ONLY once doc_stats and the term dictionary
+    are both written, and committed in the same flip that lists those
+    two dirs — so `manifest['stats'] is not None` keeps implying every
+    init output exists (the resume contract). Stream dictionary dirs
+    listed before it stay listed."""
     manifest["stats"] = {"n_docs": n_docs, "avgdl": avgdl,
                          "n_tokens": n_tokens, "n_terms": n_terms}
     live = manifest["live"]
@@ -1051,12 +1059,9 @@ def init_stats(
     tokenized = _tokenized_projection(corpus, id_col, text_col).persist(
         StorageLevel.DISK_ONLY)
     try:
-        n_docs, avgdl, n_tokens = _write_doc_stats_observed(tokenized,
-                                                            out_dir)
-        n_terms = _write_term_dict_checked(spark, tokenized, out_dir)
+        _finalize_stats(manifest, *_write_init(tokenized, out_dir))
     finally:
         tokenized.unpersist()
-    _finalize_stats(manifest, n_docs, avgdl, n_tokens, n_terms)
     return _commit(out_dir, manifest, "stats")
 
 
@@ -1064,14 +1069,13 @@ def raw_token_projection(docs: DataFrame, n_shards: int,
                          id_col: str = "doc_id",
                          text_col: str = "text",
                          pre_tokenized: bool = False) -> DataFrame:
-    """The build's pre-shuffle projection: (shard, tid, doc_id, dl) —
-    fixed-width integers only, one row per token occurrence. The single
-    definition both build_index and the bench phase harness measure, so
-    the scaling numbers always describe the real build plan.
+    """The shard-batch build's pre-shuffle projection: (shard, tid,
+    doc_id, dl) — fixed-width integers only, one row per token
+    occurrence.
 
     pre_tokenized: `docs` already carries a `tokens` array column (the
-    init_stats persist) — skip the tokenize expression and explode the
-    existing column, saving the build's second full tokenize pass."""
+    init persist) — skip the tokenize expression and explode the
+    existing column."""
     shard_col = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int")
     base = docs if pre_tokenized else with_tokens(docs, text_col)
     return base.select(
@@ -1093,86 +1097,57 @@ def build_index(
     text_col: str = "text",
     shard_batch: int | None = None,
     pb_mod: int | str = "auto",
-    combine: str | None = None,
 ) -> dict:
-    """Full checkpointed build; idempotent/resumable. Returns manifest.
+    """Full checkpointed build; idempotent/resumable. Returns the
+    committed manifest.
 
-    combine ('mapside' | 'shuffle'; default SPARK_GRAFT_BUILD_COMBINE
-    or 'shuffle'): where the token->posting-list aggregation happens.
+    Default (one batch covers every shard of a fresh index): the
+    tokenized corpus is persisted once; doc_stats and the term
+    dictionary are written (collection stats and n_terms observed on
+    the writes); then the raw (tid, doc_id, dl) token rows and the
+    dictionary rows go through ONE exchange by pb into the merge kernel,
+    which writes postings_v1 directly, and one commit lists it all. No
+    partials are written: a crash re-runs the whole build, which was
+    one encode batch anyway.
 
-    * 'mapside' — the exchange-minimal dataflow: the encode kernel runs
-      directly on the scan's partitions (scan -> tokenize -> explode ->
-      encode, ONE fused stage, no exchange), emitting per-partition
-      partial lists; the by-term combine is the merge's salted
-      repartition of COMPRESSED payloads (~2-4 B/posting). A doc's
-      token rows never leave their partition, so per-(doc, term) tf is
-      complete map-side and the merged index is byte-identical to the
-      'shuffle' build's (test-pinned). The exchange it removes is the
-      build's largest by an order of magnitude (one 28 B row per token
-      occurrence); the cost is more, smaller partial rows per tid
-      (n_input_partitions instead of n_shards), which the batched
-      merge kernel absorbs. Measured (BASELINE.md round 4,
-      tools/combine_exp.py): wins 1.09-1.18x when task slots <=
-      physical cores / 2, INVERTS at slots == cores because the fused
-      stage runs a JVM tokenize half and a Python kernel half per
-      task — 2x thread demand per slot. On a real cluster this is an
-      executor-sizing decision (size cores-per-executor for hybrid
-      JVM+Python stages, e.g. spark.task.cpus=2, and 'mapside' is the
-      design-regime default); on this fully-subscribed sandbox the
-      measured default stays 'shuffle'. Partition sizing note: the
-      kernel buffers one partition's token slice (~28 B x
-      tokens/partition), so at very large per-file text densities size
-      spark.sql.files.maxPartitionBytes (or pre-repartition the
-      CORPUS — a doc-level, not token-level, exchange) accordingly.
-    * 'shuffle' — repartition("shard", "tid") of the raw token rows
-      before encoding (one partial row per (shard, tid))."""
-    combine = combine or os.environ.get("SPARK_GRAFT_BUILD_COMBINE",
-                                        "shuffle")
-    if combine not in ("mapside", "shuffle"):
-        raise ValueError(
-            f"combine must be 'mapside' or 'shuffle', got {combine!r}")
-    # Fresh build: run the init jobs inline so the term-dictionary
-    # write + collision check can OVERLAP the encode stage (guide §2.6
-    # — independent jobs back-fill executors; both only read the
-    # shared tokenized persist, which the doc_stats write has already
-    # materialized, and they write disjoint directories). The stats
-    # checkpoint is committed with the FIRST shard batch, after the
-    # dictionary thread joins, so `manifest['stats'] is not None` keeps
-    # implying every init output exists; a crash mid-encode re-runs
-    # init idempotently on resume.
+    shard_batch=k (or a resumed build): each batch of k shards is
+    scanned once, repartitioned by (shard, tid) and encoded into
+    partials/shard=S, committed per batch with its lineage (the
+    resumable checkpoint: a re-run skips committed shards); then
+    merge_partials reads them once and unlists them at its commit.
+
+    Lineage: every shard gets a row with its posting count (observed,
+    up to 32 shards per batch) and its batch's wall. hot_df_threshold
+    is the merge kernel's chunk size (a term's serving rows hold at
+    most that many postings each); n_salts is accepted for callers and
+    unused — the chunk split replaced hash salting."""
     manifest = load_manifest(out_dir)
-    tokenized = None
-    dict_pool = dict_future = pending_stats = None
+    batch_size = shard_batch or n_shards
+    if (manifest["stats"] is None and not manifest["shards"]
+            and batch_size >= n_shards):
+        return _build_direct(spark, corpus, out_dir, manifest, n_shards,
+                             hot_df_threshold, id_col, text_col, pb_mod)
+    tokenized = pending_stats = None
     if manifest["stats"] is None:
-        from concurrent.futures import ThreadPoolExecutor
-
         from pyspark import StorageLevel
 
+        # the init outputs commit with the first shard batch, so
+        # `manifest['stats'] is not None` keeps implying they all exist
         tokenized = _tokenized_projection(corpus, id_col, text_col).persist(
             StorageLevel.DISK_ONLY)
-        pending_stats = _write_doc_stats_observed(tokenized, out_dir)
+        pending_stats = _write_init(tokenized, out_dir)
         avgdl = pending_stats[1]
-        dict_pool = ThreadPoolExecutor(max_workers=1)
-        dict_future = dict_pool.submit(
-            _write_term_dict_checked, spark, tokenized, out_dir)
     else:
         avgdl = manifest["stats"]["avgdl"]
 
-    # Shards are the checkpoint/lineage unit; BATCHES are the job unit.
-    # One Spark job scans+tokenizes the corpus ONCE per batch and fans
-    # the result into all of that batch's shard partials via a single
-    # groupBy(shard, term) — per-shard jobs would each re-scan and
-    # re-decompress the whole input (measured 2.5-3x slowdown under
-    # concurrency). Default: one batch = all remaining shards (one pass
-    # over the data); shrink shard_batch for finer failure recovery on
-    # very long builds. When init_stats just ran, its persisted
-    # tokenized projection feeds the encode directly (round 6 — the
-    # build used to tokenize the corpus twice); on resume (stats
-    # checkpointed earlier) the raw corpus is re-tokenized as before.
+    # Shards are the checkpoint/lineage unit; BATCHES are the job unit:
+    # one job scans+tokenizes the corpus ONCE per batch and fans it into
+    # all of the batch's shard partials (per-shard jobs would each
+    # re-scan the whole input). When init just ran, its persisted
+    # tokenized projection feeds the encode; on resume the raw corpus
+    # is re-tokenized.
     todo = [s for s in range(n_shards)
             if manifest["shards"].get(str(s), {}).get("status") != "ok"]
-    batch_size = shard_batch or n_shards
-
     shard_col = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int")
     tok_shard_col = F.pmod(F.xxhash64(F.col("doc_id")),
                            F.lit(n_shards)).cast("int")
@@ -1181,23 +1156,18 @@ def build_index(
             batch = todo[lo:lo + batch_size]
             t0 = time.time()
             if tokenized is not None:
-                base = (tokenized if len(batch) == n_shards
-                        else tokenized.where(tok_shard_col.isin(batch)))
-                raw = raw_token_projection(base, n_shards, "doc_id",
-                                           pre_tokenized=True)
+                raw = raw_token_projection(
+                    tokenized.where(tok_shard_col.isin(batch)), n_shards,
+                    "doc_id", pre_tokenized=True)
             else:
-                sub = corpus if len(batch) == n_shards else corpus.where(
-                    shard_col.isin(batch)
-                )
-                raw = raw_token_projection(sub, n_shards, id_col, text_col)
-            shuffled = (raw.repartition("shard", "tid")
-                        if combine == "shuffle" else raw)
-            enc = shuffled.mapInArrow(
+                raw = raw_token_projection(
+                    corpus.where(shard_col.isin(batch)), n_shards, id_col,
+                    text_col)
+            enc = raw.repartition("shard", "tid").mapInArrow(
                 _encode_partition_arrow_fn(avgdl), TID_ENC_SCHEMA)
-            # per-shard lineage observed ON the write itself (round 6:
-            # the read-back aggregation was one more sequential job per
-            # batch); conditional count/sum per shard — bounded to
-            # small batches, large ones keep the read-back path
+            # per-shard lineage observed ON the write itself; conditional
+            # count/sum per shard — bounded to small batches, large ones
+            # keep the read-back path
             obs = None
             if len(batch) <= 32:
                 from pyspark.sql import Observation
@@ -1259,26 +1229,81 @@ def build_index(
                     # a shard that received no docs writes no dir
                     "dir": f"shard={s}" if r and r[0] else None,
                 }
-            if dict_future is not None:
-                # join the overlapped dictionary/collision thread
-                # (raises here on a tid collision, exactly like the
-                # sequential init did); the first commit lists the
-                # init outputs with the batch
-                _finalize_stats(manifest, *pending_stats,
-                                dict_future.result())
-                dict_future = None
+            if pending_stats is not None:
+                _finalize_stats(manifest, *pending_stats)
+                pending_stats = None
             manifest = _commit(out_dir, manifest, "shards")
-        if dict_future is not None:
-            _finalize_stats(manifest, *pending_stats, dict_future.result())
+        if pending_stats is not None:
+            _finalize_stats(manifest, *pending_stats)
             manifest = _commit(out_dir, manifest, "stats")
     finally:
-        if dict_pool is not None:
-            dict_pool.shutdown(wait=True)
         if tokenized is not None:
             tokenized.unpersist()
 
-    return merge_partials(spark, out_dir, hot_df_threshold, n_salts,
-                          pb_mod=pb_mod)
+    return merge_partials(spark, out_dir, hot_df_threshold, pb_mod=pb_mod)
+
+
+def _build_direct(spark: SparkSession, corpus: DataFrame, out_dir: str,
+                  manifest: dict, n_shards: int, hot_df_threshold: int,
+                  id_col: str, text_col: str, pb_mod: int | str) -> dict:
+    """build_index's default path (its docstring): init writes, then
+    token rows ∪ dict rows -> the merge kernel -> postings_v1, one
+    commit."""
+    from pyspark import StorageLevel
+    from pyspark.sql import Observation
+
+    tokenized = _tokenized_projection(corpus, id_col, text_col).persist(
+        StorageLevel.DISK_ONLY)
+    try:
+        n_docs, avgdl, n_tokens, n_terms = _write_init(tokenized, out_dir)
+        _finalize_stats(manifest, n_docs, avgdl, n_tokens, n_terms)
+        pb_mod = _resolve_pb_mod(pb_mod, n_docs, n_terms)
+        t0 = time.time()
+        # per-shard posting counts for the lineage rows: a doc's
+        # postings are its distinct tokens
+        shards = range(n_shards if n_shards <= 32 else 0)
+        shard = F.pmod(F.xxhash64("doc_id"), F.lit(n_shards))
+        obs = Observation("lineage")
+        docs = tokenized.observe(obs, F.count(F.lit(1)).alias("n"), *(
+            F.sum(F.when(shard == s, F.size(F.array_distinct("tokens")))
+                  .otherwise(0)).alias(f"p{s}") for s in shards))
+        occ = docs.select("doc_id", "dl", F.explode("tokens").alias("tok"))
+        rows = occ.select(F.lit(None).cast("string").alias("term"),
+                          F.xxhash64("tok").alias("tid"), "doc_id", "dl")
+        tdict = spark.read.schema(TERM_DICT_SCHEMA).parquet(
+            os.path.join(out_dir, "term_dict"))
+        _write_serving(spark, _onepass_plan(rows, tdict, avgdl, pb_mod,
+                                            hot_df_threshold),
+                       os.path.join(out_dir, "postings_v1"))
+    finally:
+        tokenized.unpersist()
+    wall_ms = int((time.time() - t0) * 1000)
+    vals = obs.get
+    for s in range(n_shards):
+        manifest["shards"][str(s)] = {
+            "wall_ms": wall_ms, "batch": list(range(n_shards)),
+            "status": "ok", "dir": None,
+            **({"n_postings": int(vals[f"p{s}"] or 0)} if s in shards
+               else {})}
+    _set_merged(manifest, "postings_v1", 1, avgdl, pb_mod, [], "full", t0)
+    return _commit(out_dir, manifest, "build")
+
+
+def _write_serving(spark: SparkSession, rows: DataFrame | None,
+                   path: str) -> None:
+    """Write kernel output rows as a serving table: partitioned by pb,
+    term-sorted within each pb partition (row-group min/max stats serve
+    the term IN pushdown). With no row to write (None, or every doc
+    dropped) an empty table with the serving schema is written, so
+    read_index / search over a 0-doc index work instead of failing
+    schema inference."""
+    if rows is not None:
+        (rows.sortWithinPartitions("pb", "term")
+         .write.mode("overwrite").partitionBy("pb").parquet(path))
+        if any(n.startswith("pb=") for n in os.listdir(path)):
+            return
+    spark.createDataFrame([], ONEPASS_MERGED_SCHEMA).write.mode(
+        "overwrite").parquet(path)
 
 
 def _batch_built(m: dict) -> bool:
@@ -1345,59 +1370,6 @@ def refresh_stats(spark: SparkSession, out_dir: str, manifest: dict) -> dict:
     return manifest
 
 
-def merge_plan(
-    spark: SparkSession,
-    out_dir: str,
-    avgdl: float,
-    hot_df_threshold: int = 1 << 17,
-    n_salts: int = 8,
-    only_tids: DataFrame | None = None,
-    dict_distinct: bool = True,
-    manifest: dict | None = None,
-) -> DataFrame:
-    """The merge dataflow as an unexecuted DataFrame (separated so plan
-    tests can assert its physical shape — no broadcast of per-term
-    tables). only_tids (a (tid) DataFrame) restricts the merge to those
-    terms — the incremental path's re-merge set; df is still computed
-    from ALL partials of each kept tid, so it equals the full merge's.
-    manifest: whose listed dirs to merge (default: the committed one)."""
-    m = manifest if manifest is not None else load_manifest(out_dir)
-    partials = _read_partials(spark, out_dir, m)
-    if only_tids is not None:
-        partials = partials.join(only_tids, "tid", "left_semi")
-    dfs = partials.groupBy("tid").agg(F.sum("n_docs").alias("df"))
-    # hot-term split salt: hash (shard, payload) so EVERY distinct
-    # partial row of a hot term can land in its own merge group —
-    # hashing the shard alone collapsed all of a consolidated
-    # shard=streamdedup backlog (which holds several salted rows per
-    # hot tid precisely to avoid single-task materialization) back
-    # into ONE group
-    with_df = partials.join(dfs, "tid").withColumn(
-        "msalt",
-        F.when(
-            F.col("df") > hot_df_threshold,
-            F.pmod(F.xxhash64(F.col("shard").cast("string"),
-                              F.col("doc_bytes")),
-                   F.lit(n_salts)).cast("int"),
-        ).otherwise(F.lit(0)),
-    )
-    # hash-distribute by group key (all rows of a (tid, msalt) group
-    # land in one partition) and merge every group in one batched
-    # kernel pass; tf_off/dl_off are not needed for a full decode, so
-    # they stay out of the exchange
-    merged = (
-        with_df.select("tid", "msalt", "n_docs", "doc_bytes",
-                       "tf_bytes", "dl_bytes", "doc_off")
-        .repartition("tid", "msalt")
-        .mapInArrow(_merge_partition_arrow_fn(avgdl), TID_MERGED_SCHEMA)
-    )
-    # distinct: streaming batches add (possibly repeated) dict rows
-    # — skipped for never-streamed indexes (see merge_onepass_plan)
-    tdict = _read_term_dict(spark, out_dir, m, dict_distinct)
-    return merged.join(dfs, "tid").join(tdict, "tid").select(
-        *SERVING_COLUMNS)
-
-
 #: tid-bucket fan-out of the final postings table: pb = pmod(tid, PB_MOD)
 #: partitions the table into PB_MOD directories, so (a) serving prunes
 #: whole partitions for the query's terms (csearch computes each term's
@@ -1458,24 +1430,31 @@ def merge_partials(
     incremental_max_touched_frac: float = 0.2,
     pb_mod: int | str = "auto",
 ) -> dict:
-    """Merge all listed partial shards (batch- or stream-written) into
-    the final postings table with explicit hot-term salt splitting, and
-    commit it in ONE manifest flip together with the refreshed
-    n_docs/avgdl (streamed docs enter collection stats) and the stream
-    dedup's consolidated dirs (dedup_stream_partials). Safe to re-run:
-    a crash before the flip leaves the previous generation serving.
+    """Merge the listed partials (stream micro-batches, and the batch
+    shards of a shard_batch build until its first merge) into a new
+    serving table version, and commit it in ONE manifest flip together
+    with the refreshed n_docs/avgdl (streamed docs enter collection
+    stats) and the stream dedup's consolidated dirs
+    (dedup_stream_partials). Batch partials are unlisted by that flip:
+    the serving table is their only durable copy from then on, and
+    stream partials are the only delta kept. Safe to re-run: a crash
+    before the flip leaves the previous generation serving.
 
-    Re-merge cost (round-2 judge item 9): a FULL merge decodes and
-    re-encodes every partial with the refreshed avgdl — correct, but at
-    1M+ docs it dominates the cost of ingesting a small stream batch.
-    When a previous merge exists, the batch shard set is unchanged, and
-    the collection avgdl has drifted less than ``max_bound_drift`` from
-    the value the standing postings were encoded at
-    (manifest['encode_avgdl']), the merge goes INCREMENTAL: only tids
-    present in stream partials are re-merged (from all their partials,
-    at the OLD encode avgdl so the table stays homogeneous), only the
-    tid-BUCKETS those terms hash into are rewritten, and every
-    untouched bucket dir is hardlinked into a new versioned dir
+    Every merge runs the one-pass kernel (_merge_onepass_arrow_fn) over
+    the standing serving rows (the base) plus partials. A FULL merge
+    feeds the whole base — less the docs of the listed stream doc
+    stats, which come back from the deduped stream partials — plus
+    every listed partial, and re-encodes all rows at the refreshed
+    avgdl. At 1M+ docs that dominates the cost of ingesting a small
+    stream batch, so when a previous merge exists, the batch shard set
+    is unchanged, no dedup rewrote the stream partials, and the
+    collection avgdl has drifted less than ``max_bound_drift`` from the
+    value the standing postings were encoded at
+    (manifest['encode_avgdl']), the merge goes INCREMENTAL: only the
+    tid-BUCKETS the new stream partials touch are rewritten, from their
+    base rows plus those partials, at the OLD encode avgdl so the table
+    stays homogeneous (a re-encoded base row comes out byte-identical),
+    and every untouched bucket dir is hardlinked into the new version
     (_incremental_merge).
     Safety: stored block-max bounds are upper bounds for the avgdl they
     were encoded at; serving re-validates them against the CURRENT
@@ -1496,30 +1475,29 @@ def merge_partials(
     incremental_max_touched_frac (two scalar counts, computed only once
     the cheaper conditions hold).
 
-    Scale note: ``dfs`` and ``term_dict`` have one row PER DISTINCT TERM
-    (10^8-10^9 rows at the 10^12-file north-star scale), so neither is
-    broadcast — both joins shuffle on tid and Catalyst/AQE picks the
-    physical strategy (it will still auto-broadcast when genuinely
-    small). An unconditional broadcast hint here OOMs the driver at
-    scale. The incremental path still scans every partial file for the
-    touched-tid semi-join; at north-star scale partials would be
-    bucketed by tid so that scan prunes too."""
+    hot_df_threshold is the kernel's chunk size; n_salts is accepted
+    for callers and unused (the chunk split replaced hash salting).
+    Scale note: the term dictionary has one row PER DISTINCT TERM
+    (10^8-10^9 rows at the 10^12-file north-star scale); it rides the
+    pb exchange with the payloads and is never broadcast."""
     manifest = load_manifest(out_dir)
-    _merge(spark, out_dir, manifest, hot_df_threshold, n_salts,
-           incremental, max_bound_drift, incremental_max_touched_frac,
-           pb_mod, refresh=bool(manifest["live"]["doc_stats_stream"]))
+    _merge(spark, out_dir, manifest, hot_df_threshold, incremental,
+           max_bound_drift, incremental_max_touched_frac, pb_mod,
+           refresh=bool(manifest["live"]["doc_stats_stream"]))
     return _commit(out_dir, manifest, "merge")
 
 
 def _merge(spark: SparkSession, out_dir: str, manifest: dict,
-           hot_df_threshold: int, n_salts: int, incremental: bool | str,
+           hot_df_threshold: int, incremental: bool | str,
            max_bound_drift: float, incremental_max_touched_frac: float,
-           pb_mod: int | str, refresh: bool) -> dict:
+           pb_mod: int | str, refresh: bool,
+           dead_ids: np.ndarray | None = None) -> dict:
     """merge_partials' work over the manifest dict ``manifest``: write
     a new postings version from its listed dirs and record it in the
     dict, uncommitted (compact_tombstones merges its filtered dirs the
     same way before its one commit). refresh: recompute n_docs/avgdl
-    from the listed doc stats first."""
+    from the listed doc stats first. dead_ids: docs a full merge drops
+    from the base (compaction's tombstones)."""
     import math
 
     if refresh:
@@ -1531,36 +1509,19 @@ def _merge(spark: SparkSession, out_dir: str, manifest: dict,
     batch_keys_prev = manifest.get("merged_batch_shards")
     # stats above and the dedup below apply the SAME precedence, so the
     # already-refreshed n_docs/avgdl stay valid after the rewrite
-    dedup_removed = dedup_stream_partials(spark, out_dir, manifest,
-                                          enc_prev or avgdl)
+    stream_before = _partial_paths(out_dir, manifest, stream_only=True)
+    dedup_stream_partials(spark, out_dir, manifest, enc_prev or avgdl)
+    deduped = (_partial_paths(out_dir, manifest, stream_only=True)
+               != stream_before)
     t0 = time.time()
     ver = int(manifest.get("postings_version", 0)) + 1
     new_name = f"postings_v{ver}"
     new_dir = os.path.join(out_dir, new_name)
     stream_dirs = sorted(r["dir"] for r in manifest["shards"].values()
                          if r.get("streaming") and r.get("dir"))
-    if not _partial_paths(out_dir, manifest):
-        # empty corpus: no partial was ever written — materialize an
-        # empty postings table with the serving schema so read_index /
-        # search over a 0-doc index work instead of failing schema
-        # inference
-        fields = ([StructField("term", StringType(), False)]
-                  + [f for f in TID_MERGED_SCHEMA.fields if f.name != "salt"]
-                  + [StructField("salt", IntegerType(), False),
-                     StructField("df", LongType(), False),
-                     StructField("pb", IntegerType(), False)])
-        spark.createDataFrame([], StructType(fields)).select(
-            *SERVING_COLUMNS, "pb",
-        ).write.mode("overwrite").parquet(new_dir)
-        return _set_merged(manifest, new_name, ver, avgdl, pb_mod,
-                           stream_dirs, "full", t0)
-
-    # retire already-merged stream shards from the touched set: the
-    # manifest records which stream shard dirs the CURRENT postings
-    # version reflects, so each incremental merge's data movement tracks
-    # the NEW micro-batches, not every term ever streamed (without this
-    # the touched set grows monotonically and the economic guard
-    # eventually forces full merges forever)
+    # only the stream shards the CURRENT postings version does not yet
+    # reflect feed an incremental merge: its data movement tracks the
+    # NEW micro-batches, not every term ever streamed
     merged_prev = set(manifest.get("merged_stream_shards") or [])
     new_stream = [s for s in stream_dirs if s not in merged_prev]
     drift_ok = (
@@ -1573,13 +1534,13 @@ def _merge(spark: SparkSession, out_dir: str, manifest: dict,
         and drift_ok
         and batch_keys_prev == _batch_shard_keys(manifest)
         and stream_dirs
-        # pure-append only: a dedup that removed rows may have ERASED a
-        # term from the stream partials entirely (content re-drop), and
-        # the touched-tid set can't see an absence — the standing row
-        # would survive as a ghost. Re-baseline with a full merge then.
+        # pure-append only: a dedup rewrite may have ERASED a term from
+        # the stream partials (content re-drop) or replaced an already
+        # merged doc's version, and the base holds the old rows; a full
+        # merge drops every stream doc from the base and re-adds it.
         # The dedup commits with this merge, so a crashed merge's
-        # removal is redone (and seen here) by its re-run.
-        and dedup_removed == 0
+        # rewrite is redone (and seen here) by its re-run.
+        and not deduped
         # bucket-level partial rewrite needs the bucketed layout (and
         # the same fan-out); a pre-bucketing index re-baselines fully
         and manifest.get("pb_mod") == pb_mod
@@ -1590,18 +1551,14 @@ def _merge(spark: SparkSession, out_dir: str, manifest: dict,
     )
     if go_incremental:
         # the touched-tid set is built (and cached) ONCE and shared by
-        # the economic guard's count and the incremental merge itself —
-        # partials are scanned once for it, not once per consumer.
-        # Only NEW stream shards contribute (retirement above); each
-        # touched tid is still re-merged from ALL its partials, so df
-        # and salting match a full merge.
-        shard_dir = F.concat(F.lit("shard="), F.col("shard").cast("string"))
+        # the economic guard's count and the touched-bucket list
+        new_paths = [os.path.join(out_dir, "partials", s)
+                     for s in new_stream]
         touched_df = (
-            _read_partials(spark, out_dir, manifest, stream_only=True)
-            .where(shard_dir.isin(new_stream))
+            spark.read.schema(ENC_READ_SCHEMA).parquet(*new_paths)
             .select("tid").distinct().cache()
-        )
-    if go_incremental and incremental == "auto":
+        ) if new_paths else None
+    if go_incremental and incremental == "auto" and touched_df is not None:
         # economic guard (incremental=True skips it; the correctness
         # guards above always apply)
         touched_n = touched_df.count()
@@ -1612,27 +1569,18 @@ def _merge(spark: SparkSession, out_dir: str, manifest: dict,
             touched_df.unpersist()
     if go_incremental:
         _incremental_merge(spark, out_dir, manifest, new_dir,
-                           float(enc_prev), hot_df_threshold, n_salts,
-                           pb_mod, touched_df)
+                           float(enc_prev), hot_df_threshold, pb_mod,
+                           touched_df, new_paths)
         return _set_merged(manifest, new_name, ver, float(enc_prev),
                            pb_mod, stream_dirs, "incremental", t0)
 
     # dictionary duplicates can only exist once a stream micro-batch
-    # added dict rows (init_stats writes the dictionary distinct)
+    # added dict rows (the build writes the dictionary distinct)
     ever_streamed = manifest["live"]["term_dict"] != ["term_dict"]
-    # one payload exchange total; rows already live in their pb's
-    # partition, so the partitioned write needs no repartition. Rows
-    # are term-sorted within each pb partition (row-group min/max
-    # stats serve the term IN pushdown inside the surviving partitions)
-    out = merge_onepass_plan(spark, out_dir, avgdl, pb_mod,
-                             chunk_postings=hot_df_threshold,
-                             dict_distinct=ever_streamed,
-                             manifest=manifest)
-    (
-        out.sortWithinPartitions("pb", "term")
-        .write.mode("overwrite").partitionBy("pb")
-        .parquet(new_dir)
-    )
+    _write_serving(spark, merge_onepass_plan(
+        spark, out_dir, avgdl, pb_mod, chunk_postings=hot_df_threshold,
+        dict_distinct=ever_streamed, manifest=manifest, dead_ids=dead_ids),
+        new_dir)
     return _set_merged(manifest, new_name, ver, avgdl, pb_mod, stream_dirs,
                        "full", t0)
 
@@ -1640,9 +1588,13 @@ def _merge(spark: SparkSession, out_dir: str, manifest: dict,
 def _set_merged(manifest: dict, new_name: str, ver: int, enc_avgdl: float,
                 pb_mod: int, stream_dirs: list, kind: str,
                 t0: float) -> dict:
-    """Record a written postings version in the (uncommitted) dict.
-    enc_avgdl: the avgdl its block-max bounds were encoded at (an
-    incremental merge keeps the standing baseline)."""
+    """Record a written postings version in the (uncommitted) dict and
+    unlist the batch partials it now holds. enc_avgdl: the avgdl its
+    block-max bounds were encoded at (an incremental merge keeps the
+    standing baseline)."""
+    for row in manifest["shards"].values():
+        if not row.get("streaming"):
+            row["dir"] = None
     manifest.update({
         "merged": True, "postings_dir": new_name, "postings_version": ver,
         "encode_avgdl": enc_avgdl, "impact_ranks": list(IMPACT_RANKS),
@@ -1661,44 +1613,39 @@ def _incremental_merge(
     new_dir: str,
     enc_avgdl: float,
     hot_df_threshold: int,
-    n_salts: int,
     pb_mod: int,
-    touched: DataFrame,
+    touched: DataFrame | None,
+    new_paths: list[str],
 ) -> None:
-    """Bucket-level partial rewrite into ``new_dir``: re-merge ONLY the
-    tids that appear in new stream partials (each from ALL its
-    partials, so df and salting match what a full merge would produce
-    for that tid), rewrite ONLY the tid-buckets those terms hash into
-    (touched-bucket rows = untouched old rows of the bucket + the
-    re-merged rows), and HARDLINK every untouched bucket dir from the
-    standing table into the new version — data movement is proportional
-    to touched buckets, not table size (on object storage this linking
-    step is a manifest rewrite; Iceberg snapshots work the same way).
-    New rows are encoded at the OLD encode-avgdl, keeping the table's
-    bound baseline homogeneous — the serving-time inflation factor
-    covers the (bounded) drift. Hardlinks mean sweeping the old version
-    after the commit never touches the new one's shared files."""
+    """Bucket-level rewrite into ``new_dir``: the tid-buckets the new
+    stream partials touch are re-merged by the one-pass kernel from
+    their base rows ∪ those partials ∪ their dict rows (so df and the
+    chunk split match what a full merge would produce for every tid of
+    the bucket), and every untouched bucket dir is HARDLINKED from the
+    standing table — data movement is proportional to touched buckets,
+    not table size (on object storage this linking step is a manifest
+    rewrite; Iceberg snapshots work the same way). Rows are encoded at
+    the OLD encode-avgdl, keeping the table's bound baseline
+    homogeneous — the serving-time inflation factor covers the
+    (bounded) drift. Hardlinks mean sweeping the old version after the
+    commit never touches the new one's shared files."""
     old_dir = _postings_dir(out_dir, manifest)
     touched_pbs = sorted(
         r.pb for r in touched.select(_pb_col(pb_mod)).distinct().collect()
-    )
-    new_rows = merge_plan(spark, out_dir, enc_avgdl, hot_df_threshold,
-                          n_salts, only_tids=touched,
-                          manifest=manifest).withColumn(
-        "pb", _pb_col(pb_mod))
-    old = spark.read.parquet(old_dir)
-    keep_old = (
-        old.where(F.col("pb").isin(touched_pbs))
-        .join(touched, "tid", "left_anti")
-    )
-    (
-        keep_old.unionByName(new_rows)
-        .repartition("pb")
-        .sortWithinPartitions("pb", "term")
-        .write.mode("overwrite").partitionBy("pb")
-        .parquet(new_dir)
-    )
-    touched.unpersist()
+    ) if touched is not None else []
+    os.makedirs(new_dir, exist_ok=True)
+    if touched_pbs:
+        rows = _read_base(spark, old_dir, touched_pbs).unionByName(_enc_rows(
+            spark.read.schema(ENC_READ_SCHEMA).parquet(*new_paths), False))
+        tdict = _read_term_dict(spark, out_dir, manifest, True).where(
+            F.pmod(F.col("tid"), F.lit(pb_mod)).isin(touched_pbs))
+        (
+            _onepass_plan(rows, tdict, enc_avgdl, pb_mod, hot_df_threshold)
+            .sortWithinPartitions("pb", "term")
+            .write.mode("overwrite").partitionBy("pb").parquet(new_dir)
+        )
+    if touched is not None:
+        touched.unpersist()
     # hardlink untouched bucket dirs (metadata-only, no data movement)
     touched_set = {f"pb={b}" for b in touched_pbs}
     for name in os.listdir(old_dir):
@@ -1787,7 +1734,8 @@ def verify_index(spark: SparkSession, out_dir: str, docs: DataFrame,
     m = load_manifest(out_dir)
     idx = _dedup_doc_stats(spark, out_dir, m).select(
         "doc_id", F.col("dl").alias("_idx_dl"),
-        F.col("content_sha").alias("_idx_sha"),
+        # the stored raw digest as sha2's lowercase hex
+        F.lower(F.hex("content_sha")).alias("_idx_sha"),
         F.lit(True).alias("_in_idx"))
     if recount_dl:
         from engine.analysis import with_tokens
@@ -1949,12 +1897,14 @@ def compact_tombstones(
     search results are rank-identical to a from-scratch build on the
     surviving docs (pytest-gated).
 
-    Dataflow (all distributed, no driver-side doc sets): decode every
-    listed partial shard to long posting rows (shard kept), anti-join
-    the tombstones, re-encode per (shard, tid) group into new
-    ``shard=<key>_c<N>`` dirs; filter the batch and stream doc stats
-    into new dirs the same way; then refresh the collection stats and
-    run a full (re-baselining) merge over that uncommitted set.
+    Dataflow: decode every listed partial shard (the stream delta) to
+    long posting rows (shard kept), anti-join the tombstones, re-encode
+    per (shard, tid) group into new ``shard=<key>_c<N>`` dirs; filter
+    the batch and stream doc stats into new dirs the same way; then
+    refresh the collection stats and run a full (re-baselining) merge
+    over that uncommitted set, whose kernel drops the tombstoned docs
+    from the standing serving rows (the tombstone ids ride the kernel
+    tasks as a sorted array, like serving's dead-doc array).
 
     Commits ONCE: the flip lists the filtered dirs, the new postings
     and no tombstones. A crash at any point before it leaves the
@@ -1962,12 +1912,13 @@ def compact_tombstones(
     filtered by serving — and a re-run starts over from it.
 
     Returns the committed manifest. No-op (returns the manifest
-    unchanged) when no tombstones stand."""
+    unchanged) when no tombstones stand. n_salts is accepted for
+    callers and unused (merge_partials)."""
     m = load_manifest(out_dir)
     tombs = read_tombstones(spark, out_dir, m)
     if tombs is None:
         return m
-    n_tombs = tombs.count()
+    dead_ids = _listed_doc_ids(out_dir, m, "tombstones")
     gen = m["generation"] + 1
     avgdl = float(m["stats"]["avgdl"]) or 200.0
 
@@ -2025,14 +1976,15 @@ def compact_tombstones(
             live[kind] = [name]
     live["tombstones"] = []
     m["n_tombstones"] = 0
-    m["compacted_removed"] = int(m.get("compacted_removed", 0) + n_tombs)
+    m["compacted_removed"] = int(m.get("compacted_removed", 0)
+                                 + dead_ids.size)
 
     # collection stats re-baselined from the filtered doc stats, then a
-    # full merge: df recomputed from the filtered partials, bounds
+    # full merge: df recomputed without the dead docs, bounds
     # re-encoded at the refreshed avgdl
-    _merge(spark, out_dir, m, hot_df_threshold, n_salts,
-           incremental=False, max_bound_drift=0.05,
-           incremental_max_touched_frac=0.2, pb_mod=pb_mod, refresh=True)
+    _merge(spark, out_dir, m, hot_df_threshold, incremental=False,
+           max_bound_drift=0.05, incremental_max_touched_frac=0.2,
+           pb_mod=pb_mod, refresh=True, dead_ids=dead_ids)
     return _commit(out_dir, m, "compaction")
 
 

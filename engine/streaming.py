@@ -81,7 +81,8 @@ def start_incremental_index(
                 tokenized.select(
                     F.col(id_col).alias("doc_id"),
                     F.size("tokens").cast("long").alias("dl"),
-                    F.sha2(F.col(text_col), 256).alias("content_sha"),
+                    F.unhex(F.sha2(F.col(text_col), 256))
+                    .alias("content_sha"),
                     # ingest-order precedence key: a doc re-dropped in a
                     # LATER micro-batch supersedes earlier stream
                     # versions at merge-dedup time

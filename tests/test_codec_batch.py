@@ -5,6 +5,8 @@ three varbyte calls per 128-value block is pure per-call overhead)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
@@ -177,113 +179,151 @@ def test_encode_blocked_batch_empty_and_guards():
         encode_blocked_batch(d, d, d, np.array([0, 2, 2]), avgdl=10.0)
 
 
+def _payload_cols():
+    """Every serving column but the (term, salt) key and pb."""
+    from engine.postings import ONEPASS_MERGED_SCHEMA
+
+    return tuple(c for c in ONEPASS_MERGED_SCHEMA.fieldNames()
+                 if c not in ("term", "salt", "pb"))
+
+
+def _serving_rows(spark, out):
+    """An index's serving rows keyed by (term, salt), as comparable
+    tuples of every serving column."""
+    from engine.postings import read_index
+
+    from .oracle import row_key
+
+    cols = _payload_cols()
+    return {(r.term, r.salt): row_key(r, cols)
+            for r in read_index(spark, out)["postings"].collect()}
+
+
+def _oracle_rows(docs, avgdl, chunk):
+    """tests/oracle.posting_rows in _serving_rows' shape."""
+    from engine.codec import IMPACT_RANKS
+    from engine.xxh import spark_xxhash64_str
+
+    from .oracle import posting_rows, row_key
+
+    cols = _payload_cols()
+    want = {}
+    for term, rows in posting_rows(docs, avgdl, chunk=chunk,
+                                   impact_ranks=IMPACT_RANKS).items():
+        for r in rows:
+            want[(term, r["salt"])] = row_key(
+                {**r, "term": term, "tid": spark_xxhash64_str(term)}, cols)
+    return want
+
+
 def test_merge_arrow_kernel_identical(spark, tmp_path):
-    """The batched mapInArrow merge (merge_plan, the incremental path)
-    must write each (term, salt) row exactly as codec.encode_blocked
-    encodes that row's doc-sorted postings — same bytes, offsets, block
-    maxima and impacts — and each term's rows together must hold
-    exactly the test oracle's postings, with the term's full df on
-    every row."""
-    from engine.codec import IMPACT_RANKS, decode_blocked, encode_blocked
+    """The merge kernel over payload rows (full, incremental, then full
+    again over three stream batches, each re-merging the standing
+    serving rows) must write each (term, salt) row exactly as
+    codec.encode_blocked encodes that chunk's doc-sorted postings of
+    the whole corpus — same bytes, offsets, block maxima, impacts and
+    the term's full df on every chunk (tests/oracle.posting_rows)."""
+    import random
+
+    from engine.postings import build_index, load_manifest, merge_partials
+    from engine.streaming import start_incremental_index
+
+    schema = "doc_id long, text string"
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(30)]
+    weights = [1.0 / (i + 1) for i in range(len(vocab))]
+    # every doc has dl 3, so the stream batches never move avgdl
+    docs = [(i, " ".join(rng.choices(vocab, weights=weights, k=3)))
+            for i in range(300)]
+    out, inp = str(tmp_path / "idx"), str(tmp_path / "in")
+    build_index(spark, spark.createDataFrame(docs[:200], schema), out,
+                n_shards=4, hot_df_threshold=8)
+    # the incremental merge's base already holds the first stream
+    # batch (only the new partial may be fed), and so does the last
+    # full merge's (those docs are dropped from the base and re-added
+    # from their partials)
+    for lo, hi, mode in ((200, 235, False), (235, 270, True),
+                         (270, 300, False)):
+        spark.createDataFrame(docs[lo:hi], schema).write.mode(
+            "overwrite").parquet(inp)
+        start_incremental_index(spark, inp, out, avgdl_hint=3.0,
+                                schema=schema).awaitTermination(120)
+        m = merge_partials(spark, out, hot_df_threshold=8, incremental=mode)
+        assert m["last_merge"] == ("incremental" if mode else "full")
+        got = _serving_rows(spark, out)
+        want = _oracle_rows(docs[:hi], load_manifest(out)["encode_avgdl"], 8)
+        assert got == want
+        assert max(salt for _, salt in got) > 0  # some terms are chunked
+
+
+def test_default_build_rows_match_oracle_and_shard_batch(spark, tmp_path):
+    """A default build writes its serving rows straight from the raw
+    token rows (no partials); they must equal tests/oracle.posting_rows
+    — byte for byte, chunked hot terms included — and equal a
+    shard_batch=1 build's rows, which go through per-shard partials
+    and the merge over them."""
     from engine.corpusgen import synth_corpus
-    from engine.postings import build_index, merge_plan
+    from engine.postings import build_index, load_manifest
 
-    from .oracle import postings, row_key
-
-    docs = synth_corpus(spark, 300).withColumnRenamed("content", "text")
-    out = str(tmp_path / "idx")
-    build_index(spark, docs, out, n_shards=4, n_salts=2)
-    # low hot threshold so several terms take the salted path
-    rows = merge_plan(spark, out, avgdl=10.0, hot_df_threshold=8,
-                      n_salts=2).collect()
-    cols = ("n_docs", "doc_bytes", "tf_bytes", "dl_bytes", "impacts",
-            "block_max", "doc_off", "tf_off", "dl_off")
-    merged: dict = {}
-    n_rows: dict = {}
-    for r in rows:
-        d, t, dl = decode_blocked(r.doc_bytes, r.tf_bytes, r.dl_bytes,
-                                  r.doc_off, r.tf_off, r.dl_off)
-        enc = encode_blocked(d, t, dl, 10.0, impact_ranks=IMPACT_RANKS)
-        enc["n_docs"] = int(d.size)
-        assert list(d) == sorted(d), r.term
-        assert row_key(r, cols) == row_key(enc, cols), (r.term, r.salt)
-        merged.setdefault((r.term, r.df), []).extend(
-            zip(d.tolist(), t.tolist(), dl.tolist()))
-        n_rows[r.term] = n_rows.get(r.term, 0) + 1
-    want = postings([(r.doc_id, r.text) for r in docs.collect()])
-    assert {k: sorted(v) for k, v in merged.items()} == {
-        (t, len(ps)): ps for t, ps in want.items()}
-    assert max(n_rows.values()) > 1  # some terms took the salted path
-
-
-def test_mapside_combine_build_identical_to_shuffle(spark, tmp_path):
-    """combine='mapside' (no token exchange — per-partition partials,
-    merge does the by-term combine) must produce a merged index
-    byte-identical to combine='shuffle': a doc's token rows never
-    leave their partition, so per-(doc, term) tf is complete map-side
-    and the merged (tid, salt) groups hold identical posting sets."""
-    from engine.corpusgen import synth_corpus
-    from engine.postings import build_index, read_index
-
-    docs = (synth_corpus(spark, 300).withColumnRenamed("content", "text")
-            .repartition(7))  # several partitions so partials differ
+    docs_df = (synth_corpus(spark, 300).withColumnRenamed("content", "text")
+               .repartition(7))
+    docs = [(r.doc_id, r.text) for r in docs_df.collect()]
     rows = {}
-    for combine in ("shuffle", "mapside"):
-        out = str(tmp_path / combine)
-        build_index(spark, docs, out, n_shards=2, n_salts=2,
-                    combine=combine)
-        idx = read_index(spark, out)
-        rows[combine] = sorted(
-            (r.term, r.salt, r.df, r.n_docs, bytes(r.doc_bytes),
-             bytes(r.tf_bytes), bytes(r.dl_bytes), tuple(r.impacts),
-             tuple(r.block_max), tuple(r.doc_off), tuple(r.tf_off),
-             tuple(r.dl_off))
-            for r in idx["postings"].collect())
-        # mapside partials: more rows per tid than shards is expected
-    assert rows["shuffle"] == rows["mapside"]
+    for name, kw in (("default", {}), ("shard_batch", {"shard_batch": 1})):
+        out = str(tmp_path / name)
+        build_index(spark, docs_df, out, n_shards=2, hot_df_threshold=64,
+                    **kw)
+        rows[name] = _serving_rows(spark, out)
+    assert not os.path.exists(str(tmp_path / "default" / "partials"))
+    # the shard_batch build's partials were unlisted and swept at merge
+    assert not [n for n in os.listdir(str(tmp_path / "shard_batch"
+                                          / "partials"))
+                if n.startswith("shard=")]
+    want = _oracle_rows(docs, load_manifest(out)["encode_avgdl"], 64)
+    assert rows["default"] == want
+    assert rows["shard_batch"] == rows["default"]
+    assert max(salt for _, salt in want) > 0  # some terms are chunked
+
+
+def test_merge_kernel_raises_on_tid_collision():
+    """Two dictionary rows with one tid (an xxhash64 collision) in a
+    kernel partition must raise: their postings would merge into one
+    list."""
+    import pyarrow as pa
     import pytest
-    with pytest.raises(ValueError, match="combine"):
-        build_index(spark, docs, str(tmp_path / "bad"), combine="x")
+
+    from engine.postings import _merge_onepass_arrow_fn
+
+    batch = pa.RecordBatch.from_pydict({
+        "term": pa.array(["alpha", "beta", None, None], pa.string()),
+        "tid": pa.array([7, 7, 7, 7], pa.int64()),
+        "doc_id": pa.array([0, 0, 1, 2], pa.int64()),
+        "dl": pa.array([0, 0, 3, 4], pa.int64()),
+    })
+    fn = _merge_onepass_arrow_fn(avgdl=3.0, pb_mod=8, chunk_postings=100)
+    with pytest.raises(RuntimeError, match="collision"):
+        list(fn(iter([batch])))
+    # one dict row per tid: the same input merges to one row
+    ok = batch.filter(pa.array([True, False, True, True]))
+    (out,) = list(fn(iter([ok])))
+    assert out.column(0).to_pylist() == ["alpha"]
+    assert out.column(out.schema.names.index("df")).to_pylist() == [2]
 
 
 def test_onepass_merge_equivalent_to_classic(spark, tmp_path):
-    """The one-pass full merge (single pb-partitioned exchange,
-    in-kernel df, dict rows riding the shuffle, chunk-split hot terms)
-    must serve the same index as merge_plan, the salted three-pass plan
-    the incremental merge runs: same (term, df) table, same decoded
-    postings per term, and multiple rows for over-threshold terms."""
-    from engine.codec import decode_blocked
+    """A full merge over the standing serving rows (re-merged as the
+    base, nothing new to add) must serve exactly the rows the build
+    wrote: the base decodes and re-encodes byte-identically, chunk
+    split included."""
     from engine.corpusgen import synth_corpus
-    from engine.postings import build_index, merge_plan, read_index
+    from engine.postings import build_index, merge_partials
 
     docs = (synth_corpus(spark, 300).withColumnRenamed("content", "text")
             .repartition(5))
     out = str(tmp_path / "idx")
-    # low threshold so several terms take the split path
-    build_index(spark, docs, out, n_shards=2, n_salts=2,
-                hot_df_threshold=64)
-    idx = read_index(spark, out)
-    tables = {}
-    for impl, rows in (
-            ("onepass", idx["postings"].collect()),
-            ("merge_plan", merge_plan(spark, out, idx["encode_avgdl"],
-                                      hot_df_threshold=64,
-                                      n_salts=2).collect())):
-        decoded = {}
-        hot_rows = {}
-        for r in rows:
-            d, t, dl = decode_blocked(
-                r.doc_bytes, r.tf_bytes, r.dl_bytes,
-                r.doc_off, r.tf_off, r.dl_off)
-            key = (r.term, int(r.df))
-            cur = decoded.setdefault(key, [])
-            cur.extend(zip(d.tolist(), t.tolist(), dl.tolist()))
-            hot_rows[r.term] = hot_rows.get(r.term, 0) + 1
-        tables[impl] = {k: sorted(v) for k, v in decoded.items()}
-        if impl == "onepass":
-            # chunk split GUARANTEES >1 rows past the threshold
-            # (hash-salting only spreads probabilistically)
-            for (term, df), postings in tables[impl].items():
-                if df > 64:
-                    assert hot_rows[term] > 1, (impl, term, df)
-    assert tables["merge_plan"] == tables["onepass"]
+    build_index(spark, docs, out, n_shards=2, hot_df_threshold=64)
+    before = _serving_rows(spark, out)
+    m = merge_partials(spark, out, hot_df_threshold=64, incremental=False)
+    assert m["last_merge"] == "full" and m["postings_version"] == 2
+    assert _serving_rows(spark, out) == before
+    assert max(salt for _, salt in before) > 0

@@ -109,8 +109,9 @@ def _listed(m):
 def _on_disk(out):
     top = {n for n in os.listdir(out)
            if not n.startswith(("_", ".")) and n != "partials"}
-    return top | {f"partials/{n}" for n in os.listdir(out + "/partials")
-                  if n.startswith("shard=")}
+    parts = (os.listdir(out + "/partials")
+             if os.path.isdir(out + "/partials") else [])
+    return top | {f"partials/{n}" for n in parts if n.startswith("shard=")}
 
 
 def _state(spark, out):
@@ -128,7 +129,8 @@ def _state(spark, out):
         "n_docs": idx["n_docs"], "avgdl": idx["avgdl"], "hits": hits,
         "rows": sorted(tuple(r) for r in idx["postings"].collect()),
         "docs": sorted(tuple(r) for r in idx["doc_stats"].collect()),
-        "partials": sorted(tuple(r) for r in parts.drop("shard").collect()),
+        "partials": sorted(tuple(r) for r in parts.drop("shard").collect())
+        if parts is not None else [],
         "tombstones": sorted(r.doc_id for r in idx["tombstones"].collect())
         if idx["tombstones"] is not None else [],
     }

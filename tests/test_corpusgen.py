@@ -63,12 +63,14 @@ def test_engine_end_to_end_on_input_hint_shape(spark, tmp_path):
     build_index(spark, corpus, out, n_shards=4, hot_df_threshold=150,
                 n_salts=4, text_col="content")
 
-    # row invariant: sha256(content) per row vs source
+    # row invariant: sha256(content) per row vs source (stored as the
+    # raw 32-byte digest)
     ds = spark.read.parquet(out + "/doc_stats").collect()
     src = {r.doc_id: r.content for r in corpus.collect()}
     assert len(ds) == 400
     for r in ds[:40]:
-        assert r.content_sha == hashlib.sha256(src[r.doc_id].encode()).hexdigest()
+        assert bytes(r.content_sha) == hashlib.sha256(
+            src[r.doc_id].encode()).digest()
 
     queries = spark.createDataFrame(
         [("c1", "def class import"), ("c2", "rare1"), ("c3", "ident5 return")],

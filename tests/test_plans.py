@@ -71,18 +71,22 @@ def test_partial_aggregation_before_shuffle(spark, documents):
 
 
 def test_merge_never_broadcasts_term_tables(spark, built):
-    """The merge joins dfs/term_dict on tid — both have one row PER
-    DISTINCT TERM (10^8-10^9 rows at north-star scale), so the plan must
-    not carry an unconditional broadcast hint. With auto-broadcast
-    disabled (simulating a term table too big to broadcast), a hint
-    would still force a BroadcastExchange — assert none appears."""
-    from engine.postings import merge_plan
+    """The merge carries the term dictionary — one row PER DISTINCT
+    TERM (10^8-10^9 rows at north-star scale) — through its one pb
+    exchange with the payloads, so the plan must hold no broadcast.
+    With auto-broadcast disabled (simulating a term table too big to
+    broadcast), any hint would still force a BroadcastExchange — assert
+    none appears, and that the plan has its one exchange."""
+    from engine.postings import merge_onepass_plan
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = _plan(merge_plan(spark, built["out_dir"], 10.0, 1000, 2))
+        # never streamed: the merge reads the dictionary as written
+        plan = _plan(merge_onepass_plan(spark, built["out_dir"], 10.0, 8,
+                                        1000, dict_distinct=False))
         assert "BroadcastExchange" not in plan
+        assert plan.count("Exchange hashpartitioning") == 1, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 

@@ -41,16 +41,22 @@ def test_char_bigrams_top_leaves_no_persisted_rdds(spark, documents):
     assert _n_persisted(spark) == 0
 
 
-def test_search_index_serving_persists_capped_at_one(spark, tmp_path):
+def test_search_index_serving_persists_capped_at_one(spark, tmp_path,
+                                                     monkeypatch):
+    from engine import csearch
     from engine.csearch import (pruning_stats, release_serving_cache,
                                 search_index)
     from engine.postings import build_index, read_index
     from engine.queries_set import queries_df
 
+    # the corpus holds the reference queries' terms: a query set with
+    # no indexed term returns before anything is persisted
     docs = spark.createDataFrame(
-        [(i, f"apple banana doc{i} fig grape") for i in range(30)],
+        [(i, f"spark merge table doc{i} value line") for i in range(30)],
         "doc_id long, text string",
     )
+    # the packed plan: a one-task posting set is never persisted
+    monkeypatch.setattr(csearch, "ONE_TASK_MAX_POSTINGS", 0)
     out = str(tmp_path / "idx")
     build_index(spark, docs, out, n_shards=2, hot_df_threshold=10**9,
                 n_salts=2)

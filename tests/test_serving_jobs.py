@@ -1,16 +1,18 @@
-"""Spark job budgets of the serving routes.
+"""Spark job budgets of the serving routes and of the default build.
 
 Every route ends in the matmul kernel. Below csearch.ONE_TASK_MAX_POSTINGS
 the term metadata is read on the driver and θ comes from the stored
 impacts, so a batch or a single query, pruned or not, cold or warm, is
-one job (one task, no broadcast, no exchange); a query with no indexed
-term is none. Above the bound the packed plan runs its decode+pack
-stage, its doc-bucket exchange and its matmul stage. The decode θ (an
-index without impacts, or with standing tombstones) adds exactly its own
-kernel run, one job below the bound; standing tombstones add their
-read. Query tables are local relations here, so collecting them adds
-no job to the count. Opening the index (read_index) launches no job at
-all."""
+one job (one task, no broadcast, no exchange); a query set with no
+indexed term is none, on every route. Above the bound the packed plan
+runs its decode+pack stage, its doc-bucket exchange and its matmul
+stage. The decode θ (an index without impacts, or with standing
+tombstones) adds exactly its own kernel run, one job below the bound,
+where the payload is re-scanned rather than persisted; standing
+tombstones add their read. Query tables are local relations here, so
+collecting them adds no job to the count. Opening the index
+(read_index) launches no job at all, and a default build writes its
+serving table in a handful of jobs, with no partials."""
 
 from __future__ import annotations
 
@@ -87,10 +89,9 @@ def _tombstoned(spark, budget_dir, tmp_path):
 def test_impact_theta_drops_exactly_the_decode_theta_jobs(spark, budget_dir,
                                                           queries):
     """A one-task batch: θ from the impacts is the plan's one job; the
-    decode θ adds exactly its own two in front of the same plan: the
-    persisted payload's materialization (adaptive execution runs a
-    cached relation as a stage of its own) and the kernel's one-task
-    plan over the rarest terms."""
+    decode θ adds exactly its own one in front of the same plan: the
+    kernel's one-task plan over the rarest terms (a one-task payload
+    is re-scanned, not persisted)."""
     from engine.csearch import (_decode_theta, _pb_pruned_postings,
                                 _term_meta, local_query_terms)
     from engine.localrel import in_list
@@ -106,16 +107,12 @@ def test_impact_theta_drops_exactly_the_decode_theta_jobs(spark, budget_dir,
 
     # the decode θ on its own, over the same payload filter
     _qt, terms, qt_rows = local_query_terms(spark, queries)
-    pay = (_pb_pruned_postings(idx, terms)
-           .where(in_list("term", terms)).cache())
-    try:
-        meta = _term_meta(idx, terms, ())
-        n_theta, theta = _jobs(spark, lambda: _decode_theta(
-            spark, pay, meta, qt_rows, 10, idx["n_docs"], idx["avgdl"],
-            False, None))
-    finally:
-        pay.unpersist()
-    assert theta and n_theta == 2, n_theta
+    pay = _pb_pruned_postings(idx, terms).where(in_list("term", terms))
+    meta = _term_meta(idx, terms, ())
+    n_theta, theta = _jobs(spark, lambda: _decode_theta(
+        spark, pay, meta, qt_rows, 10, idx["n_docs"], idx["avgdl"],
+        False, None))
+    assert theta and n_theta == 1, n_theta
     assert n_dec - n_imp == n_theta, (n_imp, n_dec, n_theta)
 
 
@@ -155,10 +152,50 @@ def test_tombstoned_index_keeps_decode_theta(spark, budget_dir, queries,
         spark, lambda: _serve(spark, _without_impacts(idx), queries))
     assert res == res_dec and res
     assert not {0, 1, 2, 3, 5, 8} & {r[1] for r in res}
-    # same route, same jobs: the impacts were not used. Five: two for
-    # the tombstone set's distinct read, the persisted payload's
-    # materialization, the decode θ's kernel, the plan
-    assert n_tomb == n_dec == 5, (n_tomb, n_dec)
+    # same route, same jobs: the impacts were not used. Four: two for
+    # the tombstone set's distinct read, the decode θ's kernel, the plan
+    assert n_tomb == n_dec == 4, (n_tomb, n_dec)
+
+
+def test_no_indexed_term_runs_no_job(spark, budget_dir, tmp_path):
+    """A query set none of whose terms is in the index returns no rows
+    without a job on every route: pruned and not, θ from the impacts
+    and the decode θ (k above every impact rank, no impacts, standing
+    tombstones) — no tombstone read, persist, θ or kernel."""
+    from engine.csearch import search_index
+    from engine.localrel import local_df
+    from engine.postings import read_index
+
+    idx = read_index(spark, budget_dir)
+    qs = local_df(spark, [("q0", "absentterm nowhere"), ("q1", "a the")],
+                  "query_id string, query string")
+    for index in (idx, _without_impacts(idx),
+                  _tombstoned(spark, budget_dir, tmp_path)):
+        for prune, k in ((True, 10), (True, 500), (False, 10)):
+            n, rows = _jobs(spark, lambda: search_index(
+                spark, index, qs, k=k, prune=prune).collect())
+            assert (n, rows) == (0, []), (prune, k)
+
+
+def test_default_build_job_budget(spark, tmp_path):
+    """A default build (one shard batch) writes doc_stats, the term
+    dictionary and the serving table in at most 7 Spark jobs — the
+    token rows and the dictionary rows share one exchange into the
+    merge kernel — and leaves no partials dir."""
+    import os
+
+    from engine.postings import build_index, load_manifest
+
+    rng = random.Random(4)
+    rows = [(i, " ".join(rng.choices(VOCAB, k=rng.randint(1, 15))))
+            for i in range(300)]
+    docs = spark.createDataFrame(rows, DOC_SCHEMA)
+    out = str(tmp_path / "idx")
+    n, m = _jobs(spark, lambda: build_index(spark, docs, out, n_shards=4))
+    assert m["merged"] and m["postings_dir"] == "postings_v1"
+    assert not os.path.exists(os.path.join(out, "partials"))
+    assert n <= 7, n
+    assert load_manifest(out)["stats"]["n_docs"] == 300
 
 
 def _serve_unpruned(spark, idx, rows):
