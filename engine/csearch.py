@@ -7,7 +7,7 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
 (SURVEY.md section 4, last row):
 
   phase 0  postings rows filtered with term IN (<query terms>) — the
-           IN list is pushed into the parquet scan, so only matching
+           IN list is pushed into the parquet read, so only matching
            row groups are read. The byte payloads are NEVER joined
            with the query table: each payload row decodes ONCE into
            query-independent (term, doc_id, tf_part) triples, and the
@@ -31,7 +31,8 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
            index without impacts: fully score ONLY the rarest
            (highest-idf) term of each query; its k-th best single-term
            score is the bound. Only above ONE_TASK_MAX_POSTINGS is the
-           payload persisted for it: below, the one-task plan re-scans.
+           payload persisted for it: below, both kernel runs read it on
+           the driver.
   phase 2  block filter: a block b of term t is provably irrelevant
            for query q if
                UBsum(q) - w_t*tmax_t + w_t*block_max_b < θ(q)
@@ -39,33 +40,37 @@ MaxScore/BMW-flavored two-phase plan expressed as DataFrame ops
            best-possible doc score. Every doc in such a block scores
            below θ, so it cannot enter the top-k, and any partial score
            it still receives from other terms lands below θ and is cut
-           by the final top-k window — results stay RANK-IDENTICAL to
-           the unpruned plan (tested). Serving decodes the UNION of
-           the sharing queries' keep lists (one threshold scalar per
-           term): skipping only blocks every sharing query may skip is
-           a superset decode, which is always safe.
+           by the final top-k — results stay RANK-IDENTICAL to the
+           unpruned plan (tested). Serving decodes the UNION of the
+           sharing queries' keep lists (one threshold scalar per term,
+           applied to each row's block_max by _keep_blocks): skipping
+           only blocks every sharing query may skip is a superset
+           decode, which is always safe.
   phase 3  decode only surviving blocks (blocks are delta-restarted, so
            pruned blocks are never touched), compute tf_parts in
            numpy, and score the whole batch in the one aggregation,
-           the doc-partitioned matmul kernel (_matmul_score_topk,
-           scoring core _matmul_emit): every doc's postings meet in one
-           kernel call, which emits its partition's per-query top-k
-           candidates for the final top-k window.
+           the matmul kernel (_matmul_score_topk, scoring core
+           _matmul_emit): every doc's postings meet in one kernel call,
+           which emits the per-query top-k candidates that the final
+           ranking cuts to the exact top-k.
 
-The kernel runs one of two plans, chosen from the Σ df of the query
+The kernel runs in one of two places, chosen from the Σ df of the query
 terms the metadata read already holds, not by a knob:
-  * at most ONE_TASK_MAX_POSTINGS postings: the payload rows coalesce
-    to one partition and one mapInArrow decodes and scores them
-    (_decode_matmul_arrow_iter) — ONE Spark job of one task, the
-    latency floor on small posting sets, where cost is the number of
-    jobs and Python stages (~0.3 s each), not per-row work. The pruned
-    route's block thresholds ride a literal term -> threshold map, so
-    nothing is broadcast, and the child is one partition, so the top-k
-    window needs no Exchange. A single query and a batch, cold and
-    warm, take this plan;
+  * at most ONE_TASK_MAX_POSTINGS postings, the driver route: the
+    driver reads the terms' payload columns with the same pyarrow
+    filter as the metadata (_term_rows), decodes and scores them in
+    this process, ranks each query's candidates by (score desc, doc_id
+    asc) and returns an Arrow-backed local relation (_driver_topk) —
+    NO Spark job, the latency floor on small posting sets, where cost
+    is the number of jobs (~0.25 s each plus the driver gap around
+    them), not per-row work. The reference's Lucene searcher scores
+    in-process over its segment files the same way. A single query and
+    a batch, cold and warm, pruned or not, tombstoned or not, take this
+    route, the decode θ included;
   * above it, the packed plan: a decode+pack stage, a doc-bucket
-    exchange and a matmul stage, which spread the per-posting work
-    over the cluster.
+    exchange, a matmul stage and the top-k window, which spread the
+    per-posting work over the cluster (and read the warm persist,
+    warm_serving).
 """
 
 from __future__ import annotations
@@ -83,7 +88,7 @@ from pyspark.sql.types import (
 
 from . import TOP_K
 from .codec import decode_blocked, tf_part
-from .localrel import in_list, local_df, sql_literal
+from .localrel import in_list, local_df
 from .search import idf_sql
 
 
@@ -91,31 +96,14 @@ from .search import idf_sql
 PAYLOAD_COLS = ("term", "doc_bytes", "tf_bytes", "dl_bytes",
                 "doc_off", "tf_off", "dl_off")
 
-def _decode_rows(b, avgdl: float, keep_col: str | None):
-    """The decode loop every serving kernel shares: for each posting row
-    of the Arrow batch b with postings left after its keep list, yield
-    (row index, doc_ids int64, tf_parts). A row whose keep list is empty
-    is skipped undecoded; a NULL keep list decodes every block."""
-    cols = {n: b.column(i) for i, n in enumerate(b.schema.names)}
-    db, tb, lb = cols["doc_bytes"], cols["tf_bytes"], cols["dl_bytes"]
-    do, to, lo = cols["doc_off"], cols["tf_off"], cols["dl_off"]
-    kc = cols[keep_col] if keep_col else None
-    for i in range(b.num_rows):
-        keep = kc[i].as_py() if kc is not None else None
-        if keep is not None and not keep:
-            continue
-        # payload cells as zero-copy pa.Buffer views; offset lists as
-        # zero-copy numpy views of the list values (round-4 verdict #7 —
-        # .as_py() made a bytes copy per multi-MB hot-term payload; the
-        # codec reads buffers)
-        d, t, dl = decode_blocked(
-            db[i].as_buffer(), tb[i].as_buffer(), lb[i].as_buffer(),
-            np.asarray(do[i].values), np.asarray(to[i].values),
-            np.asarray(lo[i].values),
-            keep=keep,
-        )
-        if d.size:
-            yield i, d.astype(np.int64, copy=False), tf_part(t, dl, avgdl)
+def _keep_blocks(block_max, th):
+    """The one block-keep rule (phase 2): the indexes of a posting row's
+    blocks whose raw block-max reaches th, its term's threshold, or None
+    (decode every block) without a threshold or a block-max list. A
+    NULL block-max keeps its block: an unknown bound never prunes."""
+    if th is None or block_max is None or th == float("-inf"):
+        return None
+    return np.flatnonzero(~(np.asarray(block_max, dtype=np.float64) < th))
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -139,8 +127,8 @@ def _chunk_width(n_t: int, n_q: int) -> int:
 
 
 def _matmul_emit(bval, tidx, doc, x, k, round_dp):
-    """Scoring core of both matmul kernels (_matmul_topk_packed_iter,
-    _decode_matmul_arrow_iter): given a doc-partition's concatenated
+    """Scoring core of the matmul kernel on both plans (the driver
+    route, _matmul_topk_packed_iter): given a doc-partition's concatenated
     (tidx, doc, x) posting triples, score the WHOLE query batch as one
     dense matmul per doc-chunk and return (RecordBatch of that
     partition's per-query top-k candidates | None, (sort_sec,
@@ -172,7 +160,8 @@ def _matmul_emit(bval, tidx, doc, x, k, round_dp):
     <= 0 (an index whose df exceeds N, see _block_thresholds) the
     kernel falls back to presence-in-X so negatively-scored hit docs
     still rank, as the OR query ranks them. Rounding: the kernel
-    emits UNROUNDED scores and search_index applies the ONE F.round —
+    emits UNROUNDED scores and _matmul_score_topk applies the ONE
+    F.round —
     JVM BigDecimal HALF_UP, where np.round's half-to-even would
     diverge at decimal midpoints — while every candidate cut is
     relaxed by one rounding quantum so a doc that rounds into a
@@ -308,50 +297,52 @@ def _matmul_emit(bval, tidx, doc, x, k, round_dp):
     return rb, (t_sort - t0, t_score - t_sort)
 
 
-def _decode_triples(batches, avgdl: float, keep_col: str | None,
+def _decode_triples(batches, avgdl: float, bthresh: dict | None,
                     tmap: dict):
-    """The decode half of both matmul kernels: every posting row of
-    `batches` whose term has a matrix row in tmap, as concatenated
-    (doc int64, tidx int32, tf_part float64) arrays, or None when no
-    posting survives. A term without a row (no weight: its df is NULL)
-    is dropped after decoding."""
+    """The decode half of the matmul kernel, on both plans: every
+    posting row of the Arrow `batches` whose term has a matrix row in
+    tmap, decoded into concatenated (doc int64, tidx int32, tf_part
+    float64) arrays, or None when no posting survives. A term without a
+    row (no weight: its df is NULL) is never decoded. bthresh (pruned
+    only: term -> block threshold, _block_thresholds) keeps each row's
+    blocks by _keep_blocks over its block_max; a row with no kept block
+    is skipped undecoded."""
     doc_l, tidx_l, x_l = [], [], []
     for b in batches:
-        term = b.column(b.schema.get_field_index("term"))
-        for i, d, x in _decode_rows(b, avgdl, keep_col):
-            ti = tmap.get(term[i].as_py())
+        cols = {n: b.column(i) for i, n in enumerate(b.schema.names)}
+        term, bm = cols["term"], cols.get("block_max")
+        db, tb, lb = cols["doc_bytes"], cols["tf_bytes"], cols["dl_bytes"]
+        do, to, lo = cols["doc_off"], cols["tf_off"], cols["dl_off"]
+        for i in range(b.num_rows):
+            t_ = term[i].as_py()
+            ti = tmap.get(t_)
             if ti is None:
                 continue
-            doc_l.append(d)
-            tidx_l.append(np.full(d.size, ti, dtype=np.int32))
-            x_l.append(x)
+            keep = (_keep_blocks(bm[i].as_py(), bthresh.get(t_))
+                    if bthresh is not None else None)
+            if keep is not None and not keep.size:
+                continue
+            # payload cells as zero-copy pa.Buffer views; offset lists
+            # as zero-copy numpy views of the list values (.as_py() made
+            # a bytes copy per multi-MB hot-term payload; the codec
+            # reads buffers)
+            d, t, dl = decode_blocked(
+                db[i].as_buffer(), tb[i].as_buffer(), lb[i].as_buffer(),
+                np.asarray(do[i].values), np.asarray(to[i].values),
+                np.asarray(lo[i].values),
+                keep=keep,
+            )
+            if d.size:
+                doc_l.append(d.astype(np.int64, copy=False))
+                tidx_l.append(np.full(d.size, ti, dtype=np.int32))
+                x_l.append(tf_part(t, dl, avgdl))
     if not doc_l:
         return None
     return (np.concatenate(doc_l), np.concatenate(tidx_l),
             np.concatenate(x_l).astype(np.float64, copy=False))
 
 
-def _decode_matmul_arrow_iter(bval, avgdl: float, keep_col: str | None,
-                              tmap: dict, k: int, round_dp: int | None):
-    """mapInArrow kernel of the one-task matmul plan (module doc):
-    posting rows in, the batch's top-k candidates out.
-    The task holds the only partition, so every doc's postings are
-    present and _matmul_emit's scores are final. bval is what the
-    packed plan broadcasts; here it rides the closure of one task."""
-
-    def fn(batches):
-        got = _decode_triples(batches, avgdl, keep_col, tmap)
-        if got is None:
-            return
-        doc, tidx, x = got
-        rb, _timings = _matmul_emit(bval, tidx, doc, x, k, round_dp)
-        if rb is not None:
-            yield rb
-
-    return fn
-
-
-def _decode_pack_arrow_iter(avgdl: float, keep_col: str | None,
+def _decode_pack_arrow_iter(avgdl: float, bthresh: dict | None,
                             tmap: dict, part_space: int):
     """mapInArrow kernel fusing decode + term->tidx map + doc-bucket
     PACK: posting rows in, one row per (present doc-bucket) out, with
@@ -365,8 +356,9 @@ def _decode_pack_arrow_iter(avgdl: float, keep_col: str | None,
     the doc-partitioning exchange into <= n_decode_tasks x part_space
     binary rows — the per-posting bytes drop to the raw 20 and the
     Arrow feed builds thousands of cells, not millions. The term->tidx
-    map rides the task closure (bounded by the batch's unique terms),
-    so the JVM-side join with the tidx table disappears too.
+    map and the pruned route's term->threshold map ride the task
+    closure (both bounded by the batch's unique terms), so the JVM-side
+    join with the tidx table disappears too.
 
     part = doc_id mod part_space; the downstream repartition hashes the
     part VALUE, so every row of a doc lands in one partition (which is
@@ -382,7 +374,7 @@ def _decode_pack_arrow_iter(avgdl: float, keep_col: str | None,
     ])
 
     def fn(batches):
-        got = _decode_triples(batches, avgdl, keep_col, tmap)
+        got = _decode_triples(batches, avgdl, bthresh, tmap)
         if got is None:
             return
         doc, tidx, x = got
@@ -493,42 +485,41 @@ def _csr_weights(qw_rows):
     return qids, tmap, qptr, qtidx, qw
 
 
-#: the one-task matmul plan's work bound, in postings (Σ df of the
-#: batch's terms, before any block is pruned). The packed plan pays two
-#: Python stages and an exchange, ~0.6-0.8 s of fixed cost on a 4-vCPU
-#: host at local[2], against one stage for the one-task plan, which
-#: instead does all the per-posting work on one core. The codec alone
-#: decodes ~4M postings/s on one core (perfbench codec.decode_mb_s, ~53
-#: MB/s of 12-byte raw postings), so one task could take up to ~0.6 s x
-#: 4M/s = 2.4M postings before losing; the whole kernel (decode,
-#: tf_part, the Arrow feed, the matmul) is slower than the codec.
-#: Measured on that host (256-query k=100 pruned zipf batches, min of
-#: 3): Σ df 52k, one task 1.24 s vs packed 1.82 s; 345k, 1.35 vs 1.96;
-#: 861k, 2.08 vs 2.36. The one task grows ~1.4 s per 1M postings and
-#: the packed plan ~0.8 s, so they cross near 1.3M; the bound sits
+#: the driver route's work bound, in postings (Σ df of the batch's
+#: terms, before any block is pruned). The packed plan pays three Spark
+#: jobs, ~1.5 s of fixed cost on a 4-vCPU host at local[2] (perfbench's
+#: session); the driver route pays no job but does all the per-posting
+#: work (decode, tf_part, the matmul) on the driver's one core.
+#: Measured there (256-query k=100 pruned zipf batches, seed 7, min of
+#: 3): Σ df 50k, driver 0.58 s vs packed 1.58 s; 335k, 1.12 vs 1.99;
+#: 837k, 1.83 vs 2.55; 1.51M, 3.35 vs 3.04. The driver route grows
+#: ~1.9 s per 1M postings and the packed plan ~1.0 s; interpolating
+#: between the last two points they cross near 1.3M. The bound sits
 #: below that.
 ONE_TASK_MAX_POSTINGS = 1_000_000
 
 
-def _matmul_score_topk(rows: DataFrame, keep_col: str | None,
-                       avgdl: float, qw_rows, k: int,
+def _matmul_score_topk(index: dict, payload: DataFrame, terms,
+                       bthresh: dict | None, avgdl: float, qw_rows, k: int,
                        round_dp: int | None, dead_ids, n_postings: int,
                        spread: bool) -> DataFrame:
-    """The one score aggregation: per-partition top-k candidate rows
-    (query_id, doc_id, score) of the posting rows `rows` (PAYLOAD_COLS,
-    plus keep_col when pruned) — the caller's final window cuts them to
-    the exact global top-k. qw_rows are the batch's (query_id, term, w)
-    (_weights).
+    """The one score aggregation: the batch's top-k rows (query_id,
+    doc_id, score, rank) over the posting rows of `terms` — `payload`
+    on the cluster, the same rows of index['postings_path'] on the
+    driver. qw_rows are the batch's (query_id, term, w) (_weights);
+    bthresh the pruned route's term -> block threshold (None unpruned).
 
     n_postings (Σ df of the terms served) picks the plan (module doc):
-    at most ONE_TASK_MAX_POSTINGS, the payload rows coalesce to one
-    partition and _decode_matmul_arrow_iter decodes and scores them in
-    one task. Above it the packed plan: _decode_pack_arrow_iter (decode
-    + tidx map + doc-bucket pack in ONE python pass) -> a binary-blob
-    exchange of <= n_tasks x part_space rows ->
-    _matmul_topk_packed_iter. Scores are bit-identical between the two:
-    a (term, doc) cell occurs once, and each doc sums qw @ Xq over its
-    query's CSR terms in the same order whatever partition it lands in.
+    at most ONE_TASK_MAX_POSTINGS, the driver reads the terms' payload
+    columns (_term_rows), decodes and scores them in this process, and
+    ranks the candidates itself (_driver_topk) — no Spark job. Above
+    it the packed plan: _decode_pack_arrow_iter (decode + tidx map +
+    doc-bucket pack in ONE python pass) -> a binary-blob exchange of <=
+    n_tasks x part_space rows -> _matmul_topk_packed_iter -> the _topk
+    window. Scores are bit-identical between the two: a (term, doc)
+    cell occurs once, and each doc sums qw @ Xq over its query's CSR
+    terms in the same order whatever partition it lands in. round_dp
+    rounds with F.round (JVM HALF_UP) before ranking, on both plans.
 
     spread=True (packed plan only) round-robin repartitions the payload
     rows before the decode: the tid-bucketed layout co-locates ALL
@@ -549,12 +540,17 @@ def _matmul_score_topk(rows: DataFrame, keep_col: str | None,
     them before candidate selection; the caller needs no anti-join."""
     qids, tmap, qptr, qtidx, qw = _csr_weights(qw_rows)
     bval = (qids, len(tmap), qptr, qtidx, qw, dead_ids)
+    cols = PAYLOAD_COLS + (("block_max",) if bthresh is not None else ())
+    spark = payload.sparkSession
     if n_postings <= ONE_TASK_MAX_POSTINGS:
-        return rows.coalesce(1).mapInArrow(
-            _decode_matmul_arrow_iter(bval, avgdl, keep_col, tmap, k,
-                                      round_dp),
-            SCORE_ROWS_TOPK)
-    sc = rows.sparkSession.sparkContext
+        got = _decode_triples(_term_rows(index, terms, cols).to_batches(),
+                              avgdl, bthresh, tmap)
+        rb = None
+        if got is not None:
+            doc, tidx, x = got
+            rb, _timings = _matmul_emit(bval, tidx, doc, x, k, round_dp)
+        return _driver_topk(spark, rb, k, round_dp)
+    sc = spark.sparkContext
     # reduce-partition wave factor 2: each kernel task spends ~1 s
     # waiting on the JVM side (shuffle fetch + building its Arrow
     # input), so the factor was swept rather than kept at
@@ -569,18 +565,52 @@ def _matmul_score_topk(rows: DataFrame, keep_col: str | None,
     # bucket VALUE, so bucket->partition is balls-in-bins; 8 per bin
     # keeps the expected max/mean task skew ~1.5x instead of ~4x
     part_space = width * 8
+    rows = payload.selectExpr(*cols)
     if spread:
         rows = rows.repartition(sc.defaultParallelism * 4)
     packed = rows.mapInArrow(
-        _decode_pack_arrow_iter(avgdl, keep_col, tmap, part_space),
+        _decode_pack_arrow_iter(avgdl, bthresh, tmap, part_space),
         PACKED_ROWS,
     ).repartition(width, "part")
     # tracked in the serving registry so the NEXT search_index call's
     # entry release drops it (same capped-at-one lifecycle as the
     # persisted posting rows)
     bcast = _track_persist(sc.broadcast(bval))
-    return packed.mapInArrow(
+    scored = packed.mapInArrow(
         _matmul_topk_packed_iter(bcast, k, round_dp), SCORE_ROWS_TOPK)
+    if round_dp is not None:
+        scored = scored.withColumn("score", F.round("score", round_dp))
+    return _topk(scored, k)
+
+
+def _driver_topk(spark: SparkSession, rb, k: int,
+                 round_dp: int | None) -> DataFrame:
+    """The driver route's result: the per-query top-k of the kernel's
+    candidate batch rb (or None) ranked by (score desc, doc_id asc) —
+    _topk's window order — as an Arrow-backed local relation, which
+    collects without a Spark job. With round_dp the scores are first
+    rounded by F.round in a projection over the candidates' own local
+    relation, collected (no job either), so ranking sees exactly the
+    JVM's HALF_UP rounding."""
+    import pyarrow as pa
+
+    if rb is None:
+        return local_df(spark, [], RANKED_ROWS)
+    tbl = pa.Table.from_batches([rb])
+    if round_dp is not None:
+        tbl = pa.Table.from_pylist(
+            [r.asDict() for r in spark.createDataFrame(tbl).withColumn(
+                "score", F.round("score", round_dp)).collect()],
+            schema=tbl.schema)
+    tbl = tbl.sort_by([("query_id", "ascending"), ("score", "descending"),
+                       ("doc_id", "ascending")])
+    q = tbl.column("query_id").to_numpy(zero_copy_only=False)
+    pos = np.arange(q.size)
+    rank = pos + 1 - np.maximum.accumulate(
+        np.where(np.r_[True, q[1:] != q[:-1]], pos, 0))
+    m = rank <= k
+    return spark.createDataFrame(tbl.filter(pa.array(m)).append_column(
+        "rank", pa.array(rank[m], type=pa.int32())))
 
 
 SCORE_ROWS_TOPK = StructType(
@@ -591,16 +621,17 @@ SCORE_ROWS_TOPK = StructType(
     ]
 )
 
+#: search_index's result rows
+RANKED_ROWS = "query_id string, doc_id long, score double, rank int"
 
-def local_query_terms(spark: SparkSession, queries: DataFrame):
+
+def _query_term_rows(queries: DataFrame):
     """Tokenize the (by definition tiny) query set driver-side: the
     reference also analyzes queries on the driver
-    (LuceneQueryBuilder.java:98-117). Avoids two Spark jobs per search.
-    Returns (qt DataFrame (query_id, term, qtf), distinct term list,
-    qt_rows list) — the driver-side rows feed search_index's pruning
-    bounds and its weights without any extra Spark job. Plain column lists go
-    through selectExpr here and in search_index: one py4j call per
-    name instead of several."""
+    (LuceneQueryBuilder.java:98-117). Returns (sorted distinct terms,
+    (query_id, term, qtf) rows). The collect of a local query table is
+    no Spark job; plain column lists go through selectExpr: one py4j
+    call per name instead of several."""
     from collections import Counter
 
     from .analysis import tokenize_series
@@ -612,12 +643,20 @@ def local_query_terms(spark: SparkSession, queries: DataFrame):
         for term, qtf in Counter(ts).items():
             qt_rows.append((r["query_id"], term, float(qtf)))
             terms.add(term)
+    return sorted(terms), qt_rows
+
+
+def local_query_terms(spark: SparkSession, queries: DataFrame):
+    """_query_term_rows plus the rows as a local relation: returns (qt
+    DataFrame (query_id, term, qtf) or None without a term, distinct
+    term list, qt_rows list) for the DataFrame scorers
+    (search.search_corpus); collecting qt runs no job, a broadcast of
+    it still runs one (localrel module doc)."""
+    terms, qt_rows = _query_term_rows(queries)
     if not qt_rows:
         return None, [], []
-    # LocalRelation (round 6): collecting qt is driver-only; a broadcast
-    # of it still runs one job (localrel module doc)
     qt = local_df(spark, qt_rows, "query_id string, term string, qtf double")
-    return qt, sorted(terms), qt_rows
+    return qt, terms, qt_rows
 
 
 # prune only when posting lists are long enough that skipping decode
@@ -672,11 +711,12 @@ def warm_serving(spark: SparkSession, index: dict,
     (payload_cache 'memory' | 'disk' | None), so each batch's term
     IN-scan reads resident columnar data instead of re-opening parquet.
     search_index skips its per-call payload persist while this is
-    active (entry-release keeps applying to cold indexes only). At
-    north-star scale the payload blocks are TB-class: use 'disk' or
-    None there, exactly the cache_level guidance in search_index.
-    Per-term metadata needs no warm copy: every call reads its terms'
-    rows on the driver without a job (_term_meta).
+    active (entry-release keeps applying to cold indexes only). The
+    persisted table serves only the packed plan: a posting set of at
+    most ONE_TASK_MAX_POSTINGS is read and scored on the driver, as are
+    the per-term metadata (_term_rows), warm or cold. At north-star
+    scale the payload blocks are TB-class: use 'disk' or None there,
+    exactly the cache_level guidance in search_index.
 
     Stats-drift safety: warm_stats records (n_docs, avgdl,
     encode_avgdl) at warm time; search_index drops the persisted copy
@@ -754,24 +794,13 @@ def _sql_max(a, b):
     return b if a is None else a if b is None else max(a, b)
 
 
-def _term_meta(index: dict, terms, ranks: tuple) -> dict:
-    """term -> (df, raw block-max, per-rank impacts) for the given
-    terms, read on the driver from the serving rows' own metadata
-    columns — no Spark job. pyarrow.dataset filters with `pb IN` (the
-    terms' buckets, _query_pbs) and `term IN`: the rows are
-    term-sorted, so row-group statistics skip groups without a query
-    term, and the byte payloads are never read. Per term, over its
-    chunk rows: the max df (every chunk carries the term's full df),
-    the max block-max and the max of each stored impact rank (NULL when
-    no chunk of the term holds that many postings). Those are the
-    values of the Spark aggregation tests/oracle.term_meta keeps as the
-    reference, except that a chunk whose block-max list is NULL, empty
-    or holds a NULL leaves the term's block-max NULL (unbounded)
-    whatever its other chunks hold: a max over the rest could
-    understate it and make the block thresholds unsound.
-
-    The path is always local: the engine writes indexes with
-    os/shutil only."""
+def _term_rows(index: dict, terms, cols):
+    """The serving rows of `terms`, columns `cols`, read on the driver
+    with pyarrow.dataset as one Arrow table — no Spark job. The filter
+    is `pb IN` (the terms' buckets, _query_pbs) and `term IN`: the rows
+    are term-sorted, so row-group statistics skip groups without a
+    query term, and columns outside `cols` are never read. The path is
+    always local: the engine writes indexes with os/shutil only."""
     import pyarrow.dataset as ds
 
     terms = list(terms)
@@ -781,8 +810,25 @@ def _term_meta(index: dict, terms, ranks: tuple) -> dict:
     pbs = _query_pbs(index, terms)
     if pbs is not None and "pb" in dset.schema.names:
         filt = ds.field("pb").isin(pbs) & filt
-    cols = ["term", "df", "block_max"] + (["impacts"] if ranks else [])
-    tbl = dset.to_table(columns=cols, filter=filt)
+    return dset.to_table(columns=list(cols), filter=filt)
+
+
+def _term_meta(index: dict, terms, ranks: tuple) -> dict:
+    """term -> (df, raw block-max, per-rank impacts) for the given
+    terms, from their serving rows' own metadata columns (_term_rows:
+    on the driver, the byte payloads never read). Per term, over its
+    chunk rows: the max df (every chunk carries the term's full df),
+    the max block-max and the max of each stored impact rank (NULL when
+    no chunk of the term holds that many postings). Those are the
+    values of the Spark aggregation tests/oracle.term_meta keeps as the
+    reference, except that a chunk whose block-max list is NULL, empty
+    or holds a NULL leaves the term's block-max NULL (unbounded)
+    whatever its other chunks hold: a max over the rest could
+    understate it and make the block thresholds unsound.
+
+    """
+    cols = ("term", "df", "block_max") + (("impacts",) if ranks else ())
+    tbl = _term_rows(index, terms, cols)
     imps = (tbl.column("impacts").to_pylist() if ranks
             else [None] * tbl.num_rows)
     meta: dict = {}
@@ -806,16 +852,11 @@ def _term_meta(index: dict, terms, ranks: tuple) -> dict:
 
 def _read_tombstones(index: dict):
     """The standing tombstones as a sorted int64 doc_id array, or None
-    without any. The kernels drop these docs themselves (dead_ids of
-    _matmul_score_topk), so the set is read once per call and never
-    joined."""
-    tombs = index.get("tombstones")
-    if tombs is None:
-        return None
-    dead_ids = np.sort(np.array(
-        [r.doc_id for r in tombs.select("doc_id").collect()],
-        dtype=np.int64))
-    return dead_ids if dead_ids.size else None
+    without any: read_index records them from the manifest's listed
+    dirs on the driver, so the read costs no Spark job. The kernels
+    drop these docs themselves (dead_ids of _matmul_score_topk), so the
+    set is never joined."""
+    return index.get("tombstone_ids")
 
 
 def _weights(spark: SparkSession, qt_rows, meta: dict, n_docs: int):
@@ -823,11 +864,9 @@ def _weights(spark: SparkSession, qt_rows, meta: dict, n_docs: int):
     for every (query, term) row whose term has a df in meta (a term
     absent from the index, or with a NULL df — degenerate metadata —
     has no weight). idf/w are JVM expressions (idf_sql) on a local
-    relation, the one weight expression every serving score uses. The
-    collect runs no Spark job up to localrel.MAX_LOCAL_ROWS (query,
-    term) rows; above that, or for a query id no SQL literal renders,
-    local_df falls back to createDataFrame and the collect is one
-    job."""
+    relation, the one weight expression every serving score uses; the
+    projection folds into the local relation, so the collect runs no
+    Spark job at any batch size."""
     rows = [(q, t_, f, float(meta[t_][0])) for (q, t_, f) in qt_rows
             if t_ in meta and meta[t_][0] is not None]
     if not rows:
@@ -885,9 +924,8 @@ def _impact_theta(qt_rows, meta: dict, rank_i: int, n_docs: int,
     return theta
 
 
-def _decode_theta(spark: SparkSession, payload: DataFrame, meta: dict,
-                  qt_rows, k: int, n_docs: int, avgdl: float,
-                  spread: bool, dead_ids) -> dict[str, float]:
+def _decode_theta(spark: SparkSession, index: dict, payload: DataFrame,
+                  meta: dict, qt_rows, k: int, dead_ids) -> dict[str, float]:
     """The exact θ fallback: score ONLY each query's rarest term with
     the serving kernel and take its k-th best live single-term score.
     Rarest = highest idf = LOWEST df (idf is strictly decreasing in df,
@@ -895,8 +933,10 @@ def _decode_theta(spark: SparkSession, payload: DataFrame, meta: dict,
     weights (_weights) and the kernel drops the dead docs (dead_ids),
     so θ is scored exactly as the final plan scores and never counts a
     deleted doc; the rare-term payload filter is a driver literal
-    (IN-pushdown, no semi-join). Queries with fewer than k live docs
-    for the term get no θ (-inf)."""
+    (IN-pushdown, no semi-join). Below ONE_TASK_MAX_POSTINGS rare-term
+    postings it runs on the driver, with no job. Queries with fewer
+    than k live docs for the term get no θ (-inf)."""
+    n_docs = index["n_docs"]
     rare: dict[str, tuple] = {}  # query -> (df, term, qtf)
     for (q, t_, f) in qt_rows:
         row = meta.get(t_)
@@ -909,12 +949,13 @@ def _decode_theta(spark: SparkSession, payload: DataFrame, meta: dict,
     rare_terms = sorted({t_ for _q, t_, _f in rare_rows})
     if not rare_terms:
         return {}
-    rows = payload.where(in_list("term", rare_terms)).select(*PAYLOAD_COLS)
-    cand = _matmul_score_topk(
-        rows, None, avgdl, _weights(spark, rare_rows, meta, n_docs), k,
-        None, dead_ids, _n_postings(meta, rare_terms), spread)
+    top = _matmul_score_topk(
+        index, payload.where(in_list("term", rare_terms)), rare_terms,
+        None, index["avgdl"], _weights(spark, rare_rows, meta, n_docs), k,
+        None, dead_ids, _n_postings(meta, rare_terms),
+        n_docs >= AUTO_PRUNE_MIN_DOCS)
     return {r["query_id"]: float(r["score"])
-            for r in _topk(cand, k).where(f"rank = {int(k)}").collect()}
+            for r in top.where(f"rank = {int(k)}").collect()}
 
 
 def _impact_rank(ranks: tuple, k: int, dead_ids) -> int | None:
@@ -938,8 +979,7 @@ def _theta(spark: SparkSession, index: dict, payload: DataFrame,
     if rank_i is not None:
         scale = min(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
         return _impact_theta(qt_rows, meta, rank_i, n_docs, scale)
-    return _decode_theta(spark, payload, meta, qt_rows, k, n_docs, avgdl,
-                         n_docs >= AUTO_PRUNE_MIN_DOCS, dead_ids)
+    return _decode_theta(spark, index, payload, meta, qt_rows, k, dead_ids)
 
 
 def _block_thresholds(qt_rows, meta: dict, theta: dict, n_docs: int,
@@ -998,23 +1038,6 @@ def _block_thresholds(qt_rows, meta: dict, theta: dict, n_docs: int,
     return out
 
 
-def _keep_blocks_sql(bthresh: dict[str, float]) -> str:
-    """SQL for a posting row's kept block indexes: those whose raw
-    block_max reaches its term's threshold, read from a literal
-    term -> threshold map (no broadcast join, no job). Terms are
-    analyzer tokens ([a-z0-9]+), so they always render as literals.
-    try_element_at is NULL for a term outside the map under either ANSI
-    setting (element_at raises under ANSI), and the NULL becomes
-    -Infinity: such a term keeps every block."""
-    ninf = "CAST('-Infinity' AS DOUBLE)"
-    pairs = ", ".join(f"{sql_literal(t_)}, {sql_literal(float(v))}"
-                      for t_, v in sorted(bthresh.items()))
-    th = (f"coalesce(try_element_at(map({pairs}), term), {ninf})"
-          if pairs else ninf)
-    return (f"filter(transform(block_max, (x, i) -> IF(x >= {th}, i, -1)),"
-            f" i -> i >= 0)")
-
-
 def search_index(
     spark: SparkSession,
     index: dict,
@@ -1039,14 +1062,15 @@ def search_index(
 
     cache_level ('memory' | 'disk' | 'none'): how the pruned plan holds
     the query's posting rows (byte payloads included) when the exact
-    decode θ reads them before the final plan does (θ from the stored
-    impacts reads them once, and a set of at most ONE_TASK_MAX_POSTINGS
-    postings is re-scanned by the kernel's one task, so nothing is
-    persisted there). 'memory' (default) is fastest when the touched
-    slice fits executor storage; at north-star scale a hot term's
-    payload blocks are TB-class, so serving there should use 'disk'
-    (spill-backed) or 'none' (re-scan: the term IN-pushdown scan is
-    cheap relative to pinning payloads in the storage pool). Measured
+    decode θ reads them before the final plan does. Only the packed
+    plan reads them through Spark: θ from the stored impacts reads them
+    once, and a set of at most ONE_TASK_MAX_POSTINGS postings is read
+    on the driver, so nothing is persisted there. 'memory' (default) is
+    fastest when the touched slice fits executor storage; at north-star
+    scale a hot term's payload blocks are TB-class, so serving there
+    should use 'disk' (spill-backed) or 'none' (re-scan: the term
+    IN-pushdown scan is cheap relative to pinning payloads in the
+    storage pool). Measured
     at sf0.1 and 1M docs in BASELINE.md. Each call releases the
     previous call's persisted plan (at most one stays warm);
     release_serving_cache() drops that one too.
@@ -1126,35 +1150,22 @@ def search_index(
 
     if prune == "auto":
         prune = n_docs >= AUTO_PRUNE_MIN_DOCS
-    _qt, terms, qt_rows = local_query_terms(spark, queries)
-    _mark("local_query_terms")
+    terms, qt_rows = _query_term_rows(queries)
+    _mark("query_terms")
     if not terms or n_docs == 0 or avgdl <= 0:
         # an empty LocalRelation: collecting it runs no Spark job
-        return local_df(
-            spark, [], "query_id string, doc_id long, score double, rank int")
+        return local_df(spark, [], RANKED_ROWS)
 
-    # Batch-sharing design (scale invariant): the byte payloads are
-    # NEVER joined with the query table. Each payload row is decoded
-    # ONCE into (term, doc_id, tf_part) triples — the query-independent
-    # half of BM25 — and the kernel scores them against the whole
-    # batch's CSR weights (score = w * tf_part). Under the old
-    # per-(query,term) plan a zipf batch replicated each hot term's
-    # multi-MB payload per query containing it: 400 queries OOM'd a
-    # 10 GiB executor; per-term decode makes batch cost proportional to
-    # UNIQUE terms, which is what a 1000-executor batch-serving job
-    # needs.
+    # Batch sharing (module doc, phase 0): payloads are never joined
+    # with the query table — under the old per-(query,term) plan 400
+    # zipf queries OOM'd a 10 GiB executor.
     payload = _pb_pruned_postings(index, terms).where(in_list("term", terms))
 
-    # Per-term (df, raw block-max, impacts), read on the driver from the
-    # serving rows (_term_meta, no job): every downstream consumer (θ,
-    # UB sums, per-term block thresholds, the one-task bound) is plain
-    # driver arithmetic (action-count driven — see BASELINE.md
-    # "Single-query latency anatomy": every Spark action/AQE stage
-    # launch costs ~0.3 s on this host class, so serving latency is
-    # dominated by how many chained jobs the plan materializes, not by
-    # per-row work at bench scale). The score weights stay
-    # JVM-evaluated (_weights), collected without a job up to
-    # localrel.MAX_LOCAL_ROWS (query, term) rows and with one above.
+    # Per-term (df, raw block-max, impacts), read on the driver
+    # (_term_meta, no job): θ, the UB sums, the block thresholds and
+    # the driver-route bound are plain driver arithmetic (every Spark
+    # job costs ~0.3 s here: BASELINE.md "Single-query latency
+    # anatomy"). The weights stay JVM-evaluated (_weights, no job).
     ranks = _impact_ranks(index, payload) if prune else ()
     meta = _term_meta(index, terms, ranks)
     qw_rows = _weights(spark, qt_rows, meta, n_docs)
@@ -1162,14 +1173,13 @@ def search_index(
     if not qw_rows:
         # no query term is in the index: nothing can score, so no
         # persist, θ or kernel — collecting the empty relation is no job
-        return local_df(
-            spark, [], "query_id string, doc_id long, score double, rank int")
+        return local_df(spark, [], RANKED_ROWS)
     dead_ids = _read_tombstones(index)
     n_postings = _n_postings(meta, terms)
-    keep_col, keep = None, ()
+    bthresh = None
     if prune:
         # ---- pruned path: the metadata above, then driver arithmetic,
-        # then the returned plan. The r05 version kept θ/UB/thresholds
+        # then the kernel. The r05 version kept θ/UB/thresholds
         # in-plan: every broadcast ran as its own AQE sub-job — ~30
         # chained stage launches at sf0.1 (BASELINE.md anatomy). Now:
         #   θ (_theta): from the stored impacts in `meta` — no job — or,
@@ -1180,8 +1190,8 @@ def search_index(
         #     threshold (_block_thresholds; the MIN of the keep
         #     condition over sharing queries). These feed PRUNING BOUNDS
         #     only and are relaxed toward KEEP.
-        #   Plan: keep_blocks from a literal term -> threshold map (no
-        #     broadcast) -> decode survivors -> kernel -> top-k.
+        #   Kernel: the term -> threshold map keeps each row's blocks
+        #     (_keep_blocks) -> decode survivors -> score -> top-k.
         # Decoding a superset of a query's own keep list is always safe:
         # the WAND argument only ever uses "a block was skipped ⇒ its
         # docs provably score below θ(q)", and the union skips a block
@@ -1189,9 +1199,8 @@ def search_index(
         # decoded blocks just move partial scores toward their exact
         # values (rank identity to the unpruned plan is pytest- and
         # oracle-gated).
-        # a one-task posting set is re-scanned by that one task: a
-        # persist would cost a job of its own (adaptive execution
-        # materializes a cached relation as a stage) and save none
+        # at or below the bound both kernel runs read the payload on
+        # the driver, so there is nothing to persist
         if (_impact_rank(ranks, k, dead_ids) is None
                 and n_postings > ONE_TASK_MAX_POSTINGS):
             if cache_level == "memory":
@@ -1205,19 +1214,14 @@ def search_index(
         theta = _theta(spark, index, payload, meta, qt_rows, k, dead_ids)
         _mark("theta")
         quant = 10.0 ** -round_dp if round_dp is not None else 0.0
-        bthresh: dict[str, float] = {}
+        bthresh = {}
         for (_q, t_), v in _block_thresholds(qt_rows, meta, theta, n_docs,
                                              bfac, quant).items():
             bthresh[t_] = min(v, bthresh.get(t_, v))
-        keep_col, keep = "keep_blocks", (
-            f"{_keep_blocks_sql(bthresh)} AS keep_blocks",)
         _mark("thresholds(driver)")
-    scored = _matmul_score_topk(
-        payload.selectExpr(*PAYLOAD_COLS, *keep), keep_col, avgdl, qw_rows,
-        k, round_dp, dead_ids, n_postings, n_docs >= AUTO_PRUNE_MIN_DOCS)
-    if round_dp is not None:
-        scored = scored.withColumn("score", F.round("score", round_dp))
-    return _topk(scored, k)
+    return _matmul_score_topk(
+        index, payload, terms, bthresh, avgdl, qw_rows, k, round_dp,
+        dead_ids, n_postings, n_docs >= AUTO_PRUNE_MIN_DOCS)
 
 
 def pruning_stats(
@@ -1232,35 +1236,33 @@ def pruning_stats(
     serving decodes the per-TERM union of the sharing queries' keep
     lists (search_index phase 2), so its actual kept count is >= this
     figure when queries share terms (equal for single queries).
-    Otherwise the same metadata, θ (_theta) and thresholds
-    (_block_thresholds) as search_index(prune=True), counted instead
-    of executed."""
+    Otherwise the same metadata, θ (_theta), thresholds
+    (_block_thresholds) and keep rule (_keep_blocks) as
+    search_index(prune=True), counted on the driver over the terms'
+    block_max lists instead of executed."""
     n_docs, avgdl = index["n_docs"], index["avgdl"]
     enc_avgdl = float(index.get("encode_avgdl") or avgdl) or avgdl
     bfac = max(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
-    _qt, terms, qt_rows = local_query_terms(spark, queries)
+    terms, qt_rows = _query_term_rows(queries)
     if not terms:
         return {"total_blocks": 0, "kept_blocks": 0, "pruned_fraction": 0.0}
-    dead_ids = _read_tombstones(index)
     payload = _pb_pruned_postings(index, terms).where(in_list("term", terms))
     meta = _term_meta(index, terms, _impact_ranks(index, payload))
-    theta = _theta(spark, index, payload, meta, qt_rows, k, dead_ids)
-    rhs = F.broadcast(local_df(
-        spark,
-        [(q, t_, v) for (q, t_), v in _block_thresholds(
-            qt_rows, meta, theta, n_docs, bfac, 0.0).items()],
-        "query_id string, term string, rhs double"))
-    agg = (
-        payload.join(rhs, "term")
-        .select(
-            F.size("block_max").alias("total"),
-            F.size(F.filter("block_max", lambda x: x >= F.col("rhs"))
-                   ).alias("kept"),
-        )
-        .agg(F.sum("total"), F.sum("kept"))
-        .collect()[0]
-    )
-    total, kept = int(agg[0] or 0), int(agg[1] or 0)
+    theta = _theta(spark, index, payload, meta, qt_rows, k,
+                   _read_tombstones(index))
+    rhs: dict[str, list] = {}
+    for (_q, t_), v in _block_thresholds(qt_rows, meta, theta, n_docs,
+                                         bfac, 0.0).items():
+        rhs.setdefault(t_, []).append(v)
+    tbl = _term_rows(index, rhs, ("term", "block_max"))
+    total = kept = 0
+    for t_, bm in zip(tbl.column("term").to_pylist(),
+                      tbl.column("block_max").to_pylist()):
+        n = len(bm or ())
+        for v in rhs[t_]:
+            keep = _keep_blocks(bm, v)
+            total += n
+            kept += n if keep is None else keep.size
     return {
         "total_blocks": total,
         "kept_blocks": kept,

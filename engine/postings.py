@@ -1679,6 +1679,7 @@ def read_index(spark: SparkSession, out_dir: str) -> dict:
     postings_path = _postings_dir(out_dir, m)
     schema = from_arrow_schema(pads.dataset(
         postings_path, format="parquet", partitioning="hive").schema)
+    dead = _listed_doc_ids(out_dir, m, "tombstones")
     return {
         "postings": spark.read.schema(schema).parquet(postings_path),
         # where those rows live: csearch reads the serving rows'
@@ -1700,6 +1701,9 @@ def read_index(spark: SparkSession, out_dir: str) -> dict:
         # index has no standing tombstones): serving drops these docs
         # from results — delete_docs docstring has the semantics
         "tombstones": read_tombstones(spark, out_dir, m),
+        # the same set as a sorted id array read on the driver (None
+        # without any): csearch's kernels drop these docs, no job
+        "tombstone_ids": dead if dead.size else None,
     }
 
 

@@ -25,6 +25,15 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.fixture
+def packed(monkeypatch):
+    """Serve on the kernel's packed plan: a small posting set is
+    otherwise scored on the driver and has no Spark plan to inspect."""
+    from engine import csearch
+
+    monkeypatch.setattr(csearch, "ONE_TASK_MAX_POSTINGS", 0)
+
+
 def _formatted(df) -> str:
     import contextlib
     import io
@@ -35,7 +44,7 @@ def _formatted(df) -> str:
     return buf.getvalue()
 
 
-def test_term_filter_reaches_parquet_scan(spark, built):
+def test_term_filter_reaches_parquet_scan(spark, built, packed):
     plan = _formatted(search_index(spark, built, queries_df(spark),
                                    k=10, prune=False))
     assert "PushedFilters" in plan
@@ -45,18 +54,18 @@ def test_term_filter_reaches_parquet_scan(spark, built):
 
 
 def test_small_index_plan_has_no_join_or_exchange(spark, built):
-    """On a small index the whole query batch is one kernel task: the
-    weights ride the kernel's closure, so the query side is never
-    joined or broadcast, and the one partition needs no Exchange."""
+    """On a small index the whole query batch is scored on the driver:
+    the result is a local relation, so its plan has no scan, Join,
+    Broadcast or Exchange — nothing for Spark to run."""
     for prune in (False, True):
         plan = _formatted(search_index(spark, built, queries_df(spark),
                                        k=10, prune=prune))
-        assert "Join" not in plan, prune
-        assert "Broadcast" not in plan, prune
-        assert "Exchange" not in plan, prune
+        assert "LocalTableScan" in plan, prune
+        for op in ("Scan parquet", "Join", "Broadcast", "Exchange"):
+            assert op not in plan, (prune, op)
 
 
-def test_topk_is_bounded_before_exchange(spark, built):
+def test_topk_is_bounded_before_exchange(spark, built, packed):
     """WindowGroupLimit must appear below the final exchange — the
     distributed analog of Lucene's bounded-heap TopScoreDocCollector."""
     plan = _plan(search_index(spark, built, queries_df(spark),
@@ -119,8 +128,28 @@ def test_rp_lsh_single_scan_of_embeddings(spark):
     assert plan.count("LocalTableScan") <= 2
 
 
-def test_scan_prunes_unused_columns(spark, built):
-    """prune=False never reads the block metadata columns."""
+def test_scan_prunes_unused_columns(spark, built, monkeypatch):
+    """prune=False never reads the block metadata columns: not in the
+    driver route's payload read, and not in the packed plan's scan.
+    The pruned driver read adds block_max only."""
+    from engine import csearch
+
+    reads = []
+    real = csearch._term_rows
+
+    def spy(index, terms, cols):
+        reads.append(tuple(cols))
+        return real(index, terms, cols)
+
+    monkeypatch.setattr(csearch, "_term_rows", spy)
+    for prune in (False, True):
+        reads.clear()
+        search_index(spark, built, queries_df(spark), k=10,
+                     prune=prune).collect()
+        payload_reads = [c for c in reads if "doc_bytes" in c]
+        assert payload_reads == [csearch.PAYLOAD_COLS
+                                 + (("block_max",) if prune else ())]
+    monkeypatch.setattr(csearch, "ONE_TASK_MAX_POSTINGS", 0)
     plan = _formatted(search_index(spark, built, queries_df(spark),
                                    k=10, prune=False))
     scan_lines = [l for l in plan.splitlines() if "ReadSchema" in l]
@@ -129,7 +158,7 @@ def test_scan_prunes_unused_columns(spark, built):
     assert "block_max" not in scan_lines[0]
 
 
-def test_decode_stage_is_query_independent(spark, built):
+def test_decode_stage_is_query_independent(spark, built, packed):
     """The scale invariant of batch serving: byte payloads are decoded
     ONCE per posting row, never replicated per query — below a
     MapInArrow/MapInPandas decode operator, query_id may appear ONLY
@@ -169,7 +198,8 @@ def test_decode_stage_is_query_independent(spark, built):
                 + sub)
 
 
-def test_decode_spread_adds_roundrobin_exchange_only_at_scale(spark, built):
+def test_decode_spread_adds_roundrobin_exchange_only_at_scale(spark, built,
+                                                            packed):
     """At-scale serving (n_docs >= AUTO_PRUNE_MIN_DOCS) must round-robin
     the payload rows before the packed plan's decode kernel — the
     tid-bucketed layout co-locates every chunk of a hot term in one pb
@@ -182,15 +212,16 @@ def test_decode_spread_adds_roundrobin_exchange_only_at_scale(spark, built):
     payload = built["postings"].select(*PAYLOAD_COLS)
     qw_rows = [("q0", "spark", 1.0)]
 
-    def packed(spread):
+    def packed_plan(spread):
         # a work bound above ONE_TASK_MAX_POSTINGS: the packed plan
-        return _plan(_matmul_score_topk(payload, None, 10.0, qw_rows, 10,
-                                        None, None, 10**12, spread))
+        return _plan(_matmul_score_topk(built, payload, ["spark"], None,
+                                        10.0, qw_rows, 10, None, None,
+                                        10**12, spread))
 
-    spread_plan, flat_plan = packed(True), packed(False)
+    spread_plan, flat_plan = packed_plan(True), packed_plan(False)
     assert "RoundRobinPartitioning" in spread_plan
     assert "RoundRobinPartitioning" not in flat_plan
     # the small `built` fixture is below the bar: end-to-end serving on
-    # it must NOT pay the spread shuffle
+    # it, packed plan forced, must NOT pay the spread shuffle
     df = search_index(spark, built, queries_df(spark), k=10, prune=True)
     assert "RoundRobinPartitioning" not in _plan(df)

@@ -1,6 +1,7 @@
 """Round-6 optimization tests: serving-route identity against the
 test oracle after the action-count restructure (driver-side prune
-thresholds, one-task kernel plans), the warm stats-drift release
+thresholds, the kernel on the driver and as the packed plan), the warm
+stats-drift release
 (ADVICE r5 #1/#2), and the bench headline-size canary."""
 
 from __future__ import annotations
@@ -37,16 +38,15 @@ def r9_index(spark, r9_dir):
     return read_index(spark, r9_dir)
 
 
-#: q'2's id holds a quote, which no SQL literal renders portably: the
-#: local relations fall back to createDataFrame and the single-query
-#: plan must still carry the id exactly
+#: q'2's id holds a quote, which no SQL literal renders portably: every
+#: route must still carry the id exactly
 R9_QUERIES = [("q0", "apple fig"), ("q1", "banana t3 zzz_absent"),
               ("q'2", "cherry cherry apple")]
 
 
 def _res(spark, idx, qs, packed=False, **kw):
     """search_index rows, scores to 9 dp. packed=True forces the
-    kernel's packed plan (a one-task bound of 0)."""
+    kernel's packed plan (a driver-route bound of 0)."""
     from engine import csearch
 
     with pytest.MonkeyPatch.context() as mp:
@@ -105,7 +105,7 @@ def test_all_routes_rank_identical(spark, r9_index, round_dp):
     """Every (prune x kernel plan) route must return the oracle's
     top-k, for the batch and for each query served alone, cold and
     warm: pruned computes its block thresholds driver-side from the
-    metadata read on the driver, and the kernel runs as one task and,
+    metadata read on the driver, and the kernel runs on the driver and,
     forced, as the packed plan. Any driver-float slack in the pruning
     bounds may only widen the kept-block superset, never change
     results."""
@@ -114,7 +114,7 @@ def test_all_routes_rank_identical(spark, r9_index, round_dp):
 
 def test_all_routes_rank_identical_tombstoned(spark, r9_dir, tmp_path):
     """The same identity on an index with standing tombstones: every
-    route, the one-task plans included, drops the deleted docs in the
+    route, the driver route included, drops the deleted docs in the
     kernel (pruned, also in the decode θ's kernel, which a tombstoned
     index takes) and returns the oracle's top-k over the live docs."""
     import shutil
@@ -278,36 +278,20 @@ def test_null_df_chunk_keeps_term_weight(spark, degenerate_dirs, prune):
                         [r for r in want if r[0] == "q0"])
 
 
-@pytest.mark.parametrize("ansi", ["true", "false"])
-def test_threshold_map_ansi_safe(spark, r9_index, ansi):
-    """The pruned plan reads each row's block threshold from a literal
-    term -> threshold map. Under either ANSI setting a term in the map
-    keeps exactly the blocks reaching its threshold, a term outside it
-    keeps every block (element_at would raise under ANSI), and pruned
-    serving on both kernel plans returns the oracle's top-k."""
-    from engine.csearch import _keep_blocks_sql
+def test_keep_blocks_rule():
+    """The one block-keep rule both kernel plans apply: a row keeps
+    exactly the blocks whose raw block-max reaches its term's
+    threshold; no threshold, a -inf one or no block-max list keeps
+    every block (None: full decode); a NULL block-max keeps its
+    block."""
+    from engine.csearch import _keep_blocks
 
-    from .oracle import assert_matches_topk
-
-    prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", ansi)
-    try:
-        rows = spark.createDataFrame(
-            [("a", [0.5, 2.0, 1.0]), ("b", [0.1, 0.2])],
-            "term string, block_max array<double>")
-        for bthresh, want in (({"a": 1.0}, {"a": [1, 2], "b": [0, 1]}),
-                              ({}, {"a": [0, 1, 2], "b": [0, 1]})):
-            got = rows.selectExpr(
-                "term", f"{_keep_blocks_sql(bthresh)} AS keep").collect()
-            assert {r.term: r.keep for r in got} == want
-        qs = spark.createDataFrame(R9_QUERIES,
-                                   "query_id string, query string")
-        want = _oracle(R9_QUERIES, 10)
-        for packed in (False, True):
-            assert_matches_topk(_res(spark, r9_index, qs, packed, k=10,
-                                     prune=True), want)
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert list(_keep_blocks([0.5, 2.0, 1.0], 1.0)) == [1, 2]
+    assert list(_keep_blocks([0.5, 0.7], 1.0)) == []
+    assert list(_keep_blocks([0.5, None, 3.0], 1.0)) == [1, 2]
+    for bm, th in (([0.5, 2.0], None), ([0.5, 2.0], float("-inf")),
+                   (None, 1.0)):
+        assert _keep_blocks(bm, th) is None
 
 
 def test_bench_headline_bounded():

@@ -1,18 +1,18 @@
 """Spark job budgets of the serving routes and of the default build.
 
-Every route ends in the matmul kernel. Below csearch.ONE_TASK_MAX_POSTINGS
-the term metadata is read on the driver and θ comes from the stored
-impacts, so a batch or a single query, pruned or not, cold or warm, is
-one job (one task, no broadcast, no exchange); a query set with no
-indexed term is none, on every route. Above the bound the packed plan
-runs its decode+pack stage, its doc-bucket exchange and its matmul
-stage. The decode θ (an index without impacts, or with standing
-tombstones) adds exactly its own kernel run, one job below the bound,
-where the payload is re-scanned rather than persisted; standing
-tombstones add their read. Query tables are local relations here, so
-collecting them adds no job to the count. Opening the index
-(read_index) launches no job at all, and a default build writes its
-serving table in a handful of jobs, with no partials."""
+Every route ends in the matmul kernel. At or below
+csearch.ONE_TASK_MAX_POSTINGS postings it runs on the driver: the term
+metadata, the payload and the tombstone ids are read with pyarrow, the
+weights and any rounding are projections over local relations, and the
+result is an Arrow-backed local relation, so every route there runs NO
+Spark job: a batch or a single query, pruned or not, cold or warm, θ
+from the stored impacts or the decode θ, with or without standing
+tombstones. A query set with no indexed term is no job on every route.
+Above the bound the packed plan runs its decode+pack stage, its
+doc-bucket exchange and its matmul stage. Query tables are local
+relations here, so collecting them adds no job to the count. Opening
+the index (read_index) launches no job at all, and a default build
+writes its serving table in a handful of jobs, with no partials."""
 
 from __future__ import annotations
 
@@ -66,11 +66,12 @@ def queries(spark):
         "query_id string, query string")
 
 
-def _serve(spark, idx, qs, prune=True):
+def _serve(spark, idx, qs, prune=True, **kw):
     from engine.csearch import search_index
 
     return sorted(tuple(r) for r in search_index(
-        spark, idx, qs, k=10, prune=prune, agg_impl="matmul").collect())
+        spark, idx, qs, k=10, prune=prune, agg_impl="matmul",
+        **kw).collect())
 
 
 def _without_impacts(idx):
@@ -86,12 +87,31 @@ def _tombstoned(spark, budget_dir, tmp_path):
     return read_index(spark, out)
 
 
+def _spy_decode_theta(monkeypatch):
+    """Count the calls of csearch._decode_theta (the list grows by one
+    per call)."""
+    from engine import csearch
+
+    calls = []
+    real = csearch._decode_theta
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(csearch, "_decode_theta", spy)
+    return calls
+
+
 def test_impact_theta_drops_exactly_the_decode_theta_jobs(spark, budget_dir,
-                                                          queries):
-    """A one-task batch: θ from the impacts is the plan's one job; the
-    decode θ adds exactly its own one in front of the same plan: the
-    kernel's one-task plan over the rarest terms (a one-task payload
-    is re-scanned, not persisted)."""
+                                                          queries,
+                                                          monkeypatch):
+    """Below the bound both θ sources are jobless: θ from the impacts
+    and the decode θ (which runs the kernel over the rarest terms on
+    the driver) serve the batch in no job, and the decode θ alone is no
+    job either. Forced onto the packed plan (bound 0), the decode θ
+    adds exactly its own kernel run in front of the same plan."""
+    from engine import csearch
     from engine.csearch import (_decode_theta, _pb_pruned_postings,
                                 _term_meta, local_query_terms)
     from engine.localrel import in_list
@@ -99,44 +119,58 @@ def test_impact_theta_drops_exactly_the_decode_theta_jobs(spark, budget_dir,
 
     idx = read_index(spark, budget_dir)
     assert idx["impact_ranks"] and idx["tombstones"] is None
-    n_imp, res_imp = _jobs(spark, lambda: _serve(spark, idx, queries))
-    n_dec, res_dec = _jobs(
-        spark, lambda: _serve(spark, _without_impacts(idx), queries))
-    assert res_imp == res_dec and res_imp
-    assert n_imp == 1, n_imp
-
-    # the decode θ on its own, over the same payload filter
+    calls = _spy_decode_theta(monkeypatch)
     _qt, terms, qt_rows = local_query_terms(spark, queries)
     pay = _pb_pruned_postings(idx, terms).where(in_list("term", terms))
     meta = _term_meta(idx, terms, ())
-    n_theta, theta = _jobs(spark, lambda: _decode_theta(
-        spark, pay, meta, qt_rows, 10, idx["n_docs"], idx["avgdl"],
-        False, None))
-    assert theta and n_theta == 1, n_theta
-    assert n_dec - n_imp == n_theta, (n_imp, n_dec, n_theta)
+
+    def serve(index):
+        return _serve(spark, index, queries, cache_level="none")
+
+    for bound, want_imp in ((csearch.ONE_TASK_MAX_POSTINGS, 0), (0, 3)):
+        monkeypatch.setattr(csearch, "ONE_TASK_MAX_POSTINGS", bound)
+        n_imp, res_imp = _jobs(spark, lambda: serve(idx))
+        assert not calls
+        n_dec, res_dec = _jobs(spark, lambda: serve(_without_impacts(idx)))
+        assert len(calls) == 1
+        calls.clear()
+        assert res_imp == res_dec and res_imp
+        assert n_imp == want_imp, (bound, n_imp)
+        # the decode θ on its own, over the same payload filter
+        n_theta, theta = _jobs(spark, lambda: _decode_theta(
+            spark, idx, pay, meta, qt_rows, 10, None))
+        calls.clear()
+        assert theta, bound
+        assert n_dec - n_imp == n_theta, (bound, n_imp, n_dec, n_theta)
+    assert n_theta > 0
 
 
 def test_matmul_job_budget(spark, budget_dir, queries, monkeypatch):
-    """Below the work bound a matmul batch is one job: pruned cold,
-    pruned warm and unpruned. Forced above it (bound 0), the packed
-    plan's three: decode+pack, then the matmul stage behind the
-    doc-bucket exchange, then the final window. Both plans give the
-    same rows."""
+    """Below the work bound a matmul batch is no job: pruned cold,
+    pruned warm and unpruned, and so is a pruned single query. Forced
+    above it (bound 0), the packed plan's three: decode+pack, then the
+    matmul stage behind the doc-bucket exchange, then the final window.
+    Both plans give the same rows."""
     from engine import csearch
+    from engine.localrel import local_df
     from engine.postings import read_index
 
     idx = read_index(spark, budget_dir)
     n_cold, cold = _jobs(spark, lambda: _serve(spark, idx, queries))
-    assert cold and n_cold == 1, n_cold
+    assert cold and n_cold == 0, n_cold
     n_unpr, unpr = _jobs(
         spark, lambda: _serve(spark, idx, queries, prune=False))
-    assert unpr == cold and n_unpr == 1, n_unpr
+    assert unpr == cold and n_unpr == 0, n_unpr
+    one = local_df(spark, [("q1", "w3 w12 w1")],
+                   "query_id string, query string")
+    n_one, res_one = _jobs(spark, lambda: _serve(spark, idx, one))
+    assert res_one == [r for r in cold if r[0] == "q1"] and n_one == 0
     csearch.warm_serving(spark, idx)
     try:
         n_warm, warm = _jobs(spark, lambda: _serve(spark, idx, queries))
     finally:
         csearch.release_warm(idx)
-    assert warm == cold and n_warm == 1, n_warm
+    assert warm == cold and n_warm == 0, n_warm
 
     monkeypatch.setattr(csearch, "ONE_TASK_MAX_POSTINGS", 0)
     n_packed, packed = _jobs(spark, lambda: _serve(spark, idx, queries))
@@ -144,17 +178,21 @@ def test_matmul_job_budget(spark, budget_dir, queries, monkeypatch):
 
 
 def test_tombstoned_index_keeps_decode_theta(spark, budget_dir, queries,
-                                             tmp_path):
+                                             tmp_path, monkeypatch):
+    """Standing tombstones send θ to the decode θ whether or not the
+    index has impacts, and below the bound the whole call, tombstone
+    read included, is no job."""
     idx = _tombstoned(spark, budget_dir, tmp_path)
     assert idx["tombstones"] is not None
+    assert list(idx["tombstone_ids"]) == [0, 1, 2, 3, 5, 8]
+    calls = _spy_decode_theta(monkeypatch)
     n_tomb, res = _jobs(spark, lambda: _serve(spark, idx, queries))
     n_dec, res_dec = _jobs(
         spark, lambda: _serve(spark, _without_impacts(idx), queries))
+    assert len(calls) == 2
     assert res == res_dec and res
     assert not {0, 1, 2, 3, 5, 8} & {r[1] for r in res}
-    # same route, same jobs: the impacts were not used. Four: two for
-    # the tombstone set's distinct read, the decode θ's kernel, the plan
-    assert n_tomb == n_dec == 4, (n_tomb, n_dec)
+    assert n_tomb == n_dec == 0, (n_tomb, n_dec)
 
 
 def test_no_indexed_term_runs_no_job(spark, budget_dir, tmp_path):
@@ -210,41 +248,41 @@ def _serve_unpruned(spark, idx, rows):
 
 
 def test_unpruned_job_budget(spark, budget_dir, tmp_path):
-    """The unpruned route's budget: cold single 1, warm single 1,
-    stop-word-only query 0, a 2-query batch 1 (the same one-task plan
-    as a single), a single on a tombstoned index at most 3 (the
-    tombstone set's distinct read, the plan)."""
+    """The unpruned route below the bound is no job: cold single, warm
+    single, stop-word-only query, a 2-query batch, and a single on a
+    tombstoned index."""
     from engine.csearch import release_warm, warm_serving
     from engine.postings import read_index
 
     idx = read_index(spark, budget_dir)
     one = [("q0", "w3 w12 w1 w3")]
     n_cold, cold = _jobs(spark, lambda: _serve_unpruned(spark, idx, one))
-    assert cold and n_cold == 1, n_cold
+    assert cold and n_cold == 0, n_cold
     assert _jobs(spark, lambda: _serve_unpruned(
         spark, idx, [("q0", "a the")])) == (0, [])
     n_batch, batch = _jobs(spark, lambda: _serve_unpruned(
         spark, idx, one + [("q1", "w5 w0")]))
     assert [r for r in batch if r[0] == "q0"] == cold
-    assert n_batch == 1, n_batch
+    assert n_batch == 0, n_batch
 
     warm_serving(spark, idx)
     try:
         n_warm, warm = _jobs(spark, lambda: _serve_unpruned(spark, idx, one))
     finally:
         release_warm(idx)
-    assert warm == cold and n_warm == 1, n_warm
+    assert warm == cold and n_warm == 0, n_warm
 
     tomb = _tombstoned(spark, budget_dir, tmp_path)
     n_tomb, res = _jobs(spark, lambda: _serve_unpruned(spark, tomb, one))
     assert res and not {0, 1, 2, 3, 5, 8} & {r[1] for r in res}
-    assert n_tomb <= 3, n_tomb
+    assert n_tomb == 0, n_tomb
 
 
 def test_read_index_runs_no_job(spark, budget_dir, tmp_path):
-    """read_index takes n_docs/avgdl from the committed manifest and
-    the postings schema from a parquet footer on the driver: opening an
-    index, with or without standing tombstones, launches no Spark job."""
+    """read_index takes n_docs/avgdl from the committed manifest, the
+    postings schema from a parquet footer and the tombstone ids from
+    the listed dirs, all on the driver: opening an index, with or
+    without standing tombstones, launches no Spark job."""
     from engine.postings import delete_docs, read_index
 
     n, idx = _jobs(spark, lambda: read_index(spark, budget_dir))
@@ -256,3 +294,4 @@ def test_read_index_runs_no_job(spark, budget_dir, tmp_path):
     n, idx = _jobs(spark, lambda: read_index(spark, out))
     assert n == 0, n
     assert idx["tombstones"] is not None
+    assert list(idx["tombstone_ids"]) == [0, 1]
