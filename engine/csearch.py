@@ -64,13 +64,14 @@ terms the metadata read already holds, not by a knob:
     NO Spark job, the latency floor on small posting sets, where cost
     is the number of jobs (~0.25 s each plus the driver gap around
     them), not per-row work. The reference's Lucene searcher scores
-    in-process over its segment files the same way. A single query and
-    a batch, cold and warm, pruned or not, tombstoned or not, take this
-    route, the decode θ included;
-  * above it, the packed plan: a decode+pack stage, a doc-bucket
-    exchange, a matmul stage and the top-k window, which spread the
-    per-posting work over the cluster (and read the warm persist,
-    warm_serving).
+    in-process over its segment files the same way. Between the query
+    collect and the result's createDataFrame it makes no JVM call: the
+    weights are driver arithmetic (_weight). Singles and batches, cold
+    and warm, pruned or not, tombstoned or not, take it, decode θ too;
+  * above it, the packed plan: the payload as a Spark scan (_payload),
+    a decode+pack stage, a doc-bucket exchange, a matmul stage and the
+    top-k window, which spread the per-posting work over the cluster
+    (and read the warm persist, warm_serving).
 """
 
 from __future__ import annotations
@@ -89,7 +90,6 @@ from pyspark.sql.types import (
 from . import TOP_K
 from .codec import decode_blocked, tf_part
 from .localrel import in_list, local_df
-from .search import idf_sql
 
 
 #: the posting-row columns every decode kernel reads
@@ -499,15 +499,16 @@ def _csr_weights(qw_rows):
 ONE_TASK_MAX_POSTINGS = 1_000_000
 
 
-def _matmul_score_topk(index: dict, payload: DataFrame, terms,
+def _matmul_score_topk(spark: SparkSession, index: dict, terms,
                        bthresh: dict | None, avgdl: float, qw_rows, k: int,
                        round_dp: int | None, dead_ids, n_postings: int,
-                       spread: bool) -> DataFrame:
+                       spread: bool, payload: DataFrame | None = None
+                       ) -> DataFrame:
     """The one score aggregation: the batch's top-k rows (query_id,
-    doc_id, score, rank) over the posting rows of `terms` — `payload`
-    on the cluster, the same rows of index['postings_path'] on the
-    driver. qw_rows are the batch's (query_id, term, w) (_weights);
-    bthresh the pruned route's term -> block threshold (None unpruned).
+    doc_id, score, rank) over the posting rows of `terms`, on the
+    cluster from `payload` (a persisted scan; None: _payload's). qw_rows
+    are the batch's (query_id, term, w) (_weights); bthresh the pruned
+    route's term -> block threshold (None unpruned).
 
     n_postings (Σ df of the terms served) picks the plan (module doc):
     at most ONE_TASK_MAX_POSTINGS, the driver reads the terms' payload
@@ -541,7 +542,6 @@ def _matmul_score_topk(index: dict, payload: DataFrame, terms,
     qids, tmap, qptr, qtidx, qw = _csr_weights(qw_rows)
     bval = (qids, len(tmap), qptr, qtidx, qw, dead_ids)
     cols = PAYLOAD_COLS + (("block_max",) if bthresh is not None else ())
-    spark = payload.sparkSession
     if n_postings <= ONE_TASK_MAX_POSTINGS:
         got = _decode_triples(_term_rows(index, terms, cols).to_batches(),
                               avgdl, bthresh, tmap)
@@ -565,7 +565,8 @@ def _matmul_score_topk(index: dict, payload: DataFrame, terms,
     # bucket VALUE, so bucket->partition is balls-in-bins; 8 per bin
     # keeps the expected max/mean task skew ~1.5x instead of ~4x
     part_space = width * 8
-    rows = payload.selectExpr(*cols)
+    rows = (payload if payload is not None
+            else _payload(index, terms)).selectExpr(*cols)
     if spread:
         rows = rows.repartition(sc.defaultParallelism * 4)
     packed = rows.mapInArrow(
@@ -711,34 +712,35 @@ def warm_serving(spark: SparkSession, index: dict,
     (payload_cache 'memory' | 'disk' | None), so each batch's term
     IN-scan reads resident columnar data instead of re-opening parquet.
     search_index skips its per-call payload persist while this is
-    active (entry-release keeps applying to cold indexes only). The
-    persisted table serves only the packed plan: a posting set of at
-    most ONE_TASK_MAX_POSTINGS is read and scored on the driver, as are
-    the per-term metadata (_term_rows), warm or cold. At north-star
-    scale the payload blocks are TB-class: use 'disk' or None there,
-    exactly the cache_level guidance in search_index.
+    active (entry-release keeps applying to cold indexes only). Only
+    the packed plan reads it, so it is made only when a call can reach
+    that plan: n_docs * avgdl = Σ tf >= Σ df over all terms, so at
+    most ONE_TASK_MAX_POSTINGS of it every call takes the driver route
+    and warming persists nothing and runs no job. At north-star scale
+    the payload blocks are TB-class: use 'disk' or None there, exactly
+    the cache_level guidance in search_index.
 
     Stats-drift safety: warm_stats records (n_docs, avgdl,
     encode_avgdl) at warm time; search_index drops the persisted copy
     and serves cold when they no longer match (an incremental merge or
     compaction landed) — re-run warm_serving after maintenance.
     Returns the same dict, mutated in place."""
-    posts = index["postings"]
+    if payload_cache not in ("memory", "disk", None):
+        raise ValueError(
+            f"payload_cache must be 'memory', 'disk', or None, got "
+            f"{payload_cache!r}")
     index["warm_stats"] = (index["n_docs"], index["avgdl"],
                            index.get("encode_avgdl"))
-    if payload_cache is not None:
-        if payload_cache == "memory":
-            index["postings"] = posts.persist()
-        elif payload_cache == "disk":
-            from pyspark import StorageLevel
+    if (payload_cache is None
+            or index["n_docs"] * index["avgdl"] <= ONE_TASK_MAX_POSTINGS):
+        return index
+    from pyspark import StorageLevel
 
-            index["postings"] = posts.persist(StorageLevel.DISK_ONLY)
-        else:
-            raise ValueError(
-                f"payload_cache must be 'memory', 'disk', or None, got "
-                f"{payload_cache!r}")
-        index["postings"].count()  # materialize now, not on batch 1
-        index["warm_persisted"] = index["postings"]
+    posts = index["postings"]
+    index["postings"] = (posts.persist() if payload_cache == "memory"
+                         else posts.persist(StorageLevel.DISK_ONLY))
+    index["postings"].count()  # materialize now, not on batch 1
+    index["warm_persisted"] = index["postings"]
     return index
 
 
@@ -768,23 +770,28 @@ def _query_pbs(index: dict, terms) -> list[int] | None:
     return sorted({spark_xxhash64_str(t) % pb_mod for t in terms})
 
 
-def _pb_pruned_postings(index: dict, terms: list[str]) -> DataFrame:
-    """Static partition pruning on the tid-bucket layout: the `pb IN
-    (...)` filter over the terms' buckets (_query_pbs) is a literal
-    Catalyst can prune partition DIRECTORIES with — a 5-term query
-    touches <= 5 of the table's pb_mod partitions before a single file
-    is opened. Pre-bucket indexes (no pb_mod) pass through."""
+def _payload(index: dict, terms) -> DataFrame:
+    """The serving rows of `terms` as a Spark scan, built on the packed
+    plan only (the driver route reads them with pyarrow, _term_rows):
+    the `term IN` list is pushed into the parquet read, and on the
+    tid-bucket layout the `pb IN (...)` filter over the terms' buckets
+    (_query_pbs) is a literal Catalyst prunes partition DIRECTORIES
+    with — a 5-term query touches <= 5 of the table's pb_mod partitions
+    before a single file is opened."""
+    terms = list(terms)
     posts = index["postings"]
     pbs = _query_pbs(index, terms)
-    if pbs is None or "pb" not in posts.columns:
-        return posts
-    return posts.where(in_list("pb", pbs))
+    if pbs is not None and "pb" in posts.columns:
+        posts = posts.where(in_list("pb", pbs))
+    return posts.where(in_list("term", terms))
 
 
-def _impact_ranks(index: dict, posts: DataFrame) -> tuple:
+def _impact_ranks(index: dict) -> tuple:
     """The ranks the index's serving rows store impacts for, or () on
-    an index without the impacts column (built before it existed)."""
-    if "impacts" not in posts.columns:
+    an index without the impacts column (built before it existed).
+    The columns come from the long-lived index['postings'] DataFrame,
+    which caches its schema, so this asks the JVM at most once."""
+    if "impacts" not in index["postings"].columns:
         return ()
     return tuple(index.get("impact_ranks") or ())
 
@@ -800,12 +807,13 @@ def _term_rows(index: dict, terms, cols):
     is `pb IN` (the terms' buckets, _query_pbs) and `term IN`: the rows
     are term-sorted, so row-group statistics skip groups without a
     query term, and columns outside `cols` are never read. The path is
-    always local: the engine writes indexes with os/shutil only."""
+    always local: the engine writes indexes with os/shutil only. The
+    dataset is the one read_index opened (index['postings_dset']): a
+    generation's postings dir never changes, so it is never re-listed."""
     import pyarrow.dataset as ds
 
     terms = list(terms)
-    dset = ds.dataset(index["postings_path"], format="parquet",
-                      partitioning="hive")
+    dset = index["postings_dset"]
     filt = ds.field("term").isin(terms)
     pbs = _query_pbs(index, terms)
     if pbs is not None and "pb" in dset.schema.names:
@@ -850,31 +858,22 @@ def _term_meta(index: dict, terms, ranks: tuple) -> dict:
     return meta
 
 
-def _read_tombstones(index: dict):
-    """The standing tombstones as a sorted int64 doc_id array, or None
-    without any: read_index records them from the manifest's listed
-    dirs on the driver, so the read costs no Spark job. The kernels
-    drop these docs themselves (dead_ids of _matmul_score_topk), so the
-    set is never joined."""
-    return index.get("tombstone_ids")
+def _weight(qtf: float, dfv: float, n_docs: int) -> float:
+    """The one score weight, w = qtf * idf(df): the kernel's weights, θ
+    and the block thresholds all take it. idf is search.idf_sql's exact
+    form, math.log(1.0 + x), within 1 ulp of the JVM's ln
+    (test_driver_idf_parity); log1p(x) was up to 42,354 ulp away over
+    df 1..min(N, 300k), N up to 10^7."""
+    return qtf * math.log(1.0 + (float(n_docs) - dfv + 0.5) / (dfv + 0.5))
 
 
-def _weights(spark: SparkSession, qt_rows, meta: dict, n_docs: int):
-    """The score weights: (query_id, term, w) rows, w = qtf * idf(df),
-    for every (query, term) row whose term has a df in meta (a term
-    absent from the index, or with a NULL df — degenerate metadata —
-    has no weight). idf/w are JVM expressions (idf_sql) on a local
-    relation, the one weight expression every serving score uses; the
-    projection folds into the local relation, so the collect runs no
-    Spark job at any batch size."""
-    rows = [(q, t_, f, float(meta[t_][0])) for (q, t_, f) in qt_rows
+def _weights(qt_rows, meta: dict, n_docs: int) -> list:
+    """(query_id, term, w) rows (_weight) for every (query, term) row
+    whose term has a df in meta (a term absent from the index, or with
+    a NULL df — degenerate metadata — has no weight)."""
+    return [(q, t_, _weight(f, float(meta[t_][0]), n_docs))
+            for (q, t_, f) in qt_rows
             if t_ in meta and meta[t_][0] is not None]
-    if not rows:
-        return []
-    return local_df(
-        spark, rows, "query_id string, term string, qtf double, df double",
-    ).selectExpr("query_id", "term",
-                 f"qtf * ({idf_sql(n_docs)}) AS w").collect()
 
 
 def _n_postings(meta: dict, terms) -> int:
@@ -882,16 +881,10 @@ def _n_postings(meta: dict, terms) -> int:
     return sum(meta[t_][0] or 0 for t_ in terms if t_ in meta)
 
 
-def _py_w(qtf: float, dfv: float, n_docs: int) -> float:
-    """Bounds-only driver twin of qtf * idf_expr (ulp differences from
-    the JVM are absorbed by the relaxations of θ and the thresholds)."""
-    return qtf * math.log1p((float(n_docs) - dfv + 0.5) / (dfv + 0.5))
-
-
 def _relax(v: float) -> float:
     """Move a finite pruning bound toward KEEP by a relative 1e-9
-    (+1e-12): driver floats can differ from the JVM's by an ulp per op,
-    and a superset decode is always rank-exact."""
+    (+1e-12): the bounds' products and sums round differently from the
+    kernel's dot products, and a superset decode is always rank-exact."""
     return v if math.isinf(v) else v - abs(v) * 1e-9 - 1e-12
 
 
@@ -915,7 +908,7 @@ def _impact_theta(qt_rows, meta: dict, rank_i: int, n_docs: int,
         imp = row[2][rank_i]
         if imp is None:  # no chunk of the term holds r postings
             continue
-        w_ = _py_w(f, float(row[0]), n_docs)
+        w_ = _weight(f, float(row[0]), n_docs)
         if w_ <= 0:
             continue
         v = _relax(w_ * float(imp) * scale)
@@ -924,18 +917,20 @@ def _impact_theta(qt_rows, meta: dict, rank_i: int, n_docs: int,
     return theta
 
 
-def _decode_theta(spark: SparkSession, index: dict, payload: DataFrame,
-                  meta: dict, qt_rows, k: int, dead_ids) -> dict[str, float]:
+def _decode_theta(spark: SparkSession, index: dict, meta: dict, qt_rows,
+                  k: int, dead_ids, payload: DataFrame | None = None
+                  ) -> dict[str, float]:
     """The exact θ fallback: score ONLY each query's rarest term with
     the serving kernel and take its k-th best live single-term score.
     Rarest = highest idf = LOWEST df (idf is strictly decreasing in df,
     ties to min term). The (query, rare term) rows take the serving
     weights (_weights) and the kernel drops the dead docs (dead_ids),
     so θ is scored exactly as the final plan scores and never counts a
-    deleted doc; the rare-term payload filter is a driver literal
-    (IN-pushdown, no semi-join). Below ONE_TASK_MAX_POSTINGS rare-term
-    postings it runs on the driver, with no job. Queries with fewer
-    than k live docs for the term get no θ (-inf)."""
+    deleted doc. Below ONE_TASK_MAX_POSTINGS rare-term postings it runs
+    on the driver, with no job; above, the packed plan filters the
+    caller's persisted payload (or a fresh _payload scan) to the rare
+    terms with a driver literal (IN-pushdown, no semi-join). Queries
+    with fewer than k live docs for the term get no θ (-inf)."""
     n_docs = index["n_docs"]
     rare: dict[str, tuple] = {}  # query -> (df, term, qtf)
     for (q, t_, f) in qt_rows:
@@ -950,10 +945,11 @@ def _decode_theta(spark: SparkSession, index: dict, payload: DataFrame,
     if not rare_terms:
         return {}
     top = _matmul_score_topk(
-        index, payload.where(in_list("term", rare_terms)), rare_terms,
-        None, index["avgdl"], _weights(spark, rare_rows, meta, n_docs), k,
-        None, dead_ids, _n_postings(meta, rare_terms),
-        n_docs >= AUTO_PRUNE_MIN_DOCS)
+        spark, index, rare_terms, None, index["avgdl"],
+        _weights(rare_rows, meta, n_docs), k, None, dead_ids,
+        _n_postings(meta, rare_terms), n_docs >= AUTO_PRUNE_MIN_DOCS,
+        payload=None if payload is None
+        else payload.where(in_list("term", rare_terms)))
     return {r["query_id"]: float(r["score"])
             for r in top.where(f"rank = {int(k)}").collect()}
 
@@ -968,18 +964,19 @@ def _impact_rank(ranks: tuple, k: int, dead_ids) -> int | None:
     return next((i for i, r in enumerate(ranks) if r >= k), None)
 
 
-def _theta(spark: SparkSession, index: dict, payload: DataFrame,
-           meta: dict, qt_rows, k: int, dead_ids) -> dict[str, float]:
+def _theta(spark: SparkSession, index: dict, meta: dict, qt_rows, k: int,
+           dead_ids, payload: DataFrame | None = None) -> dict[str, float]:
     """Phase-1 θ per query (module doc): from the stored impacts when
-    they are sound and deep enough, else the exact decode fallback.
-    The one θ source of search_index and pruning_stats."""
+    they are sound and deep enough, else the exact decode fallback
+    (over `payload`, when the caller persisted one for it). The one θ
+    source of search_index and pruning_stats."""
     n_docs, avgdl = index["n_docs"], index["avgdl"]
     enc_avgdl = float(index.get("encode_avgdl") or avgdl) or avgdl
-    rank_i = _impact_rank(_impact_ranks(index, payload), k, dead_ids)
+    rank_i = _impact_rank(_impact_ranks(index), k, dead_ids)
     if rank_i is not None:
         scale = min(1.0, avgdl / enc_avgdl) if enc_avgdl > 0 else 1.0
         return _impact_theta(qt_rows, meta, rank_i, n_docs, scale)
-    return _decode_theta(spark, index, payload, meta, qt_rows, k, dead_ids)
+    return _decode_theta(spark, index, meta, qt_rows, k, dead_ids, payload)
 
 
 def _block_thresholds(qt_rows, meta: dict, theta: dict, n_docs: int,
@@ -1017,7 +1014,7 @@ def _block_thresholds(qt_rows, meta: dict, theta: dict, n_docs: int,
         if row[0] is None or row[1] is None:
             open_q.add(q)
             continue
-        w_ = _py_w(f, float(row[0]), n_docs)
+        w_ = _weight(f, float(row[0]), n_docs)
         tmax = float(row[1]) * bfac
         us, ns = ub.get(q, (0.0, 0.0))
         ub[q] = (us + max(w_, 0.0) * tmax, ns + min(w_ * tmax, 0.0))
@@ -1026,7 +1023,7 @@ def _block_thresholds(qt_rows, meta: dict, theta: dict, n_docs: int,
         row = meta.get(t_)
         if row is None:
             continue
-        w_ = ninf if q in open_q else _py_w(f, float(row[0]), n_docs)
+        w_ = ninf if q in open_q else _weight(f, float(row[0]), n_docs)
         if w_ <= 0:
             out[(q, t_)] = ninf
             continue
@@ -1156,36 +1153,30 @@ def search_index(
         # an empty LocalRelation: collecting it runs no Spark job
         return local_df(spark, [], RANKED_ROWS)
 
-    # Batch sharing (module doc, phase 0): payloads are never joined
-    # with the query table — under the old per-(query,term) plan 400
-    # zipf queries OOM'd a 10 GiB executor.
-    payload = _pb_pruned_postings(index, terms).where(in_list("term", terms))
-
     # Per-term (df, raw block-max, impacts), read on the driver
-    # (_term_meta, no job): θ, the UB sums, the block thresholds and
-    # the driver-route bound are plain driver arithmetic (every Spark
-    # job costs ~0.3 s here: BASELINE.md "Single-query latency
-    # anatomy"). The weights stay JVM-evaluated (_weights, no job).
-    ranks = _impact_ranks(index, payload) if prune else ()
+    # (_term_meta, no job): the weights, θ, the UB sums, the block
+    # thresholds and the driver-route bound are plain driver
+    # arithmetic, with no JVM call (BASELINE.md "Single-query latency
+    # anatomy").
+    ranks = _impact_ranks(index) if prune else ()
     meta = _term_meta(index, terms, ranks)
-    qw_rows = _weights(spark, qt_rows, meta, n_docs)
+    qw_rows = _weights(qt_rows, meta, n_docs)
     _mark("meta")
     if not qw_rows:
         # no query term is in the index: nothing can score, so no
         # persist, θ or kernel — collecting the empty relation is no job
         return local_df(spark, [], RANKED_ROWS)
-    dead_ids = _read_tombstones(index)
+    dead_ids = index.get("tombstone_ids")
     n_postings = _n_postings(meta, terms)
-    bthresh = None
+    bthresh = payload = None
     if prune:
         # ---- pruned path: the metadata above, then driver arithmetic,
-        # then the kernel. The r05 version kept θ/UB/thresholds
-        # in-plan: every broadcast ran as its own AQE sub-job — ~30
-        # chained stage launches at sf0.1 (BASELINE.md anatomy). Now:
+        # then the kernel:
         #   θ (_theta): from the stored impacts in `meta` — no job — or,
         #     on the exact fallback, one kernel run over each query's
-        #     rarest term; only then does the payload have a second
-        #     consumer worth persisting.
+        #     rarest term; only then does the packed plan's payload scan
+        #     have a second consumer worth persisting (above the bound:
+        #     below it both kernel runs read the payload on the driver).
         #   Driver: phase 2 — per-query UB sums and the per-term block
         #     threshold (_block_thresholds; the MIN of the keep
         #     condition over sharing queries). These feed PRUNING BOUNDS
@@ -1199,19 +1190,16 @@ def search_index(
         # decoded blocks just move partial scores toward their exact
         # values (rank identity to the unpruned plan is pytest- and
         # oracle-gated).
-        # at or below the bound both kernel runs read the payload on
-        # the driver, so there is nothing to persist
         if (_impact_rank(ranks, k, dead_ids) is None
-                and n_postings > ONE_TASK_MAX_POSTINGS):
-            if cache_level == "memory":
-                payload = _track_persist(payload.cache())
-            elif cache_level == "disk":
-                from pyspark import StorageLevel
+                and n_postings > ONE_TASK_MAX_POSTINGS
+                and cache_level != "none"):
+            from pyspark import StorageLevel
 
-                payload = _track_persist(
-                    payload.persist(StorageLevel.DISK_ONLY))
-            # 'none': no persist — the final plan re-runs the scan
-        theta = _theta(spark, index, payload, meta, qt_rows, k, dead_ids)
+            payload = _payload(index, terms)
+            payload = _track_persist(
+                payload.cache() if cache_level == "memory"
+                else payload.persist(StorageLevel.DISK_ONLY))
+        theta = _theta(spark, index, meta, qt_rows, k, dead_ids, payload)
         _mark("theta")
         quant = 10.0 ** -round_dp if round_dp is not None else 0.0
         bthresh = {}
@@ -1220,8 +1208,8 @@ def search_index(
             bthresh[t_] = min(v, bthresh.get(t_, v))
         _mark("thresholds(driver)")
     return _matmul_score_topk(
-        index, payload, terms, bthresh, avgdl, qw_rows, k, round_dp,
-        dead_ids, n_postings, n_docs >= AUTO_PRUNE_MIN_DOCS)
+        spark, index, terms, bthresh, avgdl, qw_rows, k, round_dp,
+        dead_ids, n_postings, n_docs >= AUTO_PRUNE_MIN_DOCS, payload)
 
 
 def pruning_stats(
@@ -1246,10 +1234,8 @@ def pruning_stats(
     terms, qt_rows = _query_term_rows(queries)
     if not terms:
         return {"total_blocks": 0, "kept_blocks": 0, "pruned_fraction": 0.0}
-    payload = _pb_pruned_postings(index, terms).where(in_list("term", terms))
-    meta = _term_meta(index, terms, _impact_ranks(index, payload))
-    theta = _theta(spark, index, payload, meta, qt_rows, k,
-                   _read_tombstones(index))
+    meta = _term_meta(index, terms, _impact_ranks(index))
+    theta = _theta(spark, index, meta, qt_rows, k, index.get("tombstone_ids"))
     rhs: dict[str, list] = {}
     for (_q, t_), v in _block_thresholds(qt_rows, meta, theta, n_docs,
                                          bfac, 0.0).items():

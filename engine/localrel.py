@@ -34,6 +34,7 @@ in_list falls back to ``Column.isin``."""
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -67,14 +68,22 @@ def sql_literal(v) -> str | None:
     return None
 
 
+@functools.lru_cache(maxsize=64)
+def _schemas(ddl: str):
+    """(StructType, Arrow schema) of a DDL string, parsed once per
+    process: parsing is a JVM round trip, the results plain Python."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = _parse_datatype_string(ddl)
+    return st, to_arrow_schema(st)
+
+
 def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     """A local relation over `rows` (tuples) with DDL `schema`: an Arrow
     table handed to createDataFrame (module doc)."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    st = _parse_datatype_string(schema)
-    ast = to_arrow_schema(st)
+    st, ast = _schemas(schema)
     cols = list(zip(*rows)) or [()] * len(st.fields)
     return spark.createDataFrame(
         pa.table([pa.array(c, type=f.type) for c, f in zip(cols, ast)],

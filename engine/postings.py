@@ -1677,14 +1677,15 @@ def read_index(spark: SparkSession, out_dir: str) -> dict:
     m = load_manifest(out_dir)
     st = m["stats"]
     postings_path = _postings_dir(out_dir, m)
-    schema = from_arrow_schema(pads.dataset(
-        postings_path, format="parquet", partitioning="hive").schema)
+    dset = pads.dataset(postings_path, format="parquet", partitioning="hive")
     dead = _listed_doc_ids(out_dir, m, "tombstones")
     return {
-        "postings": spark.read.schema(schema).parquet(postings_path),
-        # where those rows live: csearch reads the serving rows'
-        # metadata columns from here on the driver, with no Spark job
-        "postings_path": postings_path,
+        "postings": spark.read.schema(
+            from_arrow_schema(dset.schema)).parquet(postings_path),
+        # the same rows opened as a pyarrow dataset: csearch reads the
+        # serving rows' metadata and, below its work bound, their
+        # payloads from it on the driver, with no Spark job
+        "postings_dset": dset,
         "doc_stats": _dedup_doc_stats(spark, out_dir, m),
         "n_docs": int(st["n_docs"]),
         "avgdl": float(st["avgdl"]),
@@ -1697,12 +1698,10 @@ def read_index(spark: SparkSession, out_dir: str) -> dict:
         # on an index merged before impacts existed): csearch derives
         # the pruning threshold θ from them
         "impact_ranks": tuple(m.get("impact_ranks") or ()),
-        # docs marked deleted but not yet compacted away (None when the
-        # index has no standing tombstones): serving drops these docs
-        # from results — delete_docs docstring has the semantics
-        "tombstones": read_tombstones(spark, out_dir, m),
-        # the same set as a sorted id array read on the driver (None
-        # without any): csearch's kernels drop these docs, no job
+        # docs marked deleted but not yet compacted away, as a sorted
+        # id array read on the driver (None when the index has no
+        # standing tombstones): csearch's kernels drop these docs from
+        # results, no job — delete_docs docstring has the semantics
         "tombstone_ids": dead if dead.size else None,
     }
 

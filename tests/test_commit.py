@@ -131,8 +131,8 @@ def _state(spark, out):
         "docs": sorted(tuple(r) for r in idx["doc_stats"].collect()),
         "partials": sorted(tuple(r) for r in parts.drop("shard").collect())
         if parts is not None else [],
-        "tombstones": sorted(r.doc_id for r in idx["tombstones"].collect())
-        if idx["tombstones"] is not None else [],
+        "tombstones": sorted(int(d) for d in idx["tombstone_ids"])
+        if idx["tombstone_ids"] is not None else [],
     }
 
 
@@ -514,7 +514,7 @@ def test_compact_recovery_guards_out_of_band_shards(spark, tmp_path_factory,
     assert sorted(r.doc_id for r in res) == [0]
     compact_tombstones(spark, out, hot_df_threshold=10**9, n_salts=2)
     idx = read_index(spark, out)
-    assert idx["tombstones"] is None and idx["n_docs"] == 1
+    assert idx["tombstone_ids"] is None and idx["n_docs"] == 1
     res = search_index(spark, idx, qs, k=10).collect()
     assert sorted(r.doc_id for r in res) == [0]
 
@@ -609,7 +609,7 @@ def test_compact_crash_before_merge_serves_correctly(spark, documents,
 
     assert load_manifest(built) == m0
     idx = read_index(spark, built)
-    assert idx["tombstones"] is not None
+    assert list(idx["tombstone_ids"]) == sorted(victims)
     got_p = _rows(search_index(spark, idx, qdf, k=10, prune=True))
     got_u = _rows(search_index(spark, idx, qdf, k=10, prune=False))
     assert got_p == got_u and got_p

@@ -71,7 +71,8 @@ def test_delete_hides_docs_immediately_stats_unchanged(spark, corpus, built):
     assert n == n_victims
 
     idx = read_index(spark, built)
-    assert idx["tombstones"] is not None
+    assert list(idx["tombstone_ids"]) == sorted(
+        r.doc_id for r in victims.collect())
     # stats unchanged until compaction (Lucene parity)
     assert idx["n_docs"] == idx0["n_docs"]
     assert idx["avgdl"] == idx0["avgdl"]
@@ -104,10 +105,8 @@ def test_decode_theta_counts_only_live_docs(spark, tmp_path):
     docs among that term's best would raise θ above what the surviving
     corpus reaches, and the block filter could then prune a surviving
     top-k doc."""
-    from engine.csearch import (_impact_ranks, _pb_pruned_postings,
-                                _read_tombstones, _term_meta, _theta,
+    from engine.csearch import (_impact_ranks, _term_meta, _theta,
                                 local_query_terms)
-    from engine.localrel import in_list
 
     from .oracle import assert_matches_topk, bm25_topk
 
@@ -125,9 +124,8 @@ def test_decode_theta_counts_only_live_docs(spark, tmp_path):
     qs = spark.createDataFrame(queries, "query_id string, query string")
     k = 3
     _qt, terms, qt_rows = local_query_terms(spark, qs)
-    pay = _pb_pruned_postings(idx, terms).where(in_list("term", terms))
-    meta = _term_meta(idx, terms, _impact_ranks(idx, pay))
-    theta = _theta(spark, idx, pay, meta, qt_rows, k, _read_tombstones(idx))
+    meta = _term_meta(idx, terms, _impact_ranks(idx))
+    theta = _theta(spark, idx, meta, qt_rows, k, idx["tombstone_ids"])
     want_kth = bm25_topk(docs, [("q0", "kiwi")], k=k, dead=dead)[-1]
     assert want_kth[1] == 8 and want_kth[3] == k  # docs 10, 9, 8 live
     assert theta["q0"] == pytest.approx(want_kth[2], rel=1e-9)
@@ -156,7 +154,7 @@ def test_compact_equals_fresh_build_on_survivors(spark, corpus, built,
     assert m["compacted_removed"] > 0
 
     idx = read_index(spark, built)
-    assert idx["tombstones"] is None
+    assert idx["tombstone_ids"] is None
 
     fresh_dir = str(tmp_path / "fresh")
     build_index(spark, corpus.where(~DELETED()), fresh_dir, n_shards=4,

@@ -146,8 +146,7 @@ def test_fuzz_impact_theta_rank_identical_to_decode_theta(spark,
         built = read_index(spark, out)
         assert built["impact_ranks"] and "impacts" in built["postings"].columns
         _qt, terms, qt_rows = local_query_terms(spark, qs)
-        pay = built["postings"].where(F.col("term").isin(terms))
-        meta = _term_meta(built, terms, _impact_ranks(built, pay))
+        meta = _term_meta(built, terms, _impact_ranks(built))
         for drift in (1.0, 0.8):
             idx = dict(built, avgdl=built["avgdl"] * drift)
             no_imp = dict(idx, postings=idx["postings"].drop("impacts"))
@@ -160,7 +159,7 @@ def test_fuzz_impact_theta_rank_identical_to_decode_theta(spark,
                     assert_matches_topk(search_index(
                         spark, served, qs, k=k, prune=prune).collect(), want)
                 # θ soundness, checked directly against the true scores
-                theta = _theta(spark, idx, pay, meta, qt_rows, k, None)
+                theta = _theta(spark, idx, meta, qt_rows, k, None)
                 kth = {q: s for q, _d, s, rk in want if rk == k}
                 for q, th in theta.items():
                     assert q in kth and th <= kth[q], (seed, drift, k, q)
@@ -201,7 +200,7 @@ def test_fuzz_driver_term_meta_equals_spark_aggregation(spark,
             if no_imp:
                 idx = dict(idx, postings=idx["postings"].drop("impacts"))
             posts = idx["postings"]
-            ranks = _impact_ranks(idx, posts)
+            ranks = _impact_ranks(idx)
             assert bool(ranks) != no_imp, stage
             for _ in range(3):
                 terms = rng.sample(VOCAB, rng.randint(1, 25)) + ["absentterm"]

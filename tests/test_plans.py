@@ -214,9 +214,9 @@ def test_decode_spread_adds_roundrobin_exchange_only_at_scale(spark, built,
 
     def packed_plan(spread):
         # a work bound above ONE_TASK_MAX_POSTINGS: the packed plan
-        return _plan(_matmul_score_topk(built, payload, ["spark"], None,
+        return _plan(_matmul_score_topk(spark, built, ["spark"], None,
                                         10.0, qw_rows, 10, None, None,
-                                        10**12, spread))
+                                        10**12, spread, payload))
 
     spread_plan, flat_plan = packed_plan(True), packed_plan(False)
     assert "RoundRobinPartitioning" in spread_plan

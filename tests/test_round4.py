@@ -365,7 +365,7 @@ def test_pb_partition_pruning_and_hardlinked_buckets(spark,
     previous version's)."""
     import glob
 
-    from engine.csearch import _pb_pruned_postings
+    from engine.csearch import _payload
     from engine.postings import build_index, load_manifest, read_index
     from engine.xxh import spark_xxhash64_str
 
@@ -386,8 +386,7 @@ def test_pb_partition_pruning_and_hardlinked_buckets(spark,
     assert got_pb and set(got_pb) == {spark_xxhash64_str("common") % pbm}
 
     # (2) partition filter reaches the physical scan
-    pruned = _pb_pruned_postings(idx, ["common"]).where(
-        F.col("term") == "common")
+    pruned = _payload(idx, ["common"])
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "pb" in plan
 

@@ -126,22 +126,26 @@ def test_all_routes_rank_identical_tombstoned(spark, r9_dir, tmp_path):
     dead = {0, 1, 5, 12, 33}
     delete_docs(spark, out, sorted(dead))
     idx = read_index(spark, out)
-    assert idx["tombstones"] is not None
+    assert list(idx["tombstone_ids"]) == sorted(dead)
     _routes_identical(spark, idx, k=10, round_dp=4, dead=dead)
     qs = spark.createDataFrame(R9_QUERIES, "query_id string, query string")
     assert not dead & {r[1] for r in _res(spark, idx, qs, k=10)}
 
 
-def test_warm_drift_releases_persisted(spark, r9_index):
+def test_warm_drift_releases_persisted(spark, r9_index, monkeypatch):
     """ADVICE r5 #1: when collection stats drift under a live warm
     index (maintenance landed), search_index must DROP the stale
     persisted postings and warm stats — not just serve cold while the
-    pre-maintenance bytes stay pinned in executor storage."""
+    pre-maintenance bytes stay pinned in executor storage. The bound is
+    0 so that warm_serving persists (it does only when a call can reach
+    the packed plan)."""
+    from engine import csearch
     from engine.csearch import release_warm, warm_serving
 
     qs = spark.createDataFrame([("q0", "apple fig")],
                                "query_id string, query string")
     cold = _res(spark, r9_index, qs, k=10, prune=False)
+    monkeypatch.setattr(csearch, "ONE_TASK_MAX_POSTINGS", 0)
     warm_serving(spark, r9_index, payload_cache="memory")
     try:
         assert "warm_persisted" in r9_index

@@ -1,18 +1,21 @@
-"""Spark job budgets of the serving routes and of the default build.
+"""Spark job and py4j budgets of the serving routes and of the default
+build, and the driver weight's parity with the JVM's idf.
 
 Every route ends in the matmul kernel. At or below
 csearch.ONE_TASK_MAX_POSTINGS postings it runs on the driver: the term
 metadata, the payload and the tombstone ids are read with pyarrow, the
-weights and any rounding are projections over local relations, and the
-result is an Arrow-backed local relation, so every route there runs NO
-Spark job: a batch or a single query, pruned or not, cold or warm, θ
-from the stored impacts or the decode θ, with or without standing
-tombstones. A query set with no indexed term is no job on every route.
-Above the bound the packed plan runs its decode+pack stage, its
-doc-bucket exchange and its matmul stage. Query tables are local
-relations here, so collecting them adds no job to the count. Opening
-the index (read_index) launches no job at all, and a default build
-writes its serving table in a handful of jobs, with no partials."""
+weights are driver arithmetic (csearch._weight), any rounding is a
+projection over a local relation, and the result is an Arrow-backed
+local relation, so every route there runs NO Spark job: a batch or a
+single query, pruned or not, cold or warm, θ from the stored impacts or
+the decode θ, with or without standing tombstones. A query set with no
+indexed term is no job on every route. Above the bound the packed plan
+runs its decode+pack stage, its doc-bucket exchange and its matmul
+stage. Query tables are local relations here, so collecting them adds
+no job to the count. Opening the index (read_index) launches no job at
+all, warming it (warm_serving) none below the bound, and a default
+build writes its serving table in a handful of jobs, with no
+partials."""
 
 from __future__ import annotations
 
@@ -112,16 +115,13 @@ def test_impact_theta_drops_exactly_the_decode_theta_jobs(spark, budget_dir,
     job either. Forced onto the packed plan (bound 0), the decode θ
     adds exactly its own kernel run in front of the same plan."""
     from engine import csearch
-    from engine.csearch import (_decode_theta, _pb_pruned_postings,
-                                _term_meta, local_query_terms)
-    from engine.localrel import in_list
+    from engine.csearch import _decode_theta, _term_meta, local_query_terms
     from engine.postings import read_index
 
     idx = read_index(spark, budget_dir)
-    assert idx["impact_ranks"] and idx["tombstones"] is None
+    assert idx["impact_ranks"] and idx["tombstone_ids"] is None
     calls = _spy_decode_theta(monkeypatch)
     _qt, terms, qt_rows = local_query_terms(spark, queries)
-    pay = _pb_pruned_postings(idx, terms).where(in_list("term", terms))
     meta = _term_meta(idx, terms, ())
 
     def serve(index):
@@ -136,9 +136,9 @@ def test_impact_theta_drops_exactly_the_decode_theta_jobs(spark, budget_dir,
         calls.clear()
         assert res_imp == res_dec and res_imp
         assert n_imp == want_imp, (bound, n_imp)
-        # the decode θ on its own, over the same payload filter
+        # the decode θ on its own, over the same rarest terms
         n_theta, theta = _jobs(spark, lambda: _decode_theta(
-            spark, idx, pay, meta, qt_rows, 10, None))
+            spark, idx, meta, qt_rows, 10, None))
         calls.clear()
         assert theta, bound
         assert n_dec - n_imp == n_theta, (bound, n_imp, n_dec, n_theta)
@@ -183,7 +183,6 @@ def test_tombstoned_index_keeps_decode_theta(spark, budget_dir, queries,
     index has impacts, and below the bound the whole call, tombstone
     read included, is no job."""
     idx = _tombstoned(spark, budget_dir, tmp_path)
-    assert idx["tombstones"] is not None
     assert list(idx["tombstone_ids"]) == [0, 1, 2, 3, 5, 8]
     calls = _spy_decode_theta(monkeypatch)
     n_tomb, res = _jobs(spark, lambda: _serve(spark, idx, queries))
@@ -193,6 +192,126 @@ def test_tombstoned_index_keeps_decode_theta(spark, budget_dir, queries,
     assert res == res_dec and res
     assert not {0, 1, 2, 3, 5, 8} & {r[1] for r in res}
     assert n_tomb == n_dec == 0, (n_tomb, n_dec)
+
+
+def _py4j_calls(spark, fn):
+    """(number of py4j commands fn() sent to the JVM from this thread,
+    its result). Proxy-release commands are left out: py4j's finalizer
+    sends them whenever Python drops a JVM reference, not when the
+    engine asks for anything."""
+    import threading
+
+    cls = type(spark.sparkContext._gateway._gateway_client)
+    real, me, calls = cls.send_command, threading.get_ident(), []
+
+    def spy(self, command, *a, **kw):
+        if threading.get_ident() == me and not command.startswith("m\n"):
+            calls.append(command)
+        return real(self, command, *a, **kw)
+
+    cls.send_command = spy
+    try:
+        out = fn()
+    finally:
+        cls.send_command = real
+    return len(calls), out
+
+
+def test_single_query_py4j_budget(spark, budget_dir):
+    """Below the bound a single query's path from its query rows to its
+    result makes no JVM call: the only py4j traffic of search_index is
+    the query collect (_query_term_rows) and the result's
+    createDataFrame(pa.Table) — 35 commands, pruned or not, before the
+    caller's collect (the metadata, weights, θ, thresholds, payload
+    read and kernel are pyarrow/numpy)."""
+    from engine.csearch import search_index
+    from engine.localrel import local_df
+    from engine.postings import read_index
+
+    idx = read_index(spark, budget_dir)
+    for prune in ("auto", True):
+        got = []
+        for _ in range(3):  # the first call may pay one-time lookups
+            qs = local_df(spark, [("q1", "w3 w12 w1")],
+                          "query_id string, query string")
+            n, res = _py4j_calls(spark, lambda: search_index(
+                spark, idx, qs, k=10, prune=prune))
+            got.append(n)
+            assert len(res.collect()) == 10
+        assert got[-1] == 35, (prune, got)
+
+
+def test_driver_idf_parity(spark):
+    """csearch._weight at qtf 1 (the idf) against the JVM's
+    (search.idf_sql, the one SQL idf expression, evaluated over a local
+    relation) on a df grid for several N: every value within 1 ulp. The
+    largest gap and the share of unequal values are printed."""
+    import math
+
+    from engine.csearch import _weight
+    from engine.localrel import local_df
+    from engine.search import idf_sql
+
+    worst, n_all, n_diff = (0.0, None), 0, 0
+    for n_docs in (3000, 5183, 300_000, 10**7):
+        top = min(n_docs, 300_000)
+        dfs = sorted(set(range(1, min(top, 2000) + 1))
+                     | set(range(1, top + 1, 97))
+                     | set(range(max(1, top - 50), top + 1)))
+        got = local_df(spark, [(float(d),) for d in dfs], "df double") \
+            .selectExpr("df", f"{idf_sql(n_docs)} AS idf").collect()
+        assert len(got) == len(dfs)
+        for r in got:
+            gap = abs(_weight(1.0, r["df"], n_docs) - r["idf"]) / math.ulp(
+                r["idf"])
+            n_all, n_diff = n_all + 1, n_diff + (gap > 0)
+            if gap > worst[0]:
+                worst = (gap, (n_docs, r["df"]))
+    print(f"driver vs JVM idf: largest gap {worst[0]} ulp at (N, df) = "
+          f"{worst[1]}; {n_diff} of {n_all} values differ")
+    assert worst[0] <= 1.0, worst
+
+
+def test_warm_serving_persists_only_above_bound(spark, budget_dir,
+                                                monkeypatch):
+    """n_docs * avgdl (= Σ tf) bounds Σ df over every term, so when it
+    is at most the bound no call can reach the packed plan, and
+    warm_serving persists nothing and runs no job; the warm index still
+    serves. With the bound at 0 it persists and materializes the
+    postings table, which release_warm unpersists."""
+    from engine import csearch
+    from engine.postings import read_index
+
+    idx = read_index(spark, budget_dir)
+    tbl = idx["postings_dset"].to_table(columns=["term", "df"])
+    sum_df = sum(dict(zip(tbl.column("term").to_pylist(),
+                          tbl.column("df").to_pylist())).values())
+    assert 0 < sum_df <= idx["n_docs"] * idx["avgdl"]
+    assert idx["n_docs"] * idx["avgdl"] <= csearch.ONE_TASK_MAX_POSTINGS
+
+    def stored():
+        """RDDs holding cached blocks (earlier unpersists are
+        asynchronous, so this count can only fall on its own)."""
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    before = stored()
+    n, _ = _jobs(spark, lambda: csearch.warm_serving(spark, idx))
+    assert n == 0 and "warm_persisted" not in idx, n
+    assert not idx["postings"].is_cached and stored() <= before
+    one = [("q1", "w3 w12 w1")]
+    assert _jobs(spark, lambda: _serve_unpruned(spark, idx, one))[0] == 0
+    csearch.release_warm(idx)
+    assert "warm_stats" not in idx
+
+    monkeypatch.setattr(csearch, "ONE_TASK_MAX_POSTINGS", 0)
+    idx = read_index(spark, budget_dir)
+    n, _ = _jobs(spark, lambda: csearch.warm_serving(spark, idx))
+    try:
+        assert n >= 1 and idx["warm_persisted"] is idx["postings"], n
+        assert idx["postings"].is_cached and stored() >= 1
+    finally:
+        csearch.release_warm(idx)
+    assert not idx["postings"].is_cached
 
 
 def test_no_indexed_term_runs_no_job(spark, budget_dir, tmp_path):
@@ -287,11 +406,10 @@ def test_read_index_runs_no_job(spark, budget_dir, tmp_path):
 
     n, idx = _jobs(spark, lambda: read_index(spark, budget_dir))
     assert n == 0, n
-    assert idx["n_docs"] == 400 and idx["tombstones"] is None
+    assert idx["n_docs"] == 400 and idx["tombstone_ids"] is None
     out = str(tmp_path / "tomb_idx")
     shutil.copytree(budget_dir, out)
     delete_docs(spark, out, [0, 1])
     n, idx = _jobs(spark, lambda: read_index(spark, out))
     assert n == 0, n
-    assert idx["tombstones"] is not None
     assert list(idx["tombstone_ids"]) == [0, 1]

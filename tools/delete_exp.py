@@ -120,7 +120,7 @@ def main() -> None:
         res["compact_stats"] = {k: stats.get(k) for k in
                                 ("removed", "n_docs") if k in stats}
         idx2 = read_index(spark, idx_dir)
-        if idx2.get("tombstones") is not None:
+        if idx2.get("tombstone_ids") is not None:
             failures.append("tombstones survived compaction")
         idx = idx2
 
